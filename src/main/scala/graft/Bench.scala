@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.api.GraftSession
 
 /** Driver benchmark: every SparkEntry query, median of n reps, one compact
   * JSON line on stdout.
@@ -32,8 +33,7 @@ import java.nio.file.{Files, Paths}
   * slice-size queries, so every row measures near its solo
   * (SPARK_GRAFT_BENCH_ONLY) floor. Child JVMs reuse this JVM's own args
   * (add-opens, -Xmx) and classpath, so the fork works both under sbt and
-  * under a bare spark-class launcher. SPARK_GRAFT_BENCH_FORK=0 restores
-  * the single-JVM path; setting SPARK_GRAFT_BENCH_ONLY also runs
+  * under a bare spark-class launcher. Setting SPARK_GRAFT_BENCH_ONLY runs
   * in-process (it IS the solo-floor measurement the forked rows are
   * validated against).
   */
@@ -123,7 +123,6 @@ object Bench {
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "/tmp/graft_bench_detail.json")
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val sliceOut = sys.env.get("SPARK_GRAFT_BENCH_SLICE_OUT")
-    val forkEnabled = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
 
     sliceOut match {
       case Some(out) =>
@@ -131,7 +130,7 @@ object Bench {
         val names = SparkEntry.queries.keys.toSeq.filter(n => only.forall(_.contains(n)))
         val raw = measure(names, sfDir, reps)
         writeSlice(out, raw)
-      case None if forkEnabled && only.isEmpty =>
+      case None if only.isEmpty =>
         // Under a classloader-based launcher (unforked `sbt run`),
         // java.class.path is just the sbt launcher jar — every child would
         // die with ClassNotFoundException and the whole run would be
@@ -291,24 +290,15 @@ object Bench {
     * round-over-round signal).
     */
   private def measure(names: Seq[String], sfDir: String, reps: Int): Raw = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.datetime.java8API.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Scale-evidence knob (VERDICT r15 #1): lets the sf10 streaming points
     // run on Spark's RocksDB state store (off-heap state, the config any
     // production deployment of the streaming ops would use) without
     // changing the default bench path.
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach { v =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", v)
-    }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create(s"local[$cpus]", "graft-bench", cpus,
+      sys.env.get("SPARK_GRAFT_STATE_STORE")
+        .map("spark.sql.streaming.stateStore.providerClass" -> _).toMap)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ZetaFunctions.register(spark)
     // JVM/session warm-up outside the timed region (codegen, block manager,
     // shuffle machinery) so the first query doesn't absorb startup cost.
     // The forked-slice children are FRESH JVMs: a range-sum warm-up left
@@ -500,6 +490,13 @@ object Bench {
     s(s.length / 2)
   }
 
+  /** A `{"name":seconds,...}` JSON map at 2 decimals, keyed by the FULL
+    * SparkEntry query name so a consumer matching rows to
+    * `SparkEntry.queries` never has to re-derive stripped prefixes.
+    */
+  private[graft] def namedSeconds(rows: Seq[(String, Double)]): String =
+    rows.map { case (k, v) => "\"" + k + "\":" + num(v, 2) }.mkString("{", ",", "}")
+
   /** Emit the driver artifact: three stdout JSON lines + the detail file.
     * Byte-compatible with the pre-fork format.
     */
@@ -520,10 +517,7 @@ object Bench {
     val mins = ok.map { case (name, runs, _, _) =>
       name -> runs.collect { case (t, None) => t }.min
     }.toMap
-    // Per-query map with "q_" prefixes stripped and 2-decimal values keeps
-    // the detailed line under the driver's ~2,000-char stdout tail capture.
-    val qs = results.map { case (k, v) => "\"" + k.stripPrefix("q_") + "\":" + num(v, 2) }
-      .mkString("{", ",", "}")
+    val qs = namedSeconds(results)
     val errNames = bad.map(_._1).sorted
     val total = results.map(_._2).sum
     val line =
@@ -614,9 +608,7 @@ object Bench {
     // Composite summary as a short, final line that always survives the
     // capture whole, enriched with the slowest queries by name (the ones a
     // reader wants first). Keep this the LAST stdout line Bench prints.
-    val top = results.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k.stripPrefix("q_") + "\":" + num(v, 2) }
-      .mkString("{", ",", "}")
+    val top = namedSeconds(results.sortBy(-_._2).take(10))
     println(
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec",""" +
       s""""n_queries":${results.size},"errors":${errNames.size},"reps":$reps,""" +

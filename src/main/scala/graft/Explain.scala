@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.api.GraftSession
 
 /** Plan-inspection utility: prints the formatted physical plan for the
   * given queries (all queries if none named). Used to audit pushdown,
@@ -15,17 +15,9 @@ object Explain {
     // r22: honor the driver's core-count knob so captured plans show the
     // TARGET box's partitioning (r21 plans were local[4] and their
     // RoundRobinPartitioning(4) understated the 32-core exchange width)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.datetime.java8API.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.create(s"local[$cpus]", "graft-explain", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.ZetaFunctions.register(spark)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.api.GraftSession
 import graft.dedup.Dedup
 
 /** Scale curves for the operators whose 100 TB story must be MEASURED,
@@ -23,15 +24,8 @@ import graft.dedup.Dedup
 object ScaleBench {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/root/testdata")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.datetime.java8API.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.create(s"local[$cpus]", "graft-scalebench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(0, 1000, 1, 4).selectExpr("sum(id)").collect()
 

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.api.GraftSession
 
 /** One-off larger-than-heap streaming-state stress (VERDICT r19 #7).
   *
@@ -46,15 +47,9 @@ object StateStress {
       case "default" => None
       case cls => Some(cls)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    provider.foreach(p =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", p))
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.create(s"local[$cpus]", "graft-statestress", cpus,
+      provider.map("spark.sql.streaming.stateStore.providerClass" -> _).toMap)
     spark.sparkContext.setLogLevel("WARN")
     System.err.println("[stress] heap max = " +
       num(Runtime.getRuntime.maxMemory / 1e9, 2) + " GB, provider = " +

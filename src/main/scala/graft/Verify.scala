@@ -1,26 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.api.GraftSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare, and errors.json
+  * (query name → failure message, `{}` when every query dumped). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.datetime.java8API.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Same knob as Bench (VERDICT r18 #3): a Verify leg pinned to
     // RocksDBStateStoreProvider puts the larger-than-heap streaming-state
     // path on the HASH path — correctness at scale, not just a perf knob.
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach { v =>
-      builder.config("spark.sql.streaming.stateStore.providerClass", v)
-    }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.create(s"local[$cpus]", "graft-verify", cpus,
+      sys.env.get("SPARK_GRAFT_STATE_STORE")
+        .map("spark.sql.streaming.stateStore.providerClass" -> _).toMap)
     // Self-describing evidence line: the sf1/sf10 leg logs must show WHICH
     // state store the run used, read back from the live session conf (not
     // just the env), so a cited log is provenance on its own.
@@ -29,7 +23,6 @@ object Verify {
         spark.conf.get("spark.sql.streaming.stateStore.providerClass"))
     }
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ZetaFunctions.register(spark)
     new java.io.File(outDir).mkdirs()
     // Optional local-iteration filter: third arg "q_a,q_b" (env vars don't
     // reach the sbt server, so this must be a program argument).
@@ -38,11 +31,16 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None        => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val errors = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        // tools/sf10_gate.py greps this stderr line; errors.json is the
+        // artifact-side record of the same failure
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
       }
       finally GraftCaches.releaseAll(spark) // no cache carries across queries
     }
@@ -58,9 +56,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def jsonMap(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonMap(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonMap(errors.sortBy(_._1)))
     spark.stop()
   }
 }

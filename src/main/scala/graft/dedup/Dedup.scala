@@ -980,8 +980,9 @@ object Dedup {
     // is numBands·2^bandBits (512 at the defaults) — so one near-cap
     // bucket's quadratic pair grid (cap²/2 pairs) can land on ONE task
     // however wide the cluster. r13 replicated EVERY bucket across a
-    // uniform sliceFactor, which SlicePoint measured as a 1.54× end-to-end
-    // pessimization at sf10 (97.5 → 150.1 s): the fixture's buckets are
+    // uniform sliceFactor, measured (SCALE_r14.json lsh_slice_factor) as
+    // a 1.54× end-to-end pessimization at sf10 (97.5 → 150.1 s): the
+    // fixture's buckets are
     // far below the cap, pair generation was already balanced across the
     // 512 keys, and the uniform 32× a-side replication tripled the
     // candidate join's task time (321 → 1054 s). So slicing is per-bucket:

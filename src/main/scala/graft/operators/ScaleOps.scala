@@ -43,8 +43,9 @@ object ScaleOps {
     * volume, and therefore per-task memory and time, constant) and never
     * below the cluster's core count. Target the usual shuffle-partition
     * sizing: per-bucket bytes in the 100-200 MB range. Measured in
-    * SCALE_r13 (BucketPoint, SMJ path): the 8-bucket layout carried from
-    * sf0.1 to sf1 ran 2.3x wall for 10x data (8-wide on 32 cores);
+    * SCALE_r14.json `carried_r13.bucket_point_matrix` (SMJ path): the
+    * 8-bucket layout carried from sf0.1 to sf1 ran 2.3x wall for 10x
+    * data (8-wide on 32 cores);
     * re-bucketing at 32 collapsed it to 1.9x — and the r12 sweep's
     * 6.45x on this fixture was dominated by the pre-fix file explosion
     * (see the repartition note in the body), not the width alone. Both

@@ -121,6 +121,13 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.monotoneDescent(ok(2.587, 2.319, 1.941, 2.063, 2.344)))
   }
 
+  test("per-query JSON maps keep full SparkEntry query names") {
+    // consumers join these keys to the sorted SparkEntry names; a
+    // stripped "q_" prefix matched zero rows (n_common=0)
+    assert(Bench.namedSeconds(Seq("q_sql_join" -> 0.404, "q1_agg" -> 1.236)) ==
+      """{"q_sql_join":0.40,"q1_agg":1.24}""")
+  }
+
   test("floor-graded set names q_cdc_capture (VERDICT r19 #4)") {
     assert(Bench.FloorGraded == Set("q_cdc_capture"))
   }

@@ -29,20 +29,30 @@ class HygieneSpec extends AnyFunSuite {
   }
 
   test("main sources keep entry points to the declared driver contract") {
-    // The driver contract allows mains only in Bench / Verify / ScaleBench /
-    // PlanDump-style evidence tools at the graft package root.
-    val allowed = Set("Bench.scala", "Verify.scala", "ScaleBench.scala", "Explain.scala",
-      "TimeCheck.scala", "Sf1Gen.scala", "Sf1Bench.scala", "BucketPoint.scala",
-      "SlicePoint.scala", "AnnBytesPoint.scala",
-      // r20: larger-than-heap state-capacity evidence main (SCALE_r20.json
-      // state_capacity_r20)
-      "StateStress.scala")
+    // The Bench/Verify entry points plus the evidence tools that no
+    // Bench option replaces: plan dumps, scale curves, the sf1/sf10
+    // generator and the larger-than-heap state stress (SCALE_r20.json
+    // state_capacity_r20). One-off timing points belong in Bench.
+    val allowed = Set("Bench.scala", "Verify.scala", "Explain.scala",
+      "ScaleBench.scala", "Sf1Gen.scala", "StateStress.scala")
     val offenders = scalaFiles("src/main/scala").filter { f =>
       val src = new String(Files.readAllBytes(f), "UTF-8")
       src.contains(needle) && !allowed.contains(f.getFileName.toString)
     }
     assert(offenders.isEmpty,
       s"unexpected main() in library sources: ${offenders.mkString(", ")}")
+  }
+
+  test("every SparkSession is built by GraftSession.create") {
+    // one module owns the session policy (UTC, AQE, the datetime and
+    // nanos-parquet pins, function registration); a hand-built session
+    // silently drifts from what users run
+    val builder = "SparkSession" + ".builder"
+    val offenders = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
+      .filter(_ != Paths.get("src/main/scala/graft/api/GraftSession.scala"))
+      .filter(f => stripComments(new String(Files.readAllBytes(f), "UTF-8")).contains(builder))
+    assert(offenders.isEmpty,
+      s"hand-built SparkSession outside api/GraftSession.scala: ${offenders.mkString(", ")}")
   }
 
   /** Strip `//` line comments and (nested) `/* */` block comments from

@@ -3,19 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.api.GraftSession
+
 /** Shared local session for all suites (one JVM-wide session, specs run in
   * the forked test JVM).
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.datetime.java8API.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create("local[4]", "graft-test", 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
