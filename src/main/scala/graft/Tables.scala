@@ -40,7 +40,6 @@ object Tables {
     * while single-heavy-pipeline queries (from_json envelope parsing,
     * protobuf codec, bigram explode) win 2×+. Only measured-heavy call
     * sites opt in; evidence in OPTIMIZATION_r21.md.
-    * SPARK_GRAFT_FANOUT=0 force-disables globally.
     */
   /** Schema memo for the testdata tables (r21, guide §5 "the driver should
     * do almost no data work"): every `spark.read.parquet(path)` runs a
@@ -73,7 +72,6 @@ object Tables {
 
   private val fanOutFloorBytes = 256L * 1024
   private def fanOut(spark: SparkSession, df: DataFrame, bytes: Long): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_FANOUT").contains("0")) return df
     val cap = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val n = spark.sparkContext.defaultParallelism

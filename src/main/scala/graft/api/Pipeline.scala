@@ -241,7 +241,7 @@ object Pipeline {
   }
 
   private def resolveSource(spark: SparkSession, p: Plugin,
-      parallelism: Int = 1): DataFrame = p.plugin match {
+      parallelism: Int): DataFrame = p.plugin match {
     case "FakeSource" =>
       val fields: Seq[(String, Any)] = fakeSchemaFields(p)
       p.options.get("rows") match {
@@ -844,27 +844,6 @@ object Pipeline {
     rowRules ++ fieldRules ++ schemaRules
   }
 
-  /** Multi-table Assert (rules.tables_configs): each entry names a
-    * table_path resolved against the job catalog and carries its own
-    * rule set.
-    */
-  private def runAssertMultiTable(catalog: Map[String, DataFrame], p: Plugin): Unit = {
-    val mm = p.options("rules").asInstanceOf[Map[String, Any]]
-    mm("tables_configs").asInstanceOf[Seq[Any]]
-      .map(_.asInstanceOf[Map[String, Any]]).foreach { tc =>
-        val path = tc("table_path").toString
-        val df = catalog.getOrElse(path,
-          throw new IllegalArgumentException(s"Assert: unknown table_path $path"))
-        Sinks.assertRules(df, parseNativeAssertRules(tc))
-      }
-  }
-
-  private def isMultiTableAssert(p: Plugin): Boolean =
-    p.plugin == "Assert" && (p.options.get("rules") match {
-      case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]].contains("tables_configs")
-      case _ => false
-    })
-
   private def runAssertLegacy(df: DataFrame, p: Plugin): Unit = {
       val rules = p.options.get("rules").map(_.asInstanceOf[Seq[Any]]).getOrElse(Nil).map { r =>
         val m = r.asInstanceOf[Map[String, Any]]
@@ -923,35 +902,22 @@ object Pipeline {
       }
   }
 
-  /** Execute a parsed job and report per-sink row metrics (the reference's
-    * job metrics surface: rows written per sink), collected via
-    * `Dataset.observe` — zero extra passes over the data.
-    * Note: Console truncates at its limit, so its observed count covers
-    * only the rows actually fetched.
+  /** A catalog-table schema's name (fake_to_assert_with_catalogtable:
+    * `schema.table`), when the schema option is an object that carries one.
     */
-  def runWithMetrics(spark: SparkSession, job: Job): (Map[String, DataFrame], Map[String, Long]) = {
-    // same per-run cache scope as run(): persisted intermediates this job
-    // creates release when its sinks have materialized, instead of
-    // accumulating in the global scope across repeated calls
-    val scope = graft.GraftCaches.newScope()
-    graft.GraftCaches.inScope(scope) {
-      try {
-        val (catalog, last) = buildCatalog(spark, job)
-        val metrics = job.sinks.zipWithIndex.map { case (s, i) =>
-          val in = s.input.orElse(s.output.filter(catalog.contains)).orElse(last).getOrElse(
-            throw new IllegalArgumentException(s"${s.plugin}: no input table"))
-          val df = catalog.getOrElse(in, throw new IllegalArgumentException(s"unknown table $in"))
-          val obs = new org.apache.spark.sql.Observation(s"graft_sink_$i")
-          runSink(df.observe(obs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("rows")), s)
-          s"${s.plugin}[$in]" -> obs.get("rows").asInstanceOf[Long]
-        }.toMap
-        (catalog, metrics)
-      } finally scope.release()
-    }
-  }
+  private def schemaTable(opts: Map[String, Any]): Option[String] =
+    opts.get("schema")
+      .collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
+      .flatMap(_.get("table")).map(_.toString)
 
-  private def buildCatalog(spark: SparkSession, job: Job): (Map[String, DataFrame], Option[String]) = {
+  /** Resolve a job's sources and transforms into its table catalog (name
+    * → plan) plus the last table produced, which inputless transforms and
+    * sinks read. Batch and streaming jobs share it: only `resolve`, the
+    * per-source reader, differs (all Graft operators are plan-builders, so
+    * the same transforms bind to batch or streaming frames unchanged).
+    */
+  private def buildCatalog(spark: SparkSession, job: Job,
+      resolve: (SparkSession, Plugin, Int) => DataFrame): (Map[String, DataFrame], Option[String]) = {
     // env.parallelism maps onto the shuffle-partition count for this job
     job.env.get("parallelism").foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
     val parallelism = job.env.get("parallelism").map(_.toInt).getOrElse(1)
@@ -959,56 +925,19 @@ object Pipeline {
     var last: Option[String] = None
     job.sources.foreach { s =>
       s.options.get("tables_configs") match {
-        // the reference's multi-table FakeSource: one source block declares
-        // several catalog tables, each keyed by its schema.table path
-        case Some(tcs: Seq[_]) if s.plugin == "FakeSource" =>
-          tcs.map(_.asInstanceOf[Map[String, Any]]).foreach { tc =>
-            val schema = tc("schema").asInstanceOf[Map[String, Any]]
-            val tableName = schema("table").toString
-            val fields: Seq[(String, Any)] = schema.get("columns") match {
-              case Some(cols: Seq[_]) => cols.map(_.asInstanceOf[Map[String, Any]])
-                .map(c => c("name").toString -> c("type"))
-              case _ => schema("fields").asInstanceOf[Map[String, Any]].toSeq
-            }
-            catalog += tableName -> (tc.get("rows") match {
-              case Some(rowsAny: Seq[_]) => literalRows(spark, fields, rowsAny)
-              case _ =>
-                // per-table `<type>.template` value lists, same contract as
-                // the single-table FakeSource path
-                val templates: Map[String, Seq[Any]] = tc.collect {
-                  case (k, v: Seq[_]) if k.endsWith(".template") =>
-                    k.stripSuffix(".template").toLowerCase -> (v: Seq[Any])
-                }
-                if (templates.nonEmpty)
-                  spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-                FakeSource.generateAny(spark, fields,
-                  tc.get("row.num").map(_.toString.toLong).getOrElse(5L) *
-                    tc.get("parallelism").map(_.toString.toInt).getOrElse(parallelism),
-                  templates = templates, ranges = fakeRanges(tc))
-            })
-            last = Some(tableName)
-          }
-        // multi-table file sources (local_file_*_with_multipletable): each
-        // tables_configs entry is a standalone source spec whose catalog
-        // name comes from its schema.table
+        // multi-table sources (the reference's multi-table FakeSource,
+        // local_file_*_with_multipletable): each tables_configs entry is a
+        // standalone source spec whose catalog name comes from its
+        // schema.table
         case Some(tcs: Seq[_]) =>
           tcs.map(_.asInstanceOf[Map[String, Any]]).foreach { tc =>
-            val tableName = tc.get("schema")
-              .collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-              .flatMap(_.get("table")).map(_.toString)
-              .getOrElse(s.output.getOrElse(s.plugin))
-            catalog += tableName -> resolveSource(spark,
-              Plugin(s.plugin, tc, None, None), parallelism)
+            val tableName = schemaTable(tc).getOrElse(s.output.getOrElse(s.plugin))
+            catalog += tableName -> resolve(spark, Plugin(s.plugin, tc, None, None), parallelism)
             last = Some(tableName)
           }
         case _ =>
-          // a catalog-table schema names the table (fake_to_assert_with_
-          // catalogtable: schema.table)
-          val schemaTable = s.options.get("schema")
-            .collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-            .flatMap(_.get("table")).map(_.toString)
-          val name = s.output.orElse(schemaTable).getOrElse(s.plugin)
-          catalog += name -> resolveSource(spark, s, parallelism)
+          val name = s.output.orElse(schemaTable(s.options)).getOrElse(s.plugin)
+          catalog += name -> resolve(spark, s, parallelism)
           last = Some(name)
       }
     }
@@ -1100,63 +1029,105 @@ object Pipeline {
     (catalog, last)
   }
 
-  /** Execute a parsed job. Returns the final catalog (table name → plan)
-    * so callers/tests can inspect intermediate tables.
+  /** One write a sink performs: the catalog tables it reads, their frame
+    * (a union when there are several) and the sink options to write with.
     */
-  def run(spark: SparkSession, job: Job): Map[String, DataFrame] = {
+  private final case class SinkInput(tables: Seq[String], df: DataFrame, sink: Plugin)
+
+  /** Resolve one sink block into the writes it performs — the batch,
+    * metered and streaming runners all read their sink inputs here:
+    *  - a multi-table Assert (rules.tables_configs) checks each entry's
+    *    table_path against that entry's own rule set;
+    *  - an inputless sink whose path carries the reference's
+    *    `${table_name}` placeholder writes EVERY table the multi-table
+    *    source declared (else every catalog table), placeholder
+    *    substituted per table (LocalFileWithMultipleTableIT semantics);
+    *  - a list plugin_input (`plugin_inputs`) unions its tables;
+    *  - otherwise plugin_input names the table; some reference configs
+    *    label the sink's input with plugin_output instead (e2e
+    *    func_array.conf), and an unlabeled sink reads the last table.
+    */
+  private def sinkInputs(job: Job, catalog: Map[String, DataFrame], last: Option[String],
+      s: Plugin): Seq[SinkInput] = {
+    def table(t: String): DataFrame =
+      catalog.getOrElse(t, throw new IllegalArgumentException(s"unknown table $t"))
+    val assertTables = s.options.get("rules") match {
+      case Some(m: Map[_, _]) if s.plugin == "Assert" =>
+        m.asInstanceOf[Map[String, Any]].get("tables_configs")
+      case _ => None
+    }
+    val multiIn = s.list("plugin_inputs")
+    assertTables match {
+      case Some(tcs: Seq[_]) =>
+        tcs.map(_.asInstanceOf[Map[String, Any]]).map { tc =>
+          val path = tc("table_path").toString
+          SinkInput(Seq(path), catalog.getOrElse(path,
+              throw new IllegalArgumentException(s"Assert: unknown table_path $path")),
+            s.copy(options = s.options.updated("rules", tc)))
+        }
+      case _ if s.input.isEmpty && s.strOpt("path").exists(_.contains("${table_name}")) =>
+        val declared = job.sources.flatMap(_.options.get("tables_configs") match {
+          case Some(tcs: Seq[_]) => tcs.collect { case m: Map[_, _] =>
+            m.asInstanceOf[Map[String, Any]] }.flatMap(schemaTable)
+          case _ => Nil
+        })
+        (if (declared.nonEmpty) declared else catalog.keys.toSeq.sorted).map { t =>
+          SinkInput(Seq(t), table(t), s.copy(options = s.options.updated("path",
+            s.str("path").replace("${table_name}", t))))
+        }
+      case _ if multiIn.nonEmpty =>
+        Seq(SinkInput(multiIn,
+          multiIn.map(table).reduce(_.unionByName(_, allowMissingColumns = true)), s))
+      case _ =>
+        val in = s.input.orElse(s.output.filter(catalog.contains)).orElse(last).getOrElse(
+          throw new IllegalArgumentException(s"${s.plugin}: no input table"))
+        Seq(SinkInput(Seq(in), table(in), s))
+    }
+  }
+
+  /** The batch sink loop `run` and `runWithMetrics` share: build the
+    * catalog, hand every sink write to `write`, and return the catalog.
+    */
+  private def runBatch(spark: SparkSession, job: Job)(
+      write: SinkInput => Unit): Map[String, DataFrame] = {
     // per-run cache scope: concurrent pipelines in one session each
     // release only their own persisted intermediates
     val scope = graft.GraftCaches.newScope()
     graft.GraftCaches.inScope(scope) {
-      val (catalog, last) = buildCatalog(spark, job)
       try {
-        job.sinks.foreach { s =>
-          if (isMultiTableAssert(s)) runAssertMultiTable(catalog, s)
-          // multi-table sink fan-out: an inputless sink whose path carries
-          // the reference's ${table_name} placeholder writes EVERY table
-          // the multi-table source declared, placeholder substituted per
-          // table (LocalFileWithMultipleTableIT semantics)
-          else if (s.input.isEmpty &&
-              s.options.get("path").exists(_.toString.contains("${table_name}"))) {
-            val declared = job.sources.flatMap(_.options.get("tables_configs") match {
-              case Some(tcs: Seq[_]) => tcs.map(_.asInstanceOf[Map[String, Any]])
-                .flatMap(_.get("schema"))
-                .collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-                .flatMap(_.get("table")).map(_.toString)
-              case _ => Nil
-            })
-            val tables = if (declared.nonEmpty) declared else catalog.keys.toSeq.sorted
-            tables.foreach { t =>
-              runSink(catalog(t), s.copy(options = s.options.updated("path",
-                s.str("path").replace("${table_name}", t))))
-            }
-          } else {
-            // a list plugin_input unions its tables (same contract as the
-            // streaming runner)
-            val multiIn = s.options.get("plugin_inputs") match {
-              case Some(xs: Seq[_]) => xs.map(_.toString)
-              case _ => Nil
-            }
-            if (multiIn.nonEmpty) {
-              runSink(multiIn.map(t => catalog.getOrElse(t,
-                throw new IllegalArgumentException(s"unknown table $t")))
-                .reduce(_.unionByName(_, allowMissingColumns = true)), s)
-            } else {
-              // some reference configs label the sink's input with
-              // plugin_output (e2e func_array.conf) — accept it as the
-              // read-table alias
-              val in = s.input.orElse(s.output.filter(catalog.contains)).orElse(last).getOrElse(
-                throw new IllegalArgumentException(s"${s.plugin}: no input table"))
-              runSink(catalog.getOrElse(in,
-                throw new IllegalArgumentException(s"unknown table $in")), s)
-            }
-          }
-        }
+        val (catalog, last) = buildCatalog(spark, job, resolveSource)
+        job.sinks.foreach(sinkInputs(job, catalog, last, _).foreach(write))
         catalog
         // sinks have materialized: drop the job's tracked persisted
         // intermediates (catalog frames recompute if inspected afterwards)
       } finally scope.release()
     }
+  }
+
+  /** Execute a parsed job. Returns the final catalog (table name → plan)
+    * so callers/tests can inspect intermediate tables.
+    */
+  def run(spark: SparkSession, job: Job): Map[String, DataFrame] =
+    runBatch(spark, job)(w => runSink(w.df, w.sink))
+
+  /** Execute a parsed job and report per-sink row metrics (the reference's
+    * job metrics surface: rows written per sink), collected via
+    * `Dataset.observe` — zero extra passes over the data. Keys are
+    * `plugin[table]`: one per table for a fan-out sink, the input names
+    * joined by `,` for a union sink.
+    * Note: Console truncates at its limit, so its observed count covers
+    * only the rows actually fetched.
+    */
+  def runWithMetrics(spark: SparkSession, job: Job): (Map[String, DataFrame], Map[String, Long]) = {
+    val metrics = Map.newBuilder[String, Long]
+    val ids = Iterator.from(0)
+    val catalog = runBatch(spark, job) { w =>
+      val obs = new org.apache.spark.sql.Observation(s"graft_sink_${ids.next()}")
+      runSink(w.df.observe(obs, org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("rows")), w.sink)
+      metrics += s"${w.sink.plugin}[${w.tables.mkString(",")}]" -> obs.get("rows").asInstanceOf[Long]
+    }
+    (catalog, metrics.result())
   }
 
   def runJson(spark: SparkSession, json: String): Map[String, DataFrame] =
@@ -1165,7 +1136,7 @@ object Pipeline {
   // ---------- streaming mode (env.job.mode = STREAMING) ----------
 
   private def resolveStreamingSource(spark: SparkSession, p: Plugin,
-      parallelism: Int = 1): DataFrame = p.plugin match {
+      parallelism: Int): DataFrame = p.plugin match {
     case "FakeSource" =>
       // STREAMING FakeSource (the reference's stream_fakesource_* e2e
       // configs): the reference emits row.num rows PER degree of
@@ -1208,113 +1179,90 @@ object Pipeline {
     case other => throw new IllegalArgumentException(s"unknown streaming source plugin: $other")
   }
 
-  /** Execute a STREAMING job: same transform chain (all Graft operators
-    * are plan-builders, so they bind to streaming DataFrames unchanged),
-    * streaming sources/sinks. Returns the started queries; caller owns
-    * their lifecycle (awaitTermination/stop).
+  /** Execute a STREAMING job: the batch runner's catalog builder and
+    * sink-input resolver over streaming sources, then one streaming query
+    * per sink write. Returns the started queries; caller owns their
+    * lifecycle (awaitTermination/stop).
     */
   def runStreaming(spark: SparkSession, job: Job): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
     require(job.isStreaming, "runStreaming requires env.job.mode = STREAMING")
-    job.env.get("parallelism").foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
-    val parallelism = job.env.get("parallelism").map(_.toInt).getOrElse(1)
-    var catalog = Map.empty[String, DataFrame]
-    var last: Option[String] = None
-    job.sources.foreach { s =>
-      val name = s.output.getOrElse(s.plugin)
-      catalog += name -> resolveStreamingSource(spark, s, parallelism)
-      last = Some(name)
-    }
-    job.transforms.foreach { t =>
-      val in = t.input.orElse(last).getOrElse(
-        throw new IllegalArgumentException(s"${t.plugin}: no input table"))
-      val name = t.output.getOrElse(in + "_out")
-      catalog += name -> applyTransform(spark, t, catalog(in))
-      last = Some(name)
-    }
-    job.sinks.map { s =>
-      // multi-input sinks (plugin_input = [a, b]) union their tables
-      val multiIn = s.options.get("plugin_inputs") match {
-        case Some(xs: Seq[_]) => xs.map(_.toString)
-        case _ => Nil
-      }
-      val in = s.input.orElse(multiIn.headOption).orElse(last).getOrElse(
-        throw new IllegalArgumentException(s"${s.plugin}: no input table"))
-      val df =
-        if (multiIn.nonEmpty)
-          multiIn.map(catalog(_)).reduce(_.unionByName(_, allowMissingColumns = true))
-        else catalog(in)
-      // env.checkpoint.interval (ms) maps onto the micro-batch trigger —
-      // the closest Spark analog of the reference's checkpoint cadence —
-      // but only at micro-batch timescales. The reference paces
-      // CHECKPOINTS with it, not data: its biginterval IT sets the
-      // interval near Int.MaxValue and still expects rows to flow
-      // immediately, so a huge interval keeps the default (continuous)
-      // trigger instead of stalling the stream for days.
-      def triggered(w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]) =
-        job.env.get("checkpoint.interval").map(_.toLong).filter(_ <= 300000L).fold(w)(ms =>
-          w.trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(ms)))
-      s.plugin match {
-        case "Console" =>
-          triggered(df.writeStream.format("console")
-            .outputMode(s.strOpt("output_mode").getOrElse("append"))).start()
-        case "Memory" =>
-          triggered(df.writeStream.format("memory").queryName(s.strOpt("query_name").getOrElse(in))
-            .outputMode(s.strOpt("output_mode").getOrElse("append"))).start()
-        case "InMemory" =>
-          // the reference's e2e failure-injection sink (see InMemorySink)
-          requireTestSink("InMemory")
-          val key = s.strOpt("store_key").getOrElse(in)
-          val throwEx = s.bool("throw_exception", false)
-          val throwOom = s.bool("throw_out_of_memory", false)
-          val ckptSleep = s.bool("checkpoint_sleep", false)
-          val throwList = s.list("throw_runtime_exception_list")
-          // attempt ticks once per runStreaming invocation — the
-          // reference's restoreCount is per job attempt, and a per-batch
-          // tick would desync the attempt-to-message mapping if a future
-          // within-run retry (or a surviving second micro-batch) consumed
-          // extra throw_runtime_exception_list entries
-          val attempt =
-            if (throwList.nonEmpty) graft.sinks.InMemorySink.nextAttempt(key) else 0
-          var w = df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-            if (throwOom) throw new OutOfMemoryError()
-            if (throwList.nonEmpty)
-              throw new RuntimeException(throwList(math.min(attempt, throwList.length - 1)))
-            graft.sinks.InMemorySink.append(key, batch.collect().toIndexedSeq)
-            if (throwEx) { Thread.sleep(4000L); throw new java.io.IOException("write failed") }
-            if (ckptSleep) Thread.sleep(5000L)
-          }
-          s.strOpt("checkpoint").foreach(c => w = w.option("checkpointLocation", c))
-          triggered(w).start()
-        case "LocalFile" | "File" =>
-          val fmt = s.strOpt("file_format_type").getOrElse("parquet").toLowerCase
-          val partitionBy = s.list("partition_by")
-          // multi-column text streams through the delimited-text line
-          // projection (writeStream text takes one column; partition
-          // columns ride along for partitionBy)
-          val (outDf, outFmt) = fmt match {
-            case "text" if df.columns.length > 1 || s.options.contains("field_delimiter") =>
-              (graft.formats.DelimitedTextFormat.toLines(df,
-                graft.formats.DelimitedTextFormat.configFrom(
-                  s.options.collect { case (k, v) if !v.isInstanceOf[Map[_, _]] &&
-                    !v.isInstanceOf[Seq[_]] => k -> v.toString }),
-                keep = partitionBy), "text")
-            case other => (df, other)
-          }
-          var w = outDf.writeStream.format(outFmt)
-            .option("path", s.str("path"))
-            .option("checkpointLocation", s.strOpt("checkpoint")
-              .getOrElse(s.str("path") + "/_checkpoint"))
-            .outputMode(s.strOpt("output_mode").getOrElse("append"))
-          if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
-          triggered(w).start()
-        case "Socket" =>
-          graft.sinks.SocketSink.writeStream(df,
-            graft.sinks.SocketSink.Config(s.str("host"), s.str("port").toInt,
-              s.int("max_retries", 3)),
-            s.strOpt("checkpoint").getOrElse(
-              java.nio.file.Files.createTempDirectory("graft-socket-ckpt").toString))
-        case other => throw new IllegalArgumentException(s"unknown streaming sink plugin: $other")
-      }
+    val (catalog, last) = buildCatalog(spark, job, resolveStreamingSource)
+    job.sinks.flatMap(sinkInputs(job, catalog, last, _).map(startStream(job, _)))
+  }
+
+  private def startStream(job: Job, sinkIn: SinkInput): org.apache.spark.sql.streaming.StreamingQuery = {
+    val (s, df, in) = (sinkIn.sink, sinkIn.df, sinkIn.tables.head)
+    // env.checkpoint.interval (ms) maps onto the micro-batch trigger —
+    // the closest Spark analog of the reference's checkpoint cadence —
+    // but only at micro-batch timescales. The reference paces
+    // CHECKPOINTS with it, not data: its biginterval IT sets the
+    // interval near Int.MaxValue and still expects rows to flow
+    // immediately, so a huge interval keeps the default (continuous)
+    // trigger instead of stalling the stream for days.
+    def triggered(w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]) =
+      job.env.get("checkpoint.interval").map(_.toLong).filter(_ <= 300000L).fold(w)(ms =>
+        w.trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(ms)))
+    s.plugin match {
+      case "Console" =>
+        triggered(df.writeStream.format("console")
+          .outputMode(s.strOpt("output_mode").getOrElse("append"))).start()
+      case "Memory" =>
+        triggered(df.writeStream.format("memory").queryName(s.strOpt("query_name").getOrElse(in))
+          .outputMode(s.strOpt("output_mode").getOrElse("append"))).start()
+      case "InMemory" =>
+        // the reference's e2e failure-injection sink (see InMemorySink)
+        requireTestSink("InMemory")
+        val key = s.strOpt("store_key").getOrElse(in)
+        val throwEx = s.bool("throw_exception", false)
+        val throwOom = s.bool("throw_out_of_memory", false)
+        val ckptSleep = s.bool("checkpoint_sleep", false)
+        val throwList = s.list("throw_runtime_exception_list")
+        // attempt ticks once per runStreaming invocation — the
+        // reference's restoreCount is per job attempt, and a per-batch
+        // tick would desync the attempt-to-message mapping if a future
+        // within-run retry (or a surviving second micro-batch) consumed
+        // extra throw_runtime_exception_list entries
+        val attempt =
+          if (throwList.nonEmpty) graft.sinks.InMemorySink.nextAttempt(key) else 0
+        var w = df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+          if (throwOom) throw new OutOfMemoryError()
+          if (throwList.nonEmpty)
+            throw new RuntimeException(throwList(math.min(attempt, throwList.length - 1)))
+          graft.sinks.InMemorySink.append(key, batch.collect().toIndexedSeq)
+          if (throwEx) { Thread.sleep(4000L); throw new java.io.IOException("write failed") }
+          if (ckptSleep) Thread.sleep(5000L)
+        }
+        s.strOpt("checkpoint").foreach(c => w = w.option("checkpointLocation", c))
+        triggered(w).start()
+      case "LocalFile" | "File" =>
+        val fmt = s.strOpt("file_format_type").getOrElse("parquet").toLowerCase
+        val partitionBy = s.list("partition_by")
+        // multi-column text streams through the delimited-text line
+        // projection (writeStream text takes one column; partition
+        // columns ride along for partitionBy)
+        val (outDf, outFmt) = fmt match {
+          case "text" if df.columns.length > 1 || s.options.contains("field_delimiter") =>
+            (graft.formats.DelimitedTextFormat.toLines(df,
+              graft.formats.DelimitedTextFormat.configFrom(
+                s.options.collect { case (k, v) if !v.isInstanceOf[Map[_, _]] &&
+                  !v.isInstanceOf[Seq[_]] => k -> v.toString }),
+              keep = partitionBy), "text")
+          case other => (df, other)
+        }
+        var w = outDf.writeStream.format(outFmt)
+          .option("path", s.str("path"))
+          .option("checkpointLocation", s.strOpt("checkpoint")
+            .getOrElse(s.str("path") + "/_checkpoint"))
+          .outputMode(s.strOpt("output_mode").getOrElse("append"))
+        if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
+        triggered(w).start()
+      case "Socket" =>
+        graft.sinks.SocketSink.writeStream(df,
+          graft.sinks.SocketSink.Config(s.str("host"), s.str("port").toInt,
+            s.int("max_retries", 3)),
+          s.strOpt("checkpoint").getOrElse(
+            java.nio.file.Files.createTempDirectory("graft-socket-ckpt").toString))
+      case other => throw new IllegalArgumentException(s"unknown streaming sink plugin: $other")
     }
   }
 }

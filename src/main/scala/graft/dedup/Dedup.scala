@@ -320,7 +320,6 @@ object Dedup {
     val spark = pairs.sparkSession
     import org.apache.spark.HashPartitioner
     import org.apache.spark.storage.StorageLevel
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
     val edgeRdd = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     // Symmetrize, then co-partition on the message key once: ~2M edges per
@@ -353,7 +352,6 @@ object Dedup {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val iterT0 = System.nanoTime()
       // min over (self, neighbors' labels, label-of-label): the neighbor
       // term walks the graph, the pointer-jump term halves the remaining
       // propagation depth each round — O(log diameter) rounds for chains
@@ -366,7 +364,6 @@ object Dedup {
       val next = (labels ++ nbr ++ jump).reduceByKey(part, math.min(_, _))
       next.localCheckpoint() // lazy; materialized by the probe below
       val nextSum = labelSum(next)
-      if (ccDebug) println(f"CC_DEBUG iter=$iter wall=${(System.nanoTime() - iterT0) / 1e9}%.3f s")
       labels.unpersist(blocking = false)
       labels = next
       converged = nextSum == prevSum
@@ -391,67 +388,57 @@ object Dedup {
 
   // ---------- simhash ----------
 
-  /** Near-duplicate pairs via 64-bit SimHash with 16-bit band blocking.
-    * Two docs within `maxHamming` differing bits share at least one of the
-    * four 16-bit bands (pigeonhole, maxHamming <= 3), so blocking on band
-    * values finds all such pairs with one keyed shuffle. Verification is
-    * Spark's native bit_count(a ^ b) — codegen'd, no UDF on the hot pair path.
+  /** Near-duplicate pairs via 64-bit SimHash with pigeonhole band
+    * blocking ([[hammingBandPairs]]): at the default `maxHamming = 3` the
+    * signature splits into four 16-bit bands, and blocking on band values
+    * finds all pairs within `maxHamming` differing bits with one keyed
+    * shuffle. Verification is Spark's native bit_count(a ^ b) — codegen'd,
+    * no UDF on the hot pair path.
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 1000): DataFrame = {
     graft.plans.NativeExpressions.register(df.sparkSession)
-    val sigs = df.select(col(idCol).as("doc"),
-      expr(s"simhash64(`$textCol`)").as("sig"))
-    // persisted for the same reason as minHashPairs: the bucket-cap
-    // subquery + both self-join sides would otherwise re-scan the corpus
-    val banded = sigs.select(col("doc"), col("sig"),
-        explode(array((0 until 4).map(i =>
-          struct(lit(i).as("band_idx"),
-            shiftrightunsigned(col("sig"), i * 16).bitwiseAND(lit(0xffffL)).as("band_val"))): _*)).as("b"))
-      .select(col("doc"), col("sig"), col("b.band_idx"), col("b.band_val"))
-      .graftPersist
-    val capped = dropOversizedBuckets(banded, Seq("band_idx", "band_val"), maxBucketSize)
-
-    val a = capped.select(col("band_idx"), col("band_val"), col("doc").as("id_a"), col("sig").as("sig_a"))
-    val b = capped.select(col("band_idx"), col("band_val"), col("doc").as("id_b"), col("sig").as("sig_b"))
-    // hamming-verify BEFORE the pair dedup: the filter is codegen'd
-    // arithmetic fused into the join's output stage, so the
-    // dropDuplicates exchange carries only TRUE pairs (hamming is a pure
-    // function of the sigs — identical for every band that rediscovers a
-    // pair). At high maxHamming the bands are narrow and candidates
-    // outnumber true pairs by orders of magnitude (r8: this exchange was
-    // the q_image_neardup bench floor).
-    a.join(b, Seq("band_idx", "band_val"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .where(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-      .select("id_a", "id_b", "hamming")
+    hammingBandPairs(df.select(col(idCol).as("doc"),
+      expr(s"simhash64(`$textCol`)").as("sig")), maxHamming, maxBucketSize)
   }
 
   /** Image near-dup pairs via perceptual hashing: each image folds to a
     * 64-bit dHash ([[graft.multimodal.BinaryOps.dHash64]]) at decode time
     * — 8 bytes per image enter the plan, never pixels — then the same
-    * pigeonhole band blocking as [[simHashPairs]] finds candidates:
-    * `maxHamming + 1` contiguous bit-ranges of the signature (two hashes
-    * within `maxHamming` bits MUST agree on at least one whole band), a
-    * bucket cap bounds degenerate content (e.g. solid-color images), and
-    * the exact popcount verifies. Returns (id_a, id_b, hamming).
+    * band blocking as [[simHashPairs]] finds candidates, a bucket cap
+    * bounds degenerate content (e.g. solid-color images), and the exact
+    * popcount verifies. Returns (id_a, id_b, hamming).
     */
   def imageNearDupPairs(df: DataFrame, idCol: String, binCol: String,
       maxHamming: Int = 6, maxBucketSize: Int = 1000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 32, s"maxHamming out of range: $maxHamming")
-    val nBands = maxHamming + 1
-    val offsets = (0 to nBands).map(i => i * 64 / nBands)
     val sigs = graft.multimodal.BinaryOps
       .imageDHash(df.select(col(idCol).as("doc"), col(binCol)), binCol, "sig")
       .where(col("sig").isNotNull)
       .select(col("doc"), col("sig"))
+    hammingBandPairs(sigs, maxHamming, maxBucketSize)
+  }
+
+  /** Pairs of (doc, sig) rows whose 64-bit signatures differ in at most
+    * `maxHamming` bits: `maxHamming + 1` contiguous bit-ranges of the
+    * signature (pigeonhole — two signatures within `maxHamming` bits MUST
+    * agree on at least one whole band), band buckets above
+    * `maxBucketSize` dropped, then the exact popcount verifies. Returns
+    * (id_a, id_b, hamming) with id_a < id_b.
+    */
+  private def hammingBandPairs(sigs: DataFrame, maxHamming: Int,
+      maxBucketSize: Int): DataFrame = {
+    require(maxHamming >= 0 && maxHamming < 32, s"maxHamming out of range: $maxHamming")
+    val nBands = maxHamming + 1
+    val offsets = (0 to nBands).map(i => i * 64 / nBands)
+    // persisted for the same reason as minHashPairs: the bucket-cap
+    // subquery + both self-join sides would otherwise re-scan the corpus.
+    // The mask is -1L >>> (64 - width): a 64-bit band (maxHamming = 0)
+    // keeps every bit, where (1L << 64) - 1 would be 0 on the JVM.
     val banded = sigs.select(col("doc"), col("sig"),
         explode(array((0 until nBands).map(i =>
           struct(lit(i).as("band_idx"),
             shiftrightunsigned(col("sig"), offsets(i))
-              .bitwiseAND(lit((1L << (offsets(i + 1) - offsets(i))) - 1)).as("band_val"))): _*)).as("b"))
+              .bitwiseAND(lit(-1L >>> (64 - (offsets(i + 1) - offsets(i))))).as("band_val"))): _*)).as("b"))
       .select(col("doc"), col("sig"), col("b.band_idx"), col("b.band_val"))
       .graftPersist
     val capped = dropOversizedBuckets(banded, Seq("band_idx", "band_val"), maxBucketSize)

@@ -28,19 +28,34 @@ class HygieneSpec extends AnyFunSuite {
       s"scratch main() found in test sources: ${offenders.mkString(", ")}")
   }
 
+  // The Bench/Verify entry points plus the evidence tools that no Bench
+  // option replaces: plan dumps, scale curves, the sf1/sf10 generator and
+  // the larger-than-heap state stress (SCALE_r20.json state_capacity_r20).
+  private val mains = Set("Bench.scala", "Verify.scala", "Explain.scala",
+    "ScaleBench.scala", "Sf1Gen.scala", "StateStress.scala")
+
   test("main sources keep entry points to the declared driver contract") {
-    // The Bench/Verify entry points plus the evidence tools that no
-    // Bench option replaces: plan dumps, scale curves, the sf1/sf10
-    // generator and the larger-than-heap state stress (SCALE_r20.json
-    // state_capacity_r20). One-off timing points belong in Bench.
-    val allowed = Set("Bench.scala", "Verify.scala", "Explain.scala",
-      "ScaleBench.scala", "Sf1Gen.scala", "StateStress.scala")
+    // one-off timing points belong in Bench
     val offenders = scalaFiles("src/main/scala").filter { f =>
       val src = new String(Files.readAllBytes(f), "UTF-8")
-      src.contains(needle) && !allowed.contains(f.getFileName.toString)
+      src.contains(needle) && !mains.contains(f.getFileName.toString)
     }
     assert(offenders.isEmpty,
       s"unexpected main() in library sources: ${offenders.mkString(", ")}")
+  }
+
+  test("only the mains read environment variables") {
+    // library behaviour comes from job config and parameters; a knob read
+    // deep inside an operator changes results with no trace in the job
+    val envReads = Seq("sys.env", "System.getenv")
+    val offenders = scalaFiles("src/main/scala")
+      .filterNot(f => mains.contains(f.getFileName.toString))
+      .filter { f =>
+        val src = stripComments(new String(Files.readAllBytes(f), "UTF-8"))
+        envReads.exists(src.contains)
+      }
+    assert(offenders.isEmpty,
+      s"environment read outside the mains: ${offenders.mkString(", ")}")
   }
 
   test("every SparkSession is built by GraftSession.create") {

@@ -250,4 +250,121 @@ class PipelineSpec extends SparkSpec {
     val catalog = Pipeline.runJson(spark, config)
     assert(catalog("f_out_out").columns.toSeq == Seq("renamed"))
   }
+
+  test("STREAMING Sql without plugin_input reads its upstream table by name") {
+    val dir = Files.createTempDirectory("graft-streamimplicit").toString
+    spark.range(0, 4).selectExpr("id", "concat('u', id) AS name")
+      .coalesce(1).write.mode("overwrite").json(dir)
+    // no plugin_input on the Sql transform: its view must still be named
+    // after the upstream table (the batch contract), not `input`
+    val job = Pipeline.parse(
+      s"""{
+         |  "env": {"job.mode": "STREAMING"},
+         |  "source": [{"plugin": "LocalFile", "plugin_output": "implicit_stream_src",
+         |              "path": "$dir", "file_format_type": "json",
+         |              "schema": "id BIGINT, name STRING"}],
+         |  "transform": [{"plugin": "Sql", "plugin_output": "picked",
+         |                 "query": "SELECT id, name FROM implicit_stream_src WHERE id < 2"}],
+         |  "sink": [{"plugin": "Memory", "query_name": "implicit_sql_out"}]
+         |}""".stripMargin)
+    val queries = Pipeline.runStreaming(spark, job)
+    try {
+      queries.foreach(_.processAllAvailable())
+      val rows = spark.table("implicit_sql_out").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sorted
+      assert(rows.toSeq == Seq((0L, "u0"), (1L, "u1")))
+    } finally queries.foreach(_.stop())
+  }
+
+  test("runWithMetrics checks every table of a multi-table Assert") {
+    val config =
+      """{
+        |  "source": [
+        |    {"plugin": "FakeSource", "plugin_output": "small", "row.num": 3,
+        |     "schema": {"fields": {"x": "int"}}},
+        |    {"plugin": "FakeSource", "plugin_output": "large", "row.num": 5,
+        |     "schema": {"fields": {"x": "int"}}}
+        |  ],
+        |  "sink": [{"plugin": "Assert", "rules": {"tables_configs": [
+        |    {"table_path": "small", "row_rules": [{"rule_type": "MAX_ROW", "rule_value": 3}]},
+        |    {"table_path": "large", "row_rules": [{"rule_type": "MAX_ROW", "rule_value": 3}]}
+        |  ]}}]
+        |}""".stripMargin
+    val e = intercept[graft.sinks.Sinks.AssertionFailed] {
+      Pipeline.runWithMetrics(spark, Pipeline.parse(config))
+    }
+    assert(e.getMessage.contains("row count 5"), e.getMessage)
+  }
+
+  test("runWithMetrics counts a plugin_input union sink once over both inputs") {
+    val out = Files.createTempDirectory("graft-metrics-union").toString + "/out"
+    val job = Pipeline.parseHocon(
+      s"""source {
+         |  FakeSource { plugin_output = "ua", row.num = 3, schema = { fields { x = "int" } } }
+         |  FakeSource { plugin_output = "ub", row.num = 4, schema = { fields { x = "int" } } }
+         |}
+         |sink {
+         |  LocalFile {
+         |    plugin_input = ["ua", "ub"]
+         |    path = "$out"
+         |    file_format_type = "parquet"
+         |  }
+         |}
+         |""".stripMargin)
+    val (_, metrics) = Pipeline.runWithMetrics(spark, job)
+    assert(metrics == Map("LocalFile[ua,ub]" -> 7L))
+    assert(spark.read.parquet(out).count() == 7L)
+  }
+
+  test("runWithMetrics fans a table_name-placeholder sink out to one directory per table") {
+    val out = Files.createTempDirectory("graft-metrics-fanout").toString
+    val config =
+      s"""{
+         |  "source": [{"plugin": "FakeSource", "tables_configs": [
+         |    {"row.num": 2, "schema": {"table": "fan_a", "fields": {"x": "int"}}},
+         |    {"row.num": 3, "schema": {"table": "fan_b", "fields": {"x": "int"}}}
+         |  ]}],
+         |  "sink": [{"plugin": "File", "path": "$out/$${table_name}",
+         |            "file_format_type": "parquet"}]
+         |}""".stripMargin
+    val (_, metrics) = Pipeline.runWithMetrics(spark, Pipeline.parse(config))
+    assert(metrics == Map("File[fan_a]" -> 2L, "File[fan_b]" -> 3L))
+    assert(spark.read.parquet(s"$out/fan_a").count() == 2L)
+    assert(spark.read.parquet(s"$out/fan_b").count() == 3L)
+  }
+
+  test("HOCON multi-table FakeSource: each tables_configs entry is a catalog table") {
+    val job = Pipeline.parseHocon(
+      """source {
+        |  FakeSource {
+        |    tables_configs = [
+        |      {
+        |        schema = { table = "mt.people", fields { name = "string", age = "int" } }
+        |        rows = [
+        |          { kind = INSERT, fields = ["ann", 31] },
+        |          { kind = INSERT, fields = ["bob", 42] }
+        |        ]
+        |      },
+        |      {
+        |        row.num = 3
+        |        parallelism = 2
+        |        schema = {
+        |          table = "mt.events"
+        |          columns = [{ name = "id", type = "bigint" }, { name = "tag", type = "string" }]
+        |        }
+        |      }
+        |    ]
+        |  }
+        |}
+        |""".stripMargin)
+    val catalog = Pipeline.run(spark, job)
+    assert(catalog.keySet == Set("mt.people", "mt.events"))
+    val people = catalog("mt.people")
+    assert(people.columns.toSeq == Seq("name", "age", graft.operators.RowKindOps.RowKindCol))
+    assert(people.select("name", "age").collect().map(r => (r.getString(0), r.getInt(1)))
+      .toSeq == Seq(("ann", 31), ("bob", 42)))
+    val events = catalog("mt.events")
+    assert(events.columns.toSeq == Seq("id", "tag"))
+    assert(events.count() == 6L) // row.num per degree of parallelism
+  }
 }

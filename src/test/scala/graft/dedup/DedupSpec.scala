@@ -151,6 +151,22 @@ class DedupSpec extends SparkSpec {
     assert(h == 0)
   }
 
+  test("simHashPairs above maxHamming 3 finds pairs that differ in every 16-bit band") {
+    // one substituted word moves the signature 4 bits, one in each 16-bit
+    // quarter: four fixed 16-bit bands never pair them, while
+    // maxHamming + 1 bands must (pigeonhole)
+    val a = "the quick brown fox jumps over the lazy dog near the river bank " +
+      "while the farmer watches from the old wooden fence at dawn"
+    val b = a.replace("brown", "bird")
+    val x = TextHashing.simHash64(a) ^ TextHashing.simHash64(b)
+    assert(java.lang.Long.bitCount(x) == 4, "fixture drifted")
+    assert((0 until 4).forall(k => ((x >>> (16 * k)) & 0xffffL) != 0L), "fixture drifted")
+    val pairs = Dedup.simHashPairs(Seq((1L, a), (2L, b)).toDF("doc_id", "text"),
+      "doc_id", "text", maxHamming = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(pairs.toSeq == Seq((1L, 2L, 4)))
+  }
+
   test("ngramJaccardPairs inverted-index join finds overlapping docs") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.5).collect()
     val pairSet = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -114,6 +114,18 @@ class ImageNearDupSpec extends SparkSpec {
     }
   }
 
+  test("maxHamming = 0 blocks on the whole 64-bit signature") {
+    // one 64-bit band: its mask must keep every bit — a zero mask sends
+    // every image to one bucket, which the cap then drops whole
+    val (w, h) = (36, 32)
+    val a = BinaryOps.encodeImage("png", w, h, quadRgb(w, h, 3))
+    val b = BinaryOps.encodeImage("png", w, h, quadRgb(w, h, 101))
+    val df = spark.createDataFrame(Seq((1L, a), (2L, a), (3L, b))).toDF("id", "img")
+    val pairs = Dedup.imageNearDupPairs(df, "id", "img", maxHamming = 0, maxBucketSize = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(pairs.toSeq == Seq((1L, 2L, 0)))
+  }
+
   test("bucket cap drops degenerate (e.g. solid-color) floods") {
     val (w, h) = (18, 16)
     // 30 identical solid images all share every band: over any cap < 30
