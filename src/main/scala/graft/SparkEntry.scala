@@ -124,11 +124,14 @@ object SparkEntry {
     */
   private def signatureStore(s: SparkSession, dir: String): String = {
     val path = s"/tmp/graft_fixtures/sigstore_${dir.replaceAll("\\W", "_")}"
-    ensureFixture(path, sourceToken(dir, "documents")) {
+    // The token pins the MinHash config, which incrementalFromStore checks
+    // against the store's `_minhash_config`: a change rebuilds the store.
+    val cfg = graft.dedup.Dedup.MinHashConfig()
+    ensureFixture(path, sourceToken(dir, "documents") + s"|$cfg") {
       graft.dedup.Dedup.writeSignatures(
         Tables.load(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(10)) =!= 0),
-        "doc_id", "text", path)
+        "doc_id", "text", path, cfg)
     }
     path
   }

@@ -1,7 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 import graft.GraftCaches.PersistOps
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY §2.6).
@@ -94,39 +96,81 @@ object Dedup {
     // means the corpus parquet is scanned once per query, not once per
     // derived table. MEMORY_AND_DISK: text-sized, spills, LRU-evictable
     // (eviction degrades to a rescan, never an error).
-    val src = df.select(col(idCol).as("doc"), col(textCol).as("txt"))
-      .graftPersist
-    val bands = expr(
-      s"minhash_bands(txt, ${cfg.shingleSize}, ${cfg.numPerms}, ${cfg.numBands}, ${cfg.seed})")
+    val src = docText(df, idCol, textCol).graftPersist
     // banded feeds the oversized-bucket subquery AND both sides of the
     // candidate self-join; Spark reuses no subplans across self-joins, so
     // without the persist the corpus is re-scanned and re-signatured 4x
     // (measured: 7 parquet scans per query). Same treatment as ngram.
-    val banded = src.select(col("doc"),
-      posexplode(bands).as(Seq("band_idx", "band_hash")))
-      .graftPersist
+    val banded = src.select(col("doc"), minHashBands(cfg)).graftPersist
 
     val bucketed = dropOversizedBuckets(banded, Seq("band_idx", "band_hash"), cfg.maxBucketSize)
 
-    val a = bucketed.select(col("band_idx"), col("band_hash"), col("doc").as("id_a"))
-    val b = bucketed.select(col("band_idx"), col("band_hash"), col("doc").as("id_b"))
-    val candidates = a.join(b, Seq("band_idx", "band_hash"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    val candidates = sharedKeyPairs(bucketed, bucketed, Seq("band_idx", "band_hash"))
 
     // one pass over the corpus -> (doc, distinct shingle hashes); candidate
     // pairs fetch both sides via two id-keyed joins (persisted: it feeds
     // both verification joins)
-    val shingles = src.select(col("doc"),
-      expr(s"shingle_hashes(txt, ${cfg.shingleSize})").as("hashes"))
-      .graftPersist
-    candidates
-      .join(shingles.select(col("doc").as("id_a"), col("hashes").as("h_a")), Seq("id_a"))
-      .join(shingles.select(col("doc").as("id_b"), col("hashes").as("h_b")), Seq("id_b"))
+    jaccardVerified(candidates,
+      shingleTable(src, col("doc"), "txt", cfg.shingleSize).graftPersist, cfg.threshold)
+  }
+
+  /** Distinct (id_a, id_b), id_a < id_b, of an `a` and a `b` doc agreeing on every `keys` column. */
+  private def sharedKeyPairs(a: DataFrame, b: DataFrame, keys: Seq[String]): DataFrame = {
+    def side(t: DataFrame, id: String): DataFrame = t.select(keys.map(col) :+ col("doc").as(id): _*)
+    side(a, "id_a").join(side(b, "id_b"), keys)
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** (doc, txt, extra*): the projection every MinHash path starts from. */
+  private def docText(df: DataFrame, idCol: String, textCol: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as("doc"), col(textCol).as("txt")) ++ extra: _*)
+
+  /** (band_idx, band_hash) rows of `txt`'s MinHash bands; the signature
+    * store is written with this same column, so store and recompute agree.
+    */
+  private def minHashBands(cfg: MinHashConfig): Column =
+    posexplode(expr(
+      s"minhash_bands(txt, ${cfg.shingleSize}, ${cfg.numPerms}, ${cfg.numBands}, ${cfg.seed})"))
+      .as(Seq("band_idx", "band_hash"))
+
+  /** (doc, hashes): each doc's distinct n-gram hashes of `textCol`. */
+  private def shingleTable(df: DataFrame, doc: Column, textCol: String, n: Int): DataFrame =
+    df.select(doc, expr(s"shingle_hashes(`$textCol`, $n)").as("hashes"))
+
+  /** (id_a, id_b, jaccard) of the candidates whose (doc, hashes) arrays
+    * h_a/h_b pass `sideFilter` and score >= `threshold`; `broadcastSide`
+    * forces both id joins to broadcast.
+    */
+  private def jaccardVerified(candidates: DataFrame, hashes: DataFrame, threshold: Double,
+      broadcastSide: Boolean = false, sideFilter: Option[Column] = None): DataFrame = {
+    def side(id: String, h: String): DataFrame = {
+      val s = hashes.select(col("doc").as(id), col("hashes").as(h))
+      if (broadcastSide) broadcast(s) else s
+    }
+    val joined = candidates.join(side("id_a", "h_a"), Seq("id_a"))
+      .join(side("id_b", "h_b"), Seq("id_b"))
+    sideFilter.fold(joined)(joined.where)
       .withColumn("jaccard", expr("jaccard_long(h_a, h_b)"))
-      .where(col("jaccard") >= cfg.threshold)
+      .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+  }
+
+  /** Verified pairs touching a delta doc of a (doc, is_delta, band_idx,
+    * band_hash) table, capped on the whole (union) bucket.
+    */
+  private def deltaPairs(banded: DataFrame, hashes: DataFrame, cfg: MinHashConfig): DataFrame = {
+    val capped = dropOversizedBuckets(banded, Seq("band_idx", "band_hash"), cfg.maxBucketSize)
+    val probe = capped.where(col("is_delta"))
+      .select(col("band_idx"), col("band_hash"), col("doc").as("d"))
+    val build = capped.select(col("band_idx"), col("band_hash"), col("doc").as("o"))
+    val candidates = probe.join(build, Seq("band_idx", "band_hash"))
+      .where(col("d") =!= col("o"))
+      .select(least(col("d"), col("o")).as("id_a"),
+        greatest(col("d"), col("o")).as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    jaccardVerified(candidates, hashes, cfg.threshold)
   }
 
   /** INCREMENTAL near-dup pairing: the daily-ingest shape — pair a NEW
@@ -146,34 +190,12 @@ object Dedup {
       idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     graft.plans.NativeExpressions.register(corpus.sparkSession)
-    val srcAll = corpus
-      .select(col(idCol).as("doc"), col(textCol).as("txt"), lit(false).as("is_delta"))
-      .unionByName(delta.select(col(idCol).as("doc"), col(textCol).as("txt"),
-        lit(true).as("is_delta")))
+    val srcAll = docText(corpus, idCol, textCol, lit(false).as("is_delta"))
+      .unionByName(docText(delta, idCol, textCol, lit(true).as("is_delta")))
       .graftPersist
-    val bands = expr(
-      s"minhash_bands(txt, ${cfg.shingleSize}, ${cfg.numPerms}, ${cfg.numBands}, ${cfg.seed})")
-    val banded = srcAll.select(col("doc"), col("is_delta"),
-      posexplode(bands).as(Seq("band_idx", "band_hash")))
+    val banded = srcAll.select(col("doc"), col("is_delta"), minHashBands(cfg))
       .graftPersist
-    val capped = dropOversizedBuckets(banded, Seq("band_idx", "band_hash"), cfg.maxBucketSize)
-    val probe = capped.where(col("is_delta"))
-      .select(col("band_idx"), col("band_hash"), col("doc").as("d"))
-    val build = capped.select(col("band_idx"), col("band_hash"), col("doc").as("o"))
-    val candidates = probe.join(build, Seq("band_idx", "band_hash"))
-      .where(col("d") =!= col("o"))
-      .select(least(col("d"), col("o")).as("id_a"),
-        greatest(col("d"), col("o")).as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val shingles = srcAll.select(col("doc"),
-      expr(s"shingle_hashes(txt, ${cfg.shingleSize})").as("hashes"))
-      .graftPersist
-    candidates
-      .join(shingles.select(col("doc").as("id_a"), col("hashes").as("h_a")), Seq("id_a"))
-      .join(shingles.select(col("doc").as("id_b"), col("hashes").as("h_b")), Seq("id_b"))
-      .withColumn("jaccard", expr("jaccard_long(h_a, h_b)"))
-      .where(col("jaccard") >= cfg.threshold)
-      .select("id_a", "id_b", "jaccard")
+    deltaPairs(banded, shingleTable(srcAll, col("doc"), "txt", cfg.shingleSize).graftPersist, cfg)
   }
 
   /** SIGNATURE STORE for incremental dedup — the production shape
@@ -186,24 +208,51 @@ object Dedup {
     * every band-bucket probe file-level locality (the same layout trick
     * as [[graft.operators.ScaleOps.zorderWrite]], exact here because the
     * sort key IS the probe key); `path/shingles` = (doc, hashes) for the
-    * verify joins, keyed by doc. Pass `SaveMode.Append` from a daily job
-    * to fold each verified delta into the store.
+    * verify joins, keyed by doc; `path/_minhash_config` = the shingleSize,
+    * numPerms, numBands and seed the signatures were computed with
+    * (written last, so a store whose write failed has none). Pass
+    * `SaveMode.Append` from a daily job to fold each verified delta into
+    * the store; writing into an existing store in any mode but Overwrite
+    * with a config other than the store's throws IllegalArgumentException.
     */
   def writeSignatures(corpus: DataFrame, idCol: String, textCol: String,
       path: String, cfg: MinHashConfig = MinHashConfig(),
-      mode: org.apache.spark.sql.SaveMode = org.apache.spark.sql.SaveMode.Overwrite): Unit = {
-    graft.plans.NativeExpressions.register(corpus.sparkSession)
-    val src = corpus.select(col(idCol).as("doc"), col(textCol).as("txt"))
+      mode: SaveMode = SaveMode.Overwrite): Unit = {
+    val spark = corpus.sparkSession
+    graft.plans.NativeExpressions.register(spark)
+    val (fs, conf) = configFile(spark, path)
+    if (mode != SaveMode.Overwrite && fs.exists(new Path(path, "bands")))
+      requireStoreConfig(spark, path, cfg)
+    // a write that fails midway leaves no config, so the store is refused
+    if (mode == SaveMode.Overwrite || mode == SaveMode.Append) fs.delete(conf, false)
+    val src = docText(corpus, idCol, textCol)
       .graftPersist // one text scan feeds both derived tables
-    src.select(col("doc"), posexplode(expr(
-        s"minhash_bands(txt, ${cfg.shingleSize}, ${cfg.numPerms}, ${cfg.numBands}, ${cfg.seed})"))
-        .as(Seq("band_idx", "band_hash")))
+    src.select(col("doc"), minHashBands(cfg))
       .repartitionByRange(col("band_idx"), col("band_hash"))
       .sortWithinPartitions("band_idx", "band_hash")
       .write.mode(mode).parquet(s"$path/bands")
-    src.select(col("doc"),
-        expr(s"shingle_hashes(txt, ${cfg.shingleSize})").as("hashes"))
-      .write.mode(mode).parquet(s"$path/shingles")
+    shingleTable(src, col("doc"), "txt", cfg.shingleSize).write.mode(mode).parquet(s"$path/shingles")
+    Using.resource(fs.create(conf, true))(_.write(storeConfig(cfg).getBytes("UTF-8")))
+  }
+
+  /** A store's `_minhash_config`: the fields its signatures depend on. */
+  private def storeConfig(cfg: MinHashConfig): String =
+    s"shingleSize=${cfg.shingleSize},numPerms=${cfg.numPerms},numBands=${cfg.numBands},seed=${cfg.seed}"
+
+  private def configFile(spark: SparkSession, store: String): (FileSystem, Path) = {
+    val p = new Path(store, "_minhash_config")
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** Refuses a store written with other signature fields than `cfg`'s:
+    * its band hashes and shingle sets would not match the delta's.
+    */
+  private def requireStoreConfig(spark: SparkSession, store: String, cfg: MinHashConfig): Unit = {
+    val (fs, conf) = configFile(spark, store)
+    val stored = if (!fs.exists(conf)) "no _minhash_config"
+      else Using.resource(fs.open(conf))(in => new String(in.readAllBytes(), "UTF-8"))
+    require(stored == storeConfig(cfg), s"signature store $store has [$stored], " +
+      s"not MinHash config [${storeConfig(cfg)}]; rewrite it with writeSignatures")
   }
 
   /** Incremental near-dup pairing against a persisted signature store:
@@ -213,7 +262,9 @@ object Dedup {
     * same deterministic expressions a recompute would produce), but the
     * corpus cost drops from a full text re-signature to a scan of the
     * narrow (doc, band_idx, band_hash) table; only the DELTA is
-    * signatured. The corpus text is never read at all.
+    * signatured. The corpus text is never read at all. The store must
+    * have been written with `cfg`'s shingleSize, numPerms, numBands and
+    * seed (its `_minhash_config`), else IllegalArgumentException.
     *
     * Envelope: the touched-bucket-keys semi-join is a BroadcastHashJoin
     * only while the delta's distinct (band_idx, band_hash) set fits
@@ -221,7 +272,7 @@ object Dedup {
     * conservative 256 B/row build-side estimate — a ~130k-doc delta at 16
     * bands); a larger daily delta degrades to a
     * shuffle left_semi on the same keys instead of OOMing the driver
-    * (the [[nGramJaccardPairs]] `broadcastVerifyBytes` pattern; result
+    * (the [[ngramJaccardPairs]] `broadcastVerifyBytes` pattern; result
     * identical either way — the store's range-partitioned layout still
     * prunes row groups, the join just exchanges instead of broadcasting).
     */
@@ -230,13 +281,10 @@ object Dedup {
       cfg: MinHashConfig = MinHashConfig(),
       broadcastTouchedBytes: Long = 512L << 20): DataFrame = {
     val spark = delta.sparkSession
+    requireStoreConfig(spark, storePath, cfg)
     graft.plans.NativeExpressions.register(spark)
-    val dsrc = delta.select(col(idCol).as("doc"), col(textCol).as("txt"))
-      .graftPersist
-    val deltaBands = dsrc.select(col("doc"), lit(true).as("is_delta"),
-        posexplode(expr(
-          s"minhash_bands(txt, ${cfg.shingleSize}, ${cfg.numPerms}, ${cfg.numBands}, ${cfg.seed})"))
-          .as(Seq("band_idx", "band_hash")))
+    val dsrc = docText(delta, idCol, textCol).graftPersist
+    val deltaBands = dsrc.select(col("doc"), lit(true).as("is_delta"), minHashBands(cfg))
       .graftPersist // delta-sized; feeds touched-keys, cap count + probe
     // candidate pairs only arise in buckets the DELTA touches, and the
     // bucket cap is irrelevant for buckets without a delta row — so the
@@ -264,24 +312,8 @@ object Dedup {
       .join(touchedKeyed, Seq("band_idx", "band_hash"), "left_semi")
     // cap counts over the union's (touched) buckets — identical behavior
     // to the recompute path for every bucket that can produce a pair
-    val capped = dropOversizedBuckets(banded, Seq("band_idx", "band_hash"), cfg.maxBucketSize)
-    val probe = capped.where(col("is_delta"))
-      .select(col("band_idx"), col("band_hash"), col("doc").as("d"))
-    val build = capped.select(col("band_idx"), col("band_hash"), col("doc").as("o"))
-    val candidates = probe.join(build, Seq("band_idx", "band_hash"))
-      .where(col("d") =!= col("o"))
-      .select(least(col("d"), col("o")).as("id_a"),
-        greatest(col("d"), col("o")).as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val shingles = spark.read.parquet(s"$storePath/shingles")
-      .unionByName(dsrc.select(col("doc"),
-        expr(s"shingle_hashes(txt, ${cfg.shingleSize})").as("hashes")))
-    candidates
-      .join(shingles.select(col("doc").as("id_a"), col("hashes").as("h_a")), Seq("id_a"))
-      .join(shingles.select(col("doc").as("id_b"), col("hashes").as("h_b")), Seq("id_b"))
-      .withColumn("jaccard", expr("jaccard_long(h_a, h_b)"))
-      .where(col("jaccard") >= cfg.threshold)
-      .select("id_a", "id_b", "jaccard")
+    deltaPairs(banded, spark.read.parquet(s"$storePath/shingles")
+      .unionByName(shingleTable(dsrc, col("doc"), "txt", cfg.shingleSize)), cfg)
   }
 
   /** Greedy keep-first dedup from near-dup pairs: drop every doc that
@@ -418,6 +450,15 @@ object Dedup {
     hammingBandPairs(sigs, maxHamming, maxBucketSize)
   }
 
+  /** One row `b` = (band_idx, band_val) per bit range [offsets(i), offsets(i + 1))
+    * of `sig`; `mask(width)` keeps a band's low bits, and its literal type is band_val's.
+    */
+  private[graft] def bitBands(sig: Column, offsets: Seq[Int], mask: Int => Column): Column =
+    explode(array(offsets.indices.init.map(i =>
+      struct(lit(i).as("band_idx"),
+        shiftrightunsigned(sig, offsets(i))
+          .bitwiseAND(mask(offsets(i + 1) - offsets(i))).as("band_val"))): _*)).as("b")
+
   /** Pairs of (doc, sig) rows whose 64-bit signatures differ in at most
     * `maxHamming` bits: `maxHamming + 1` contiguous bit-ranges of the
     * signature (pigeonhole — two signatures within `maxHamming` bits MUST
@@ -434,11 +475,8 @@ object Dedup {
     // subquery + both self-join sides would otherwise re-scan the corpus.
     // The mask is -1L >>> (64 - width): a 64-bit band (maxHamming = 0)
     // keeps every bit, where (1L << 64) - 1 would be 0 on the JVM.
-    val banded = sigs.select(col("doc"), col("sig"),
-        explode(array((0 until nBands).map(i =>
-          struct(lit(i).as("band_idx"),
-            shiftrightunsigned(col("sig"), offsets(i))
-              .bitwiseAND(lit(-1L >>> (64 - (offsets(i + 1) - offsets(i))))).as("band_val"))): _*)).as("b"))
+    val banded = sigs
+      .select(col("doc"), col("sig"), bitBands(col("sig"), offsets, w => lit(-1L >>> (64 - w))))
       .select(col("doc"), col("sig"), col("b.band_idx"), col("b.band_val"))
       .graftPersist
     val capped = dropOversizedBuckets(banded, Seq("band_idx", "band_val"), maxBucketSize)
@@ -523,9 +561,7 @@ object Dedup {
     // corpus per branch (measured: 14 parquet scans of the same input,
     // no exchange reuse). MEMORY_AND_DISK spills rather than OOMs at
     // scale; Spark's LRU owns eviction.
-    val src = df.select(col(idCol).as("doc"),
-      expr(s"shingle_hashes(`$textCol`, $n)").as("hashes"))
-      .graftPersist
+    val src = shingleTable(df, col(idCol).as("doc"), textCol, n).graftPersist
     val grams = src.select(col("doc"), explode(col("hashes")).as("gram"))
 
     // per-gram doc frequency (partial-agg shuffle on the 8-byte hash);
@@ -541,32 +577,6 @@ object Dedup {
     val nDocs = src.count()
 
     if (nDocs <= prefixMinDocs) {
-      // Stop-gram probe (r22, guide §2.4 "remove shuffles outright"): when
-      // NO gram exceeds the df cap — the common case for small corpora,
-      // where the cap exists to bound pathological inputs, not to fire —
-      // `indexable` is ALL grams, every doc is fully indexed, and the
-      // fallback branch below is provably empty. One tiny aggregate probe
-      // then replaces: the indexable back-join + its persisted cache, the
-      // per-doc __n_idx join, the fullyIndexed split, the two fallback
-      // broadcasts and the union (measured: 10 fewer jobs/rep, q_dedup_ngram
-      // 1.83 -> see OPTIMIZATION_r22.md). Data-derived plan choice computed
-      // in-query from this run's input, like the nDocs branch above.
-      val hasStopGrams = !gramDfs.where(col("__df") > dfCap).isEmpty
-      if (!hasStopGrams) {
-        val a = grams.select(col("gram"), col("doc").as("id_a")).hint("shuffle_hash")
-        val b = grams.select(col("gram"), col("doc").as("id_b"))
-        val stats = broadcast(src.select(col("doc"),
-          size(col("hashes")).cast("long").as("__n_tot")))
-        return a.join(b, Seq("gram"))
-          .where(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("__common"))
-          .join(stats.select(col("doc").as("id_a"), col("__n_tot").as("__na")), Seq("id_a"))
-          .join(stats.select(col("doc").as("id_b"), col("__n_tot").as("__nb")), Seq("id_b"))
-          .withColumn("jaccard",
-            col("__common") / (col("__na") + col("__nb") - col("__common")))
-          .where(col("jaccard") >= threshold)
-          .select("id_a", "id_b", "jaccard")
-      }
       // ---- small-corpus path: count-aggregate join ----
       // For a pair whose docs are BOTH fully indexed (every gram df <= cap),
       // the per-pair match count from the gram self-join IS the exact
@@ -578,37 +588,52 @@ object Dedup {
       // array joins (the r2 regression) with one count shuffle.
       // Broadcasts below are doc-count-bounded (corpus <= prefixMinDocs),
       // hence safe by construction on this branch.
-      val narrow = grams.join(broadcast(indexable), Seq("gram"))
-        .select(col("doc"), col("gram"))
-        .graftPersist
+      // Stop-gram probe (r22, guide §2.4 "remove shuffles outright"): when
+      // NO gram exceeds the df cap — the common case for small corpora,
+      // where the cap exists to bound pathological inputs, not to fire —
+      // `indexable` is ALL grams, every doc is fully indexed, and the
+      // fallback branch below is provably empty. One tiny aggregate probe
+      // then replaces: the indexable back-join + its persisted cache, the
+      // per-doc __n_idx join, the fullyIndexed split, the two fallback
+      // broadcasts and the union (measured: 10 fewer jobs/rep, q_dedup_ngram
+      // 1.83 -> see OPTIMIZATION_r22.md). Data-derived plan choice computed
+      // in-query from this run's input, like the nDocs branch above.
+      val hasStopGrams = !gramDfs.where(col("__df") > dfCap).isEmpty
+      val narrow =
+        if (!hasStopGrams) grams
+        else grams.join(broadcast(indexable), Seq("gram"))
+          .select(col("doc"), col("gram"))
+          .graftPersist
       val a = narrow.select(col("gram"), col("doc").as("id_a")).hint("shuffle_hash")
       val b = narrow.select(col("gram"), col("doc").as("id_b"))
-      val common = a.join(b, Seq("gram"))
+      val counted = a.join(b, Seq("gram"))
         .where(col("id_a") < col("id_b"))
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("__common"))
-        // feeds the exact branch and the (near-empty) fallback branch
-        .graftPersist
+      // with stop-grams, feeds the exact branch and the (near-empty) fallback
+      val common = if (hasStopGrams) counted.graftPersist else counted
+      val sizes = src.select(col("doc"), size(col("hashes")).cast("long").as("__n_tot"))
       val stats = broadcast(
-        src.select(col("doc"), size(col("hashes")).cast("long").as("__n_tot"))
-          .join(narrow.groupBy("doc").agg(count(lit(1)).as("__n_idx")), Seq("doc"), "left")
+        if (!hasStopGrams) sizes
+        else sizes.join(narrow.groupBy("doc").agg(count(lit(1)).as("__n_idx")), Seq("doc"), "left")
           .na.fill(0L, Seq("__n_idx")))
+      def side(id: String, n: String, i: String): DataFrame =
+        stats.select(Seq(col("doc").as(id), col("__n_tot").as(n)) ++
+          (if (hasStopGrams) Seq(col("__n_idx").as(i)) else Nil): _*)
       val withStats = common
-        .join(stats.select(col("doc").as("id_a"), col("__n_tot").as("__na"), col("__n_idx").as("__ia")), Seq("id_a"))
-        .join(stats.select(col("doc").as("id_b"), col("__n_tot").as("__nb"), col("__n_idx").as("__ib")), Seq("id_b"))
-      val fullyIndexed = col("__ia") === col("__na") && col("__ib") === col("__nb")
-      val exactPairs = withStats.where(fullyIndexed)
+        .join(side("id_a", "__na", "__ia"), Seq("id_a"))
+        .join(side("id_b", "__nb", "__ib"), Seq("id_b"))
+      def countJaccard(pairs: DataFrame): DataFrame = pairs
         .withColumn("jaccard",
           col("__common") / (col("__na") + col("__nb") - col("__common")))
         .where(col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-      val fallbackPairs = withStats.where(!fullyIndexed)
-        .select("id_a", "id_b")
-        .join(broadcast(src.select(col("doc").as("id_a"), col("hashes").as("h_a"))), Seq("id_a"))
-        .join(broadcast(src.select(col("doc").as("id_b"), col("hashes").as("h_b"))), Seq("id_b"))
-        .withColumn("jaccard", expr("jaccard_long(h_a, h_b)"))
-        .where(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-      exactPairs.unionAll(fallbackPairs)
+      if (!hasStopGrams) countJaccard(withStats)
+      else {
+        val fullyIndexed = col("__ia") === col("__na") && col("__ib") === col("__nb")
+        countJaccard(withStats.where(fullyIndexed)).unionAll(jaccardVerified(
+          withStats.where(!fullyIndexed).select("id_a", "id_b"), src, threshold,
+          broadcastSide = true))
+      }
     } else {
       // ---- large-corpus path: PPJoin prefix filter ----
       // rank each doc's indexable grams rarest-first ((df, gram) is a
@@ -637,16 +662,10 @@ object Dedup {
         // both sides of the self-join read this; persist to compute once
         .graftPersist
 
-      val a = index.select(col("gram"), col("doc").as("id_a"))
-      val b = index.select(col("gram"), col("doc").as("id_b"))
       // candidates feed the verify plan twice (the docs-touched semi-join
       // probe below + the verify join itself); persisted, they are a
       // narrow (long, long) table
-      val candidates = a.join(b, Seq("gram"))
-        .where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates("id_a", "id_b")
-        .graftPersist
+      val candidates = sharedKeyPairs(index, index, Seq("gram")).graftPersist
 
       // Verification strategy. A dense corpus can yield 50-100x more
       // candidates than true pairs (measured at 10x sf0.1: 17.3M
@@ -670,28 +689,18 @@ object Dedup {
       val sizeOk = least(size(col("h_a")), size(col("h_b"))).cast("double") >=
         lit(threshold) * greatest(size(col("h_a")), size(col("h_b"))).cast("double")
       if (vbytes <= broadcastVerifyBytes) {
-        candidates
-          .join(broadcast(varr.select(col("doc").as("id_a"), col("hashes").as("h_a"))), Seq("id_a"))
-          .join(broadcast(varr.select(col("doc").as("id_b"), col("hashes").as("h_b"))), Seq("id_b"))
-          .where(sizeOk) // cheap length cut before the merge-scan jaccard
-          .withColumn("jaccard", expr("jaccard_long(h_a, h_b)"))
-          .where(col("jaccard") >= threshold)
-          .select("id_a", "id_b", "jaccard")
+        // cheap length cut before the merge-scan jaccard
+        jaccardVerified(candidates, varr, threshold, broadcastSide = true, Some(sizeOk))
       } else {
         // PPJoin length filter on narrow (doc, size) tables BEFORE the
         // array joins: jaccard(a,b) <= min|a|,|b| / max|a|,|b|
         val sizes = varr.select(col("doc"), size(col("hashes")).cast("long").as("__sz"))
-        candidates
+        jaccardVerified(candidates
           .join(sizes.select(col("doc").as("id_a"), col("__sz").as("__sa")), Seq("id_a"))
           .join(sizes.select(col("doc").as("id_b"), col("__sz").as("__sb")), Seq("id_b"))
           .where(least(col("__sa"), col("__sb")) >=
             lit(threshold) * greatest(col("__sa"), col("__sb")))
-          .select("id_a", "id_b")
-          .join(varr.select(col("doc").as("id_a"), col("hashes").as("h_a")), Seq("id_a"))
-          .join(varr.select(col("doc").as("id_b"), col("hashes").as("h_b")), Seq("id_b"))
-          .withColumn("jaccard", expr("jaccard_long(h_a, h_b)"))
-          .where(col("jaccard") >= threshold)
-          .select("id_a", "id_b", "jaccard")
+          .select("id_a", "id_b"), varr, threshold)
       }
     }
   }
@@ -926,14 +935,10 @@ object Dedup {
         "over (0 until slices), so 0 would silently drop every candidate pair")
     require(sliceRows >= 1, s"sliceRows must be >= 1 (got $sliceRows)")
     graft.plans.NativeExpressions.register(df.sparkSession)
-    val numBands = sigBits / bandBits
     val vecs = df.select(col(idCol).as("doc"), col(vecCol).as("vec"))
     val banded = vecs.withColumn("sig", planeSig("vec", dim, sigBits, seed))
-      .select(col("doc"),
-        explode(array((0 until numBands).map(i =>
-          struct(lit(i).as("band_idx"),
-            shiftrightunsigned(col("sig"), i * bandBits)
-              .bitwiseAND(lit((1 << bandBits) - 1)).as("band_val"))): _*)).as("b"))
+      .select(col("doc"), bitBands(col("sig"), (0 to sigBits / bandBits).map(_ * bandBits),
+        w => lit((1 << w) - 1)))
       .select(col("doc"), col("b.band_idx"), col("b.band_val"))
       .graftPersist
     // One bucket-count aggregate serves BOTH the oversized-bucket drop and
@@ -985,25 +990,17 @@ object Dedup {
     // pair exactly once. The candidate SET is unchanged in every branch —
     // slicing is pure parallelization, so results (and the replayed
     // oracle) are bit-identical.
-    val candidates = (if (!countsInSlicePlan) {
-      capped.select(col("band_idx"), col("band_val"), col("doc").as("id_a"))
-        .join(capped.select(col("band_idx"), col("band_val"), col("doc").as("id_b")),
-          Seq("band_idx", "band_val"))
-    } else {
+    val (a, b, keys) = if (!countsInSlicePlan) (capped, capped, Seq("band_idx", "band_val"))
+    else {
       val withS = capped.join(broadcast(counts), Seq("band_idx", "band_val"))
         .withColumn("__S", least(lit(sliceFactor), greatest(lit(1),
           ceil(col("__bn").cast("double") / sliceRows).cast("int"))))
-      val a = withS
-        .withColumn("slice_b", explode(sequence(lit(0), col("__S") - 1)))
-        .select(col("band_idx"), col("band_val"), col("slice_b"), col("doc").as("id_a"))
-      val b = withS.select(col("band_idx"), col("band_val"),
-        pmod(xxhash64(col("doc")), col("__S").cast("long")).cast("int").as("slice_b"),
-        col("doc").as("id_b"))
-      a.join(b, Seq("band_idx", "band_val", "slice_b"))
-    })
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+      (withS.withColumn("slice_b", explode(sequence(lit(0), col("__S") - 1))),
+        withS.withColumn("slice_b",
+          pmod(xxhash64(col("doc")), col("__S").cast("long")).cast("int")),
+        Seq("band_idx", "band_val", "slice_b"))
+    }
+    val candidates = sharedKeyPairs(a, b, keys)
 
     // On the common short-circuit path `counts` served only the scalar
     // stats read and nothing in the candidates plan references it — drop

@@ -163,15 +163,10 @@ object Similarity {
       idCol: String, vecCol: String, dim: Int, k: Int = 10,
       sigBits: Int = 16, bandBits: Int = 4, seed: Int = 42): DataFrame = {
     graft.plans.NativeExpressions.register(corpus.sparkSession)
-    val numBands = sigBits / bandBits
-
     def banded(df: DataFrame, id: String): DataFrame =
       df.select(col(idCol).as(id), Dedup.planeSig(vecCol, dim, sigBits, seed).as("sig"))
-        .select(col(id),
-          explode(array((0 until numBands).map(i =>
-            struct(lit(i).as("band_idx"),
-              shiftrightunsigned(col("sig"), i * bandBits)
-                .bitwiseAND(lit((1 << bandBits) - 1)).as("band_val"))): _*)).as("b"))
+        .select(col(id), Dedup.bitBands(col("sig"), (0 to sigBits / bandBits).map(_ * bandBits),
+          w => lit((1 << w) - 1)))
         .select(col(id), col("b.band_idx"), col("b.band_val"))
 
     val qb = broadcast(banded(queries, "q_id"))

@@ -2,11 +2,12 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 
 import graft.operators.RowKindOps
 
-/** CDC envelope parsers: debezium-json, canal-json, maxwell-json.
+/** CDC envelope parsers and writers: debezium-json, ogg-json, canal-json,
+  * maxwell-json.
   *
   * References:
   *  - seatunnel-formats/seatunnel-format-compatible-debezium-json
@@ -20,72 +21,81 @@ import graft.operators.RowKindOps
   */
 object CdcFormats {
 
-  private def payload(dataSchema: StructType): Column => Column = c => from_json(c, dataSchema)
-
   /** Debezium: {before, after, op: c|r|u|d, source:{db,table}, ts_ms}.
     * op c/r -> +I(after); u -> -U(before) and +U(after); d -> -D(before).
     */
-  def parseDebezium(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame = {
+  def parseDebezium(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame =
+    parseBeforeAfter(df, jsonCol, dataSchema, "op", Seq("c", "r"), "u", "d")
+
+  /** Oracle GoldenGate (ogg-json): {before, after, op_type: I|U|D, table,
+    * op_ts}. I -> +I(after); U -> -U(before) and +U(after); D -> -D(before).
+    */
+  def parseOgg(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame =
+    parseBeforeAfter(df, jsonCol, dataSchema, "op_type", Seq("I"), "U", "D")
+
+  /** Before/after-image envelopes (debezium, ogg): {before, after, <opField>}.
+    * `inserts` -> +I(after); `update` -> -U(before) and +U(after); `delete`
+    * -> -D(before). Null images are dropped.
+    */
+  private def parseBeforeAfter(df: DataFrame, jsonCol: String, dataSchema: StructType,
+      opField: String, inserts: Seq[String], update: String, delete: String): DataFrame = {
     val envSchema = new StructType()
       .add("before", dataSchema).add("after", dataSchema)
-      .add("op", StringType)
+      .add(opField, StringType)
+    val op = col(s"__env.$opField")
     val parsed = df.withColumn("__env", from_json(col(jsonCol), envSchema))
     val images = parsed.select(col("__env"),
       explode(filter(array(
         struct(col("__env.before").as("row"),
-          when(col("__env.op") === "u", "-U").when(col("__env.op") === "d", "-D").as("kind")),
+          when(op === update, "-U").when(op === delete, "-D").as("kind")),
         struct(col("__env.after").as("row"),
-          when(col("__env.op").isin("c", "r"), "+I").when(col("__env.op") === "u", "+U").as("kind"))
+          when(op.isin(inserts: _*), "+I").when(op === update, "+U").as("kind"))
       ), x => x.getField("kind").isNotNull && x.getField("row").isNotNull)).as("img"))
-    images.select(col(s"img.row.*"), col("img.kind").as(RowKindOps.RowKindCol))
+    images.select(col("img.row.*"), col("img.kind").as(RowKindOps.RowKindCol))
   }
 
   /** Canal: {data:[...], old:[...], type: INSERT|UPDATE|DELETE, ...}.
     * INSERT -> +I(data[i]); DELETE -> -D(data[i]);
     * UPDATE -> -U(data[i] patched with old[i]) and +U(data[i]).
     */
-  def parseCanal(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame = {
-    val envSchema = new StructType()
-      .add("data", org.apache.spark.sql.types.ArrayType(dataSchema))
-      .add("old", org.apache.spark.sql.types.ArrayType(dataSchema))
-      .add("type", StringType)
-    val parsed = df.withColumn("__env", from_json(col(jsonCol), envSchema))
-      .select(col("__env.type").as("__t"),
-        posexplode(col("__env.data")).as(Seq("__i", "__row")),
-        col("__env.old").as("__old"))
-    // canal's `old` holds only changed fields of the pre-image; a full
-    // pre-image reconstruction needs per-field coalesce(old[i].f, row.f).
-    val beforeRow = {
-      val o = col("__old").getItem(col("__i"))
-      struct(dataSchema.fieldNames.map(f =>
-        coalesce(o.getField(f), col(s"__row.$f")).as(f)): _*)
-    }
-    val images = parsed.select(explode(filter(array(
-      struct(when(col("__t") === "UPDATE", beforeRow).otherwise(col("__row")).as("row"),
-        when(col("__t") === "UPDATE", "-U").when(col("__t") === "DELETE", "-D").as("kind")),
-      struct(col("__row").as("row"),
-        when(col("__t") === "INSERT", "+I").when(col("__t") === "UPDATE", "+U").as("kind"))
-    ), x => x.getField("kind").isNotNull)).as("img"))
-    images.select(col("img.row.*"), col("img.kind").as(RowKindOps.RowKindCol))
-  }
+  def parseCanal(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame =
+    parseDataOld(df, jsonCol, dataSchema, "INSERT", "UPDATE", "DELETE", arrays = true)
 
-  /** Oracle GoldenGate (ogg-json): {before, after, op_type: I|U|D, table,
-    * op_ts}. I -> +I(after); U -> -U(before) and +U(after); D -> -D(before).
+  /** Maxwell: {data, old, type: insert|update|delete, ...}. Single-row
+    * envelopes; update pre-image = data patched with old's changed fields.
     */
-  def parseOgg(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame = {
+  def parseMaxwell(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame =
+    parseDataOld(df, jsonCol, dataSchema, "insert", "update", "delete", arrays = false)
+  /** Data-plus-old-patch envelopes (canal, maxwell): {data, old, type}, kinds
+    * as in [[parseCanal]]. With `arrays` (canal) data/old are parallel arrays;
+    * otherwise (maxwell) an envelope carries one row, dropped when null.
+    */
+  private def parseDataOld(df: DataFrame, jsonCol: String, dataSchema: StructType,
+      insert: String, update: String, delete: String, arrays: Boolean): DataFrame = {
+    val rowType = if (arrays) ArrayType(dataSchema) else dataSchema
     val envSchema = new StructType()
-      .add("before", dataSchema).add("after", dataSchema)
-      .add("op_type", StringType)
-    val parsed = df.withColumn("__env", from_json(col(jsonCol), envSchema))
-    val images = parsed.select(col("__env"),
-      explode(filter(array(
-        struct(col("__env.before").as("row"),
-          when(col("__env.op_type") === "U", "-U")
-            .when(col("__env.op_type") === "D", "-D").as("kind")),
-        struct(col("__env.after").as("row"),
-          when(col("__env.op_type") === "I", "+I")
-            .when(col("__env.op_type") === "U", "+U").as("kind"))
-      ), x => x.getField("kind").isNotNull && x.getField("row").isNotNull)).as("img"))
+      .add("data", rowType).add("old", rowType).add("type", StringType)
+    val env = df.withColumn("__env", from_json(col(jsonCol), envSchema))
+    val parsed =
+      if (arrays) env.select(col("__env.type").as("__t"),
+        posexplode(col("__env.data")).as(Seq("__i", "__row")), col("__env.old").as("__old"))
+      else env.select(col("__env.type").as("__t"), col("__env.data").as("__row"),
+        col("__env.old").as("__old"))
+    // `old` holds only changed fields of the pre-image; a full
+    // pre-image reconstruction needs per-field coalesce(old.f, row.f).
+    val old = if (arrays) col("__old").getItem(col("__i")) else col("__old")
+    val beforeRow = struct(dataSchema.fieldNames.map(f =>
+      coalesce(old.getField(f), col(s"__row.$f")).as(f)): _*)
+    val keep: Column => Column =
+      if (arrays) _.getField("kind").isNotNull
+      else x => x.getField("kind").isNotNull && x.getField("row").isNotNull
+    val t = col("__t")
+    val images = parsed.select(explode(filter(array(
+      struct(when(t === update, beforeRow).otherwise(col("__row")).as("row"),
+        when(t === update, "-U").when(t === delete, "-D").as("kind")),
+      struct(col("__row").as("row"),
+        when(t === insert, "+I").when(t === update, "+U").as("kind"))
+    ), keep)).as("img"))
     images.select(col("img.row.*"), col("img.kind").as(RowKindOps.RowKindCol))
   }
 
@@ -98,7 +108,7 @@ object CdcFormats {
     */
   def parseConnectJson(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame = {
     val envSchema = new StructType()
-      .add("payload", org.apache.spark.sql.types.ArrayType(dataSchema))
+      .add("payload", ArrayType(dataSchema))
     val envSchemaSingle = new StructType().add("payload", dataSchema)
     // try array form first; fall back to single-object payload per row
     val parsed = df.select(
@@ -127,43 +137,15 @@ object CdcFormats {
     struct(cols.map(col): _*)
   }
 
+  /** +I/+U serialize as the envelope's insert op, -U/-D as its delete op. */
+  private def isInsert: Column = col(RowKindOps.RowKindCol).isin("+I", "+U")
+
   /** Debezium envelope: +I/+U -> {"after": row, "op": "c"};
     * -U/-D -> {"before": row, "op": "d"}.
     */
   def toDebeziumJson(df: DataFrame, dataCols: Seq[String] = Nil,
-      outputCol: String = "json"): DataFrame = {
-    val data = dataStruct(df, dataCols)
-    val ins = col(RowKindOps.RowKindCol).isin("+I", "+U")
-    df.select(to_json(struct(
-      when(!ins, data).as("before"),
-      when(ins, data).as("after"),
-      when(ins, "c").otherwise("d").as("op"))).as(outputCol))
-  }
-
-  /** Canal envelope: +I/+U -> {"data":[row],"type":"INSERT"};
-    * -U/-D -> {"data":[row],"type":"DELETE"}.
-    */
-  def toCanalJson(df: DataFrame, dataCols: Seq[String] = Nil,
-      outputCol: String = "json"): DataFrame = {
-    val data = dataStruct(df, dataCols)
-    val ins = col(RowKindOps.RowKindCol).isin("+I", "+U")
-    df.select(to_json(struct(
-      array(data).as("data"),
-      when(ins, "INSERT").otherwise("DELETE").as("type"))).as(outputCol))
-  }
-
-  /** Maxwell envelope: +I/+U -> {"data": row, "type": "insert"};
-    * -U/-D -> {"data": row, "type": "delete"} (lowercase op strings, the
-    * format Maxwell itself emits and `parseMaxwell` accepts).
-    */
-  def toMaxwellJson(df: DataFrame, dataCols: Seq[String] = Nil,
-      outputCol: String = "json"): DataFrame = {
-    val data = dataStruct(df, dataCols)
-    val ins = col(RowKindOps.RowKindCol).isin("+I", "+U")
-    df.select(to_json(struct(
-      data.as("data"),
-      when(ins, "insert").otherwise("delete").as("type"))).as(outputCol))
-  }
+      outputCol: String = "json"): DataFrame =
+    beforeAfterJson(df, dataCols, outputCol, "op", "c", "d")
 
   /** GoldenGate ogg-json envelope, symmetric with [[parseOgg]]:
     * +I/+U -> {"after": row, "op_type": "I"}; -U/-D -> {"before": row,
@@ -174,31 +156,42 @@ object CdcFormats {
     * the parse side accepts, so toOggJson -> parseOgg round-trips.
     */
   def toOggJson(df: DataFrame, dataCols: Seq[String] = Nil,
-      outputCol: String = "json"): DataFrame = {
+      outputCol: String = "json"): DataFrame =
+    beforeAfterJson(df, dataCols, outputCol, "op_type", "I", "D")
+
+
+  /** +I/+U -> {"after": row, <opField>: insert}; -U/-D -> {"before": row, <opField>: delete}. */
+  private def beforeAfterJson(df: DataFrame, dataCols: Seq[String], outputCol: String,
+      opField: String, insert: String, delete: String): DataFrame = {
     val data = dataStruct(df, dataCols)
-    val ins = col(RowKindOps.RowKindCol).isin("+I", "+U")
+    val ins = isInsert
     df.select(to_json(struct(
       when(!ins, data).as("before"),
       when(ins, data).as("after"),
-      when(ins, "I").otherwise("D").as("op_type"))).as(outputCol))
+      when(ins, insert).otherwise(delete).as(opField))).as(outputCol))
   }
 
-  /** Maxwell: {data, old, type: insert|update|delete, ...}. Single-row
-    * envelopes; update pre-image = data patched with old's changed fields.
-    */
-  def parseMaxwell(df: DataFrame, jsonCol: String, dataSchema: StructType): DataFrame = {
-    val envSchema = new StructType()
-      .add("data", dataSchema).add("old", dataSchema).add("type", StringType)
-    val parsed = df.withColumn("__env", from_json(col(jsonCol), envSchema))
-      .select(col("__env.type").as("__t"), col("__env.data").as("__row"), col("__env.old").as("__old"))
-    val beforeRow = struct(dataSchema.fieldNames.map(f =>
-      coalesce(col(s"__old.$f"), col(s"__row.$f")).as(f)): _*)
-    val images = parsed.select(explode(filter(array(
-      struct(when(col("__t") === "update", beforeRow).otherwise(col("__row")).as("row"),
-        when(col("__t") === "update", "-U").when(col("__t") === "delete", "-D").as("kind")),
-      struct(col("__row").as("row"),
-        when(col("__t") === "insert", "+I").when(col("__t") === "update", "+U").as("kind"))
-    ), x => x.getField("kind").isNotNull && x.getField("row").isNotNull)).as("img"))
-    images.select(col("img.row.*"), col("img.kind").as(RowKindOps.RowKindCol))
+  /** {"data": row, or [row] with `arrays`; "type": insert for +I/+U, delete for -U/-D}. */
+  private def dataJson(df: DataFrame, dataCols: Seq[String], outputCol: String,
+      insert: String, delete: String, arrays: Boolean): DataFrame = {
+    val data = dataStruct(df, dataCols)
+    df.select(to_json(struct(
+      (if (arrays) array(data) else data).as("data"),
+      when(isInsert, insert).otherwise(delete).as("type"))).as(outputCol))
   }
+
+  /** Canal envelope: +I/+U -> {"data":[row],"type":"INSERT"};
+    * -U/-D -> {"data":[row],"type":"DELETE"}.
+    */
+  def toCanalJson(df: DataFrame, dataCols: Seq[String] = Nil,
+      outputCol: String = "json"): DataFrame =
+    dataJson(df, dataCols, outputCol, "INSERT", "DELETE", arrays = true)
+
+  /** Maxwell envelope: +I/+U -> {"data": row, "type": "insert"};
+    * -U/-D -> {"data": row, "type": "delete"} (lowercase op strings, the
+    * format Maxwell itself emits and `parseMaxwell` accepts).
+    */
+  def toMaxwellJson(df: DataFrame, dataCols: Seq[String] = Nil,
+      outputCol: String = "json"): DataFrame =
+    dataJson(df, dataCols, outputCol, "insert", "delete", arrays = false)
 }

@@ -1,5 +1,7 @@
 package graft.dedup
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 class DedupSpec extends SparkSpec {
@@ -136,6 +138,47 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("incrementalFromStore refuses a store written with another MinHash config or none") {
+    val cfg = Dedup.MinHashConfig(threshold = 0.5)
+    val delta = Seq((12L, "the quick brown fox jumps over the lazy dog near the river bank forever"))
+      .toDF("doc_id", "text")
+    val store = java.nio.file.Files.createTempDirectory("graft-sigstore-cfg").toString
+    Dedup.writeSignatures(docs, "doc_id", "text", store, cfg)
+    // each signature field changes band hashes or shingle sets; the
+    // threshold and bucket cap do not, so they may differ from the store's
+    for (other <- Seq(cfg.copy(shingleSize = 4), cfg.copy(numPerms = 32),
+        cfg.copy(numBands = 8), cfg.copy(seed = 7))) {
+      val e = intercept[IllegalArgumentException](
+        Dedup.incrementalFromStore(delta, store, "doc_id", "text", other))
+      assert(e.getMessage.contains("MinHash config"), e.getMessage)
+    }
+    Dedup.incrementalFromStore(delta, store, "doc_id", "text",
+      cfg.copy(threshold = 0.9, maxBucketSize = 10))
+    // a store without the config file (written before it existed) is refused
+    assert(new java.io.File(store, "_minhash_config").delete())
+    intercept[IllegalArgumentException](
+      Dedup.incrementalFromStore(delta, store, "doc_id", "text", cfg))
+  }
+
+  test("writeSignatures refuses to append with another MinHash config") {
+    val cfg = Dedup.MinHashConfig(threshold = 0.5)
+    val store = java.nio.file.Files.createTempDirectory("graft-sigstore-append").toString
+    Dedup.writeSignatures(docs, "doc_id", "text", store, cfg)
+    val delta = Seq((50L, "gradient descent updates model weights using minibatch statistics nightly"))
+      .toDF("doc_id", "text")
+    intercept[IllegalArgumentException](Dedup.writeSignatures(delta, "doc_id", "text", store,
+      cfg.copy(numBands = 8), org.apache.spark.sql.SaveMode.Append))
+    // the refused append wrote nothing: the store still holds only the corpus
+    assert(spark.read.parquet(s"$store/shingles").count() == docs.count())
+    // nor does a failed ErrorIfExists write cost the store its config
+    intercept[org.apache.spark.sql.AnalysisException](Dedup.writeSignatures(delta, "doc_id",
+      "text", store, cfg, org.apache.spark.sql.SaveMode.ErrorIfExists))
+    Dedup.incrementalFromStore(delta, store, "doc_id", "text", cfg)
+    Dedup.writeSignatures(delta, "doc_id", "text", store, cfg,
+      org.apache.spark.sql.SaveMode.Append)
+    assert(spark.read.parquet(s"$store/shingles").count() == docs.count() + 1)
+  }
+
   test("dropNearDups keeps the smaller id of each pair") {
     val pairs = Dedup.minHashPairs(docs, "doc_id", "text", Dedup.MinHashConfig(threshold = 0.5))
     val kept = Dedup.dropNearDups(docs, "doc_id", pairs)
@@ -252,6 +295,32 @@ class DedupSpec extends SparkSpec {
     val pairSet = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairSet.contains((1L, 2L)), s"got $pairSet")
     assert(!pairSet.contains((1L, 3L)))
+  }
+
+  test("embeddingNearDupPairs: sliced buckets find the default pairs; capped buckets drop theirs") {
+    // a five-vector cluster around c and a two-vector pair around -c:
+    // hyperplane signs flip with the vector, so the pair never shares a
+    // band bucket with the cluster
+    val c = Array(0.9, -0.4, 0.7, 0.2, -0.8, 0.5, -0.3, 0.6)
+    def near(v: Array[Double], k: Int): Seq[Float] =
+      v.zipWithIndex.map { case (x, i) => (x + 1e-4 * ((k + i) % 3)).toFloat }.toSeq
+    val df = ((1 to 5).map(k => (k.toLong, near(c, k))) ++
+      (11 to 12).map(k => (k.toLong, near(c.map(-_), k)))).toDF("vec_id", "embedding")
+    graft.plans.NativeExpressions.register(spark)
+    val sigs = df.select(col("vec_id"), Dedup.planeSig("embedding", 8, 8, 42).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert((1L to 5L).map(sigs).distinct.size == 1 && sigs(11L) == sigs(12L), "fixture drifted")
+    def run(maxBucketSize: Int = 10000, sliceRows: Int = 2048) =
+      Dedup.embeddingNearDupPairs(df, "vec_id", "embedding", dim = 8, threshold = 0.99,
+        sigBits = 8, bandBits = 4, maxBucketSize = maxBucketSize, sliceRows = sliceRows)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val default = run()
+    val cluster = (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)).toSet
+    assert(default.map(p => (p._1, p._2)) == cluster + ((11L, 12L)))
+    // sliceRows = 1 slices every bucket of two or more members
+    assert(run(sliceRows = 1) == default)
+    // the cluster's buckets hold 5 > 3 vectors in every band: all dropped
+    assert(run(maxBucketSize = 3) == default.filter(_._1 == 11L))
   }
 
   test("c4SpanDedup removes repeated three-sentence spans corpus-wide, keeps first") {
