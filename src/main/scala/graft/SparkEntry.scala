@@ -1,16 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.operators._
-import graft.dedup.Dedup
-import graft.formats.ProtobufFormat
-import graft.similarity.Similarity
-import graft.sources.{CdcFormats, FakeSource, FileSources, Jdbc}
-import graft.sinks.Sinks
-import graft.text.{Packing, TextAnalysis}
+import graft.driver.Case
 
 /** Typed rows for DynamicOp's Dataset.map path (JVM-compiled user logic —
   * Graft's analog of the reference's DynamicCompile transform).
@@ -18,10 +10,11 @@ import graft.text.{Packing, TextAnalysis}
 case class NationRow(n_nationkey: Int, n_name: String, n_regionkey: Int)
 case class NationOut(nation_id: Long, name_lc: String)
 
-/** Driver contract — see /root/repo/SURVEY.md §2 (inventory) and §7 (plan).
+/** Driver contract — see SURVEY.md §2 (inventory) and §7 (plan).
   *
-  * Every `queries` entry is one SURVEY §2 capability exercised on the
-  * driver's parquet tables; `oracleSql` holds the DuckDB-equivalent SQL.
+  * Every query is one SURVEY §2 capability exercised on the driver's
+  * parquet tables, declared once as a [[graft.driver.Case]] next to its
+  * DuckDB-equivalent oracle SQL in the family files under `driver/`.
   * Contract notes: aggregates go through exact decimal arithmetic and are
   * cast to double only at the end (so Spark and DuckDB bit-match despite
   * different summation orders), every query has a total ORDER BY, and all
@@ -29,5277 +22,12 @@ case class NationOut(nation_id: Long, name_lc: String)
   */
 object SparkEntry {
 
-  /** Exact-arithmetic sum: cast each double to a decimal, sum exactly,
-    * return as double. Bit-identical across engines regardless of
-    * aggregation order.
-    */
-  private def dsum(c: String, scale: Int = 2) =
-    sum(col(c).cast(DecimalType(18, scale))).cast("double")
-
-  /** Fixture invalidation (r9, ADVICE r8): /tmp fixture dirs are keyed on
-    * the SOURCE parquet's (name, length, mtime) fingerprint, not mere
-    * existence — the driver regenerates /root/testdata between rounds, and
-    * a stale fixture replaying against a fresh oracle reads as an engine
-    * bug. The token is written LAST, so a crash mid-build can never leave
-    * a trusted-but-truncated fixture (the zip fixture previously trusted
-    * bare file existence). Token files start with '_' so Spark's file
-    * sources ignore them inside data dirs.
-    */
-  private def sourceToken(dir: String, tables: String*): String = {
-    val parts = tables.flatMap { t =>
-      val d = new java.io.File(dir, s"$t.parquet")
-      Option(d.listFiles()).map(_.toSeq).getOrElse(Seq(d))
-        .sortBy(_.getName).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-    }
-    java.util.UUID.nameUUIDFromBytes(parts.mkString("|").getBytes("UTF-8")).toString
-  }
-
-  private def ensureFixture(base: String, token: String)(build: => Unit): Unit =
-    SparkEntry.synchronized {
-      val tokenFile = new java.io.File(base, "_TOKEN")
-      val cur =
-        if (tokenFile.exists())
-          new String(java.nio.file.Files.readAllBytes(tokenFile.toPath), "UTF-8")
-        else ""
-      if (cur != token) {
-        rmTree(new java.io.File(base))
-        new java.io.File(base).mkdirs()
-        build
-        java.nio.file.Files.write(tokenFile.toPath, token.getBytes("UTF-8"))
-        ()
-      }
-    }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
-  }
-
-  /** Pin the session's shuffle partitions to a stateful-stream-
-    * appropriate size for the duration of `body` (the streaming driver
-    * queries). Streaming state partitioning is FIXED at checkpoint
-    * creation — AQE coalesces batch shuffles at this data size to a few
-    * partitions, but cannot touch stream state — and every state store
-    * instance pays per-batch open/commit/maintenance cost: at this
-    * fixture scale, 32 partitions × 4 join-state stores measured ~2× the
-    * whole micro-batch time (probe in PLANS_r10.md); 8 keeps the scans
-    * parallel while sizing state to load, exactly how production
-    * streaming jobs set this conf per job. Restored after the stream
-    * drains; the batch read of the memory sink replans under the
-    * session default.
-    */
-  private def withStreamPartitions[T](s: SparkSession, n: Int = 8)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** Fresh scratch checkpoint dir for the driver's ephemeral memory-sink
-    * streams. These queries build a brand-new checkpoint per call —
-    * there is nothing to resume, the state-store delta files are pure
-    * scratch — so they live on tmpfs (/dev/shm) where available: the
-    * micro-batch time then measures the ENGINE, not the test VM's fsync
-    * latency (state-store I/O was 75% of q_stream_interval_join's wall
-    * time on this box's disk). Production checkpoints go to durable
-    * storage via the normal `checkpointLocation` option; this helper is
-    * driver-query plumbing only. Wiped before use so a bench rep can
-    * never resume its predecessor's checkpoint (which would skip the
-    * data and corrupt the measurement).
-    */
-  private def scratchCheckpoint(tag: String): String = {
-    val root = new java.io.File(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_ckpt"
-      else sys.props("java.io.tmpdir") + "/graft_ckpt")
-    val dir = new java.io.File(root, tag)
-    rmTree(dir)
-    dir.mkdirs()
-    dir.getAbsolutePath
-  }
-
-  /** Corpus (doc_id%10!=0) minhash signature store, built once per sfDir —
-    * q_dedup_incr_store measures the FROM-STORE path (delta-only signature
-    * cost), the operator's production shape; re-building the store every
-    * rep would measure writeSignatures instead.
-    */
-  private def signatureStore(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_fixtures/sigstore_${dir.replaceAll("\\W", "_")}"
-    // The token pins the MinHash config, which incrementalFromStore checks
-    // against the store's `_minhash_config`: a change rebuilds the store.
-    val cfg = graft.dedup.Dedup.MinHashConfig()
-    ensureFixture(path, sourceToken(dir, "documents") + s"|$cfg") {
-      graft.dedup.Dedup.writeSignatures(
-        Tables.load(s, dir, "documents")
-          .where(pmod(col("doc_id"), lit(10)) =!= 0),
-        "doc_id", "text", path, cfg)
-    }
-    path
-  }
-
-  /** Persisted IVF ANN index over embeddings, built once per sfDir —
-    * q_ann_ivf_store measures the FROM-STORE probe path (centroid load +
-    * pruned cell scan + rerank), the operator's production shape;
-    * re-building the store every rep would measure AnnStore.write.
-    */
-  private def annStore(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_fixtures/annstore_${dir.replaceAll("\\W", "_")}"
-    // Index parameters are part of the token (ADVICE r14): changing them in
-    // code must invalidate the cached fixture, or a stale index built with
-    // the old parameters would silently replay against the new oracle.
-    // The token derives from the SAME vals as the builder call (ADVICE
-    // r15), so the parameters and the token cannot drift apart.
-    val nLists = 8
-    ensureFixture(path, sourceToken(dir, "embeddings") + s"|nLists=$nLists") {
-      graft.similarity.AnnStore.write(Tables.load(s, dir, "embeddings"),
-        "vec_id", "embedding", path, nLists = nLists)
-    }
-    path
-  }
-
-  /** Persisted IVFADC (IVF cells × PQ codes) index over embeddings, built
-    * once per sfDir — q_ann_ivfpq_store measures the FROM-STORE probe path
-    * (centroid+codebook load + pruned CODE scan + ADC rank), the 100 TB
-    * memory-scale shape: the store holds 8 small ints per vector, never
-    * the floats. Closed-form codebooks so the PQ oracle replays the
-    * stored index bit-for-bit.
-    */
-  private def annPqStore(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_fixtures/annpqstore_${dir.replaceAll("\\W", "_")}"
-    // Quantizer parameters in the token (ADVICE r14): a parameter change
-    // must rebuild the fixture rather than reuse a stale /tmp index. Token
-    // and builder arguments share one set of vals (ADVICE r15) so they
-    // cannot drift.
-    val (qDim, qSub, qK, qLists) = (64, 8, 16, 8)
-    ensureFixture(path,
-      sourceToken(dir, "embeddings") + s"|dim=$qDim,subspaces=$qSub,k=$qK,nLists=$qLists") {
-      graft.similarity.AnnStore.writePq(Tables.load(s, dir, "embeddings"),
-        "vec_id", "embedding", path,
-        graft.similarity.PqIndex.closedForm(dim = qDim, subspaces = qSub, k = qK),
-        nLists = qLists)
-    }
-    path
-  }
-
-  /** doc_id-keyed near-dup PNG fixture, materialized ONCE per sfDir to /tmp
-    * parquet and re-read from there: the synthesis udf is deterministic but
-    * dominates the operator's runtime, and image corpora arrive from storage
-    * in production — benches (reps, scale curves) should measure the
-    * near-dup operator over a scanned binary column, not PNG encoding.
-    */
-  private[graft] def imageFixture(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_fixtures/imgs_${dir.replaceAll("\\W", "_")}"
-    // layout note (r21): a multi-file fixture was tried and REVERTED — the
-    // downstream operator is persist-based (banded cache + self-join), and
-    // a 32-block unmaterialized cache under AQE's concurrent stage futures
-    // measured ~2.3x WORSE than the single-file layout (bench 1.15→2.61 s;
-    // details in OPTIMIZATION_r21.md "negative results").
-    ensureFixture(path, sourceToken(dir, "documents")) {
-      val mkPng = udf((id: Long) => graft.multimodal.BinaryOps.neardupFixturePng(id))
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), mkPng(col("doc_id")).as("img"))
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
-
-  /** events as a json-lines dir (all columns, ts in epoch-micros), written
-    * once per sfDir — the shared file-stream input of the q_stream_* family
-    * (the real readStream path; the dir name is versioned so a schema
-    * change can never collide with a stale /tmp fixture).
-    */
-  private def streamFixture(s: SparkSession, dir: String): DataFrame = {
-    val base = s"/tmp/graft_fixtures/stream_${dir.replaceAll("\\W", "_")}"
-    // layout: SINGLE json file (r22 — VERDICT r21 #2). The r21 multi-file
-    // feed (defaultParallelism files) was driver-measured as a 40-100%
-    // regression across the streaming family at 32 cores: per-micro-batch
-    // listing + 32-task scans swamp the sf0.1 floors. It also buys nothing
-    // at scale — json-lines files are SPLITTABLE, so a big feed file still
-    // fans out to maxPartitionBytes-sized tasks in each micro-batch's scan;
-    // only a sub-split-size file scans as one task, where one task is right.
-    ensureFixture(s"$base/a_v2", sourceToken(dir, "events")) {
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-          expr("ts DIV 1000").as("ts_us"))
-        .write.mode("overwrite").json(s"$base/a_v2")
-    }
-    s.readStream.schema(new StructType().add("event_id", LongType)
-        .add("user_id", LongType).add("event_type", StringType)
-        .add("value", DoubleType).add("ts_us", LongType))
-      .json(s"$base/a_v2")
-  }
-
-  /** q_bpe_encode contract: a FIXED merge list shared verbatim by the
-    * Spark query and the DuckDB oracle. The oracle replays BPE-apply as a
-    * delimiter-guarded replace chain: each word becomes
-    * `US US c1 US US c2 US US …` (US = chr(31)) and every merge (a,b) is
-    * one `replace(US a US US b US -> US ab US)` — the doubled delimiter
-    * means adjacent matches never share consumed characters, so ONE
-    * replace per merge reproduces the canonical left-to-right
-    * non-overlapping pass of `BpeTable.mergeOnce` exactly.
-    *
-    * Data contract (r9 ADVICE): the oracle equivalence assumes (a)
-    * non-null `text` — Spark's `size(encode(NULL))` is NULL while the
-    * oracle's `coalesce(flatten(...), [])` yields 0 tokens; and (b) no
-    * chr(31) inside the text — US is the oracle's delimiter and a literal
-    * occurrence would corrupt the replace chain. Both hold for the
-    * synthetic `documents` table (generated non-null printable ASCII);
-    * pipelines feeding arbitrary text through `Bpe.encode` itself are
-    * unaffected (the expression handles nulls and any characters — only
-    * the cross-engine ORACLE carries this restriction).
-    */
-  private val bpeMerges = Seq(
-    "t a", "b l", "ta bl", "tabl e", "s c", "a n", "sc an", "k e", "ke y",
-    "r o", "ro w", "s p", "a r", "sp ar", "spar k", "a g", "ag g",
-    "q u", "e r", "qu er")
-
-  /** q_bpe_bytes contract: BYTE-LEVEL (GPT-2-shape) merges TRAINED once
-    * by `Bpe.trainBytes` on the sf0.01 corpus and frozen here, shared
-    * verbatim by the Spark query and the oracle. 'Ġ' (U+0120) is the
-    * byte-level stand-in for space. The query prepends one space to the
-    * text (the GPT-2 convention), so on this corpus ([a-z ] single-
-    * spaced) every pre-token is exactly 'Ġ' + word — which is what lets
-    * DuckDB replay pre-tokenization with a plain split. The oracle
-    * replays the merges IN ORDER with the same delimiter-guarded replace
-    * chain as [[bpeOracleSql]]; that equals the expression's rank-greedy
-    * application because the table is TRAINED (each merge's operands are
-    * only producible by earlier merges — `BpeByteSpec` asserts the
-    * agreement over the corpus vocabulary).
-    */
-  private val bpeByteMerges = Seq(
-    "Ġ s", "e r", "i n", "o w", "o r", "Ġ c", "m er", "a t", "l u", "Ġ b",
-    "Ġ v", "a s", "Ġ f", "Ġ a", "a r", "p ar", "Ġ t", "j o", "jo in",
-    "Ġ join", "as h", "h ash", "Ġ hash", "r ow")
-
-  /** The delimiter-guarded replace chain over one pre-token `w` (shared
-    * by the byte-BPE oracles).
-    */
-  private def bpeByteChainSql: String = {
-    val D = "chr(31)"
-    val base = s"$D||$D||regexp_replace(w, '(.)', '\\1'||$D||$D, 'g')"
-    bpeByteMerges.foldLeft(base) { (acc, m) =>
-      val Array(a, b) = m.split(" ")
-      s"replace($acc, $D||'$a'||$D||$D||'$b'||$D, $D||'$a$b'||$D)"
-    }
-  }
-
-  private def bpeBytesOracleSql: String = {
-    val chain = bpeByteChainSql
-    s"""WITH t AS (
-       |  SELECT doc_id, list_transform(string_split(text, ' '),
-       |                                w -> chr(288) || w) AS ws
-       |  FROM documents
-       |), e AS (
-       |  SELECT doc_id, coalesce(flatten(list_transform(ws,
-       |    w -> list_filter(string_split($chain, chr(31)), x -> x <> ''))), []) AS toks
-       |  FROM t)
-       |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-       |  array_to_string(toks, ' ') AS tokens_str
-       |FROM e ORDER BY doc_id""".stripMargin
-  }
-
-  private def bpeOracleSql: String = {
-    val D = "chr(31)"
-    val base = s"$D||$D||regexp_replace(w, '(.)', '\\1'||$D||$D, 'g')"
-    val chain = bpeMerges.foldLeft(base) { (acc, m) =>
-      val Array(a, b) = m.split(" ")
-      s"replace($acc, $D||'$a'||$D||$D||'$b'||$D, $D||'$a$b'||$D)"
-    }
-    s"""WITH t AS (
-       |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-       |                             w -> w <> '') AS ws
-       |  FROM documents
-       |), e AS (
-       |  SELECT doc_id, coalesce(flatten(list_transform(ws,
-       |    w -> list_filter(string_split($chain, chr(31)), x -> x <> ''))), []) AS toks
-       |  FROM t)
-       |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-       |  array_to_string(toks, ' ') AS tokens_str
-       |FROM e ORDER BY doc_id""".stripMargin
-  }
-
-  /** q_token_budget oracle: per-source byte-BPE token totals — the same
-    * replace-chain replay as q_bpe_bytes, aggregated instead of dumped.
-    */
-  private def tokenBudgetOracleSql: String = {
-    val chain = bpeByteChainSql
-    s"""WITH t AS (
-       |  SELECT source, list_transform(string_split(text, ' '),
-       |                                w -> chr(288) || w) AS ws
-       |  FROM documents
-       |), e AS (
-       |  SELECT source, list_reduce(list_prepend(0, list_transform(ws,
-       |    w -> len(list_filter(string_split($chain, chr(31)), x -> x <> '')))),
-       |    (a, b) -> a + b) AS n
-       |  FROM t)
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(n) AS BIGINT) AS bpe_tokens
-       |FROM e GROUP BY source ORDER BY source""".stripMargin
-  }
-
-  /** fmix64 as a DuckDB CTE chain (the 32-bit-split HUGEINT wrapping
-    * multiply idiom the simhash/minhash oracles pin): five stages from
-    * `from.(cols, inCol HUGEINT)` to `${p}5.(cols, outCol UBIGINT)`.
-    */
-  private def fmixCtes(p: String, from: String, cols: String,
-      inCol: String, outCol: String): String = {
-    val m1 = "18397679294719823053::HUGEINT" // 0xff51afd7ed558ccd unsigned
-    val m2 = "14181476777654086739::HUGEINT" // 0xc4ceb9fe1a85ec53 unsigned
-    def mul(m: String) =
-      s"(((__f // 4294967296) * $m) % 4294967296 * 4294967296 + " +
-      s"(__f % 4294967296) * $m) % 18446744073709551616::HUGEINT"
-    s"""${p}1 AS (SELECT $cols, xor(($inCol)::UBIGINT, ($inCol)::UBIGINT >> 33)::HUGEINT AS __f FROM $from),
-       |${p}2 AS (SELECT $cols, ${mul(m1)} AS __f FROM ${p}1),
-       |${p}3 AS (SELECT $cols, xor(__f::UBIGINT, __f::UBIGINT >> 33)::HUGEINT AS __f FROM ${p}2),
-       |${p}4 AS (SELECT $cols, ${mul(m2)} AS __f FROM ${p}3),
-       |${p}5 AS (SELECT $cols, xor(__f::UBIGINT, __f::UBIGINT >> 33) AS $outCol FROM ${p}4)""".stripMargin
-  }
-
-  /** q_cms_heavyhitters oracle: rebuild the count-min sketch's CELLS in
-    * SQL (word counts summed per (row, cell)), replay the row-hash
-    * schedule `cell_d = fmix64(hash64(w) ^ fmix64((42<<32)+d)) mod 2048`
-    * bit-for-bit, and take the min-cell estimate — the bloom-replica
-    * treatment applied to frequencies.
-    */
-  private def cmsOracleSql: String =
-    raw"""WITH words AS (
-       |  SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-       |                            w -> w <> '')) AS w
-       |  FROM documents
-       |), counts AS (SELECT w, count(*) AS c FROM words GROUP BY w),
-       |ph AS (
-       |  SELECT w, c, list_reduce(list_prepend(0::HUGEINT,
-       |    [ord(substring(w, i, 1))::HUGEINT FOR i IN range(1, length(w)+1)]),
-       |    (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS h0
-       |  FROM counts),
-       |""".stripMargin +
-    fmixCtes("wh", "ph", "w, c", "h0", "h") + ",\n" +
-    raw"""ds AS (SELECT unnest(range(0, 4)) AS d),
-       |kh AS (SELECT d, (180388626432::HUGEINT + d) AS k0 FROM ds),
-       |""".stripMargin +
-    fmixCtes("kf", "kh", "d", "k0", "k") + ",\n" +
-    raw"""vx AS (SELECT w, c, d, xor(h, k)::HUGEINT AS v0 FROM wh5, kf5),
-       |""".stripMargin +
-    fmixCtes("vf", "vx", "w, c, d", "v0", "v") + ",\n" +
-    raw"""cellsrc AS (SELECT w, c, d, v % 2048 AS cell FROM vf5),
-       |cells AS (SELECT d, cell, sum(c) AS cellsum FROM cellsrc GROUP BY d, cell),
-       |est AS (
-       |  SELECT s.w, min(cl.cellsum) AS cms_est
-       |  FROM cellsrc s JOIN cells cl USING (d, cell) GROUP BY s.w),
-       |top AS (SELECT w, c FROM counts ORDER BY c DESC, w LIMIT 20)
-       |SELECT t.w AS word, CAST(t.c AS BIGINT) AS exact_count,
-       |  CAST(e.cms_est AS BIGINT) AS cms_est
-       |FROM top t JOIN est e ON t.w = e.w
-       |ORDER BY exact_count DESC, word""".stripMargin
-
-  /** q_ann_pq oracle: full PQ replay. Closed-form codebooks
-    * c[m][j][d] = signed(fmix64((42<<32) + m*65536 + j*256 + d)) / 2^63,
-    * per-(vector, subspace) argmin encode (ties -> lowest j, Spark's
-    * first-wins insertion), per-query ADC tables, scores as SEQUENTIAL
-    * list folds over m (the aggregate/zip_with order), rank by
-    * (dist2 asc, n_id).
-    */
-  /** Exact cosine top-k — gates q_ann_ivf AND q_ann_ivf_store: both probe
-    * all cells, which provably reduces IVF to the exact ranking.
-    */
-  private def ivfExactOracleSql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-      |s AS (
-      |  SELECT q.q_id, c.vec_id AS n_id,
-      |    list_sum(list_transform(list_zip(q.qe, c.embedding),
-      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-      |    (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-      |     sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cosine
-      |  FROM q, embeddings c),
-      |r AS (SELECT q_id, n_id, cosine,
-      |        CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS INTEGER) AS rnk
-      |      FROM s)
-      |SELECT q_id, n_id, rnk, cosine FROM r WHERE rnk <= 10
-      |ORDER BY q_id, rnk""".stripMargin
-
-  private def pqOracleSql: String =
-    raw"""WITH g AS (
-       |  SELECT m.m, j.j, d.d,
-       |    (180388626432::HUGEINT + m.m*65536 + j.j*256 + d.d) AS k0
-       |  FROM (SELECT unnest(range(0, 8)) AS m) m,
-       |       (SELECT unnest(range(0, 16)) AS j) j,
-       |       (SELECT unnest(range(0, 8)) AS d) d),
-       |""".stripMargin +
-    fmixCtes("pqf", "g", "m, j, d", "k0", "craw") + ",\n" +
-    raw"""cent AS (
-       |  SELECT m, j, d,
-       |    (CASE WHEN craw >= 9223372036854775808::HUGEINT
-       |          THEN craw::HUGEINT - 18446744073709551616::HUGEINT
-       |          ELSE craw::HUGEINT END)::DOUBLE / 9223372036854775808.0 AS c
-       |  FROM pqf5),
-       |cvecs AS (SELECT m, j, list(c ORDER BY d) AS cv FROM cent GROUP BY m, j),
-       |vecs AS (SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-       |         FROM embeddings),
-       |enc0 AS (
-       |  SELECT vec_id, m, j,
-       |    list_reduce(list_prepend(0.0,
-       |      [ (v[m*8 + i + 1] - cv[i+1]) * (v[m*8 + i + 1] - cv[i+1])
-       |        FOR i IN range(0, 8)]), (a, b) -> a + b) AS d2
-       |  FROM vecs, cvecs),
-       |codes AS (
-       |  SELECT vec_id, m, j AS code FROM enc0
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, j) = 1),
-       |pairs AS (
-       |  SELECT e.vec_id AS q_id, c.vec_id AS n_id,
-       |    list_reduce(list_prepend(0.0, list(e.d2 ORDER BY e.m)),
-       |      (a, b) -> a + b) AS dist2
-       |  FROM codes c
-       |  JOIN enc0 e ON e.m = c.m AND e.j = c.code AND e.vec_id < 5
-       |  GROUP BY e.vec_id, c.vec_id),
-       |rk AS (
-       |  SELECT q_id, n_id, dist2,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY dist2, n_id) AS rnk
-       |  FROM pairs)
-       |SELECT q_id, n_id, CAST(rnk AS INTEGER) AS rnk, dist2
-       |FROM rk WHERE rnk <= 10
-       |ORDER BY q_id, rnk""".stripMargin
-
-  /** q_ann_ivfpq_res oracle: the RESIDUAL IVFADC (faiss IVFPQ) replayed
-    * end to end — closed-form coarse centroids (seed 7, full-dim grid)
-    * and PQ codebooks (seed 42), coarse assignment argmins, residuals,
-    * residual-code argmins, per-(query, cell) ADC tables, fold-ordered
-    * scores, ranking. Every reduction is a sequential list fold matching
-    * the engine's aggregate/zip_with order.
-    */
-  private def pqResidualOracleSql: String =
-    raw"""WITH g AS (
-       |  SELECT m.m, j.j, d.d,
-       |    (180388626432::HUGEINT + m.m*65536 + j.j*256 + d.d) AS k0
-       |  FROM (SELECT unnest(range(0, 8)) AS m) m,
-       |       (SELECT unnest(range(0, 16)) AS j) j,
-       |       (SELECT unnest(range(0, 8)) AS d) d),
-       |""".stripMargin +
-    fmixCtes("pqf", "g", "m, j, d", "k0", "craw") + ",\n" +
-    raw"""cent AS (
-       |  SELECT m, j, d,
-       |    (CASE WHEN craw >= 9223372036854775808::HUGEINT
-       |          THEN craw::HUGEINT - 18446744073709551616::HUGEINT
-       |          ELSE craw::HUGEINT END)::DOUBLE / 9223372036854775808.0 AS c
-       |  FROM pqf5),
-       |cvecs AS (SELECT m, j, list(c ORDER BY d) AS cv FROM cent GROUP BY m, j),
-       |cg AS (
-       |  SELECT j.j, d.d, (30064771072::HUGEINT + j.j*256 + d.d) AS k0
-       |  FROM (SELECT unnest(range(0, 8)) AS j) j,
-       |       (SELECT unnest(range(0, 64)) AS d) d),
-       |""".stripMargin +
-    fmixCtes("ccf", "cg", "j, d", "k0", "craw") + ",\n" +
-    raw"""ccent AS (
-       |  SELECT j, d,
-       |    (CASE WHEN craw >= 9223372036854775808::HUGEINT
-       |          THEN craw::HUGEINT - 18446744073709551616::HUGEINT
-       |          ELSE craw::HUGEINT END)::DOUBLE / 9223372036854775808.0 AS c
-       |  FROM ccf5),
-       |ccvecs AS (SELECT j AS cell, list(c ORDER BY d) AS ccv FROM ccent GROUP BY j),
-       |vecs AS (SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-       |         FROM embeddings),
-       |ca AS (
-       |  SELECT vec_id, cell,
-       |    list_reduce(list_prepend(0.0,
-       |      [ (v[i+1] - ccv[i+1]) * (v[i+1] - ccv[i+1]) FOR i IN range(0, 64)]),
-       |      (a, b) -> a + b) AS cd2
-       |  FROM vecs, ccvecs),
-       |cells AS (
-       |  SELECT vec_id, cell FROM ca
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cd2, cell) = 1),
-       |resid AS (
-       |  SELECT v.vec_id, c.cell,
-       |    [v.v[i+1] - cv.ccv[i+1] FOR i IN range(0, 64)] AS r
-       |  FROM vecs v JOIN cells c USING (vec_id) JOIN ccvecs cv ON cv.cell = c.cell),
-       |enc0 AS (
-       |  SELECT rr.vec_id, rr.cell, m, j,
-       |    list_reduce(list_prepend(0.0,
-       |      [ (rr.r[m*8 + i + 1] - cv[i+1]) * (rr.r[m*8 + i + 1] - cv[i+1])
-       |        FOR i IN range(0, 8)]), (a, b) -> a + b) AS d2
-       |  FROM resid rr, cvecs),
-       |codes AS (
-       |  SELECT vec_id, cell, m, j AS code FROM enc0
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, j) = 1),
-       |qresid AS (
-       |  SELECT v.vec_id AS q_id, cv.cell,
-       |    [v.v[i+1] - cv.ccv[i+1] FOR i IN range(0, 64)] AS r
-       |  FROM vecs v, ccvecs cv WHERE v.vec_id < 5),
-       |qtab AS (
-       |  SELECT qr.q_id, qr.cell, m, j,
-       |    list_reduce(list_prepend(0.0,
-       |      [ (qr.r[m*8 + i + 1] - cv[i+1]) * (qr.r[m*8 + i + 1] - cv[i+1])
-       |        FOR i IN range(0, 8)]), (a, b) -> a + b) AS t
-       |  FROM qresid qr, cvecs),
-       |pairs AS (
-       |  SELECT t.q_id, c.vec_id AS n_id,
-       |    list_reduce(list_prepend(0.0, list(t.t ORDER BY t.m)),
-       |      (a, b) -> a + b) AS dist2
-       |  FROM codes c JOIN qtab t ON t.cell = c.cell AND t.m = c.m AND t.j = c.code
-       |  GROUP BY t.q_id, c.vec_id),
-       |rk AS (
-       |  SELECT q_id, n_id, dist2,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY dist2, n_id) AS rnk
-       |  FROM pairs)
-       |SELECT q_id, n_id, CAST(rnk AS INTEGER) AS rnk, dist2
-       |FROM rk WHERE rnk <= 10
-       |ORDER BY q_id, rnk""".stripMargin
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.2 q1: TPC-H Q1-style pricing summary — groupBy/agg with partial
-    // (map-side) aggregation; scan prunes to 7 of 11 lineitem columns and
-    // the shipdate predicate pushes to parquet.
-    "q1_agg" -> ((s, dir) => {
-      Tables.load(s, dir, "lineitem")
-        .where(col("l_shipdate") <= to_timestamp(lit("1998-09-02")))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum("l_quantity").as("sum_qty"),
-          dsum("l_extendedprice").as("sum_base_price"),
-          sum(col("l_extendedprice").cast(DecimalType(18, 2)) *
-              (lit(java.math.BigDecimal.ONE).cast(DecimalType(18, 4)) -
-               col("l_discount").cast(DecimalType(18, 4))))
-            .cast("double").as("sum_disc_price"),
-          (dsum("l_quantity") / count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Case.all.map(c => c.name -> c.build).toMap
 
-    // §2.1.1 FieldMapper
-    "q_field_mapper" -> ((s, dir) => {
-      FieldOps.fieldMapper(
-        Tables.load(s, dir, "customer"),
-        Seq("c_custkey" -> "cust_id", "c_name" -> "name",
-            "c_mktsegment" -> "segment", "c_acctbal" -> "balance"))
-        .orderBy("cust_id")
-    }),
-
-    // §2.1.2 FieldRename (prefix affix mode)
-    "q_field_rename" -> ((s, dir) => {
-      FieldOps.renameAffix(Tables.load(s, dir, "region"), prefix = "dim_")
-        .orderBy("dim_r_regionkey")
-    }),
-
-    // §2.1.3 Copy
-    "q_copy" -> ((s, dir) => {
-      FieldOps.copyFields(Tables.load(s, dir, "nation"), Seq("n_name" -> "n_name_copy"))
-        .select("n_nationkey", "n_name", "n_regionkey", "n_name_copy")
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.1.4 Filter (keep columns)
-    "q_filter_fields" -> ((s, dir) => {
-      FieldOps.keepFields(Tables.load(s, dir, "orders"), Seq("o_orderkey", "o_totalprice"))
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.1.5 FilterRow — predicate pushes to the parquet scan
-    "q_filter_rows" -> ((s, dir) => {
-      // ORDER BY every output column: (l_orderkey, l_linenumber) is NOT
-      // unique in the driver data (118k duplicate pairs at sf0.1), so a
-      // partial sort leaves tie order engine-dependent — first observed
-      // as row swaps in the sf1 sweep; full-row order makes the
-      // positional compare total (identical full rows swap invisibly)
-      RowOps.filterRows(Tables.load(s, dir, "lineitem"),
-          "l_quantity > 45.0 AND l_discount < 0.05")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-        .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-    }),
-
-    // §2.1.6 Split
-    "q_split" -> ((s, dir) => {
-      RowOps.splitField(Tables.load(s, dir, "part"), " ", "p_name", Seq("p_adj", "p_noun"))
-        .select("p_partkey", "p_name", "p_adj", "p_noun")
-        .orderBy("p_partkey")
-    }),
-
-    // §2.1.7 Replace — literal and regex modes
-    "q_replace" -> ((s, dir) => {
-      val lit0 = RowOps.replaceField(
-        Tables.load(s, dir, "customer").select(col("c_custkey"), col("c_name"),
-          col("c_name").as("c_name_re")),
-        "c_name", "Customer#", "C-")
-      RowOps.replaceField(lit0, "c_name_re", "0+", "0", isRegex = true)
-        .orderBy("c_custkey")
-    }),
-
-    // §2.1.8 / §2.2 SQL transform (projection + WHERE + scalar functions)
-    "q_sql_transform" -> ((s, dir) => {
-      SqlOp.sql(s, Tables.load(s, dir, "orders"),
-        """SELECT o_orderkey, UPPER(o_orderpriority) AS pri,
-          |       YEAR(o_orderdate) AS yr, o_totalprice
-          |FROM input WHERE o_orderstatus = 'F'
-          |ORDER BY o_orderkey""".stripMargin)
-    }),
-
-    // §2.1.9 JsonPath — codegen'd get_json_object, no per-row JSON library
-    "q_jsonpath" -> ((s, dir) => {
-      JsonPathOp.extract(Tables.load(s, dir, "events"),
-          Seq(JsonPathOp.PathSpec("props", "$.k", "k", Some(IntegerType))))
-        .select("event_id", "k")
-        .orderBy("event_id")
-    }),
-
-    // §2.1.10 Metadata injection
-    "q_metadata" -> ((s, dir) => {
-      MetadataOp.inject(Tables.load(s, dir, "nation"),
-          Map("Database" -> "db_name", "Table" -> "tbl_name"),
-          MetadataOp.MetaConfig(database = Some("graft"), table = Some("nation")))
-        .select("n_nationkey", "n_name", "n_regionkey", "db_name", "tbl_name")
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.1.11 FilterRowKind over a derived changelog
-    "q_filter_rowkind" -> ((s, dir) => {
-      val changelog = Tables.load(s, dir, "orders").withColumn(RowKindOps.RowKindCol,
-        when(col("o_orderstatus") === "F", "+I")
-          .when(col("o_orderstatus") === "O", "+U").otherwise("-D"))
-      RowKindOps.filterRowKind(changelog, Seq("+I", "+U"))
-        .select("o_orderkey", "o_orderstatus", "__row_kind")
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.1.12 RowKindExtractor (FULL format)
-    "q_rowkind_extractor" -> ((s, dir) => {
-      val changelog = Tables.load(s, dir, "orders").withColumn(RowKindOps.RowKindCol,
-        when(col("o_orderstatus") === "F", "+I")
-          .when(col("o_orderstatus") === "O", "+U").otherwise("-D"))
-      RowKindOps.extractRowKind(changelog, "kind", full = true)
-        .select("o_orderkey", "kind")
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.1.13 TableMerge — shard tables unioned by name, tagged with source
-    "q_table_merge" -> ((s, dir) => {
-      val orders = Tables.load(s, dir, "orders")
-      val catalog = Map(
-        "orders_f" -> orders.where(col("o_orderstatus") === "F"),
-        "orders_o" -> orders.where(col("o_orderstatus") === "O"),
-        "orders_p" -> orders.where(col("o_orderstatus") === "P"))
-      TableOps.mergeTables(catalog, "orders_[fo]", "orders_m", tagSourceTable = true)("orders_m")
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.1.15 DynamicCompile analog: typed Dataset.map user function
-    "q_dynamic" -> ((s, dir) => {
-      import s.implicits._
-      DynamicOp.applyTyped(
-        Tables.load(s, dir, "nation").as[NationRow],
-        (n: NationRow) => NationOut(n.n_nationkey.toLong * 2L, n.n_name.toLowerCase))
-        .toDF().orderBy("nation_id")
-    }),
-
-    // §2.1.16 Embedding — HASH-EXACT since r7: the fallback embedder's
-    // token hash is poly-257+fmix64, so the DuckDB oracle recomputes the
-    // full 16-dim vector (buckets, signs, float normalize) bit-exactly.
-    // The vector itself stays out of the driver output (pandas can't
-    // sort array cells) — emit scalar digests instead: dimension, L2
-    // norm, and an md5 over the elements scaled by 2^20 and truncated
-    // (power-of-two scaling of a float is exact, truncation has no
-    // rounding-mode ambiguity across engines — unlike format_number).
-    "q_embedding" -> ((s, dir) => {
-      val emb = EmbeddingOp.embed(
-        Tables.load(s, dir, "documents"), "text", "embedding", dim = 16)
-      emb.select(
-          col("doc_id"),
-          size(col("embedding")).as("dim"),
-          round(sqrt(aggregate(
-            transform(col("embedding"), x => x.cast("double") * x.cast("double")),
-            lit(0.0), (acc, x) => acc + x)), 6).as("l2"),
-          md5(concat_ws(",",
-            transform(col("embedding"),
-              x => (x.cast("double") * lit(1048576.0)).cast("long")))).as("sig"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.2 join pipeline (TPC-H Q3 shape): dims broadcast, fact shuffles
-    // once on the join key; revenue via exact decimal arithmetic.
-    "q_sql_join" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT o.o_orderkey,
-          |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
-          |      (CAST(1 AS DECIMAL(18,4)) - CAST(l.l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
-          |  o.o_orderdate
-          |FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-          |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-          |WHERE c.c_mktsegment = 'BUILDING' AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-          |GROUP BY o.o_orderkey, o.o_orderdate
-          |ORDER BY o.o_orderkey""".stripMargin)
-    }),
-
-    // §2.2 window functions
-    "q_sql_window" -> ((s, dir) => {
-      SqlOp.sql(s, Tables.load(s, dir, "orders"),
-        """SELECT o_orderkey, o_custkey, o_totalprice,
-          |  row_number() OVER (PARTITION BY o_custkey
-          |                     ORDER BY o_totalprice DESC, o_orderkey) AS rn
-          |FROM input ORDER BY o_custkey, rn""".stripMargin)
-    }),
-
-    // §2.2 CTE + broadcast dim join + agg
-    "q_sql_cte" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(
-        """WITH rn AS (
-          |  SELECT n.n_nationkey, r.r_name
-          |  FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey)
-          |SELECT rn.r_name, count(*) AS n_suppliers,
-          |  CAST(SUM(CAST(s.s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-          |FROM supplier s JOIN rn ON s.s_nationkey = rn.n_nationkey
-          |GROUP BY rn.r_name ORDER BY rn.r_name""".stripMargin)
-    }),
-
-    // §2.2 set operations
-    "q_sql_setops" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'
-          |INTERSECT
-          |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-          |ORDER BY k""".stripMargin)
-    }),
-
-    // §2.2 LATERAL VIEW explode (zeta EXPLODE)
-    "q_sql_explode" -> ((s, dir) => {
-      SqlOp.sql(s, Tables.load(s, dir, "part"),
-        """SELECT p_partkey, word
-          |FROM input LATERAL VIEW explode(split(p_name, ' ')) t AS word
-          |ORDER BY p_partkey, word""".stripMargin)
-    }),
-
-    // §2.3 zeta string function coverage (builtins + registered compat fns)
-    "q_fn_string" -> ((s, dir) => {
-      graft.functions.ZetaFunctions.register(s)
-      SqlOp.sql(s, Tables.load(s, dir, "customer"),
-        """SELECT c_custkey,
-          |  UPPER(c_name) AS up, LOWER(c_name) AS lo, LENGTH(c_name) AS len,
-          |  SUBSTR(c_name, 1, 8) AS sub8,
-          |  LPAD(CAST(c_custkey AS STRING), 8, '0') AS pad,
-          |  CONCAT_WS('|', c_name, c_mktsegment) AS cw,
-          |  REPLACE(c_name, 'Customer', 'Cust') AS rep,
-          |  LEFT(c_name, 4) AS lft, RIGHT(c_name, 3) AS rgt,
-          |  ASCII(c_mktsegment) AS a1,
-          |  REPEAT(c_mktsegment, 2) AS rpt,
-          |  TRANSLATE(c_mktsegment, 'AEIOU', 'aeiou') AS trn,
-          |  INSTR(c_name, '#') AS hashpos,
-          |  insert_str(c_name, 1, 8, 'CUST') AS ins
-          |FROM input ORDER BY c_custkey""".stripMargin)
-    }),
-
-    // §2.3 zeta numeric functions (IEEE-deterministic subset for the oracle;
-    // transcendental parity is spec-tested instead)
-    "q_fn_numeric" -> ((s, dir) => {
-      graft.functions.ZetaFunctions.register(s)
-      SqlOp.sql(s, Tables.load(s, dir, "lineitem"),
-        """SELECT l_orderkey, l_linenumber,
-          |  ABS(l_discount - 0.05) AS ab,
-          |  CEIL(l_quantity) AS ce, FLOOR(l_quantity) AS fl,
-          |  ROUND(l_quantity, 1) AS rd,
-          |  SQRT(l_quantity) AS sq,
-          |  MOD(l_orderkey, 7) AS md,
-          |  SIGN(l_discount - 0.05) AS sg,
-          |  POWER(l_linenumber, 2) AS pw,
-          |  truncate(l_extendedprice, 1) AS tr
-          |FROM input
-          |ORDER BY l_orderkey, l_linenumber, ab, ce, fl, rd, sq, md, sg, pw, tr""".stripMargin)
-    }),
-
-    // §2.3 zeta date/time functions
-    "q_fn_datetime" -> ((s, dir) => {
-      graft.functions.ZetaFunctions.register(s)
-      SqlOp.sql(s, Tables.load(s, dir, "orders"),
-        """SELECT o_orderkey,
-          |  YEAR(o_orderdate) AS y, MONTH(o_orderdate) AS m,
-          |  QUARTER(o_orderdate) AS q,
-          |  day_of_month(o_orderdate) AS dom,
-          |  day_of_year(o_orderdate) AS doy,
-          |  day_of_week(o_orderdate) AS dow,
-          |  dayname(o_orderdate) AS dn, monthname(o_orderdate) AS mn,
-          |  week(o_orderdate) AS wk,
-          |  date_trunc('month', o_orderdate) AS mstart,
-          |  dateadd(o_orderdate, 30, 'DAY') AS plus30,
-          |  zeta_datediff(o_orderdate, TIMESTAMP '2000-01-01 00:00:00', 'DAY') AS to2k,
-          |  formatdatetime(o_orderdate, 'yyyy-MM-dd') AS fmt
-          |FROM input ORDER BY o_orderkey""".stripMargin)
-    }),
-
-    // §2.3 system functions (COALESCE/IFNULL/NULLIF/CAST)
-    "q_fn_system" -> ((s, dir) => {
-      SqlOp.sql(s, Tables.load(s, dir, "customer"),
-        """SELECT c_custkey,
-          |  COALESCE(CASE WHEN c_acctbal < 1000 THEN NULL ELSE c_mktsegment END, 'LOW') AS seg,
-          |  IFNULL(CASE WHEN c_custkey % 2 = 0 THEN NULL ELSE c_name END, 'EVEN') AS nm,
-          |  NULLIF(c_mktsegment, 'FURNITURE') AS nf,
-          |  CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS bal_dec,
-          |  CAST(c_custkey AS STRING) AS key_s,
-          |  CAST(c_acctbal AS BIGINT) AS bal_l
-          |FROM input ORDER BY c_custkey""".stripMargin)
-    }),
-
-    // §2.1.17 LLM transform with the deterministic offline provider
-    "q_llm" -> ((s, dir) => {
-      LlmOp.transform(Tables.load(s, dir, "documents").select("doc_id", "text"),
-          "text", "label", LlmOp.RuleProvider(Seq("data", "join", "spark")))
-        .select("doc_id", "label")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 exact dedup: digest groupBy with map-side partial agg
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.load(s, dir, "documents"), "doc_id", "text")
-        .orderBy("digest")
-    }),
-
-    // §2.6 MinHash+LSH near-dup — HASH-EXACT since r7: shingle hashes are
-    // poly-257+fmix64 and the 64 permutations are fmix64(h ^ k_p) with
-    // closed-form keys, so the DuckDB oracle recomputes the whole
-    // pipeline independently — shingle hashes, unsigned-min signatures,
-    // 16x4 band grouping, bucket cap, gram-string Jaccard verify at 0.7,
-    // greedy id_b drop.
-    "q_dedup_minhash" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.minHashPairs(docs, "doc_id", "text")
-      Dedup.dropNearDups(docs, "doc_id", pairs).select("doc_id").orderBy("doc_id")
-    }),
-
-    // §2.6 SimHash near-dup — HASH-EXACT since r7: the per-token hash is
-    // poly-257 + murmur fmix64 (plain 64-bit modular arithmetic), so the
-    // DuckDB oracle recomputes the full pipeline independently — token
-    // hashes, 64-bit vote signature, 4x16 pigeonhole bands, bucket cap,
-    // hamming<=3 pairs, greedy id_b drop.
-    "q_dedup_simhash" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.simHashPairs(docs, "doc_id", "text")
-      Dedup.dropNearDups(docs, "doc_id", pairs).select("doc_id").orderBy("doc_id")
-    }),
-
-    // §2.6 n-gram Jaccard near-dup (rows-only; spec-tested)
-    "q_dedup_ngram" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
-      Dedup.dropNearDups(docs, "doc_id", pairs).select("doc_id").orderBy("doc_id")
-    }),
-
-    // §2.6 embedding-cosine near-dup via hyperplane LSH — HASH-EXACT
-    // since r7: Rademacher planes from fmix64 + sequential double folds
-    // make signatures, buckets, and the cosine verify exactly
-    // recomputable in DuckDB.
-    "q_neardup_cosine" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val pairs = Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding", dim = 64, threshold = 0.9)
-      Dedup.dropNearDups(emb, "vec_id", pairs).select("vec_id").orderBy("vec_id")
-    }),
-
-    // §2.6 cluster-resolved dedup: minhash pairs -> connected components
-    // -> one survivor (min id) per duplicate group (rows-only; planted
-    // component semantics spec-verified)
-    "q_dedup_clusters" -> ((s, dir) => {
-      // duplicate-cluster resolution, driven through its WORST case: a
-      // per-source consecutive-doc chain graph has maximal diameter, so
-      // the min-label + pointer-jumping iteration does real multi-round
-      // work, and the component labels are exactly checkable (each
-      // source chain's label = its min doc_id — the closed form the
-      // DuckDB oracle computes)
-      val docs = Tables.load(s, dir, "documents")
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      val pairs = docs
-        .withColumn("next_id", lead("doc_id", 1).over(w))
-        .where(col("next_id").isNotNull)
-        .select(col("doc_id").as("id_a"), col("next_id").as("id_b"))
-      Dedup.connectedComponents(pairs)
-        .select(col("node").cast("bigint").as("doc_id"),
-          col("label").cast("bigint").as("component"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 semantic dedup (SemDeDup-style): embedding-cosine pair graph
-    // resolved into components, one survivor per semantic cluster.
-    // HASH-EXACT since r7: the oracle replays the LSH pair pipeline and
-    // resolves components with a recursive reachability CTE.
-    "q_semantic_dedup" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val pairs = Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding", dim = 64,
-        threshold = 0.9)
-      Dedup.dropByComponents(emb, "vec_id", pairs)
-        .select("vec_id", "label").orderBy("vec_id")
-    }),
-
-    // §2.6 exact brute-force cosine top-k ANN (oracle-checked: DuckDB list
-    // lambdas reproduce the double-precision fold bit-exactly)
-    "q_ann_bruteforce" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 LSH-bucketed ANN, the corpus-scale path. HASH-EXACT since
-    // r7 (fmix64 Rademacher planes): the oracle recomputes signatures,
-    // band candidates, and the exact-cosine ranking bit-for-bit; recall
-    // vs brute force additionally spec-tested.
-    "q_ann_lsh" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      Similarity.lshTopK(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", dim = 64, k = 10)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 int8-quantized ANN: 4x smaller vectors through every scan/
-    // broadcast. HASH-EXACT since r7: quantization (round half-up codes,
-    // per-vector scale) and the dequantized integer-dot score are plain
-    // deterministic arithmetic the DuckDB oracle replays bit-exactly —
-    // including the cosine column (sequential double folds both sides).
-    "q_ann_int8" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      Similarity.int8TopK(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 IVF ANN: KMeans coarse quantizer + nProbe cell probing.
-    // HASH-EXACT since r7 by probing ALL cells (nProbe = nLists): every
-    // (query, vector) pair then flows through assignment → cell routing →
-    // exact rerank exactly once, so the result provably equals the exact
-    // top-k whatever the kmeans draw — the oracle gates the whole IVF
-    // execution path (a dropped cell, mis-routed vector, or duplicate
-    // join row breaks equality). Pruned-nProbe recall and the 10x scale
-    // curve stay covered by IvfIndexSpec + SCALE_r7's ann_ivf point.
-    "q_ann_ivf" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-          k = 10, nLists = 8, nProbe = 8)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 PERSISTED IVF index (r13; VERDICT r12 #6): centroids + the
-    // cell-PARTITIONED assigned corpus live as parquet built once per
-    // sfDir; the query pays centroid load + statically-pruned cell scan +
-    // exact rerank — corpus vectors are never re-encoded. Probing ALL
-    // cells makes the stored-index result provably equal exact top-k
-    // (the q_ann_ivf trick), so the same oracle gates store write, cell
-    // partitioning, centroid round-trip, and the probe path end-to-end;
-    // pruned-probe recall + append-then-probe are spec-tested
-    // (AnnStoreSpec).
-    "q_ann_ivf_store" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      graft.similarity.AnnStore.probe(s, annStore(s, dir),
-          emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10, nProbe = 8)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 PERSISTED IVFADC index (r14; VERDICT r13 #6): the AnnStore
-    // layout with PQ codes instead of raw vectors — centroids + codebooks
-    // + the cell-PARTITIONED code table (8 ints/row, the 32× faiss cut)
-    // live as parquet built once per sfDir; the query pays quantizer load
-    // + statically-pruned code scan + in-plan ADC tables. Probing ALL
-    // cells scores every (query, row) pair exactly once through the
-    // row's cell, so the stored-index result provably equals adcTopK —
-    // the same bit-exact closed-form PQ oracle gates store write, cell
-    // partitioning, codebook round-trip, and the probe path end-to-end;
-    // pruned-probe + append-then-probe are spec-tested (AnnStoreSpec).
-    "q_ann_ivfpq_store" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      graft.similarity.AnnStore.probePq(s, annPqStore(s, dir),
-          emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10, nProbe = 8)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 product-quantized ANN (r10): the faiss IVF-PQ building block —
-    // corpus vectors collapse to 8 one-byte-ish codes, search is M table
-    // lookups per row (ADC). Codebooks here are the CLOSED-FORM
-    // fmix64-derived ones (recomputable outside the JVM — the pinning
-    // trick the LSH planes use), so the oracle replays codebooks, encode
-    // argmins, ADC tables, sequential-fold scores, and the ranking
-    // bit-for-bit; trained-codebook quality is spec-tested (PqAnnSpec).
-    "q_ann_pq" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val cb = graft.similarity.PqIndex.closedForm(dim = 64, subspaces = 8, k = 16)
-      graft.similarity.PqIndex.adcTopK(emb, emb.where(col("vec_id") < 5),
-          "vec_id", "embedding", cb, k = 10)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 IVFADC — IVF cells × PQ codes composed (r10): probing ALL
-    // cells makes the result provably equal plain ADC (the q_ann_ivf
-    // trick), so the same bit-exact PQ oracle gates cell assignment,
-    // routing, and the code path end-to-end; pruned-probe recall is
-    // spec-tested.
-    "q_ann_ivfpq" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val cb = graft.similarity.PqIndex.closedForm(dim = 64, subspaces = 8, k = 16)
-      val ivf = graft.similarity.IvfIndex.cached(emb, "embedding", nLists = 8)
-      graft.similarity.PqIndex.ivfPqTopK(emb, emb.where(col("vec_id") < 5),
-          "vec_id", "embedding", cb, ivf, nProbe = 8, k = 10)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 RESIDUAL IVFADC — the true faiss IVFPQ (r10): corpus rows
-    // PQ-encode their residual against their coarse cell; queries rank
-    // with per-probed-cell ADC tables. Closed-form coarse centroids
-    // (seed 7) + codebooks (seed 42) make the ENTIRE index — assignment,
-    // residuals, codes, tables, scores — replayable bit-for-bit; the
-    // oracle does exactly that. Trained-codebook quality spec'd.
-    "q_ann_ivfpq_res" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val coarse = graft.similarity.IvfIndex(
-        graft.similarity.PqIndex.closedForm(dim = 64, subspaces = 1, k = 8,
-          seed = 7).centroids(0))
-      val cb = graft.similarity.PqIndex.closedForm(dim = 64, subspaces = 8, k = 16)
-      graft.similarity.PqIndex.ivfPqResidualTopK(emb,
-          emb.where(col("vec_id") < 5), "vec_id", "embedding", cb, coarse,
-          nProbe = 8, k = 10)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 language-ID heuristic (pure Column exprs, codegen'd)
-    "q_text_langid" -> ((s, dir) => {
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 quality scoring features
-    "q_text_quality" -> ((s, dir) => {
-      TextAnalysis.qualityFeatures(Tables.load(s, dir, "documents"), "text")
-        .select("doc_id", "n_chars_q", "n_words", "punct_ratio", "mean_word_len",
-          "distinct_ratio", "stopword_ratio")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 token counting (whitespace + BPE-ish regex)
-    "q_text_tokens" -> ((s, dir) => {
-      TextAnalysis.tokenCounts(Tables.load(s, dir, "documents"), "text")
-        .select("doc_id", "ws_tokens", "bpe_tokens")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 fixed-token-window chunking with overlap (context-window prep)
-    "q_chunk_docs" -> ((s, dir) => {
-      TextAnalysis.chunkDocuments(Tables.load(s, dir, "documents"),
-        "doc_id", "text", chunkSize = 128, overlap = 32)
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // §2.6 corpus vocabulary (word-frequency table, top-k)
-    "q_vocab_topk" -> ((s, dir) => {
-      TextAnalysis.vocabulary(Tables.load(s, dir, "documents"), "text", topK = 1000)
-    }),
-
-    // §2.6 corpus bigram count table (LM statistics)
-    "q_ngram_counts" -> ((s, dir) => {
-      TextAnalysis.ngramCounts(Tables.load(s, dir, "documents"), "text", n = 2, topK = 500)
-    }),
-
-    // §2.6 CCNet-style LM-likelihood scoring (r9): per-doc average
-    // conditional bigram probability against the corpus's own bigram LM,
-    // integer-scaled so the score is exact in every engine (no libm
-    // ln/exp in the contract). The perplexity-bucketing signal.
-    "q_lm_likelihood" -> ((s, dir) => {
-      // r22: fanOut reverted (VERDICT r21 #1 — the fanned scan fed
-      // bigramLikelihood's three consumers unpersisted, tripling the
-      // round-robin shuffle; driver-regressed at 32 cores). The shared
-      // bigram table is now persisted inside bigramLikelihood instead,
-      // so the tokenize+explode pass runs once per query.
-      TextAnalysis.bigramLikelihood(Tables.load(s, dir, "documents"),
-          "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 BPE tokenization (r9): real byte-pair encoding under a fixed
-    // merge table (training is spec-tested; apply is the hot path worth
-    // grading) — native codegen'd expression with a per-executor word
-    // memo cache, zero UDF/encoder round-trips. Oracle replays the merge
-    // chain with delimiter-guarded replaces (see bpeOracleSql).
-    "q_bpe_encode" -> ((s, dir) => {
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.text.Bpe.encode(lower(col("text")), bpeMerges).as("__t"))
-        .select(col("doc_id"), size(col("__t")).cast("long").as("n_tokens"),
-          array_join(col("__t"), " ").as("tokens_str"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 BYTE-LEVEL BPE tokenization (r10; VERDICT r9 #4): the GPT-2
-    // shape — 256-symbol byte alphabet ('Ġ' carries the space), regex
-    // pre-tokenization, rank-greedy merges — under the trained-and-frozen
-    // bpeByteMerges table. Same native-expression execution as
-    // q_bpe_encode; real token-budget accounting.
-    "q_bpe_bytes" -> ((s, dir) => {
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.text.Bpe.encodeBytes(concat(lit(" "), col("text")),
-            bpeByteMerges).as("__t"))
-        .select(col("doc_id"), size(col("__t")).cast("long").as("n_tokens"),
-          array_join(col("__t"), " ").as("tokens_str"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 byte-level BPE LOSSLESSNESS (r10): decode(encode(text)) must
-    // reproduce the input byte-for-byte under ANY merge table — the
-    // property that makes byte-level tokenizers usable as storage/
-    // transport codecs. The oracle is the rawest possible: the text
-    // itself.
-    "q_bpe_roundtrip" -> ((s, dir) => {
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.text.Bpe.decodeBytes(
-            graft.text.Bpe.encodeBytes(concat(lit(" "), col("text")),
-              bpeByteMerges)).as("restored"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 per-source TOKEN BUDGET (r10): the composition real mixture
-    // planning runs — byte-level BPE token totals per source under the
-    // frozen merge table (what "1T tokens of web, 50B of books" is
-    // counted in). One narrow codegen'd encode pass + one grouped
-    // partial agg; no shuffle carries text.
-    "q_token_budget" -> ((s, dir) => {
-      Tables.load(s, dir, "documents")
-        .select(col("source"),
-          size(graft.text.Bpe.encodeBytes(concat(lit(" "), col("text")),
-            bpeByteMerges)).cast("long").as("__n"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("__n").as("bpe_tokens"))
-        .orderBy("source")
-    }),
-
-    // §2.6 per-key rolling/lag feature engineering (r9): last-5 rolling
-    // count/sum/mean + previous value + event gap per user — ONE key
-    // exchange + ONE sort feeds every window (Catalyst collapses
-    // same-spec windows). DECIMAL-exact sums; gap stays in integer us.
-    "q_rolling_features" -> ((s, dir) => {
-      graft.operators.TimeSeries.rollingFeatures(
-          Tables.load(s, dir, "events")
-            .select(col("event_id"), col("user_id"), col("ts"), col("value")),
-          Seq("user_id"), "ts", "value", lastN = 5, tieCol = "event_id")
-        .select(col("event_id"), col("user_id"), col("roll_n"), col("roll_sum"),
-          col("roll_mean"), col("prev_value"),
-          expr("gap DIV 1000").as("gap_us"))
-        .orderBy("event_id")
-    }),
-
-    // §2.6 CCNet bucketing, SCALE-PATH form on the hash path (r10): cut
-    // on FIXED precomputed thresholds (CCNet's production shape — no
-    // global sort, no sketch, one codegen'd comparison per row). Cuts
-    // frozen near this corpus's terciles; oracle derived from the proven
-    // q_lm_likelihood oracle plus the same CASE.
-    "q_ccnet_threshold" -> ((s, dir) => {
-      // r22: fanOut reverted; see q_lm_likelihood
-      TextAnalysis.likelihoodBucketsByThreshold(
-          Tables.load(s, dir, "documents"), "doc_id", "text",
-          fixedCuts = Some(Array(34000.0, 35000.0)))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 CCNet head/middle/tail corpus split (r9): ntile over the
-    // LM-likelihood score — the bucketing CCNet trains/downweights on.
-    // (likelihoodBucketsByThreshold is the no-global-sort scale path;
-    // the exact ntile variant is what an oracle can replay.)
-    "q_ccnet_buckets" -> ((s, dir) => {
-      // r22: fanOut reverted; see q_lm_likelihood
-      TextAnalysis.likelihoodBuckets(Tables.load(s, dir, "documents"),
-          "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 within-doc repeated-line removal (r9): pages synthesized the
-    // same way as q_c4_filter (' a ' -> newline), then every repeated
-    // line inside a page is dropped keeping the first occurrence — pure
-    // higher-order functions, no shuffle.
-    "q_line_dedup" -> ((s, dir) => {
-      val pages = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), expr("replace(text, ' a ', '\n')").as("page"))
-      TextAnalysis.dedupLinesWithinDoc(pages, "doc_id", "page")
-        .select("doc_id", "cleaned")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 per-group z-score anomaly flags (r9): DECIMAL-exact moments
-    // broadcast back onto the rows; |z| > 3 marks outliers. Events never
-    // shuffle — only the 5-row stats table moves.
-    "q_anomaly" -> ((s, dir) => {
-      graft.operators.TimeSeries.zScores(
-          Tables.load(s, dir, "events").select("event_id", "event_type", "value"),
-          Seq("event_type"), "value")
-        .select("event_id", "event_type", "value", "z", "is_anomaly")
-        .orderBy("event_id")
-    }),
-
-    // §2.6 inverted index (r10): term -> sorted posting list + df, the
-    // sparse-retrieval primitive; maxDf caps stopword-grade terms the
-    // way the dedup bucket cap does. Postings surface as a CSV string
-    // for the hash compare.
-    "q_inverted_index" -> ((s, dir) => {
-      TextAnalysis.invertedIndex(Tables.load(s, dir, "documents"),
-          "doc_id", "text", maxDf = 400)
-        .select(col("term"), col("df"),
-          array_join(col("postings").cast("array<string>"), ",").as("postings"))
-        .orderBy("term")
-    }),
-
-    // §2.6 inverted index, RELATIVE stopword cap (r13; VERDICT r12 #2):
-    // df <= ceil(4N/5) computed in-plan from a broadcast 1-row corpus
-    // count, so the semantic keep set is scale-invariant — the absolute
-    // maxDf=400 above degenerates to an empty index at 10x corpus, while
-    // this cap keeps the same terms at every sf (and the oracle replays
-    // the exact-integer threshold at whatever N it sees).
-    "q_inverted_index_rel" -> ((s, dir) => {
-      TextAnalysis.invertedIndexRel(Tables.load(s, dir, "documents"),
-          "doc_id", "text", capNum = 4, capDen = 5)
-        .select(col("term"), col("df"),
-          array_join(col("postings").cast("array<string>"), ",").as("postings"))
-        .orderBy("term")
-    }),
-
-    // §2.6 BM25 ranking (r12; VERDICT r11 #3): the scoring layer over the
-    // inverted index — integer-scaled idf x rational-arithmetic tf
-    // saturation (k1=1.2, b=0.75), so DuckDB recomputes the identical
-    // longs. Query terms fixed; all docs surface (score 0 when unmatched).
-    "q_bm25" -> ((s, dir) => {
-      TextAnalysis.bm25Rank(Tables.load(s, dir, "documents"),
-          "doc_id", "text", Seq("spark", "join", "window"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 per-source length distribution (r10): exact linear-interp
-    // percentiles of the whitespace token count — the curator's length
-    // profile per source. Spark `percentile` and DuckDB `quantile_cont`
-    // share the (n-1)*p linear interpolation on doubles. Scale note:
-    // exact percentile state is proportional to the DISTINCT value
-    // domain per group — fine for token counts (small bounded ints,
-    // partial-agg-combinable); for unbounded continuous columns use
-    // approx_percentile at corpus scale.
-    "q_length_percentiles" -> ((s, dir) => {
-      Tables.load(s, dir, "documents")
-        .select(col("source"),
-          size(split(trim(col("text")), "\\s+")).cast("double").as("n"))
-        .groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          expr("percentile(n, 0.25)").as("p25"),
-          expr("percentile(n, 0.5)").as("p50"),
-          expr("percentile(n, 0.75)").as("p75"),
-          max("n").as("mx"))
-        .orderBy("source")
-    }),
-
-    // §2.6 per-(source, lang) corpus composition stats
-    "q_source_stats" -> ((s, dir) => {
-      TextAnalysis.groupedStats(Tables.load(s, dir, "documents"),
-        Seq("source", "lang"), "text", "n_chars")
-        .orderBy("source", "lang")
-    }),
-
-    // §2.6 data-mixture re-weighting: per-source deterministic fractions
-    "q_mixture_sample" -> ((s, dir) => {
-      Sampling.stratifiedSample(Tables.load(s, dir, "documents"), "doc_id", "source",
-        Map("src0" -> 0.1, "src1" -> 0.5, "src2" -> 0.25), defaultFraction = 1.0,
-        salt = "mix")
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-
-    // §2.6 exact-k stratified sampling (r10): 10 docs per source
-    // by (md5, key) rank — the quota form of mixture re-weighting;
-    // deterministic, monotone in k, WindowGroupLimit keeps the shuffle at
-    // O(k * groups * tasks).
-    "q_sample_k_per_group" -> ((s, dir) => {
-      Sampling.sampleKPerGroup(Tables.load(s, dir, "documents"),
-          "doc_id", "source", k = 10, salt = "quota")
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-
-    // §2.6 quality-threshold corpus filter (the downstream use of the
-    // quality features: keep docs passing all gates)
-    "q_quality_filter" -> ((s, dir) => {
-      TextAnalysis.qualityFeatures(Tables.load(s, dir, "documents"), "text")
-        .where(col("n_words") >= 20 and col("distinct_ratio") >= 0.4 and
-          col("punct_ratio") <= 0.1)
-        .select("doc_id", "n_words", "distinct_ratio")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 per-source top-k sampling by a quality signal (window top-k —
-    // the standard curriculum/sampling op over a sharded corpus)
-    "q_topk_per_source" -> ((s, dir) => {
-      val scored = TextAnalysis.qualityFeatures(Tables.load(s, dir, "documents"), "text")
-      scored.withColumn("rnk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("source")
-            .orderBy(col("n_words").desc, col("doc_id"))))
-        .where(col("rnk") <= 5)
-        .select("source", "rnk", "doc_id", "n_words")
-        .orderBy("source", "rnk")
-    }),
-
-    // §2.6 document fingerprint (normalized md5-16)
-    "q_text_fingerprint" -> ((s, dir) => {
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.5 watermark-windowed aggregation (same plan batch/streaming;
-    // streaming path spec-tested with MemoryStream)
-    "q_window_agg" -> ((s, dir) => {
-      val events = graft.streaming.StreamingOps.withEventTime(
-        Tables.load(s, dir, "events"), "ts", "et")
-      graft.streaming.StreamingOps.windowedAgg(events, "et", "1 hour",
-          Seq(count(lit(1)).as("n"), dsum("value").as("sum_value")),
-          keys = Seq("event_type"))
-        .select(col("window.start").cast("long").as("bucket_start"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy("bucket_start", "event_type")
-    }),
-
-    // §2.5 SLIDING-window aggregation (r19; VERDICT r18 #2: the
-    // slide_duration leg of StreamingOps.windowedAgg was implemented and
-    // config-exposed but had zero query/spec coverage). One-hour windows
-    // sliding every 30 minutes: window/slide = 2, so every event lands in
-    // exactly TWO windows — the oracle replays that as each event's
-    // 30-minute bucket unioned with offsets {0s, 1800s} (pure integer
-    // epoch arithmetic; Spark's window() aligns to the epoch, so the
-    // bucket boundaries coincide by construction). Same dsum DECIMAL
-    // contract as q_window_agg.
-    "q_window_sliding" -> ((s, dir) => {
-      val events = graft.streaming.StreamingOps.withEventTime(
-        Tables.load(s, dir, "events"), "ts", "et")
-      graft.streaming.StreamingOps.windowedAgg(events, "et", "1 hour",
-          Seq(count(lit(1)).as("n"), dsum("value").as("sum_value")),
-          keys = Seq("event_type"), slideDuration = Some("30 minutes"))
-        .select(col("window.start").cast("long").as("bucket_start"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy("bucket_start", "event_type")
-    }),
-
-    // §5 time-windowed scan (r9; VERDICT r8 #8): a fixed 10-day window
-    // over events with the predicate on the NORMALIZED epoch-nanos ts.
-    // The TsPushdown optimizer rule rewrites the filter back onto the raw
-    // timestamp attribute so the parquet scan prunes row groups
-    // (plan-asserted in TsPushdownSpec); without it the normalization
-    // projection forces a full read of every row group.
-    "q_ts_prune" -> ((s, dir) => {
-      def ns(iso: String) = java.time.Instant.parse(iso).getEpochSecond * 1000000000L
-      Tables.load(s, dir, "events")
-        .where(col("ts") >= lit(ns("2024-01-10T00:00:00Z")) &&
-          col("ts") < lit(ns("2024-01-20T00:00:00Z")))
-        .groupBy("event_type")
-        .agg(count(lit(1)).cast("long").as("n"), dsum("value").as("sum_value"))
-        .orderBy("event_type")
-    }),
-
-    // §2.6 as-of (point-in-time) join (r9): latest purchase at-or-before
-    // each click per user — union-tag algorithm (ONE key shuffle + ONE
-    // in-partition sort over |L|+|R|, no per-key cartesian; AsOfJoin
-    // scaladoc). Micros both sides (exact under every ts encoding).
-    "q_asof_join" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      graft.operators.AsOfJoin.asOf(clicks, purchases, Seq("user_id"), "ts", "ts")
-        .select(col("event_id"), col("user_id"), expr("ts DIV 1000").as("ts_us"),
-          col("value"), expr("r_ts DIV 1000").as("purchase_ts_us"),
-          col("r_value").as("purchase_value"))
-        .orderBy("event_id")
-    }),
-
-    // §2.6 as-of join with a match tolerance (r9): purchases older than
-    // 1 hour before the click don't count — the stale-feature guard.
-    "q_asof_tolerance" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      graft.operators.AsOfJoin.asOf(clicks, purchases, Seq("user_id"), "ts", "ts",
-          tolerance = Some(3600L * 1000000000L))
-        .select(col("event_id"), col("user_id"), expr("ts DIV 1000").as("ts_us"),
-          expr("r_ts DIV 1000").as("purchase_ts_us"),
-          col("r_value").as("purchase_value"))
-        .orderBy("event_id")
-    }),
-
-    // §2.6 KEYLESS binned range join (r9): every event within ±5 min of
-    // any high-severity error — no equality key, the shape Spark would
-    // otherwise execute as a cartesian. RangeJoin bins the time axis
-    // (pure-long arithmetic, exact at epoch-nano scale) and equi-joins on
-    // the bin id; plan-asserted BNLJ/cartesian-free in RangeJoinSpec.
-    "q_range_join" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      val points = ev.select(col("event_id"), col("ts"), col("event_type"))
-      val anchors = ev.where(col("event_type") === "error" && col("value") > 250)
-        .select(col("event_id").as("anchor_id"),
-          (col("ts") - lit(300000000000L)).as("w_start"),
-          (col("ts") + lit(300000000000L)).as("w_end"))
-      graft.operators.RangeJoin.pointInInterval(points, anchors,
-          "ts", "w_start", "w_end", binWidth = 600000000000L)
-        .select(col("event_id"), col("i_anchor_id").as("anchor_id"),
-          col("event_type"), expr("ts DIV 1000").as("ts_us"))
-        .orderBy("event_id", "anchor_id")
-    }),
-
-    // §2.6 keyless interval-overlap join (r9): error windows that overlap
-    // signup windows. Canonical-bin rule emits each overlapping pair
-    // exactly once — no distinct pass after the binned equi-join.
-    // (value > 100, not 250: the tighter filter left ZERO qualifying
-    // windows at sf0.001/sf0.01, making the driver check vacuous — r9
-    // ADVICE. > 100 yields overlaps at every scale factor.)
-    "q_range_overlap" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      def win(tpe: String, idCol: String, sCol: String, eCol: String) =
-        ev.where(col("event_type") === tpe && col("value") > 100)
-          .select(col("event_id").as(idCol), col("ts").as(sCol),
-            (col("ts") + lit(600000000000L)).as(eCol))
-      graft.operators.RangeJoin.intervalOverlap(
-          win("error", "err_id", "e_start", "e_end"),
-          win("signup", "sig_id", "s_start", "s_end"),
-          "e_start", "e_end", "s_start", "s_end", binWidth = 600000000000L)
-        .select(col("err_id"), col("r_sig_id").as("sig_id"))
-        .orderBy("err_id", "sig_id")
-    }),
-
-    // §2.6 SCD2 dimension history (r9): the CDC changelog's other half —
-    // applyCdcBatch answers "state now", Scd2 answers "state at any ord".
-    // Synthesized nation changelog (insert, update evens, delete fifths,
-    // reinsert tenths); versions carry half-open validity intervals. ONE
-    // key exchange + lead window, no self-join (plan-asserted in spec).
-    "q_scd2" -> ((s, dir) => {
-      val kind = graft.operators.RowKindOps.RowKindCol
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
-      val ch = nation.withColumn(kind, lit("+I")).withColumn("ord", lit(1L))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(2)) === 0)
-          .withColumn("n_name", concat(col("n_name"), lit("_v2")))
-          .withColumn(kind, lit("+U")).withColumn("ord", lit(2L)))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(5)) === 0)
-          .withColumn("n_name", lit(null).cast("string"))
-          .withColumn(kind, lit("-D")).withColumn("ord", lit(3L)))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(10)) === 0)
-          .withColumn("n_name", concat(col("n_name"), lit("_v3")))
-          .withColumn(kind, lit("+I")).withColumn("ord", lit(4L)))
-      graft.operators.Scd2.fromChangelog(ch, Seq("n_nationkey"), "ord")
-        .orderBy("n_nationkey", "valid_from")
-    }),
-
-    // §2.5+§2.4 streaming CDC -> SCD2 composition (r12; VERDICT r11 #4):
-    // the warehouse-history story end to end — captureStream (hybrid
-    // snapshot->changelog as ONE streaming job) delivers into a parquet
-    // changelog accumulator via foreachBatch, and Scd2.fromChangelog
-    // turns the accumulated stream into versioned dimension history.
-    // CL_SEQ values are runtime-assigned, so the validity ord is
-    // normalized to a per-key VERSION index for the closed-form oracle;
-    // interval semantics (open/close/delete) stay fully on the hash path.
-    "q_stream_scd2" -> ((s, dir) => withStreamPartitions(s) {
-      import graft.sources.CdcCapture
-      val url = "jdbc:derby:memory:graftscd2s;create=true"
-      val conn = java.sql.DriverManager.getConnection(url)
-      val st = conn.createStatement()
-      CdcCapture.reset(url, "NATION_SCD") // triggers->CL->table, rep-safe
-      st.executeUpdate(
-        """CREATE TABLE NATION_SCD (N_NATIONKEY BIGINT NOT NULL PRIMARY KEY,
-          |N_NAME VARCHAR(64), N_REGIONKEY BIGINT)""".stripMargin)
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("N_NATIONKEY"),
-          col("n_name").as("N_NAME"), col("n_regionkey").cast("long").as("N_REGIONKEY"))
-      Jdbc.write(nation, Jdbc.JdbcSinkConfig(url, "NATION_SCD", mode = "append"))
-      CdcCapture.installChangelog(url, "NATION_SCD")
-      val base = s"/tmp/graft_fixtures/streamscd2_${dir.replaceAll("\\W", "_")}"
-      rmTree(new java.io.File(base))
-      val acc = s"$base/changelog"
-      val nSnap = nation.count()
-      val nChanges = 2 * nation.where(col("N_REGIONKEY") === 0).count() +
-        nation.where(col("N_NATIONKEY") >= 20).count() + 3
-      // poll the accumulator; a read racing an in-flight append counts 0.
-      // r21 note: faster polling was tried (150->50 ms sleep, 10->25
-      // polls/s) and REVERTED — more capture polls mean more micro-batches,
-      // each appending another (often empty) parquet part that accCount()
-      // then re-lists, so the reps ASCENDED instead of dropping (measured:
-      // medians 1.94-2.0 -> 2.1-3.8). The original cadence is the floor.
-      def accCount(): Long =
-        try s.read.parquet(acc).count() catch { case _: Throwable => 0L }
-      def waitFor(target: Long): Unit = {
-        val deadline = System.currentTimeMillis() + 60000
-        while (accCount() < target && System.currentTimeMillis() < deadline)
-          Thread.sleep(150)
-      }
-      val q = CdcCapture.captureStream(s, url, "NATION_SCD", "N_NATIONKEY",
-        chunkSize = 8, statePath = s"$base/state.properties",
-        onBatch = (df, _) => df.write.mode("append").parquet(acc),
-        pollsPerSecond = 10.0)
-      try {
-        waitFor(nSnap) // snapshot delivered before the mutation script runs
-        st.executeUpdate("UPDATE NATION_SCD SET N_NAME = N_NAME || '_x' WHERE N_REGIONKEY = 0")
-        st.executeUpdate("DELETE FROM NATION_SCD WHERE N_NATIONKEY >= 20")
-        st.executeUpdate(
-          "INSERT INTO NATION_SCD VALUES (100, 'new_100', 0), (101, 'new_101', 1), (102, 'new_102', 2)")
-        waitFor(nSnap + nChanges)
-      } finally { q.stop(); st.close(); conn.close() }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("N_NATIONKEY").orderBy("valid_from")
-      graft.operators.Scd2.fromChangelog(
-          s.read.parquet(acc), Seq("N_NATIONKEY"), "CL_SEQ")
-        .select(col("N_NATIONKEY").as("n_nationkey"), col("N_NAME").as("n_name"),
-          col("N_REGIONKEY").as("n_regionkey"),
-          row_number().over(w).cast("long").as("version"), col("is_current"))
-        .orderBy("n_nationkey", "version")
-    }),
-
-    // §2.5 stream-stream interval join through the REAL readStream path
-    // (r9): clicks and purchases read as two file streams, watermarked
-    // both sides, joined on user within [0, 15 min) event-time — the
-    // append-mode stream-stream join whose state is bounded by the
-    // watermark. Oracle is the equivalent DuckDB inequality join.
-    "q_stream_interval_join" -> ((s, dir) => withStreamPartitions(s) {
-      val src = streamFixture(s, dir)
-      val clicks = src.where(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_micros(col("ts_us")).as("c_et"))
-      val buys = src.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("buy_id"),
-          timestamp_micros(col("ts_us")).as("b_et"), col("value"))
-      val name = s"stream_ivj_${dir.replaceAll("\\W", "_")}"
-      val q = graft.streaming.StreamingOps.intervalJoin(clicks, buys,
-          Seq("user_id"), "c_et", "b_et", "0 seconds", "15 minutes",
-          watermark = "2 hours")
-        .select("user_id", "click_id", "buy_id", "value")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", scratchCheckpoint(name)).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name).orderBy("user_id", "click_id", "buy_id")
-    }),
-
-    // §2.5 STREAMING as-of join (r10; VERDICT r9 #7): clicks enriched
-    // with the latest purchase per user through the REAL readStream path
-    // — watermarked union-tag into flatMapGroupsWithState, lefts buffered
-    // until the watermark passes them (late dimension updates land
-    // correctly; spec'd), one far-future sentinel advances the watermark
-    // so every key flushes via event-time timeout. Same semantics and
-    // SAME ORACLE as the batch q_asof_join.
-    "q_stream_asof" -> ((s, dir) => withStreamPartitions(s) {
-      val base = s"/tmp/graft_fixtures/asof_${dir.replaceAll("\\W", "_")}"
-      ensureFixture(s"$base/a", sourceToken(dir, "events")) {
-        val ev = Tables.load(s, dir, "events")
-          .where(col("event_type").isin("click", "purchase"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), expr("ts DIV 1000").as("ts_us"))
-        val sentinel = ev.agg((max("ts_us") + lit(7200L * 1000000L)).as("ts_us"))
-          .select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-            lit("purchase").as("event_type"), lit(0.0).as("value"), col("ts_us"))
-        ev.unionByName(sentinel).coalesce(1)
-          .write.mode("overwrite").json(s"$base/a")
-      }
-      val src = s.readStream.schema(new StructType()
-          .add("event_id", LongType).add("user_id", LongType)
-          .add("event_type", StringType).add("value", DoubleType)
-          .add("ts_us", LongType))
-        .json(s"$base/a")
-        .withColumn("tsNs", col("ts_us") * 1000)
-      val tagged = graft.streaming.StreamingOps.asOfStreamInput(
-        src.where(col("event_type") === "click"),
-        src.where(col("event_type") === "purchase"),
-        "user_id", "tsNs", "event_id", "value")
-      val name = s"stream_asof_${dir.replaceAll("\\W", "_")}"
-      val q = graft.streaming.StreamingOps.asOfStream(tagged, "10 seconds")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", scratchCheckpoint(name)).outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        // the final flush rides the no-data batch that event-time timeouts
-        // trigger after the sentinel advances the watermark — wait for it
-        val expected = Tables.load(s, dir, "events")
-          .where(col("event_type") === "click").count()
-        val deadline = System.currentTimeMillis() + 60000
-        while (s.table(name).count() < expected &&
-            System.currentTimeMillis() < deadline) {
-          // r22: 200 ms poll restored (the r21 50 ms poll reproduced the
-          // q_stream_scd2 failure mode — each poll round re-drives
-          // processAllAvailable, whose no-data micro-batches add state-store
-          // commits; driver mins went 1.61->2.85 s with it)
-          Thread.sleep(200); q.processAllAvailable()
-        }
-      } finally q.stop()
-      s.table(name)
-        .select(col("id").as("event_id"), col("key").as("user_id"),
-          expr("tsNs DIV 1000").as("ts_us"), col("value"),
-          expr("rTsNs DIV 1000").as("purchase_ts_us"),
-          col("rValue").as("purchase_value"))
-        .orderBy("event_id")
-    }),
-
-    // §2.4 CDC capture through the DataSource V2 STREAMING source (r9):
-    // readStream.format("graft-cdc") — Spark's own micro-batch engine
-    // drives the hybrid snapshot→changelog handoff (first batch = chunk
-    // splits + window, offset = CL_SEQ head in Spark's WAL). The stream
-    // delivers into a memory sink; the merged replay is oracle-checked
-    // against the same closed-form end state as q_cdc_capture.
-    "q_cdc_v2" -> ((s, dir) => withStreamPartitions(s) {
-      val url = "jdbc:derby:memory:graftcapv2;create=true"
-      val conn = java.sql.DriverManager.getConnection(url)
-      val st = conn.createStatement()
-      graft.sources.CdcCapture.reset(url, "NATION_V2") // triggers->CL->table, rep-safe
-      st.executeUpdate(
-        """CREATE TABLE NATION_V2 (N_NATIONKEY BIGINT NOT NULL PRIMARY KEY,
-          |N_NAME VARCHAR(64), N_REGIONKEY BIGINT)""".stripMargin)
-      Jdbc.write(Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("N_NATIONKEY"),
-          col("n_name").as("N_NAME"), col("n_regionkey").cast("long").as("N_REGIONKEY")),
-        Jdbc.JdbcSinkConfig(url, "NATION_V2", mode = "append"))
-      val name = s"cdc_v2_${dir.replaceAll("\\W", "_")}"
-      val q = s.readStream.format("graft-cdc")
-        .option("url", url).option("table", "NATION_V2")
-        .option("pk", "N_NATIONKEY").option("chunkSize", "8").load()
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", scratchCheckpoint(name)).outputMode("append").start()
-      try {
-        q.processAllAvailable() // snapshot batch
-        st.executeUpdate("UPDATE NATION_V2 SET N_NAME = N_NAME || '_x' WHERE N_REGIONKEY = 0")
-        st.executeUpdate("DELETE FROM NATION_V2 WHERE N_NATIONKEY >= 20")
-        st.executeUpdate(
-          "INSERT INTO NATION_V2 VALUES (100, 'new_100', 0), (101, 'new_101', 1), (102, 'new_102', 2)")
-        q.processAllAvailable() // changelog batch
-      } finally { q.stop(); st.close(); conn.close() }
-      val all = s.table(name)
-      val changes = s.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(
-          all.where(col("CL_SEQ") > 0).collect(): _*)), all.schema)
-      graft.streaming.StreamingOps.applyCdcBatch(
-          all.where(col("CL_SEQ") === 0).select("N_NATIONKEY", "N_NAME", "N_REGIONKEY"),
-          changes, Seq("N_NATIONKEY"), "CL_SEQ")
-        .select(col("N_NATIONKEY").as("n_nationkey"), col("N_NAME").as("n_name"),
-          col("N_REGIONKEY").as("n_regionkey"))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.5 sessionization through the REAL readStream path (r9):
-    // flatMapGroupsWithState with explicit per-key state — the custom-
-    // state API the batch/SQL form can't exercise. A far-future sentinel
-    // event per user closes every real session (append mode only emits
-    // CLOSED sessions; the sentinels' own sessions stay open and are
-    // never emitted), so the output equals batch sessionization of the
-    // base events — same oracle family as q_sessionize.
-    "q_stream_sessionize" -> ((s, dir) => withStreamPartitions(s) {
-      import s.implicits._
-      val base = s"/tmp/graft_fixtures/sess_${dir.replaceAll("\\W", "_")}"
-      ensureFixture(s"$base/a", sourceToken(dir, "events")) {
-        val ev = Tables.load(s, dir, "events")
-          .select(col("user_id"), expr("ts DIV 1000").as("ts_us"))
-        val sentinels = ev.groupBy("user_id")
-          .agg((max("ts_us") + lit(7200L * 1000000L)).as("ts_us"))
-        ev.unionByName(sentinels).coalesce(1)
-          .write.mode("overwrite").json(s"$base/a")
-      }
-      val stream = s.readStream
-        .schema(new StructType().add("user_id", LongType).add("ts_us", LongType))
-        .json(s"$base/a")
-        .selectExpr("user_id AS user", "ts_us * 1000 AS tsNs")
-        .as[graft.streaming.SessionEvent]
-      val name = s"stream_sess_${dir.replaceAll("\\W", "_")}"
-      val q = graft.streaming.StreamingOps
-        .sessionizeStream(stream, gapNs = 1800L * 1000000000L)
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", scratchCheckpoint(name)).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name)
-        .select(col("user").as("user_id"), col("nEvents").cast("long").as("n_events"),
-          expr("startNs DIV 1000").as("start_us"), expr("endNs DIV 1000").as("end_us"))
-        .orderBy("user_id", "start_us")
-    }),
-
-    // §2.5 sessionization, batch/SQL form (streaming form spec-tested).
-    // Output bounds in micros: DuckDB's epoch_ns on TIMESTAMP_NS values
-    // loses sub-microsecond digits, so both sides emit micros.
-    "q_sessionize" -> ((s, dir) => {
-      graft.streaming.StreamingOps.sessionizeBatch(
-          Tables.load(s, dir, "events"), "user_id", "ts", gapNs = 1800L * 1000000000L)
-        .select(col("user_id"), col("session_idx"), col("n_events"),
-          expr("start_ns DIV 1000").as("start_us"),
-          expr("end_ns DIV 1000").as("end_us"))
-        .orderBy("user_id", "session_idx")
-    }),
-
-    // §2.4 csv file source round-trip (testdata -> csv -> FileSources)
-    "q_src_csv" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/csv_${dir.replaceAll("\\W", "_")}"
-      Sinks.writeFile(Tables.load(s, dir, "nation"),
-        Sinks.FileSinkConfig(tmp, "csv", options = Map("header" -> "true")))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "csv",
-          Some(StructType(Seq(StructField("n_nationkey", IntegerType),
-            StructField("n_name", StringType), StructField("n_regionkey", IntegerType)))),
-          Map("header" -> "true")))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 json file source round-trip
-    "q_src_json" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/json_${dir.replaceAll("\\W", "_")}"
-      Sinks.writeFile(Tables.load(s, dir, "region"), Sinks.FileSinkConfig(tmp, "json"))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "json",
-          Some(StructType(Seq(StructField("r_regionkey", IntegerType),
-            StructField("r_name", StringType))))))
-        .orderBy("r_regionkey")
-    }),
-
-    // §2.4 xml round-trip (Spark 4 native XML datasource; reference
-    // connector-file xml file_format_type)
-    "q_src_xml" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/xml_${dir.replaceAll("\\W", "_")}"
-      Sinks.writeFile(Tables.load(s, dir, "nation"),
-        Sinks.FileSinkConfig(tmp, "xml"))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "xml",
-          Some(StructType(Seq(StructField("n_nationkey", IntegerType),
-            StructField("n_name", StringType), StructField("n_regionkey", IntegerType))))))
-        .select("n_nationkey", "n_name", "n_regionkey")
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 binary whole-file round-trip (reference BINARY file-copy
-    // format): emit each document's text as a file via the binary sink,
-    // re-ingest with the binary source, digest-compare against the table
-    "q_src_binary" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/bin_${dir.replaceAll("\\W", "_")}"
-      // every-50th doc: file-per-row emission is the format's contract, but
-      // benching 5k one-row files only measures filesystem metadata calls
-      val files = Tables.load(s, dir, "documents")
-        .where(col("doc_id") % 50 === 0)
-        .select(encode(col("text"), "UTF-8").as("data"),
-          concat(lit("doc_"), col("doc_id"), lit(".txt")).as("relativePath"))
-      Sinks.writeFile(files, Sinks.FileSinkConfig(tmp, "binary"))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "binary",
-          options = Map("path_glob" -> "*.txt")))
-        .select(col("relativePath"),
-          length(col("data")).cast("long").as("n_bytes"),
-          md5(col("data")).as("digest"))
-        .orderBy("relativePath")
-    }),
-
-    // §2.4 delimited multi-column text round-trip (reference
-    // seatunnel-format-text field_delimiter files; one codegen'd
-    // split/try_cast projection over spark.read.text)
-    "q_src_text_delim" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/textd_${dir.replaceAll("\\W", "_")}"
-      // the read delimiter is a REGEX (reference String.split semantics),
-      // hence the escaped pipe; writes unwrap it to the literal char
-      Sinks.writeFile(
-        Tables.load(s, dir, "supplier").select("s_suppkey", "s_name", "s_acctbal"),
-        Sinks.FileSinkConfig(tmp, "text", options = Map("field_delimiter" -> "\\|")))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "text",
-          Some(StructType(Seq(StructField("s_suppkey", LongType),
-            StructField("s_name", StringType), StructField("s_acctbal", DoubleType)))),
-          Map("field_delimiter" -> "\\|")))
-        .orderBy("s_suppkey")
-    }),
-
-    // §2.4 avro file round-trip (graft.formats.AvroFormat — Avro Java API
-    // over Hadoop input/output formats; splittable container files)
-    "q_src_avro" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/avro_${dir.replaceAll("\\W", "_")}"
-      Sinks.writeFile(
-        Tables.load(s, dir, "orders")
-          .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"),
-        Sinks.FileSinkConfig(tmp, "avro"))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "avro"))
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.4 orc file round-trip (Spark-native ORC datasource via
-    // FileSources/Sinks; splittable columnar files, predicate pushdown)
-    "q_src_orc" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/orc_${dir.replaceAll("\\W", "_")}"
-      Sinks.writeFile(
-        Tables.load(s, dir, "orders")
-          .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"),
-        Sinks.FileSinkConfig(tmp, "orc"))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "orc"))
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.4 excel (.xlsx) round-trip (graft.formats.ExcelFormat — OOXML
-    // over JDK zip + StAX; per-file parallel read)
-    "q_src_excel" -> ((s, dir) => {
-      val tmp = s"/tmp/graft_src/excel_${dir.replaceAll("\\W", "_")}"
-      Sinks.writeFile(Tables.load(s, dir, "region"), Sinks.FileSinkConfig(tmp, "excel"))
-      FileSources.read(s, FileSources.FileSourceConfig(tmp, "excel",
-          Some(StructType(Seq(StructField("r_regionkey", IntegerType),
-            StructField("r_name", StringType))))))
-        .orderBy("r_regionkey")
-    }),
-
-    // §2.4 protobuf format round-trip (graft.formats.ProtobufFormat —
-    // .proto-text descriptor + wire codec; golden-vector spec-tested)
-    "q_fmt_protobuf" -> ((s, dir) => {
-      val proto =
-        """syntax = "proto3";
-          |message Order {
-          |  int64 o_orderkey = 1;
-          |  string o_orderstatus = 2;
-          |  double o_totalprice = 3;
-          |}""".stripMargin
-      val orders = Tables.load(s, dir, "orders", fanOut = true)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val encoded = ProtobufFormat.encode(orders, None, proto, "Order")
-      ProtobufFormat.decode(encoded, "proto", proto, "Order", "rec")
-        .select("rec.o_orderkey", "rec.o_orderstatus", "rec.o_totalprice")
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.4 JDBC round-trip through embedded Derby (parquet -> jdbc sink
-    // -> jdbc source; predicate pushdown + partitioned reads spec-tested)
-    "q_src_jdbc" -> ((s, dir) => {
-      val url = s"jdbc:derby:memory:graft_${dir.replaceAll("\\W", "_")};create=true"
-      Jdbc.write(
-        Tables.load(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey"),
-        Jdbc.JdbcSinkConfig(url, table = "nation_rt", mode = "overwrite"))
-      Jdbc.read(s, Jdbc.JdbcSourceConfig(url, table = Some("nation_rt")))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 FakeSource generator. string/boolean generators are
-    // closed-form (name_<id>, id%2==0) so DuckDB recomputes them
-    // including the full-column digest; the murmur-mixed int column is
-    // pinned by golden aggregates (row count and seed are fixed, so the
-    // values are scale-independent). Moved from rows-only in r7.
-    "q_fake_source" -> ((s, dir) => {
-      FakeSource.generate(s,
-        Seq("name" -> "string", "num" -> "int", "flag" -> "boolean"), 1000)
-        .agg(
-          count(lit(1)).cast("long").as("n"),
-          md5(concat_ws(",", sort_array(collect_list(col("name"))))).as("name_digest"),
-          sum(when(col("flag"), 1).otherwise(0)).cast("long").as("n_flag_true"),
-          (min(col("num")) >= 0 && max(col("num")) < 1000000).as("num_in_range"),
-          sum(col("num")).cast("long").as("num_sum"),
-          min(col("num")).cast("long").as("num_min"),
-          max(col("num")).cast("long").as("num_max"))
-    }),
-
-    // §2.4 debezium-json CDC envelope -> row-kind-tagged change rows.
-    // Envelope synthesized deterministically from orders, then parsed back.
-    "q_cdc_debezium" -> ((s, dir) => {
-      val env = Tables.load(s, dir, "orders", fanOut = true).select(to_json(struct(
-        when(col("o_orderstatus") === "O",
-            struct(col("o_orderkey"), (col("o_totalprice") - 1.0d).as("o_totalprice")))
-          .when(col("o_orderstatus") === "P", struct(col("o_orderkey"), col("o_totalprice")))
-          .as("before"),
-        when(col("o_orderstatus").isin("F", "O"),
-            struct(col("o_orderkey"), col("o_totalprice")))
-          .as("after"),
-        when(col("o_orderstatus") === "F", "c")
-          .when(col("o_orderstatus") === "O", "u").otherwise("d").as("op")
-      )).as("json"))
-      CdcFormats.parseDebezium(env, "json",
-          new StructType().add("o_orderkey", LongType).add("o_totalprice", DoubleType))
-        .orderBy("o_orderkey", "__row_kind")
-    }),
-
-    // §2.4 maxwell-json CDC envelope (single-row, old-patch pre-image)
-    "q_cdc_maxwell" -> ((s, dir) => {
-      val env = Tables.load(s, dir, "orders", fanOut = true).select(to_json(struct(
-        struct(col("o_orderkey"), col("o_totalprice")).as("data"),
-        when(col("o_orderstatus") === "O",
-          struct(lit(null).cast(LongType).as("o_orderkey"),
-            (col("o_totalprice") - 1.0d).as("o_totalprice"))).as("old"),
-        when(col("o_orderstatus") === "F", "insert")
-          .when(col("o_orderstatus") === "O", "update").otherwise("delete").as("type")
-      )).as("json"))
-      CdcFormats.parseMaxwell(env, "json",
-          new StructType().add("o_orderkey", LongType).add("o_totalprice", DoubleType))
-        .orderBy("o_orderkey", "__row_kind")
-    }),
-
-    // §2.4 ogg-json CDC envelope
-    "q_cdc_ogg" -> ((s, dir) => {
-      val env = Tables.load(s, dir, "orders", fanOut = true).select(to_json(struct(
-        when(col("o_orderstatus").isin("O", "P"),
-          struct(col("o_orderkey"),
-            when(col("o_orderstatus") === "O", col("o_totalprice") - 1.0d)
-              .otherwise(col("o_totalprice")).as("o_totalprice"))).as("before"),
-        when(col("o_orderstatus").isin("F", "O"),
-          struct(col("o_orderkey"), col("o_totalprice"))).as("after"),
-        when(col("o_orderstatus") === "F", "I")
-          .when(col("o_orderstatus") === "O", "U").otherwise("D").as("op_type")
-      )).as("json"))
-      CdcFormats.parseOgg(env, "json",
-          new StructType().add("o_orderkey", LongType).add("o_totalprice", DoubleType))
-        .orderBy("o_orderkey", "__row_kind")
-    }),
-
-    // §2.4 CDC write-side serialization (r10; VERDICT r9 #3): all four
-    // envelope serializers on the hash path. A synthesized nation
-    // changelog (+I all, -U/+U evens, -D fifths) runs through
-    // toDebezium/Canal/Maxwell/OggJson; the oracle recomputes every
-    // envelope STRING in DuckDB by plain concatenation — valid because
-    // to_json emits struct fields in declaration order, omits null
-    // fields (so insert ops carry only "after"), and the data values
-    // (long key, letters-and-underscore name) need no JSON escaping.
-    "q_cdc_write" -> ((s, dir) => {
-      val kind = graft.operators.RowKindOps.RowKindCol
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"))
-      val ch = nation.withColumn(kind, lit("+I"))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(2)) === 0)
-          .withColumn(kind, lit("-U")))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(2)) === 0)
-          .withColumn("n_name", concat(col("n_name"), lit("_v2")))
-          .withColumn(kind, lit("+U")))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(5)) === 0)
-          .withColumn(kind, lit("-D")))
-      Seq("debezium" -> CdcFormats.toDebeziumJson(ch),
-          "canal"    -> CdcFormats.toCanalJson(ch),
-          "maxwell"  -> CdcFormats.toMaxwellJson(ch),
-          "ogg"      -> CdcFormats.toOggJson(ch))
-        .map { case (f, d) => d.select(lit(f).as("fmt"), col("json")) }
-        .reduce(_ unionByName _)
-        .orderBy("fmt", "json")
-    }),
-
-    // §2.4 CDC SOURCE CAPTURE end-to-end (r8; VERDICT r7 gap #1): seed an
-    // embedded-Derby table from nation, install the trigger changelog, take
-    // a chunked watermark-bracketed snapshot, apply a scripted mutation
-    // batch (update/delete/insert), stream the changes from the snapshot
-    // offset, and merge. The oracle reconstructs the same final state from
-    // nation directly — so the split plan, watermark arithmetic, trigger
-    // row-kinds, offset handoff, and CDC merge are all on the hash path.
-    "q_cdc_capture" -> ((s, dir) => {
-      import graft.sources.CdcCapture
-      val url = "jdbc:derby:memory:graftcap;create=true"
-      val conn = java.sql.DriverManager.getConnection(url)
-      val st = conn.createStatement()
-      CdcCapture.reset(url, "NATION_CAP") // triggers->CL->table, rep-safe
-      st.executeUpdate(
-        """CREATE TABLE NATION_CAP (N_NATIONKEY BIGINT NOT NULL PRIMARY KEY,
-          |N_NAME VARCHAR(64), N_REGIONKEY BIGINT)""".stripMargin)
-      Jdbc.write(Tables.load(s, dir, "nation") // distributed seed, no collect
-        .select(col("n_nationkey").cast("long").as("N_NATIONKEY"),
-          col("n_name").as("N_NAME"), col("n_regionkey").cast("long").as("N_REGIONKEY")),
-        Jdbc.JdbcSinkConfig(url, "NATION_CAP", mode = "append"))
-      CdcCapture.installChangelog(url, "NATION_CAP")
-      val (snap, st0) = CdcCapture.snapshot(s, url, "NATION_CAP", "N_NATIONKEY", chunkSize = 8)
-      st.executeUpdate("UPDATE NATION_CAP SET N_NAME = N_NAME || '_x' WHERE N_REGIONKEY = 0")
-      st.executeUpdate("DELETE FROM NATION_CAP WHERE N_NATIONKEY >= 20")
-      st.executeUpdate(
-        "INSERT INTO NATION_CAP VALUES (100, 'new_100', 0), (101, 'new_101', 1), (102, 'new_102', 2)")
-      st.close(); conn.close()
-      val (changes, _) = CdcCapture.changesSince(s, url, st0)
-      graft.streaming.StreamingOps.applyCdcBatch(snap, changes, Seq("N_NATIONKEY"), "CL_SEQ")
-        .select(col("N_NATIONKEY").as("n_nationkey"), col("N_NAME").as("n_name"),
-          col("N_REGIONKEY").as("n_regionkey"))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 DEAD-LETTER read (r8; VERDICT r7 #8): a JSON-lines fixture is
-    // synthesized from orders with every 13th row corrupted (truncated
-    // mid-object); readWithDeadLetter routes the broken lines to a DLQ
-    // text sink and returns the clean rows. The oracle recomputes the
-    // clean set directly from orders, so the PERMISSIVE-parse routing is
-    // on the hash path; DLQ payload fidelity stays spec-asserted
-    // (FileSourcesSpec).
-    "q_deadletter" -> ((s, dir) => {
-      val base = s"/tmp/graft_fixtures/dlq_${dir.replaceAll("\\W", "_")}"
-      ensureFixture(s"$base/src", sourceToken(dir, "orders")) {
-        // single-file feed (r22: the r21 multi-file layout driver-regressed
-        // 0.67x at 32 cores; text files are splittable, so one file costs
-        // nothing at scale — see streamFixture)
-        Tables.load(s, dir, "orders").select(
-          when(pmod(col("o_orderkey"), lit(13)) === 0,
-              concat(lit("{\"o_orderkey\": "), col("o_orderkey").cast("string"),
-                lit(", \"o_cust"))) // truncated mid-key: unparseable
-            .otherwise(to_json(struct(col("o_orderkey"), col("o_custkey"),
-              col("o_orderstatus"))))
-            .as("value"))
-          .write.mode("overwrite").text(s"$base/src")
-      }
-      // the DLQ writes in append mode (a real pipeline accumulates); the
-      // fixture run starts clean so reps don't re-append the same payloads
-      rmTree(new java.io.File(s"$base/dlq"))
-      val schema = new StructType().add("o_orderkey", LongType)
-        .add("o_custkey", LongType).add("o_orderstatus", StringType)
-      FileSources.readWithDeadLetter(s,
-          FileSources.FileSourceConfig(s"$base/src", "json", Some(schema)),
-          dlqPath = s"$base/dlq")
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.4 SMALL-FILE COMPACTION (r8; VERDICT r7 #8): lineitem is written
-    // as 64 tiny parquet files, compacted into 1 (10 GiB target), and the
-    // post-swap directory is re-read and aggregated; file counts before and
-    // after ride along as columns so the oracle pins both the data digest
-    // and the 64 -> 1 layout change. Compaction mutates the directory, so
-    // each run gets a fresh WORK copy — but the 64-file build itself is a
-    // cached pristine fixture, and the per-run reset is a file copy: the
-    // bench measures Sinks.compact, not repartition(64).write (r9, VERDICT
-    // r8 #7; the r8 timing was ~90% fixture rebuild).
-    "q_compact" -> ((s, dir) => {
-      val base = s"/tmp/graft_fixtures/compact_${dir.replaceAll("\\W", "_")}"
-      ensureFixture(s"$base/pristine", sourceToken(dir, "lineitem")) {
-        Tables.load(s, dir, "lineitem")
-          .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-          .repartition(64)
-          .write.mode("overwrite").parquet(s"$base/pristine")
-      }
-      val path = s"$base/work"
-      rmTree(new java.io.File(path))
-      new java.io.File(path).mkdirs()
-      new java.io.File(s"$base/pristine").listFiles().foreach { f =>
-        if (f.isFile && !f.getName.startsWith("_"))
-          java.nio.file.Files.copy(f.toPath,
-            java.nio.file.Paths.get(path, f.getName))
-      }
-      val (before, after) =
-        Sinks.compact(s, path, "parquet", targetFileBytes = 10L * 1024 * 1024 * 1024)
-      s.read.parquet(path)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).cast("long").as("n"),
-          dsum("l_quantity").as("sum_qty"),
-          sum(col("l_orderkey")).cast("long").as("sum_okey"))
-        .withColumn("files_before", lit(before).cast("long"))
-        .withColumn("files_after", lit(after).cast("long"))
-        .orderBy("l_returnflag")
-    }),
-
-    // §2.4 ARCHIVE source (r8): a zip of two pipe-delimited members is
-    // built once from nation; Archives expands members to lines on the
-    // executors (whole-file binary scan -> per-file decompress), and the
-    // parsed rows are oracle-checked against the source table. Graduates
-    // the archive family from spec-only to hash-exact.
-    "q_src_archive" -> ((s, dir) => {
-      val base = s"/tmp/graft_fixtures/arch_${dir.replaceAll("\\W", "_")}"
-      val zipPath = s"$base/nation.zip"
-      // ensureFixture writes its token only after the zip closes, so a
-      // crash mid-build can never leave a trusted truncated archive
-      ensureFixture(base, sourceToken(dir, "nation")) {
-        val rows = Tables.load(s, dir, "nation").orderBy("n_nationkey")
-          .select(concat_ws("|", col("n_nationkey"), col("n_name"), col("n_regionkey")))
-          .collect().map(_.getString(0)) // 25 rows: bounded fixture build
-        val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(zipPath))
-        Seq("part1.csv" -> rows.take(13), "part2.csv" -> rows.drop(13)).foreach {
-          case (name, ls) =>
-            zos.putNextEntry(new java.util.zip.ZipEntry(name))
-            zos.write(ls.mkString("\n").getBytes("UTF-8")); zos.closeEntry()
-        }
-        zos.close()
-      }
-      graft.sources.Archives.lines(s, zipPath, "zip")
-        .select(split(col("value"), "\\|").as("f"))
-        .select(col("f")(0).cast("int").as("n_nationkey"),
-          col("f")(1).as("n_name"), col("f")(2).cast("int").as("n_regionkey"))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 HTTP source (r8): an embedded localhost server serves nation as
-    // a JSON array; HttpSource fetches, splits rows, and schema-parses.
-    // The fetch is eager (driver-side, bounded payload by the reference's
-    // own contract), so the server stops before the plan runs.
-    "q_src_http" -> ((s, dir) => {
-      val rows = Tables.load(s, dir, "nation").orderBy("n_nationkey").collect()
-      val json = rows.map(r =>
-        s"""{"n_nationkey":${r.getInt(0)},"n_name":"${r.getString(1)}","n_regionkey":${r.getInt(2)}}""")
-        .mkString("[", ",", "]")
-      val server = com.sun.net.httpserver.HttpServer.create(
-        new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-      server.createContext("/nation", (ex: com.sun.net.httpserver.HttpExchange) => {
-        val body = json.getBytes("UTF-8")
-        ex.getResponseHeaders.add("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body); ex.close()
-      })
-      server.start()
-      try graft.sources.HttpSource.read(s, graft.sources.HttpSource.Config(
-          s"http://127.0.0.1:${server.getAddress.getPort}/nation",
-          schema = Some(new StructType().add("n_nationkey", IntegerType)
-            .add("n_name", StringType).add("n_regionkey", IntegerType))))
-        .orderBy("n_nationkey")
-      finally server.stop(0)
-    }),
-
-    // §2.4 Socket source + sink (r11; reference connector-socket): an
-    // embedded line server serves nation pipe-delimited; SocketSource
-    // .readBounded consumes it (single-client bounded contract), the
-    // parsed rows go back out through SocketSink as JSON lines to an
-    // embedded collector, and the collected lines are schema-parsed —
-    // the full source→sink round trip sits on the hash path. Both
-    // servers stop before the returned plan runs (bounded fixture,
-    // q_src_http treatment).
-    "q_src_socket" -> ((s, dir) => {
-      import s.implicits._
-      val rows = Tables.load(s, dir, "nation").orderBy("n_nationkey").collect()
-      val lines = rows.map(r => s"${r.getInt(0)}|${r.getString(1)}|${r.getInt(2)}")
-      // line server: replays the fixture once per accepted connection
-      val src = new java.net.ServerSocket(0, 50,
-        java.net.InetAddress.getByName("127.0.0.1"))
-      val srcThread = new Thread(() =>
-        try while (true) {
-          val c = src.accept()
-          val out = new java.io.OutputStreamWriter(c.getOutputStream, "UTF-8")
-          lines.foreach(l => out.write(l + "\n"))
-          out.flush(); c.close()
-        } catch { case _: java.io.IOException => () })
-      srcThread.setDaemon(true); srcThread.start()
-      // collector: accepts the sink's per-partition connections
-      val snk = new java.net.ServerSocket(0, 50,
-        java.net.InetAddress.getByName("127.0.0.1"))
-      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val snkThread = new Thread(() =>
-        try while (true) {
-          val c = snk.accept()
-          new Thread(() => {
-            val r = new java.io.BufferedReader(
-              new java.io.InputStreamReader(c.getInputStream, "UTF-8"))
-            var line = r.readLine()
-            while (line != null) { got.add(line); line = r.readLine() }
-            c.close()
-          }).start()
-        } catch { case _: java.io.IOException => () })
-      snkThread.setDaemon(true); snkThread.start()
-      try {
-        val read = graft.sources.SocketSource.readBounded(s, "127.0.0.1", src.getLocalPort)
-          .select(split(col("value"), "\\|").as("f"))
-          .select(col("f")(0).cast("int").as("n_nationkey"),
-            col("f")(1).as("n_name"), col("f")(2).cast("int").as("n_regionkey"))
-        graft.sinks.SocketSink.write(read,
-          graft.sinks.SocketSink.Config("127.0.0.1", snk.getLocalPort))
-        val deadline = System.nanoTime() + 30e9.toLong
-        while (got.size < rows.length && System.nanoTime() < deadline) Thread.sleep(20)
-        val schema = new StructType().add("n_nationkey", IntegerType)
-          .add("n_name", StringType).add("n_regionkey", IntegerType)
-        s.createDataset(got.toArray(Array.empty[String]).toSeq).toDF("j")
-          .select(from_json(col("j"), schema).as("r"))
-          .select(col("r.n_nationkey"), col("r.n_name"), col("r.n_regionkey"))
-          .orderBy("n_nationkey")
-      } finally { src.close(); snk.close() }
-    }),
-
-    // §2.4 JDBC primary-key upsert (r8): seed Derby from nation, upsert a
-    // change batch (region-1 renames + 3 fresh keys) TWICE — the
-    // double-apply puts idempotency on the hash path — and read back.
-    "q_jdbc_upsert" -> ((s, dir) => {
-      import s.implicits._
-      val url = "jdbc:derby:memory:graftup;create=true"
-      val conn = java.sql.DriverManager.getConnection(url)
-      val st = conn.createStatement()
-      try { st.executeUpdate("DROP TABLE NATION_UP"); () }
-      catch { case _: java.sql.SQLException => () } // absent on first run
-      st.executeUpdate(
-        """CREATE TABLE NATION_UP (N_NATIONKEY BIGINT NOT NULL PRIMARY KEY,
-          |N_NAME VARCHAR(64), N_REGIONKEY BIGINT)""".stripMargin)
-      st.close(); conn.close()
-      val nation = Tables.load(s, dir, "nation").select(
-        col("n_nationkey").cast("long").as("N_NATIONKEY"),
-        col("n_name").as("N_NAME"), col("n_regionkey").cast("long").as("N_REGIONKEY"))
-      val cfg = Jdbc.JdbcSinkConfig(url, "NATION_UP", mode = "append")
-      Jdbc.write(nation, cfg)
-      val changes = nation.where(col("N_REGIONKEY") === 1)
-        .select(col("N_NATIONKEY"), concat(col("N_NAME"), lit("_v2")).as("N_NAME"),
-          col("N_REGIONKEY"))
-        .unionAll(Seq((200L, "new_200", 1L), (201L, "new_201", 2L), (202L, "new_202", 3L))
-          .toDF("N_NATIONKEY", "N_NAME", "N_REGIONKEY"))
-      Jdbc.upsert(changes, cfg, Seq("N_NATIONKEY"))
-      Jdbc.upsert(changes, cfg, Seq("N_NATIONKEY")) // must be a no-op
-      Jdbc.read(s, Jdbc.JdbcSourceConfig(url, table = Some("NATION_UP")))
-        .select(col("N_NATIONKEY").as("n_nationkey"), col("N_NAME").as("n_name"),
-          col("N_REGIONKEY").as("n_regionkey"))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 FILE SINK round-trip (r9; graduates the file-sink row from
-    // spec-only): nation written as partitioned csv through Sinks.writeFile
-    // (quoting, header, partition dirs), read back through FileSources with
-    // an explicit schema — the oracle pins byte-exact fidelity of the full
-    // write→read cycle including the partition-column reconstruction.
-    "q_file_sink" -> ((s, dir) => {
-      val base = s"/tmp/graft_fixtures/filesink_${dir.replaceAll("\\W", "_")}"
-      rmTree(new java.io.File(base))
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-      Sinks.writeFile(nation, Sinks.FileSinkConfig(base, "csv",
-        partitionBy = Seq("n_regionkey"), options = Map("header" -> "true")))
-      val schema = new StructType().add("n_nationkey", LongType)
-        .add("n_name", StringType).add("n_regionkey", LongType)
-      FileSources.read(s, FileSources.FileSourceConfig(base, "csv", Some(schema),
-          options = Map("header" -> "true")))
-        .select("n_nationkey", "n_name", "n_regionkey")
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 SAVE MODES on the hash path (r9; graduates the 13-case spec
-    // matrix row): CREATE_SCHEMA_WHEN_NOT_EXIST+DROP_DATA writes nation,
-    // a second DROP_DATA write proves the drop (no doubling), then
-    // APPEND_DATA doubles it — the oracle pins exactly 2 copies, which
-    // only holds if both the drop and the append semantics are right.
-    "q_save_modes" -> ((s, dir) => {
-      import Sinks.{FileSinkConfig}
-      import graft.sinks.SaveModes.{DataSaveMode, SchemaSaveMode}
-      val base = s"/tmp/graft_fixtures/savemode_${dir.replaceAll("\\W", "_")}"
-      rmTree(new java.io.File(base))
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-      val cfg = FileSinkConfig(base, "parquet")
-      Sinks.writeFileWithSaveMode(nation, cfg,
-        SchemaSaveMode.CreateWhenNotExist, DataSaveMode.DropData)
-      Sinks.writeFileWithSaveMode(nation, cfg,
-        SchemaSaveMode.CreateWhenNotExist, DataSaveMode.DropData)
-      Sinks.writeFileWithSaveMode(nation, cfg,
-        SchemaSaveMode.ErrorWhenNotExist, DataSaveMode.AppendData)
-      s.read.parquet(base)
-        .groupBy("n_nationkey", "n_name", "n_regionkey")
-        .agg(count(lit(1)).cast("long").as("copies"))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.4 ASSERT sink as data (r9; graduates the assert row): the same
-    // single-pass rule aggregation as the throwing sink, surfaced as one
-    // row per rule — DuckDB recomputes every measured statistic and pass
-    // verdict independently.
-    "q_assert_sink" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-      Sinks.assertReport(li, Seq(
-          Sinks.RowCountBetween(1L, 10000000000L),
-          Sinks.NotNull("l_orderkey"),
-          Sinks.MinValue("l_quantity", 0.0),
-          Sinks.MaxValue("l_quantity", 60.0),
-          Sinks.MinLength("l_returnflag", 1),
-          Sinks.MaxLength("l_returnflag", 1),
-          Sinks.MatchesRegex("l_returnflag", "^[ANR]$"),
-          Sinks.FieldType("l_quantity", "double")))
-        .orderBy("rule_no")
-    }),
-
-    // §2.5 CDC APPLY on the hash path (r9; graduates the versioned-store
-    // row's merge semantics): a deterministic +I/+U/-D changelog derived
-    // from nation merges into the nation snapshot; latest-change-per-key
-    // wins (the -D at ord 3 beats the +U at ord 2 for keys divisible by
-    // 15), and the oracle recomputes the final state in closed form.
-    "q_cdc_apply" -> ((s, dir) => {
-      val kind = graft.operators.RowKindOps.RowKindCol
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-      val inserts = nation.where(col("n_regionkey") === 0)
-        .select((col("n_nationkey") + 1000L).as("n_nationkey"),
-          concat(col("n_name"), lit("_new")).as("n_name"), col("n_regionkey"))
-        .withColumn(kind, lit("+I")).withColumn("__ord", lit(1L))
-      val updates = nation.where(pmod(col("n_nationkey"), lit(3)) === 0)
-        .select(col("n_nationkey"), upper(col("n_name")).as("n_name"),
-          col("n_regionkey"))
-        .withColumn(kind, lit("+U")).withColumn("__ord", lit(2L))
-      val deletes = nation.where(pmod(col("n_nationkey"), lit(5)) === 0)
-        .withColumn(kind, lit("-D")).withColumn("__ord", lit(3L))
-      val changes = inserts.unionByName(updates).unionByName(deletes)
-      graft.streaming.StreamingOps.applyCdcBatch(
-          nation, changes, Seq("n_nationkey"), "__ord")
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.5 CDC SCHEMA EVOLUTION on the hash path (r9; graduates the
-    // evolveSchema half of the CDC-apply row): the changelog carries a
-    // column the snapshot lacks; the merge must add it (nulls on
-    // untouched rows, values on updated ones) — closed-form oracle.
-    "q_cdc_evolve" -> ((s, dir) => {
-      val kind = graft.operators.RowKindOps.RowKindCol
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-      val updates = nation.where(pmod(col("n_nationkey"), lit(2)) === 0)
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
-          (col("n_nationkey") * 100L).as("n_population"))
-        .withColumn(kind, lit("+U")).withColumn("__ord", lit(1L))
-      graft.streaming.StreamingOps.applyCdcBatch(
-          nation, updates, Seq("n_nationkey"), "__ord", evolveSchema = true)
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.3 ZetaUDF SPI on the hash path (r9; graduates the SPI row): a
-    // user GraftUdf registered through the SPI runs inside a projection;
-    // the oracle recomputes the same function in SQL. (The SPI exists for
-    // logic SQL can't express — this query deliberately picks an
-    // SQL-expressible body so DuckDB can check the dispatch end to end.)
-    "q_zeta_udf" -> ((s, dir) => {
-      graft.functions.GraftUdf.register(s, new graft.functions.GraftUdf {
-        override def name = "graft_rev_len"
-        override def resultType: org.apache.spark.sql.types.DataType = StringType
-        override def eval(args: Seq[Any]): Any = args.head match {
-          case null => null
-          case v => val str = v.toString; str.reverse + "_" + str.length
-        }
-      })
-      Tables.load(s, dir, "customer")
-        .select(col("c_custkey"), call_udf("graft_rev_len", col("c_name")).as("rev_name"))
-        .orderBy("c_custkey")
-    }),
-
-    // §2.5 STREAMING dedup through the real readStream path (r8): the
-    // events table lands as json once, then an overlapping subset is
-    // appended, so the stream sees every event_id%3==0 row twice;
-    // dropDuplicatesWithinWatermark must restore the exact distinct set,
-    // oracle-checked against the source table.
-    "q_stream_dedup" -> ((s, dir) => withStreamPartitions(s) {
-      val base = s"/tmp/graft_fixtures/stream_${dir.replaceAll("\\W", "_")}"
-      val ev = Tables.load(s, dir, "events").select(col("event_id"), col("user_id"),
-        col("event_type"), col("value"), expr("ts DIV 1000").as("ts_us"))
-      ensureFixture(s"$base/dup", sourceToken(dir, "events")) {
-        // single-file feeds (r22: the r21 multi-file layout driver-regressed
-        // the streaming family at 32 cores; json-lines is splittable — see
-        // streamFixture)
-        ev.write.mode("overwrite").json(s"$base/dup")
-        ev.where(pmod(col("event_id"), lit(3)) === 0).write.mode("append").json(s"$base/dup")
-      }
-      val schema = new StructType().add("event_id", LongType).add("user_id", LongType)
-        .add("event_type", StringType).add("value", DoubleType).add("ts_us", LongType)
-      val stream = s.readStream.schema(schema).json(s"$base/dup")
-        .withColumn("et", timestamp_micros(col("ts_us")))
-      val name = s"stream_dedup_${dir.replaceAll("\\W", "_")}"
-      val q = graft.streaming.StreamingOps.streamingDedup(stream, Seq("event_id"), "et")
-        .select("event_id", "user_id", "event_type", "value", "ts_us")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", scratchCheckpoint(name)).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name).orderBy("event_id")
-    }),
-
-    // §2.5 watermark-windowed aggregation through the real readStream path
-    // (r8; q_window_agg is the batch plan of the same operator): file
-    // stream -> event-time windows -> complete-mode memory sink, identical
-    // oracle to the batch side.
-    "q_stream_window" -> ((s, dir) => withStreamPartitions(s) {
-      val stream = streamFixture(s, dir)
-        .withColumn("et", timestamp_micros(col("ts_us")))
-      val name = s"stream_window_${dir.replaceAll("\\W", "_")}"
-      val q = graft.streaming.StreamingOps.windowedAgg(stream, "et", "1 hour",
-          Seq(count(lit(1)).as("n"), dsum("value").as("sum_value")),
-          keys = Seq("event_type"))
-        .select(col("window.start").cast("long").as("bucket_start"),
-          col("event_type"), col("n"), col("sum_value"))
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", scratchCheckpoint(name)).outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name).orderBy("bucket_start", "event_type")
-    }),
-
-    // §2.4+§2.5 the streaming config RUNNER itself on the hash path
-    // (VERDICT r16 #5; the 19 verbatim reference STREAMING configs in
-    // StreamingConfigSpec cover config fidelity — this puts the runner's
-    // end-to-end RESULT under the DuckDB oracle, the q_stream_window
-    // treatment applied to the config layer): events fixture as a JSON
-    // file stream -> STREAMING HOCON job (LocalFile source, Sql
-    // transform, parquet LocalFile sink + explicit checkpoint) executed
-    // by Pipeline.runStreaming -> sink directory read back, total-ordered
-    // and hash-compared against the equivalent batch SQL over `events`.
-    // Stateless transform by design: the stateful legs (windows, dedup,
-    // sessionize, as-of) are hash-covered at the operator layer; the
-    // component under test here is the config runner's source->transform
-    // ->sink plumbing, so the query keeps exact pass-through values the
-    // oracle reproduces bit-for-bit.
-    "q_pipeline_streaming" -> ((s, dir) => {
-      streamFixture(s, dir) // materializes the shared JSON event feed
-      val tag = dir.replaceAll("\\W", "_")
-      val feed = s"/tmp/graft_fixtures/stream_$tag/a_v2"
-      val sink = s"/tmp/graft_fixtures/pipeline_streaming_$tag/out"
-      rmTree(new java.io.File(sink)) // fresh sink: stale part files would double rows
-      val conf =
-        s"""env { job.mode = "STREAMING" }
-           |source {
-           |  LocalFile {
-           |    plugin_output = "ev"
-           |    path = "$feed"
-           |    file_format_type = "json"
-           |    schema = "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, ts_us BIGINT"
-           |  }
-           |}
-           |transform {
-           |  Sql {
-           |    plugin_input = "ev"
-           |    plugin_output = "clicks"
-           |    query = "select event_id, user_id, upper(event_type) as etype, value from ev where event_type = 'click'"
-           |  }
-           |}
-           |sink {
-           |  LocalFile {
-           |    plugin_input = "clicks"
-           |    path = "$sink"
-           |    file_format_type = "parquet"
-           |    checkpoint = "${scratchCheckpoint(s"pipeline_streaming_$tag")}"
-           |  }
-           |}
-           |""".stripMargin
-      val queries = graft.api.Pipeline.runStreaming(s, graft.api.Pipeline.parseHocon(conf))
-      try queries.foreach(_.processAllAvailable()) finally queries.foreach(_.stop())
-      s.read.parquet(sink).orderBy("event_id")
-    }),
-
-    // §2.4+§2.5 STATEFUL streaming config job on the hash path (VERDICT
-    // r17 #4; q_pipeline_streaming covers the runner's stateless
-    // source->transform->sink plumbing — this proves the same runner's
-    // trigger/checkpoint plumbing composes with STATE): events JSON file
-    // stream -> WindowAgg config transform (watermarked 1-hour event-time
-    // windows, the config-level wiring of StreamingOps.windowedAgg) ->
-    // Sql projection -> append-mode parquet LocalFile sink + checkpoint,
-    // read back and hash-compared against the q_window_agg batch oracle.
-    // Append-mode file sinks only emit a window once the watermark passes
-    // its end, so the feed carries a far-future sentinel row (the
-    // q_stream_socket trick): it advances the watermark past every real
-    // window while its own window never closes — the sink holds exactly
-    // the real windows (watermark = maxEventTime - delay is always below
-    // the sentinel's own window end, so it can never emit). Do NOT add a
-    // defensive `where event_type <> 'zzz_sentinel'` to the downstream
-    // Sql: event_type is a grouping column, so Catalyst pushes that
-    // filter below the aggregate AND below the EventTimeWatermark node —
-    // the sentinel then never updates the event-time stats and the last
-    // real window never flushes (measured: exactly the final hour bucket
-    // missing at sf0.01). The flush may land in a later no-data
-    // micro-batch than processAllAvailable waits for, so the drain polls
-    // the sink's row count to the batch-computed expected window count.
-    "q_pipeline_streaming_windowed" -> ((s, dir) => withStreamPartitions(s) {
-      val tag = dir.replaceAll("\\W", "_")
-      val base = s"/tmp/graft_fixtures/pipeline_stream_win_$tag"
-      ensureFixture(s"$base/feed", sourceToken(dir, "events")) {
-        val ev = Tables.load(s, dir, "events")
-          .select(col("event_type"), col("value"), expr("ts DIV 1000").as("ts_us"))
-        ev.write.mode("overwrite").json(s"$base/feed")
-        val maxUs = ev.agg(max("ts_us")).collect()(0).getLong(0)
-        val sentinel = s"""{"event_type":"zzz_sentinel","value":0.0,"ts_us":${maxUs + 365L * 86400L * 1000000L}}"""
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$base/feed/zz_sentinel.json"),
-          (sentinel + "\n").getBytes("UTF-8"))
-        ()
-      }
-      val sink = s"$base/out"
-      rmTree(new java.io.File(sink)) // fresh sink: stale part files would double rows
-      val conf =
-        s"""env { job.mode = "STREAMING" }
-           |source {
-           |  LocalFile {
-           |    plugin_output = "ev"
-           |    path = "$base/feed"
-           |    file_format_type = "json"
-           |    schema = "event_type STRING, value DOUBLE, ts_us BIGINT"
-           |  }
-           |}
-           |transform {
-           |  WindowAgg {
-           |    plugin_input = "ev"
-           |    plugin_output = "agg"
-           |    event_time_field = "et"
-           |    event_time_micros_field = "ts_us"
-           |    window_duration = "1 hour"
-           |    watermark_delay = "10 minutes"
-           |    group_by = ["event_type"]
-           |    aggregates = ["count(1) as n", "cast(sum(cast(value as decimal(18,2))) as double) as sum_value"]
-           |  }
-           |  Sql {
-           |    plugin_input = "agg"
-           |    plugin_output = "flat"
-           |    query = "select cast(window_start as bigint) as bucket_start, event_type, n, sum_value from agg"
-           |  }
-           |}
-           |sink {
-           |  LocalFile {
-           |    plugin_input = "flat"
-           |    path = "$sink"
-           |    file_format_type = "parquet"
-           |    checkpoint = "${scratchCheckpoint(s"pipeline_stream_win_$tag")}"
-           |  }
-           |}
-           |""".stripMargin
-      // expected flushed windows, computed on the batch side: one row per
-      // (hour bucket, event_type) over the real events (sentinel excluded
-      // by construction — its window never closes)
-      val expected = Tables.load(s, dir, "events")
-        .select((col("ts") - pmod(col("ts"), lit(3600L * 1000000000L))).as("b"),
-          col("event_type")).distinct().count()
-      val queries = graft.api.Pipeline.runStreaming(s, graft.api.Pipeline.parseHocon(conf))
-      def sinkRows(): Long =
-        try s.read.parquet(sink).count() catch { case _: Throwable => 0L }
-      try {
-        queries.foreach(_.processAllAvailable())
-        val deadline = System.currentTimeMillis() + 120000
-        while (sinkRows() < expected && System.currentTimeMillis() < deadline) {
-          queries.foreach(_.processAllAvailable()); Thread.sleep(100)
-        }
-        // A deadline expiry surfaces downstream only as a hash DIFF, which
-        // reads as a correctness failure — distinguish the flush-timeout
-        // case loudly (ADVICE r18). No "failed:" in the message: the sf10
-        // gate treats "[verify] ... failed:" lines as fatal, and this is a
-        // diagnosis aid, not a verdict.
-        val got = sinkRows()
-        if (got < expected)
-          System.err.println(s"[verify] q_pipeline_streaming_windowed drain " +
-            s"timed out: got $got of expected $expected rows — a flush " +
-            "timeout, not a value mismatch")
-      } finally queries.foreach(_.stop())
-      s.read.parquet(sink).orderBy("bucket_start", "event_type")
-    }),
-
-    // §2.4+§2.5 SOCKET STREAMING leg on the hash path (r12; VERDICT r11
-    // #6; q_src_socket covers the bounded round trip): live socket server
-    // -> SocketSource.readStream (Spark's socket micro-batch source) ->
-    // watermarked hourly windowed agg in APPEND mode (a far-future
-    // sentinel line advances the watermark past every real window) ->
-    // SocketSink.writeStream (foreachBatch JSON lines) -> embedded
-    // collector, parsed back and checked against the q_window_agg batch
-    // oracle. The sentinel's own window never closes, so the emitted set
-    // equals the batch aggregation exactly.
-    "q_stream_socket" -> ((s, dir) => withStreamPartitions(s) {
-      import s.implicits._
-      // The feed is PRE-AGGREGATED to one partial per (hour bucket,
-      // event_type): count as long, value sum kept in DECIMAL(18,2) so
-      // the string round-trip and the stream-side re-aggregation stay
-      // exact in any order (the dsum contract). This is the production
-      // shape — raw events don't ride an unbounded text socket at scale,
-      // compacted partials do — and it makes the bench row measure the
-      // socket+window+sink path instead of 100k lines of driver I/O
-      // (r13, VERDICT r12 #7). It also removes the sf1-sweep exclusion:
-      // Spark's socket source buffers the whole feed in driver memory,
-      // which OOM'd with raw rows at 10x but is ~36k partial lines there.
-      // The multi-row-per-window merge path is covered by q_stream_window
-      // (file stream, raw rows); here each window merges its partials.
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_type"), col("value"), expr("ts DIV 1000").as("ts_us"))
-      val partials = ev
-        .groupBy((col("ts_us") - pmod(col("ts_us"), lit(3600000000L))).as("bucket_us"),
-          col("event_type"))
-        .agg(count(lit(1)).as("pn"),
-          sum(col("value").cast(DecimalType(18, 2))).as("psv"))
-      val lines = partials.select(concat_ws("|", col("event_type"),
-          col("pn").cast("string"), col("psv").cast("string"),
-          col("bucket_us").cast("string")).as("l"))
-        .as[String].collect()
-      // concat_ws silently SKIPS null fields, so a null psv would shift
-      // every later field left instead of failing — assert the 4-field
-      // frame on the already-collected lines before anything rides the
-      // socket (free: driver-side, no extra job).
-      require(lines.forall(_.split("\\|", -1).length == 4),
-        "q_stream_socket: a partial line has fewer than 4 fields — " +
-          "a null pn/psv sum would silently shift the frame")
-      val maxUs = partials.agg(max("bucket_us")).collect()(0).getLong(0)
-      val sentinel = s"zzz_sentinel|0|0.00|${maxUs + 365L * 86400L * 1000000L}"
-      val expected = lines.length.toLong // one partial line per (bucket, type) group
-      val src = new java.net.ServerSocket(0, 50,
-        java.net.InetAddress.getByName("127.0.0.1"))
-      val sent = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val srcThread = new Thread(() =>
-        try while (true) {
-          val c = src.accept()
-          val out = new java.io.OutputStreamWriter(c.getOutputStream, "UTF-8")
-          (lines :+ sentinel).foreach(l => out.write(l + "\n"))
-          out.flush() // connection stays open: EOF must not race the drain
-          sent.set(true)
-        } catch { case _: java.io.IOException => () })
-      srcThread.setDaemon(true); srcThread.start()
-      val snk = new java.net.ServerSocket(0, 50,
-        java.net.InetAddress.getByName("127.0.0.1"))
-      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val snkThread = new Thread(() =>
-        try while (true) {
-          val c = snk.accept()
-          new Thread(() => {
-            val r = new java.io.BufferedReader(
-              new java.io.InputStreamReader(c.getInputStream, "UTF-8"))
-            var line = r.readLine()
-            while (line != null) { got.add(line); line = r.readLine() }
-            c.close()
-          }).start()
-        } catch { case _: java.io.IOException => () })
-      snkThread.setDaemon(true); snkThread.start()
-      val name = s"stream_socket_${dir.replaceAll("\\W", "_")}"
-      try {
-        val parsed = graft.sources.SocketSource
-          .readStream(s, "127.0.0.1", src.getLocalPort)
-          .select(split(col("value"), "\\|").as("f"))
-          // psv is written as sum(decimal(18,2)) = DECIMAL(28,2); parsing
-          // at the narrower (18,2) would null out any partial sum past
-          // 10^16 under non-ANSI cast and silently corrupt sum_value.
-          .select(col("f")(0).as("event_type"), col("f")(1).cast("long").as("pn"),
-            col("f")(2).cast(DecimalType(28, 2)).as("psv"),
-            timestamp_micros(col("f")(3).cast("long")).as("et"))
-        // summing exact-decimal partials is order-invariant, so the
-        // merged result is bit-identical to the raw-row batch oracle
-        val agg = graft.streaming.StreamingOps.windowedAgg(parsed, "et", "1 hour",
-            Seq(sum(col("pn")).as("n"),
-              sum(col("psv")).cast("double").as("sum_value")),
-            keys = Seq("event_type"))
-          .select(col("window.start").cast("long").as("bucket_start"),
-            col("event_type"), col("n"), col("sum_value"))
-        val q = graft.sinks.SocketSink.writeStream(agg,
-          graft.sinks.SocketSink.Config("127.0.0.1", snk.getLocalPort),
-          checkpoint = scratchCheckpoint(name), queryName = name)
-        try {
-          // Let the server finish flushing the whole payload before the
-          // first drain: Spark's socket reader thread ingests the stream
-          // into its batch buffer continuously, so draining mid-send
-          // carves the input into dozens of tiny micro-batches, each
-          // paying the full windowed-state open/commit cost (measured
-          // 10-13 s/rep at sf0.1; ~2 s once the drain starts after the
-          // flush). The poll loop below stays as the correctness path.
-          // The flush wait gets its OWN deadline (20 s): sharing the drain
-          // budget meant a connect stall consumed all 60 s and the drain
-          // loop ran zero iterations, silently returning partial results.
-          val flushDeadline = System.currentTimeMillis() + 20000
-          while (!sent.get && System.currentTimeMillis() < flushDeadline)
-            Thread.sleep(20)
-          if (!sent.get)
-            System.err.println(s"[$name] payload flush wait timed out after 20 s " +
-              "(source never connected?) — draining anyway")
-          Thread.sleep(200) // grace: reader thread drains the socket buffer
-          val deadline = System.currentTimeMillis() + 60000
-          while (got.size < expected && System.currentTimeMillis() < deadline) {
-            q.processAllAvailable(); Thread.sleep(100)
-          }
-        } finally q.stop()
-        val schema = new StructType().add("bucket_start", LongType)
-          .add("event_type", StringType).add("n", LongType)
-          .add("sum_value", DoubleType)
-        s.createDataset(got.toArray(Array.empty[String]).toSeq).toDF("j")
-          .select(from_json(col("j"), schema).as("r"))
-          .select(col("r.bucket_start").as("bucket_start"),
-            col("r.event_type").as("event_type"), col("r.n").as("n"),
-            col("r.sum_value").as("sum_value"))
-          .orderBy("bucket_start", "event_type")
-      } finally { src.close(); snk.close() }
-    }),
-
-    // §2.5 stream-static broadcast join through the real readStream path
-    // (r8): each micro-batch joins the event stream against a broadcast
-    // dimension (BroadcastHashJoin in the micro-batch plan, the 100 TB
-    // dimension-enrichment shape), oracle-checked against the equivalent
-    // batch join.
-    "q_stream_static_join" -> ((s, dir) => withStreamPartitions(s) {
-      val dim = broadcast(Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("nk"), col("n_name")))
-      val name = s"stream_ssj_${dir.replaceAll("\\W", "_")}"
-      val q = streamFixture(s, dir)
-        .withColumn("nk", pmod(col("user_id"), lit(25)))
-        .join(dim, "nk")
-        .select("event_id", "user_id", "n_name")
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", scratchCheckpoint(name)).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name).orderBy("event_id")
-    }),
-
-    // §2.4 declarative JSON pipeline end-to-end (source->SQL->sink plan)
-    "q_pipeline" -> ((s, dir) => {
-      val cfg =
-        s"""{
-           |  "source": [{"plugin": "LocalFile", "plugin_output": "cust",
-           |              "path": "$dir/customer.parquet",
-           |              "file_format_type": "parquet"}],
-           |  "transform": [
-           |    {"plugin": "Sql", "plugin_input": "cust", "plugin_output": "sel",
-           |     "query": "SELECT c_custkey, UPPER(c_mktsegment) AS seg, c_acctbal FROM cust WHERE c_acctbal > 5000"},
-           |    {"plugin": "Replace", "plugin_input": "sel", "plugin_output": "rep",
-           |     "replace_field": "seg", "pattern": "MACHINERY", "replacement": "MACH"}
-           |  ]
-           |}""".stripMargin
-      graft.api.Pipeline.runJson(s, cfg)("rep").orderBy("c_custkey")
-    }),
-
-    // §2.4 NATIVE HOCON pipeline end-to-end — the reference's own config
-    // syntax driving a source->SQL aggregation, oracle-checked
-    "q_pipeline_hocon" -> ((s, dir) => {
-      val conf =
-        s"""env { job.mode = "BATCH" }
-           |source {
-           |  LocalFile {
-           |    plugin_output = "orders"
-           |    path = "$dir/orders.parquet"
-           |    file_format_type = "parquet"
-           |  }
-           |}
-           |transform {
-           |  Sql {
-           |    plugin_input = "orders"
-           |    plugin_output = "agg"
-           |    query = "select o_orderstatus, count(*) as n, cast(sum(cast(o_totalprice as decimal(18,2))) as double) as total from orders group by o_orderstatus order by o_orderstatus"
-           |  }
-           |}
-           |""".stripMargin
-      graft.api.Pipeline.runHocon(s, conf)("agg")
-    }),
-
-    // §2.5 config-level SESSIONIZATION on the hash path (r20, VERDICT r19
-    // #5): the Sessionize config transform (Pipeline's wiring of
-    // StreamingOps.sessionizeBatch, next to WindowAgg) driven from a
-    // native HOCON job — LocalFile parquet feed (user_id + epoch-ns ts
-    // from Tables.load, so the feed schema is scale-independent) ->
-    // Sessionize (30-minute gap) -> Zeta Sql ns->us projection, checked
-    // against the same closed-form DuckDB sessions as q_sessionize. The
-    // streaming leg of the same transform (flatMapGroupsWithState through
-    // runStreaming) is pinned by StreamingConfigSpec.
-    "q_pipeline_sessionize" -> ((s, dir) => {
-      val tag = dir.replaceAll("\\W", "_")
-      val base = s"/tmp/graft_fixtures/pipeline_sess_$tag"
-      ensureFixture(s"$base/feed", sourceToken(dir, "events")) {
-        Tables.load(s, dir, "events").select(col("user_id"), col("ts"))
-          .write.mode("overwrite").parquet(s"$base/feed")
-      }
-      val conf =
-        s"""env { job.mode = "BATCH" }
-           |source {
-           |  LocalFile {
-           |    plugin_output = "ev"
-           |    path = "$base/feed"
-           |    file_format_type = "parquet"
-           |  }
-           |}
-           |transform {
-           |  Sessionize {
-           |    plugin_input = "ev"
-           |    plugin_output = "sess"
-           |    user_field = "user_id"
-           |    event_time_ns_field = "ts"
-           |    session_gap = "30 minutes"
-           |  }
-           |  Sql {
-           |    plugin_input = "sess"
-           |    plugin_output = "out"
-           |    query = "select user_id, session_idx, n_events, start_ns div 1000 as start_us, end_ns div 1000 as end_us from sess order by user_id, session_idx"
-           |  }
-           |}
-           |""".stripMargin
-      graft.api.Pipeline.runHocon(s, conf)("out")
-    }),
-
-    // §2.1.14 TableRename as a catalog-level Pipeline plugin (prefix +
-    // regex replacement + case conversion, per the reference options)
-    "q_table_rename" -> ((s, dir) => {
-      val cfg =
-        s"""{
-           |  "source": [{"plugin": "LocalFile", "plugin_output": "nation_raw",
-           |              "path": "$dir/nation.parquet",
-           |              "file_format_type": "parquet"}],
-           |  "transform": [
-           |    {"plugin": "TableRename", "prefix": "ods_", "convert_case": "LOWER",
-           |     "replacements_with_regex": [{"replace_from": "_raw", "replace_to": ""}]},
-           |    {"plugin": "Sql", "plugin_input": "ods_nation", "plugin_output": "out",
-           |     "query": "SELECT n_nationkey, n_name FROM ods_nation"}
-           |  ]
-           |}""".stripMargin
-      graft.api.Pipeline.runJson(s, cfg)("out").orderBy("n_nationkey")
-    }),
-
-    // §2.5 event-time interval join (Flink-style): purchases within one
-    // hour after a click by the same user. Exact `div 1000` ns->us on
-    // both sides so DuckDB reproduces the boundary arithmetic bit-exactly.
-    "q_interval_join" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_micros(expr("ts div 1000")).as("c_et"))
-      val buys = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("buy_id"),
-          timestamp_micros(expr("ts div 1000")).as("b_et"), col("value"))
-      graft.streaming.StreamingOps.intervalJoin(clicks, buys, Seq("user_id"),
-          "c_et", "b_et", "0 seconds", "1 hour")
-        .select("user_id", "click_id", "buy_id", "value")
-        .orderBy("user_id", "click_id", "buy_id")
-    }),
-
-    // §2.6 multimodal plumbing end-to-end: synthesize deterministic media
-    // per doc, decode header metadata batch-wise, stride-sample frames.
-    // Metadata is arithmetic on doc_id, so DuckDB can oracle the result.
-    "q_multimodal" -> ((s, dir) => {
-      import graft.multimodal.BinaryOps
-      val mk = udf((id: Long) => BinaryOps.fakeImage(
-        (id % 16 + 1).toInt, (id % 8 + 1).toInt, (id % 4 + 1).toInt))
-      val media = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), mk(col("doc_id")).as("content"))
-      BinaryOps.sampleFrames(BinaryOps.decodeMeta(media, "content", "meta"), "meta", stride = 2)
-        .select(col("doc_id"), col("frame_idx"),
-          col("meta.width").as("width"), col("meta.height").as("height"))
-        .orderBy("doc_id", "frame_idx")
-    }),
-
-    // §2.6 REAL media decode end-to-end (VERDICT r6 #1): per doc,
-    // synthesize PNG + JPEG (ImageIO writers) + WAV (RIFF PCM16) + MJPEG
-    // AVI (RIFF writer, r7) from deterministic doc_id-derived content,
-    // decode back through the four real codec paths (in-repo PNG
-    // Inflater, javax.imageio JPEG, javax.sound WAV, RIFF walk + ImageIO
-    // per AVI frame), digest the decoded pixels/samples. The oracle is
-    // a golden-vector table: digests depend only on doc_id % 16, and the
-    // JDK codecs are deterministic for fixed input on a fixed JRE.
-    "q_media_decode" -> ((s, dir) => {
-      import graft.multimodal.BinaryOps
-      val mkPng = udf((id: Long) => {
-        val w = (id % 16 + 1).toInt; val h = (id % 8 + 1).toInt
-        BinaryOps.encodeImage("png", w, h, BinaryOps.rawRgbFrame(w, h))
-      })
-      val mkJpg = udf((id: Long) => {
-        val w = (id % 16 + 1).toInt; val h = (id % 8 + 1).toInt
-        BinaryOps.encodeImage("jpg", w, h, BinaryOps.rawRgbFrame(w, h))
-      })
-      val mkWav = udf((id: Long) => {
-        val w = (id % 16 + 1).toInt; val h = (id % 8 + 1).toInt
-        BinaryOps.fakeWav(8000, 1, w * h * 10)
-      })
-      val mkAvi = udf((id: Long) => {
-        val w = (id % 16 + 1).toInt; val h = (id % 8 + 1).toInt
-        BinaryOps.fakeAvi(w, h, 3)
-      })
-      val base = Tables.load(s, dir, "documents").select(col("doc_id"),
-        mkPng(col("doc_id")).as("png"), mkJpg(col("doc_id")).as("jpg"),
-        mkWav(col("doc_id")).as("wav"), mkAvi(col("doc_id")).as("avi"))
-      val dec = BinaryOps.decodeVideoFrames(
-        BinaryOps.decodeWavSamples(
-          BinaryOps.decodeImageRgb(
-            BinaryOps.decodeImageRgb(base, "png", "png_px"), "jpg", "jpg_px"),
-          "wav", "wav_s"),
-        "avi", "avi_f")
-      dec.select(col("doc_id"),
-          md5(col("png_px")).as("png_digest"),
-          md5(col("jpg_px")).as("jpg_digest"),
-          md5(col("wav_s.pcm")).as("wav_digest"),
-          col("wav_s.n_samples").as("wav_frames"),
-          md5(concat(element_at(col("avi_f"), 1).getField("rgb"),
-            element_at(col("avi_f"), 2).getField("rgb"),
-            element_at(col("avi_f"), 3).getField("rgb"))).as("avi_digest"),
-          size(col("avi_f")).as("avi_frames"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 image near-dup via perceptual hash — HASH-EXACT: images are
-    // lossless PNGs of a closed-form 9x8 gray pattern (r=g=b makes the
-    // BT.601 luma the pixel value exactly, and a 9x8 source makes the
-    // dHash grid sampling the identity), consecutive doc_ids share a base
-    // pattern with a few perturbed pixels (the planted near-dups), and
-    // every stage — dHash bits, 11 pigeonhole bands, bucket cap, hamming
-    // verify, greedy drop — is integer arithmetic DuckDB replays
-    // independently.
-    "q_image_neardup" -> ((s, dir) => {
-      val imgs = imageFixture(s, dir)
-      val fanned = imgs.repartition(s.sparkContext.defaultParallelism)
-      val pairs = Dedup.imageNearDupPairs(fanned, "doc_id", "img", maxHamming = 10)
-      Dedup.dropNearDups(imgs, "doc_id", pairs).select("doc_id").orderBy("doc_id")
-    }),
-
-    // §2.6 Gopher-rule corpus filter (published recipe; every feature is
-    // integer-ratio arithmetic, so DuckDB reproduces the doubles exactly)
-    "q_gopher_filter" -> ((s, dir) => {
-      TextAnalysis.gopherFlags(Tables.load(s, dir, "documents"), "text")
-        .select(col("doc_id"), col("g_n_words"), col("g_mean_word_len"),
-          col("g_symbol_ratio"), col("g_alpha_word_ratio"),
-          col("g_dupline_ratio"), col("gopher_pass"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 C4-style page cleaning (published Raffel et al. recipe):
-    // line-level retention + page-level keep flag, DuckDB-oracle-exact.
-    // The synthetic docs carry no punctuation/newlines, so both engines
-    // derive page-shaped text the same way (sentence breaks at ' a ')
-    // to exercise the line filter non-degenerately.
-    "q_c4_filter" -> ((s, dir) => {
-      val pages = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), expr("replace(text, ' a ', '.\\n')").as("page"))
-      TextAnalysis.c4Flags(pages, "page")
-        .select(col("doc_id"), col("c4_n_lines"), col("c4_n_kept_lines"),
-          col("c4_n_sentences"), col("c4_has_lorem"), col("c4_has_brace"),
-          md5(col("c4_clean_text")).as("c4_clean_digest"), col("c4_keep"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 one-pass dataset profiling (exact subset: null counts +
-    // string min/max per column from ONE aggregation over the table)
-    "q_profile" -> ((s, dir) => {
-      Profile.profileExact(Tables.load(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus")).orderBy("column")
-    }),
-
-    // §2.6 mergeable HLL sketch columns: per-(type, day) user sketches
-    // built once, merged per type across days, estimated. 150 distinct
-    // users/type keeps the DataSketches sketch in exact coupon mode, so
-    // the merged estimate equals DuckDB's count(distinct) bit-for-bit —
-    // the oracle checks the build+merge+estimate path end to end.
-    "q_hll_sketch" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_type"),
-          date_trunc("day", timestamp_micros(expr("ts div 1000"))).as("day"),
-          col("user_id"))
-      val daily = Sketches.hllAgg(ev, "user_id", Seq("event_type", "day"))
-      Sketches.hllMerge(daily, "sketch", Seq("event_type"))
-        .select(col("event_type"), Sketches.estimate(col("sketch")).as("n_users"))
-        .orderBy("event_type")
-    }),
-
-    // §2.6 Gopher repetition filters (paragraph + n-gram char fractions);
-    // pages derived with paragraph breaks at ' a ' on both engines
-    "q_gopher_repetition" -> ((s, dir) => {
-      val pages = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), expr("replace(text, ' a ', '\\n\\n')").as("page"))
-      TextAnalysis.gopherRepetitionFlags(pages, "page", "doc_id")
-        .select(col("doc_id"), col("r_dup_para_frac"), col("r_dup_para_char_frac"),
-          col("r_top_2gram_char_frac"), col("r_dup_5gram_char_frac"),
-          col("repetition_pass"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 deterministic hash sampling: reproducible corpus subset whose
-    // membership depends only on (key, salt) — engine-independent
-    // (oracle recomputes the identical md5 buckets in DuckDB)
-    "q_sample_hash" -> ((s, dir) => {
-      Sampling.hashSample(Tables.load(s, dir, "documents"), "doc_id", 0.25)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-
-    // §2.6 deterministic train/valid/test split assignment (hash ranges)
-    "q_split_assign" -> ((s, dir) => {
-      Sampling.assignSplit(Tables.load(s, dir, "documents"), "doc_id",
-        Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1))
-        .groupBy("split").agg(count(lit(1)).as("n"))
-        .orderBy("split")
-    }),
-
-    // §5 skew tooling: salted join must produce exactly the plain join's
-    // result (oracle = unsalted SQL join + aggregation)
-    "q_salted_join" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem").select("l_partkey", "l_quantity")
-      val part = Tables.load(s, dir, "part")
-        .select(col("p_partkey").as("l_partkey"), col("p_brand"))
-      ScaleOps.saltedJoin(li, part, Seq("l_partkey"), saltFactor = 8)
-        .groupBy("p_brand")
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          count(lit(1)).as("n"))
-        .orderBy("p_brand")
-    }),
-
-    // §5 co-located bucket join (r9): both sides written hash-bucketed on
-    // the join key (external tables under /tmp), so the fact-to-fact join
-    // needs NO shuffle exchange on either side — the 100 TB answer when a
-    // key is joined repeatedly. Shuffle-free plan is asserted in
-    // ScaleOpsSpec; here the joined data itself is oracle-checked. Tables
-    // are written once per process (catalog-guarded), so bench reps time
-    // the join, not the table build.
-    //
-    // r13 (VERDICT r12 #3): the bucket count follows writeBucketed's
-    // sizing rule INSIDE the fixture — proportional to source volume
-    // (constant per-bucket bytes), floored at 8 — instead of a hard-coded
-    // 8 that silently capped the sf1 sweep's join at 8-wide on 32 cores
-    // (6.45x for 10x data). Bucket count never changes the RESULT, only
-    // the layout's parallelism ceiling, so the oracle is unaffected.
-    "q_colocated_join" -> ((s, dir) => {
-      val tok = dir.replaceAll("\\W", "_")
-      // ~1.3 MiB of source lineitem per bucket: anchors the gate scales
-      // at the historical 8 buckets (sf0.01 1 MiB, sf0.1 10.8 MiB) and
-      // scales 10x data -> ~10x buckets above that
-      val liBytes = {
-        val f = new java.io.File(dir, "lineitem.parquet")
-        if (f.isDirectory) Option(f.listFiles()).map(_.map(_.length).sum).getOrElse(f.length)
-        else f.length
-      }
-      val buckets = math.max(8, math.min(256, (liBytes / (1340L * 1024)).toInt))
-      val (tLi, tOrd) = (s"graft_bkt_li_${tok}_b$buckets", s"graft_bkt_ord_${tok}_b$buckets")
-      if (!s.catalog.tableExists(tLi) || !s.catalog.tableExists(tOrd)) {
-        val base = s"/tmp/graft_fixtures/bkt_${tok}_b$buckets"
-        ScaleOps.writeBucketed(
-          Tables.load(s, dir, "lineitem").select("l_orderkey", "l_extendedprice"),
-          tLi, buckets, Seq("l_orderkey"), Some(s"$base/lineitem"))
-        ScaleOps.writeBucketed(
-          Tables.load(s, dir, "orders")
-            .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus")),
-          tOrd, buckets, Seq("l_orderkey"), Some(s"$base/orders"))
-      }
-      ScaleOps.colocatedJoin(s, tLi, tOrd, Seq("l_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_price"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // §5 z-order values (r9): Morton interleave of (user_id, value
-    // bucket) — the data-skipping layout key behind zorderWrite (layout +
-    // per-file bbox locality are spec-asserted; here the curve value
-    // itself is oracle-checked bit for bit). Pure codegen'd bit
-    // arithmetic, no UDF.
-    "q_zorder" -> ((s, dir) => {
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          floor(col("value")).cast("long").as("__vb"))
-        .select(col("event_id"),
-          ScaleOps.zValue2(col("user_id"), col("__vb")).as("z_val"))
-        .orderBy("event_id")
-    }),
-
-    // §5 3-D z-order values (r12; VERDICT r11 #5): Morton interleave of
-    // (user_id, value bucket, day-of-epoch) at 15 bits/dim — the
-    // N-dimensional curve key (file pruning on ANY of three filter
-    // columns); per-file bbox VOLUME locality is spec-asserted, the
-    // curve value is oracle-checked bit for bit here.
-    "q_zorder3" -> ((s, dir) => {
-      Tables.load(s, dir, "events")
-        .select(col("event_id"),
-          ScaleOps.zValueN(Seq(col("user_id"),
-            floor(col("value")).cast("long"),
-            expr("ts div 86400000000000")), bits = 15).as("z_val"))
-        .orderBy("event_id")
-    }),
-
-    // §2.4 file-side MERGE INTO (r9): the Delta/Iceberg upsert shape on a
-    // plain parquet dir — fresh target written per run (the merge mutates
-    // it), row-kind changelog applied set-wise, atomic double-rename
-    // swap, result read back and oracle-checked closed-form.
-    "q_merge_into" -> ((s, dir) => {
-      val base = s"/tmp/graft_fixtures/merge_${dir.replaceAll("\\W", "_")}/nation"
-      val kind = graft.operators.RowKindOps.RowKindCol
-      val nation = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-      nation.write.mode("overwrite").parquet(base)
-      val changes = nation.where(pmod(col("n_nationkey"), lit(2)) === 0)
-          .withColumn("n_name", concat(col("n_name"), lit("_u")))
-          .withColumn(kind, lit("+U")).withColumn("__ord", lit(1L))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(5)) === 0)
-          .withColumn(kind, lit("-D")).withColumn("__ord", lit(2L)))
-        .unionByName(nation.where(pmod(col("n_nationkey"), lit(7)) === 0)
-          .select((col("n_nationkey") + 1000L).as("n_nationkey"),
-            concat(lit("ins_"), col("n_name")).as("n_name"), col("n_regionkey"))
-          .withColumn(kind, lit("+I")).withColumn("__ord", lit(3L)))
-      graft.sinks.Sinks.mergeInto(s, base, changes, Seq("n_nationkey"), "__ord")
-      s.read.parquet(base).orderBy("n_nationkey")
-    }),
-
-    // §2.6 keyed snapshot DIFF (r10): recover the change set between two
-    // materialized table versions — the QA complement to SCD2/MERGE
-    // (those apply known changes; this audits what a pipeline change
-    // actually rewrote). One full-outer key join; per-column null-safe
-    // compare. Synthesized new version: evens renamed, fifths deleted,
-    // three keys inserted.
-    "q_snapshot_diff" -> ((s, dir) => {
-      import s.implicits._
-      val old = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"),
-          col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-      val neu = old.where(pmod(col("n_nationkey"), lit(5)) =!= 0)
-        .withColumn("n_name", when(pmod(col("n_nationkey"), lit(2)) === 0,
-          concat(col("n_name"), lit("_v2"))).otherwise(col("n_name")))
-        .unionByName(Seq((100L, "new_100", 0L), (101L, "new_101", 1L),
-          (102L, "new_102", 2L)).toDF("n_nationkey", "n_name", "n_regionkey"))
-      graft.operators.Diff.snapshotDiff(old, neu, Seq("n_nationkey"))
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.6 INCREMENTAL near-dup pairing (r9): the daily-ingest shape —
-    // delta (doc_id%10=0) pairs against the standing corpus and itself,
-    // never corpus×corpus; cap semantics identical to a full run over the
-    // union (oracle is the minhash oracle restricted to delta-touching
-    // pairs — derived, not duplicated).
-    "q_dedup_incremental" -> ((s, dir) => {
-      val all = Tables.load(s, dir, "documents")
-      graft.dedup.Dedup.incrementalMinHashPairs(
-          all.where(pmod(col("doc_id"), lit(10)) =!= 0),
-          all.where(pmod(col("doc_id"), lit(10)) === 0),
-          "doc_id", "text")
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
-    }),
-
-    // §2.6 count-min frequency sketch (r10): heavy-hitter words via a
-    // mergeable 2048x4 sketch — the frequency companion to q_hll_sketch.
-    // Only sketch bytes cross the exchange (map-side partials); the
-    // top-20 exact words probe the sketch and the oracle rebuilds every
-    // cell + the min-estimate bit-for-bit (recomputable poly-257+fmix64
-    // row hashes — the bloom-replica treatment for frequencies).
-    "q_cms_heavyhitters" -> ((s, dir) => {
-      graft.plans.NativeExpressions.register(s)
-      val words = Tables.load(s, dir, "documents")
-        .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
-        .where(length(col("w")) > 0)
-      val sketch = graft.operators.Sketches.countMinAgg(words, "w",
-        width = 2048, depth = 4, seed = 42)
-      val top = words.groupBy("w").agg(count(lit(1)).as("exact_count"))
-        .orderBy(desc("exact_count"), asc("w")).limit(20)
-      top.crossJoin(broadcast(sketch))
-        .select(col("w").as("word"), col("exact_count"),
-          graft.operators.Sketches.cmsEstimate(col("cms"), col("word")).as("cms_est"))
-        .orderBy(desc("exact_count"), asc("word"))
-    }),
-
-    // §2.6 incremental near-dup against the persisted SIGNATURE STORE
-    // (r10; VERDICT r9 #5): same delta/corpus split and same result
-    // contract as q_dedup_incremental, but the corpus signatures come
-    // from the parquet store built once per sfDir — the query pays
-    // delta-only signature cost plus a narrow band-table scan; the
-    // corpus TEXT is never read.
-    "q_dedup_incr_store" -> ((s, dir) => {
-      val all = Tables.load(s, dir, "documents")
-      graft.dedup.Dedup.incrementalFromStore(
-          all.where(pmod(col("doc_id"), lit(10)) === 0),
-          signatureStore(s, dir), "doc_id", "text")
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
-    }),
-
-    // §2.6 sequence packing: documents into 512-token training bins.
-    // The bin ASSIGNMENT is per-partition FFD (deterministic but not
-    // SQL-expressible), so the driver checks the packing INVARIANTS,
-    // which are closed-form over `documents`: every doc packed exactly
-    // once (count + doc_id-sum coverage), token conservation, oversized
-    // docs isolated 1:1, every regular bin within budget, and the bin
-    // count inside the FFD bound. Exact per-bin semantics stay
-    // spec-tested in PackingSpec. (Moved from rows-only in r7.)
-    "q_pack_sequences" -> ((s, dir) => {
-      val toks = TextAnalysis.tokenCounts(Tables.load(s, dir, "documents"), "text")
-      val packed = Packing.packGreedy(toks, "doc_id", "ws_tokens",
-        budget = 512, numPartitions = 32)
-      val regularBins = count(when(col("oversized") === false, 1))
-      val regularTokens = sum(when(col("oversized") === false, col("total_tokens")))
-      packed.agg(
-        sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("total_tokens")).cast("long").as("sum_tokens"),
-        sum(expr("aggregate(doc_ids, CAST(0 AS BIGINT), (a, x) -> a + x)"))
-          .cast("long").as("id_sum"),
-        count(when(col("oversized"), 1)).cast("long").as("n_oversized"),
-        coalesce(max(when(col("oversized") === false, col("total_tokens"))) <= 512,
-          lit(true)).as("within_budget"),
-        (regularBins >= ceil(regularTokens / 512.0) &&
-          regularBins <= ceil(regularTokens / 512.0) * 2 + 64).as("bin_count_ok"))
-    }),
-
-    // §2.6 C4 three-sentence-span corpus dedup (rows-only: the
-    // lookbehind sentence split isn't RE2-expressible for DuckDB; exact
-    // semantics are spec-tested with planted spans). Pages derived the
-    // same way as q_c4_filter so spans exist.
-    "q_c4_span_dedup" -> ((s, dir) => {
-      val pages = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), expr("replace(text, ' a ', '. ')").as("page"))
-      Dedup.c4SpanDedup(pages, "doc_id", "page")
-        .select(col("doc").as("doc_id"), col("n_sentences"),
-          col("n_kept_sentences"), col("n_removed"),
-          md5(col("clean_text")).as("clean_digest"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 substring dedup (Lee et al. 2021 semantics via winnowing
-    // anchors + extension verify). HASH-EXACT since r7: token hashes are
-    // poly-257+fmix64 and the gram fold / robust-winnowing window min /
-    // greedy extension are all plain arithmetic, so the DuckDB oracle
-    // replays the whole pipeline. minLen=30 so the synthetic corpus
-    // (shortish docs sharing sampled sentences) actually exhibits
-    // duplicated runs.
-    "q_substring_dedup" -> ((s, dir) => {
-      Dedup.substringDedup(Tables.load(s, dir, "documents"),
-        "doc_id", "text", minLen = 30, k = 10)
-        .select(col("doc").as("doc_id"), col("n_tokens"), col("n_kept_tokens"),
-          col("n_removed_tokens"), md5(col("clean_text")).as("clean_digest"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 benchmark decontamination: drop corpus docs sharing a 13-gram
-    // with a benchmark set (here: every 50th doc poses as a benchmark
-    // question). Hash-exact: the oracle recomputes the overlap on gram
-    // STRINGS (equal modulo hash collisions).
-    // §2.6 FUZZY decontamination metric (r9): per-doc fraction of
-    // distinct 13-grams shared with the benchmark — the GPT-4/PaLM-style
-    // contamination measure (exact matching over-fires on one shared
-    // idiom; a fraction threshold catches paraphrased eval items).
-    "q_decontaminate_fuzzy" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val bench = docs.where(col("doc_id") % 50 === 0).select(col("text").as("question"))
-      graft.text.Decontamination.overlapFractions(docs, bench, "doc_id", "text", "question")
-        .select("doc_id", "n_grams", "n_matched", "overlap")
-        .orderBy("doc_id")
-    }),
-
-    // §2.6 hard-negative mining (r9): per query, top-10 most-similar
-    // vectors with a DIFFERENT label — contrastive-training negatives;
-    // broadcast brute-force contract, label filter before ranking.
-    "q_hard_negatives" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      graft.similarity.Similarity.hardNegatives(
-          emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", "label")
-        .orderBy("q_id", "rnk")
-    }),
-
-    // §2.6 group-leakage-safe splits (r9): split by SOURCE, not by doc —
-    // all docs of a publisher land in the same split, the standard guard
-    // against train/test leakage through shared provenance. Same
-    // engine-independent md5 buckets as q_split_assign, keyed on source.
-    "q_group_split" -> ((s, dir) => {
-      Sampling.assignSplit(Tables.load(s, dir, "documents"), "source",
-          Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "source", "split")
-        .orderBy("doc_id")
-    }),
-
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val bench = docs.where(col("doc_id") % 50 === 0).select(col("text").as("question"))
-      graft.text.Decontamination.decontaminate(docs, bench, "doc_id", "text", "question")
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // §2.6 Bloom-filter decontamination (broadcast filter bytes instead of
-    // the exact gram set — the very-large-benchmark scale path).
-    // HASH-EXACT since r7: the oracle rebuilds the filter BIT-FOR-BIT —
-    // poly-257+fmix64 gram hashes, Murmur3_x86_32 h1/h2, and the
-    // BloomFilterImplV2 probe schedule all replayed in DuckDB SQL, so
-    // even false-positive drops would reproduce (probe-level equivalence
-    // proven by BloomProbeReplicaSpec against a collision-saturated
-    // filter).
-    "q_decontaminate_bloom" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val bench = docs.where(col("doc_id") % 50 === 0).select(col("text").as("question"))
-      graft.text.Decontamination.decontaminateBloom(docs, bench, "doc_id", "text", "question",
-        expectedGrams = 100000L)
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // §2.6 PII redaction over a deterministic synthetic suffix (the raw
-    // corpus has no planted PII, so append one derived from doc_id)
-    "q_pii_redact" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .withColumn("text2", concat(col("text"),
-          lit(" contact user"), col("doc_id"), lit("@example.com or 555-123-4567 ip 10.0.0.1")))
-      graft.text.Decontamination.redactPii(docs, "text2", "red")
-        .select(col("doc_id"), substring(col("red"), -60, 60).as("tail"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.4 canal-json CDC envelope (old[] patch pre-image reconstruction)
-    "q_cdc_canal" -> ((s, dir) => {
-      val env = Tables.load(s, dir, "orders", fanOut = true).select(to_json(struct(
-        array(struct(col("o_orderkey"), col("o_totalprice"))).as("data"),
-        when(col("o_orderstatus") === "O",
-          array(struct(lit(null).cast(LongType).as("o_orderkey"),
-            (col("o_totalprice") - 1.0d).as("o_totalprice")))).as("old"),
-        when(col("o_orderstatus") === "F", "INSERT")
-          .when(col("o_orderstatus") === "O", "UPDATE").otherwise("DELETE").as("type")
-      )).as("json"))
-      CdcFormats.parseCanal(env, "json",
-          new StructType().add("o_orderkey", LongType).add("o_totalprice", DoubleType))
-        .orderBy("o_orderkey", "__row_kind")
-    })
-  )
-
-  /** Shared CTE prefix for the hyperplane-LSH oracles: fmix64-derived
-    * Rademacher plane signs (sg0..sg4 stage the wrapping multiplies as
-    * 32-bit-split HUGEINT arithmetic), per-vector 16-bit signatures via
-    * sequential-fold dot products — the exact arithmetic
-    * `ExprHelpers.planeSig` runs, replayed independently. `recursive`
-    * prepends RECURSIVE for oracles that chain a reachability CTE.
-    */
-  private def lshSigCtes(recursive: Boolean): String =
-    (if (recursive) "WITH RECURSIVE " else "WITH ") +
-      raw"""sg0 AS (
-        |  SELECT b, i, (180388626432 + b*64 + i)::HUGEINT AS x
-        |  FROM (SELECT unnest(range(0, 16)) AS b), (SELECT unnest(range(0, 64)) AS i)
-        |), sg1 AS ( SELECT b, i, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM sg0
-        |), sg2 AS ( SELECT b, i, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM sg1
-        |), sg3 AS ( SELECT b, i, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM sg2
-        |), sg4 AS ( SELECT b, i, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM sg3
-        |), signs AS (
-        |  SELECT b, i, CASE WHEN xor(x::UBIGINT, x::UBIGINT >> 33) < 9223372036854775808::UBIGINT
-        |               THEN 1.0 ELSE -1.0 END AS s
-        |  FROM sg4
-        |), srows AS ( SELECT b, list(s ORDER BY i) AS ss FROM signs GROUP BY b
-        |), prep AS ( SELECT vec_id, [x::DOUBLE FOR x IN embedding] AS v FROM embeddings
-        |), dots AS (
-        |  SELECT p.vec_id, s.b,
-        |    list_reduce(list_prepend(0.0,
-        |      [s.ss[i+1] * p.v[i+1] FOR i IN range(0, least(len(p.v), 64))]), (a,x) -> a+x) AS dot
-        |  FROM prep p, srows s
-        |), sigs AS (
-        |  SELECT vec_id,
-        |    sum(CASE WHEN dot > 0 THEN (1::UBIGINT << b)::HUGEINT ELSE 0::HUGEINT END)::UBIGINT AS sig
-        |  FROM dots GROUP BY vec_id
-        |)""".stripMargin
-
-  /** Shared suffix: the embedding near-dup pair pipeline (2x8-bit bands,
-    * 10000-cap buckets, sequential-fold cosine verify at 0.9) — what
-    * `Dedup.embeddingNearDupPairs` computes with its defaults.
-    */
-  private val neardupPairCtes: String =
-    raw""", bands AS (
-      |  SELECT vec_id, bi.band_idx, (sig >> (bi.band_idx*8)) & 255 AS band_val
-      |  FROM sigs, (SELECT unnest(range(0, 2)) AS band_idx) bi
-      |), capped AS (
-      |  SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY band_idx, band_val) <= 10000
-      |), cand AS (
-      |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM capped a JOIN capped b USING (band_idx, band_val)
-      |  WHERE a.vec_id < b.vec_id
-      |), pairs AS (
-      |  SELECT c.id_a, c.id_b
-      |  FROM cand c JOIN prep a ON a.vec_id = c.id_a JOIN prep b ON b.vec_id = c.id_b
-      |  WHERE list_reduce(list_prepend(0.0, [a.v[i+1]*b.v[i+1] FOR i IN range(0, len(a.v))]), (x,y)->x+y)
-      |    / ( sqrt(list_reduce(list_prepend(0.0, [x*x FOR x IN a.v]), (x,y)->x+y))
-      |      * sqrt(list_reduce(list_prepend(0.0, [x*x FOR x IN b.v]), (x,y)->x+y)) ) >= 0.9
-      |)""".stripMargin
-
-  /** Bloom sizing for the `q_decontaminate_bloom` oracle, computed with
-    * the same published formulas Spark's `BloomFilter.create(items, bits)`
-    * uses (k = round(m/n·ln2), bit array padded to 64-bit words) —
-    * `BloomProbeReplicaSpec` pins both against the real filter.
-    */
-  private val (bloomOracleK: Int, bloomOracleBitSize: Long) = {
-    val expectedGrams = 100000L
-    val fpp = 1e-9
-    val bits = math.ceil(-expectedGrams * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    (math.max(1, math.round(bits.toDouble / expectedGrams * math.log(2)).toInt),
-      ((bits + 63) / 64) * 64)
-  }
-
-  /** DuckDB-equivalent SQL per query (same tables, same column names,
-    * same ORDER BY). Since r7 every driver query has an oracle — an
-    * omitted key would fall back to a weaker rows-only check.
-    */
-  def oracleSql: Map[String, String] = {
-    val base = oracleSqlBase
-    // q_dedup_incremental's oracle IS the full minhash pipeline over the
-    // union, restricted to delta-touching candidates (delta = doc_id%10=0)
-    // — derived from the proven q_dedup_minhash oracle by swapping the
-    // candidate clause and the final projection, so the two can never
-    // drift apart.
-    val fullCand =
-      """  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM capped a JOIN capped b USING (band_idx, band_val)
-        |  WHERE a.doc_id < b.doc_id""".stripMargin
-    val incCand =
-      """  SELECT DISTINCT least(a.doc_id, b.doc_id) AS id_a,
-        |    greatest(a.doc_id, b.doc_id) AS id_b
-        |  FROM capped a JOIN capped b USING (band_idx, band_val)
-        |  WHERE a.doc_id % 10 = 0 AND a.doc_id <> b.doc_id""".stripMargin
-    val fullTail =
-      """SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT id_b FROM pairs)
-        |ORDER BY doc_id""".stripMargin
-    val incTail = "SELECT id_a, id_b FROM pairs ORDER BY id_a, id_b"
-    val minhash = base("q_dedup_minhash")
-    require(minhash.contains(fullCand) && minhash.contains(fullTail),
-      "q_dedup_incremental oracle derivation: q_dedup_minhash shape changed")
-    val incremental = minhash.replace(fullCand, incCand).replace(fullTail, incTail)
-    // q_ccnet_threshold derives from the proven q_lm_likelihood oracle:
-    // same scoring, plus the fixed-cut bucket CASE (the scale path's
-    // precomputed-threshold form) — derived, not duplicated
-    val lmTail =
-      """SELECT doc_id, count(*) AS n_bigrams,
-        |  CAST(sum(pp) AS BIGINT) AS score_sum,
-        |  CAST(sum(pp) AS DOUBLE) / count(*) AS score_avg
-        |FROM b JOIN p USING (bg)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    val lm = base("q_lm_likelihood")
-    require(lm.endsWith(lmTail),
-      "q_ccnet_threshold oracle derivation: q_lm_likelihood shape changed")
-    val thrTail =
-      """, s AS (
-        |  SELECT doc_id, count(*) AS n_bigrams,
-        |    CAST(sum(pp) AS BIGINT) AS score_sum,
-        |    CAST(sum(pp) AS DOUBLE) / count(*) AS score_avg
-        |  FROM b JOIN p USING (bg) GROUP BY doc_id)
-        |SELECT doc_id, n_bigrams, score_sum, score_avg,
-        |  CAST(CASE WHEN score_avg < 34000.0 THEN 3
-        |            WHEN score_avg < 35000.0 THEN 2 ELSE 1 END AS INTEGER) AS bucket
-        |FROM s ORDER BY doc_id""".stripMargin
-    val threshold = lm.dropRight(lmTail.length) + thrTail
-    // q_dedup_incr_store has the SAME result contract (store signatures
-    // are the same deterministic expressions a recompute produces), so it
-    // shares the derived oracle
-    base + ("q_dedup_incremental" -> incremental) +
-      ("q_dedup_incr_store" -> incremental) +
-      ("q_ccnet_threshold" -> threshold)
-  }
-
-  private def oracleSqlBase: Map[String, String] = Map(
-    // LSH ANN: signatures + band candidates + exact-cosine ranking,
-    // replayed bit-for-bit (4-bit bands x4; ties broken by n_id).
-    "q_ann_lsh" -> (lshSigCtes(recursive = false) +
-      raw""", bands AS (
-        |  SELECT vec_id, bi.band_idx, (sig >> (bi.band_idx*4)) & 15 AS band_val
-        |  FROM sigs, (SELECT unnest(range(0, 4)) AS band_idx) bi
-        |), cand AS (
-        |  SELECT DISTINCT q.vec_id AS q_id, n.vec_id AS n_id
-        |  FROM bands q JOIN bands n USING (band_idx, band_val)
-        |  WHERE q.vec_id < 5
-        |), scored AS (
-        |  SELECT c.q_id, c.n_id,
-        |    list_reduce(list_prepend(0.0, [a.v[i+1]*b.v[i+1] FOR i IN range(0, len(a.v))]), (x,y)->x+y)
-        |    / ( sqrt(list_reduce(list_prepend(0.0, [x*x FOR x IN a.v]), (x,y)->x+y))
-        |      * sqrt(list_reduce(list_prepend(0.0, [x*x FOR x IN b.v]), (x,y)->x+y)) ) AS cosine
-        |  FROM cand c JOIN prep a ON a.vec_id = c.q_id JOIN prep b ON b.vec_id = c.n_id
-        |), rk AS (
-        |  SELECT q_id, n_id, cosine,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rnk
-        |  FROM scored
-        |)
-        |SELECT q_id, n_id, CAST(rnk AS INTEGER) AS rnk, cosine
-        |FROM rk WHERE rnk <= 10
-        |ORDER BY q_id, rnk""".stripMargin),
-
-    // Embedding near-dup survivors: docs never on the id_b side of a
-    // verified pair.
-    "q_neardup_cosine" -> (lshSigCtes(recursive = false) + neardupPairCtes +
-      raw"""
-        |SELECT vec_id FROM embeddings
-        |WHERE vec_id NOT IN (SELECT id_b FROM pairs)
-        |ORDER BY vec_id""".stripMargin),
-
-    // Semantic dedup: the same pair graph resolved into connected
-    // components by recursive reachability; survivors are component-min
-    // nodes, carrying the table's label column.
-    "q_semantic_dedup" -> (lshSigCtes(recursive = true) + neardupPairCtes +
-      raw""", edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs
-        |), reach AS (
-        |  SELECT vec_id AS node, vec_id AS r FROM embeddings
-        |  UNION
-        |  SELECT reach.node, e.b FROM reach JOIN edges e ON e.a = reach.r
-        |), comp AS (
-        |  SELECT node, min(r) AS lbl FROM reach GROUP BY node
-        |)
-        |SELECT e.vec_id, e.label FROM embeddings e JOIN comp ON comp.node = e.vec_id
-        |WHERE comp.node = comp.lbl
-        |ORDER BY e.vec_id""".stripMargin),
-
-    // int8-quantized ANN: per-vector symmetric quantization + dequantized
-    // integer dot, all plain arithmetic (round half-up matches both
-    // engines; folds are sequential) — cosine compares bit-exactly.
-    "q_ann_int8" ->
-      raw"""WITH prep AS (
-        |  SELECT vec_id, [x::DOUBLE FOR x IN embedding] AS v FROM embeddings
-        |), q1 AS (
-        |  SELECT vec_id, v,
-        |    CASE WHEN list_max([abs(x) FOR x IN v]) > 0
-        |         THEN list_max([abs(x) FOR x IN v]) / 127.0 ELSE 1.0 END AS scale
-        |  FROM prep
-        |), q2 AS (
-        |  SELECT vec_id, scale,
-        |    [CAST(round(x / scale) AS TINYINT)::INTEGER FOR x IN v] AS qv,
-        |    sqrt(list_reduce(list_prepend(0.0, [x*x FOR x IN v]), (a,b) -> a+b)) AS nrm
-        |  FROM q1
-        |), cj AS (
-        |  SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-        |    q.scale * n.scale * CAST(list_reduce(list_prepend(0,
-        |        [q.qv[i+1] * n.qv[i+1] FOR i IN range(0, len(q.qv))]), (a,b) -> a+b) AS DOUBLE)
-        |      / (q.nrm * n.nrm) AS cosine
-        |  FROM q2 q JOIN q2 n ON q.vec_id < 5
-        |), rk AS (
-        |  SELECT q_id, n_id, cosine,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rnk
-        |  FROM cj
-        |)
-        |SELECT q_id, n_id, CAST(rnk AS INTEGER) AS rnk, cosine
-        |FROM rk WHERE rnk <= 10
-        |ORDER BY q_id, rnk""".stripMargin,
-    // the chain pair graph links consecutive doc_ids per source, so each
-    // source with >= 2 docs is one component labeled by its min doc_id —
-    // the closed form of what the distributed min-label/pointer-jumping
-    // iteration computes
-    "q_dedup_clusters" ->
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |       CAST(MIN(doc_id) OVER (PARTITION BY source) AS BIGINT) AS component
-        |FROM documents
-        |WHERE source IN (SELECT source FROM documents
-        |                 GROUP BY source HAVING COUNT(*) >= 2)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_field_mapper" ->
-      """SELECT c_custkey AS cust_id, c_name AS name, c_mktsegment AS segment,
-        |       c_acctbal AS balance
-        |FROM customer ORDER BY cust_id""".stripMargin,
-
-    "q_field_rename" ->
-      "SELECT r_regionkey AS dim_r_regionkey, r_name AS dim_r_name FROM region ORDER BY dim_r_regionkey",
-
-    "q_copy" ->
-      "SELECT n_nationkey, n_name, n_regionkey, n_name AS n_name_copy FROM nation ORDER BY n_nationkey",
-
-    "q_filter_fields" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_orderkey",
-
-    "q_filter_rows" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_discount
-        |FROM lineitem WHERE l_quantity > 45.0 AND l_discount < 0.05
-        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_discount""".stripMargin,
-
-    "q_split" ->
-      """SELECT p_partkey, p_name,
-        |       split_part(p_name, ' ', 1) AS p_adj,
-        |       CASE WHEN strpos(p_name, ' ') > 0
-        |            THEN substr(p_name, strpos(p_name, ' ') + 1)
-        |            ELSE NULL END AS p_noun
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q_replace" ->
-      """SELECT c_custkey,
-        |       REPLACE(c_name, 'Customer#', 'C-') AS c_name,
-        |       regexp_replace(c_name, '0+', '0', 'g') AS c_name_re
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q_sql_transform" ->
-      """SELECT o_orderkey, UPPER(o_orderpriority) AS pri,
-        |       CAST(YEAR(o_orderdate) AS INTEGER) AS yr, o_totalprice
-        |FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_jsonpath" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_metadata" ->
-      """SELECT n_nationkey, n_name, n_regionkey,
-        |       'graft' AS db_name, 'nation' AS tbl_name
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q_filter_rowkind" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |       CASE WHEN o_orderstatus = 'F' THEN '+I'
-        |            WHEN o_orderstatus = 'O' THEN '+U' ELSE '-D' END AS __row_kind
-        |FROM orders WHERE o_orderstatus IN ('F','O')
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_rowkind_extractor" ->
-      """SELECT o_orderkey,
-        |       CASE WHEN o_orderstatus = 'F' THEN 'INSERT'
-        |            WHEN o_orderstatus = 'O' THEN 'UPDATE_AFTER'
-        |            ELSE 'DELETE' END AS kind
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_table_merge" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-        |       o_orderpriority, 'orders_f' AS __meta_table
-        |FROM orders WHERE o_orderstatus = 'F'
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-        |       o_orderpriority, 'orders_o' AS __meta_table
-        |FROM orders WHERE o_orderstatus = 'O'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_dynamic" ->
-      """SELECT CAST(n_nationkey AS BIGINT) * 2 AS nation_id, LOWER(n_name) AS name_lc
-        |FROM nation ORDER BY nation_id""".stripMargin,
-
-    "q_sql_join" ->
-      """SELECT o.o_orderkey,
-        |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
-        |      (CAST(1 AS DECIMAL(18,4)) - CAST(l.l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
-        |  o.o_orderdate
-        |FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-        |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |WHERE c.c_mktsegment = 'BUILDING' AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY o.o_orderkey, o.o_orderdate
-        |ORDER BY o.o_orderkey""".stripMargin,
-
-    "q_sql_window" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |  CAST(row_number() OVER (PARTITION BY o_custkey
-        |                     ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rn
-        |FROM orders ORDER BY o_custkey, rn""".stripMargin,
-
-    "q_sql_cte" ->
-      """WITH rn AS (
-        |  SELECT n.n_nationkey, r.r_name
-        |  FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey)
-        |SELECT rn.r_name, count(*) AS n_suppliers,
-        |  CAST(SUM(CAST(s.s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM supplier s JOIN rn ON s.s_nationkey = rn.n_nationkey
-        |GROUP BY rn.r_name ORDER BY rn.r_name""".stripMargin,
-
-    "q_sql_setops" ->
-      """SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY k""".stripMargin,
-
-    "q_sql_explode" ->
-      """SELECT p_partkey, unnest(string_split(p_name, ' ')) AS word
-        |FROM part ORDER BY p_partkey, word""".stripMargin,
-
-    "q_fn_string" ->
-      """SELECT c_custkey,
-        |  UPPER(c_name) AS up, LOWER(c_name) AS lo, CAST(LENGTH(c_name) AS INTEGER) AS len,
-        |  SUBSTR(c_name, 1, 8) AS sub8,
-        |  LPAD(CAST(c_custkey AS VARCHAR), 8, '0') AS pad,
-        |  CONCAT_WS('|', c_name, c_mktsegment) AS cw,
-        |  REPLACE(c_name, 'Customer', 'Cust') AS rep,
-        |  LEFT(c_name, 4) AS lft, RIGHT(c_name, 3) AS rgt,
-        |  CAST(ASCII(c_mktsegment) AS INTEGER) AS a1,
-        |  REPEAT(c_mktsegment, 2) AS rpt,
-        |  TRANSLATE(c_mktsegment, 'AEIOU', 'aeiou') AS trn,
-        |  CAST(INSTR(c_name, '#') AS INTEGER) AS hashpos,
-        |  'CUST' || SUBSTR(c_name, 9) AS ins
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q_fn_numeric" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  ABS(l_discount - 0.05) AS ab,
-        |  CAST(CEIL(l_quantity) AS BIGINT) AS ce,
-        |  CAST(FLOOR(l_quantity) AS BIGINT) AS fl,
-        |  ROUND(l_quantity, 1) AS rd,
-        |  SQRT(l_quantity) AS sq,
-        |  CAST(MOD(l_orderkey, 7) AS BIGINT) AS md,
-        |  CAST(SIGN(l_discount - 0.05) AS DOUBLE) AS sg,
-        |  POWER(l_linenumber, 2) AS pw,
-        |  FLOOR(l_extendedprice * 10) / 10 AS tr
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, ab, ce, fl, rd, sq, md, sg, pw, tr""".stripMargin,
-
-    "q_fn_datetime" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS INTEGER) AS y,
-        |  CAST(month(o_orderdate) AS INTEGER) AS m,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
-        |  CAST(day(o_orderdate) AS INTEGER) AS dom,
-        |  CAST(dayofyear(o_orderdate) AS INTEGER) AS doy,
-        |  CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-        |  dayname(o_orderdate) AS dn, monthname(o_orderdate) AS mn,
-        |  CAST(week(o_orderdate) AS INTEGER) AS wk,
-        |  date_trunc('month', o_orderdate) AS mstart,
-        |  o_orderdate + INTERVAL 30 DAY AS plus30,
-        |  date_diff('day', o_orderdate, TIMESTAMP '2000-01-01 00:00:00') AS to2k,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS fmt
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_fn_system" ->
-      """SELECT c_custkey,
-        |  COALESCE(CASE WHEN c_acctbal < 1000 THEN NULL ELSE c_mktsegment END, 'LOW') AS seg,
-        |  IFNULL(CASE WHEN c_custkey % 2 = 0 THEN NULL ELSE c_name END, 'EVEN') AS nm,
-        |  NULLIF(c_mktsegment, 'FURNITURE') AS nf,
-        |  CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE) AS bal_dec,
-        |  CAST(c_custkey AS VARCHAR) AS key_s,
-        |  CAST(trunc(c_acctbal) AS BIGINT) AS bal_l
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(lower(trim(text))) AS digest, min(doc_id) AS keep_id,
-        |       count(*) AS dup_count
-        |FROM documents GROUP BY 1 ORDER BY digest""".stripMargin,
-
-    "q_ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-        |s AS (
-        |  SELECT q.q_id, c.vec_id AS n_id,
-        |    list_sum(list_transform(list_zip(q.qe, c.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cosine
-        |  FROM q, embeddings c),
-        |r AS (SELECT q_id, n_id, cosine,
-        |        CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS INTEGER) AS rnk
-        |      FROM s)
-        |SELECT q_id, n_id, rnk, cosine FROM r WHERE rnk <= 10
-        |ORDER BY q_id, rnk""".stripMargin,
-
-    // IVF with nProbe = nLists is provably the exact ranking (every pair
-    // scored once), so the oracle is the same exact-cosine top-k the
-    // brute-force query uses — equality exercises the assign/route/rerank
-    // plumbing end-to-end.
-    "q_ann_pq" -> pqOracleSql,
-    // all-cells probe of the stored IVFPQ index == adcTopK == the same
-    // closed-form PQ replay (the q_ann_ivfpq trick, from-store edition)
-    "q_ann_ivfpq_store" -> pqOracleSql,
-    // all-cells probe == plain ADC, so IVFADC shares the PQ replay oracle
-    "q_ann_ivfpq" -> pqOracleSql,
-    "q_ann_ivfpq_res" -> pqResidualOracleSql,
-
-    "q_ann_ivf" -> ivfExactOracleSql,
-
-    // Same exact-top-k oracle: probing all 8 stored cells routes every
-    // (query, vector) pair through the persisted index exactly once, so
-    // the store path must reproduce the exact ranking bit-for-bit.
-    "q_ann_ivf_store" -> ivfExactOracleSql,
-
-    "q_text_langid" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(lower(text), '\W+') AS w FROM documents),
-        |s AS (SELECT doc_id,
-        |  len(list_filter(w, x -> x = 'der')) + len(list_filter(w, x -> x = 'und'))
-        |    + len(list_filter(w, x -> x = 'die')) + len(list_filter(w, x -> x = 'ist')) AS s_de,
-        |  len(list_filter(w, x -> x = 'the')) + len(list_filter(w, x -> x = 'and'))
-        |    + len(list_filter(w, x -> x = 'of')) + len(list_filter(w, x -> x = 'is')) AS s_en,
-        |  len(list_filter(w, x -> x = 'el')) + len(list_filter(w, x -> x = 'la'))
-        |    + len(list_filter(w, x -> x = 'que')) + len(list_filter(w, x -> x = 'es')) AS s_es,
-        |  len(list_filter(w, x -> x = 'le')) + len(list_filter(w, x -> x = 'la'))
-        |    + len(list_filter(w, x -> x = 'et')) + len(list_filter(w, x -> x = 'est')) AS s_fr
-        |FROM t)
-        |SELECT doc_id,
-        |  CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
-        |       WHEN s_fr = greatest(s_de, s_en, s_es, s_fr) THEN 'fr'
-        |       WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-        |       WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-        |       ELSE 'de' END AS lang_pred
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "q_text_quality" ->
-      """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(lower(text)), '\s+') AS w,
-        |  CAST(length(text) AS INTEGER) AS nc
-        |FROM documents)
-        |SELECT doc_id, nc AS n_chars_q,
-        |  CAST(len(w) AS INTEGER) AS n_words,
-        |  CAST(nc - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE) / nc AS punct_ratio,
-        |  CAST(nc - len(w) + 1 AS DOUBLE) / len(w) AS mean_word_len,
-        |  CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS distinct_ratio,
-        |  CAST(len(list_filter(w, x -> list_contains(['the','a','and','of','to'], x))) AS DOUBLE) / len(w) AS stopword_ratio
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "q_text_tokens" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Full independent simhash recompute: poly-257 token hash + fmix64
-    // (64-bit wrapping multiply via 32-bit split in HUGEINT), per-bit
-    // votes, 4x16 bands, bucket cap, hamming<=3, drop-id_b survivors —
-    // the same trick that made ngram hash-exact in r6, extended to the
-    // signature arithmetic. Validated equal to the Spark output at sf0.01.
-    "q_dedup_simhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS tok
-        |  FROM documents
-        |), ph AS (
-        |  SELECT doc_id, tok,
-        |    list_reduce(list_prepend(0::HUGEINT,
-        |      [ord(substring(tok, i, 1))::HUGEINT FOR i IN range(1, length(tok)+1)]),
-        |      (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS h0
-        |  FROM toks
-        |), s1 AS ( SELECT doc_id, xor((h0)::UBIGINT, (h0)::UBIGINT >> 33)::HUGEINT AS h0 FROM ph
-        |), s2 AS ( SELECT doc_id, ((((h0) // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + ((h0) % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS h0 FROM s1
-        |), s3 AS ( SELECT doc_id, xor((h0)::UBIGINT, (h0)::UBIGINT >> 33)::HUGEINT AS h0 FROM s2
-        |), s4 AS ( SELECT doc_id, ((((h0) // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + ((h0) % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS h0 FROM s3
-        |), th AS ( SELECT doc_id, xor((h0)::UBIGINT, (h0)::UBIGINT >> 33) AS h FROM s4
-        |), votes AS (
-        |  SELECT doc_id, b.bit, sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM th, (SELECT unnest(range(0, 64)) AS bit) b
-        |  GROUP BY doc_id, b.bit
-        |), sigs0 AS (
-        |  SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::UBIGINT << bit)::HUGEINT ELSE 0::HUGEINT END) AS sig
-        |  FROM votes GROUP BY doc_id
-        |), sigs AS (
-        |  SELECT d.doc_id, coalesce(s.sig, 0::HUGEINT)::UBIGINT AS sig
-        |  FROM documents d LEFT JOIN sigs0 s USING (doc_id)
-        |), banded AS (
-        |  SELECT doc_id, sig, b.band_idx, (sig >> (b.band_idx*16)) & 65535 AS band_val
-        |  FROM sigs, (SELECT unnest(range(0,4)) AS band_idx) b
-        |), capped AS (
-        |  SELECT * FROM banded QUALIFY count(*) OVER (PARTITION BY band_idx, band_val) <= 1000
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig_a, b.sig AS sig_b
-        |  FROM capped a JOIN capped b USING (band_idx, band_val)
-        |  WHERE a.doc_id < b.doc_id
-        |), close_pairs AS (
-        |  SELECT id_a, id_b FROM pairs WHERE bit_count(xor(sig_a, sig_b)) <= 3
-        |)
-        |SELECT d.doc_id FROM documents d
-        |WHERE NOT EXISTS (SELECT 1 FROM close_pairs c WHERE c.id_b = d.doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Full independent MinHash+LSH recompute (r7): gram strings ->
-    // poly-257+fmix64 hashes, 64 permutation values fmix64(h ^ k_p)
-    // with k_p = fmix64((42<<32)+p), per-doc UNSIGNED min, 16 bands of 4
-    // grouped by value tuple (graft groups by an FNV fold of the same
-    // tuple — equal modulo FNV collisions), 1000-cap buckets, candidate
-    // pairs verified by gram-string Jaccard >= 0.7, survivors = docs
-    // never on the id_b side. The fmix64 wrapping multiplies run as
-    // 32-bit-split HUGEINT stages (g*/k*/v* CTE chains), like simhash.
-    "q_dedup_minhash" ->
-      raw"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
-        |  FROM documents
-        |), gramt AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) = 0 THEN []
-        |         WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |         ELSE list_distinct([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)])
-        |    END AS grams
-        |  FROM toks
-        |), dg AS ( SELECT doc_id, unnest(grams) AS g FROM gramt
-        |), g0 AS (
-        |  SELECT doc_id, g,
-        |    list_reduce(list_prepend(0::HUGEINT,
-        |      [ord(substring(g, i, 1))::HUGEINT FOR i IN range(1, length(g)+1)]),
-        |      (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS x
-        |  FROM dg
-        |), g1 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g0
-        |), g2 AS ( SELECT doc_id, g, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g1
-        |), g3 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g2
-        |), g4 AS ( SELECT doc_id, g, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g3
-        |), gh AS ( SELECT doc_id, xor(x::UBIGINT, x::UBIGINT >> 33) AS h FROM g4
-        |), k0 AS ( SELECT p, (180388626432 + p)::HUGEINT AS x FROM (SELECT unnest(range(0, 64)) AS p)
-        |), k1 AS ( SELECT p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM k0
-        |), k2 AS ( SELECT p, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM k1
-        |), k3 AS ( SELECT p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM k2
-        |), k4 AS ( SELECT p, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM k3
-        |), keys AS ( SELECT p, xor(x::UBIGINT, x::UBIGINT >> 33) AS key FROM k4
-        |), v0 AS ( SELECT gh.doc_id, keys.p, xor(gh.h, keys.key)::HUGEINT AS x FROM gh, keys
-        |), v1 AS ( SELECT doc_id, p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM v0
-        |), v2 AS ( SELECT doc_id, p, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM v1
-        |), v3 AS ( SELECT doc_id, p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM v2
-        |), v4 AS ( SELECT doc_id, p, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM v3
-        |), vh AS ( SELECT doc_id, p, xor(x::UBIGINT, x::UBIGINT >> 33) AS v FROM v4
-        |), sigv0 AS ( SELECT doc_id, p, min(v) AS v FROM vh GROUP BY doc_id, p
-        |), sigv AS (
-        |  SELECT d.doc_id, pr.p, coalesce(s.v, 18446744073709551615::UBIGINT) AS v
-        |  FROM documents d
-        |  CROSS JOIN (SELECT unnest(range(0, 64)) AS p) pr
-        |  LEFT JOIN sigv0 s ON s.doc_id = d.doc_id AND s.p = pr.p
-        |), bands AS (
-        |  SELECT doc_id, p // 4 AS band_idx,
-        |         string_agg(v::VARCHAR, ',' ORDER BY p) AS band_val
-        |  FROM sigv GROUP BY doc_id, p // 4
-        |), capped AS (
-        |  SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY band_idx, band_val) <= 1000
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM capped a JOIN capped b USING (band_idx, band_val)
-        |  WHERE a.doc_id < b.doc_id
-        |), pairs AS (
-        |  SELECT c.id_a, c.id_b
-        |  FROM cand c
-        |  JOIN gramt ga ON ga.doc_id = c.id_a
-        |  JOIN gramt gb ON gb.doc_id = c.id_b
-        |  WHERE CASE
-        |    WHEN len(ga.grams) = 0 AND len(gb.grams) = 0 THEN 1.0
-        |    WHEN len(ga.grams) = 0 OR len(gb.grams) = 0 THEN 0.0
-        |    ELSE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
-        |         / (len(ga.grams) + len(gb.grams) - len(list_intersect(ga.grams, gb.grams)))
-        |    END >= 0.7
-        |)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT id_b FROM pairs)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Full independent embedding recompute (r7): token -> poly-257+fmix64
-    // hash, bucket = h mod 16 (unsigned), sign = top bit, float
-    // normalization replayed exactly (counts are integers exact in
-    // FLOAT; the double product of two floats is exact, so casting it
-    // to FLOAT equals graft's single-step float multiply; trunc(x*2^20)
-    // is rounding-mode-free both sides).
-    "q_embedding" ->
-      raw"""WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents
-        |), tok AS ( SELECT doc_id, unnest(toks) AS tok FROM t
-        |), p0 AS (
-        |  SELECT doc_id,
-        |    list_reduce(list_prepend(0::HUGEINT,
-        |      [ord(substring(tok, i, 1))::HUGEINT FOR i IN range(1, length(tok)+1)]),
-        |      (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS x
-        |  FROM tok
-        |), p1 AS ( SELECT doc_id, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM p0
-        |), p2 AS ( SELECT doc_id, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM p1
-        |), p3 AS ( SELECT doc_id, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM p2
-        |), p4 AS ( SELECT doc_id, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM p3
-        |), th AS ( SELECT doc_id, xor(x::UBIGINT, x::UBIGINT >> 33) AS h FROM p4
-        |), bkt AS (
-        |  SELECT doc_id, (h % 16)::BIGINT AS idx,
-        |         CASE WHEN h < 9223372036854775808::UBIGINT THEN 1 ELSE -1 END AS sgn
-        |  FROM th
-        |), cnt AS ( SELECT doc_id, idx, sum(sgn)::BIGINT AS c FROM bkt GROUP BY doc_id, idx
-        |), grid AS (
-        |  SELECT d.doc_id, i.idx FROM documents d, (SELECT unnest(range(0, 16)) AS idx) i
-        |), vec0 AS (
-        |  SELECT g.doc_id, g.idx, coalesce(cnt.c, 0) AS c
-        |  FROM grid g LEFT JOIN cnt ON cnt.doc_id = g.doc_id AND cnt.idx = g.idx
-        |), nrm AS (
-        |  SELECT doc_id, sum(CAST(c AS DOUBLE)*CAST(c AS DOUBLE)) AS norm FROM vec0 GROUP BY doc_id
-        |), invf AS (
-        |  SELECT doc_id, CASE WHEN norm > 0 THEN CAST(CAST(1.0/sqrt(norm) AS FLOAT) AS DOUBLE) ELSE 0.0 END AS inv
-        |  FROM nrm
-        |), comp AS (
-        |  SELECT v.doc_id, v.idx,
-        |         CAST(CAST(CAST(v.c AS DOUBLE) * i.inv AS FLOAT) AS DOUBLE) AS x
-        |  FROM vec0 v JOIN invf i USING (doc_id)
-        |), per_doc AS (
-        |  SELECT doc_id, list(x ORDER BY idx) AS xs FROM comp GROUP BY doc_id
-        |)
-        |SELECT doc_id,
-        |  CAST(16 AS INTEGER) AS dim,
-        |  round(sqrt(list_reduce(list_prepend(0.0, [v*v FOR v IN xs]), (a,b) -> a+b)), 6) AS l2,
-        |  md5(array_to_string([CAST(trunc(v*1048576.0) AS BIGINT)::VARCHAR FOR v IN xs], ',')) AS sig
-        |FROM per_doc
-        |ORDER BY doc_id""".stripMargin,
-
-    // name/flag columns are closed-form in the row index; the murmur-int
-    // aggregates are golden values pinned from the deterministic
-    // generator (fixed rows=1000, seed=42 — scale-independent).
-    "q_fake_source" ->
-      """SELECT CAST(1000 AS BIGINT) AS n,
-        |  (SELECT md5(string_agg(name, ',' ORDER BY name))
-        |   FROM (SELECT 'name_' || CAST(unnest(range(0, 1000)) AS VARCHAR) AS name)) AS name_digest,
-        |  CAST(500 AS BIGINT) AS n_flag_true,
-        |  true AS num_in_range,
-        |  CAST(502552199 AS BIGINT) AS num_sum,
-        |  CAST(1375 AS BIGINT) AS num_min,
-        |  CAST(997170 AS BIGINT) AS num_max""".stripMargin,
-
-    // Packing invariants are closed-form over documents: n_docs/id_sum
-    // pin exact coverage, sum_tokens pins conservation, n_oversized is
-    // the >budget doc count (each is isolated 1:1 by construction), and
-    // the two booleans must hold for any correct FFD packing.
-    "q_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, len(string_split_regex(trim(text), '\s+')) AS toks
-        |  FROM documents)
-        |SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(toks) AS BIGINT) AS sum_tokens,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(CASE WHEN toks > 512 THEN 1 ELSE 0 END) AS BIGINT) AS n_oversized,
-        |  true AS within_budget,
-        |  true AS bin_count_ok
-        |FROM t""".stripMargin,
-
-    "q_chunk_docs" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, toks,
-        |         greatest(1, CAST(ceil((len(toks) - 128) / 96.0) AS INTEGER) + 1) AS n_chunks
-        |  FROM t
-        |), e AS (
-        |  SELECT doc_id, toks, unnest(range(0, CAST(n_chunks AS BIGINT))) AS i
-        |  FROM c
-        |)
-        |SELECT doc_id,
-        |       CAST(i AS INTEGER) AS chunk_idx,
-        |       array_to_string(toks[i * 96 + 1 : i * 96 + 128], ' ') AS chunk_text,
-        |       CAST(len(toks[i * 96 + 1 : i * 96 + 128]) AS INTEGER) AS n_chunk_tokens
-        |FROM e
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q_quality_filter" ->
-      """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(lower(text)), '\s+') AS w,
-        |  CAST(length(text) AS INTEGER) AS nc
-        |FROM documents)
-        |SELECT doc_id, CAST(len(w) AS INTEGER) AS n_words,
-        |  CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS distinct_ratio
-        |FROM t
-        |WHERE len(w) >= 20
-        |  AND CAST(len(list_distinct(w)) AS DOUBLE) / len(w) >= 0.4
-        |  AND CAST(nc - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE) / nc <= 0.1
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_topk_per_source" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS INTEGER) AS n_words
-        |FROM documents),
-        |r AS (SELECT source, doc_id, n_words,
-        |  CAST(row_number() OVER (PARTITION BY source ORDER BY n_words DESC, doc_id) AS INTEGER) AS rnk
-        |FROM t)
-        |SELECT source, rnk, doc_id, n_words FROM r WHERE rnk <= 5
-        |ORDER BY source, rnk""".stripMargin,
-
-    "q_text_fingerprint" ->
-      """SELECT doc_id,
-        |  substr(md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')), 1, 16) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_window_agg" ->
-      """SELECT epoch_ns(date_trunc('hour', ts)) // 1000000000 AS bucket_start,
-        |  event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2
-        |ORDER BY bucket_start, event_type""".stripMargin,
-
-    // each event belongs to exactly two 1-hour/30-minute-slide windows:
-    // its 30-minute bucket start, and that start minus 1800 s
-    "q_window_sliding" ->
-      """SELECT (epoch_ns(ts) // 1800000000000) * 1800 - o.off AS bucket_start,
-        |  event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events CROSS JOIN (VALUES (CAST(0 AS BIGINT)), (CAST(1800 AS BIGINT))) o(off)
-        |GROUP BY 1, 2
-        |ORDER BY bucket_start, event_type""".stripMargin,
-
-    // identical aggregation to q_window_agg — the stream path (socket in,
-    // append-mode windows, socket out) must reproduce the batch result
-    "q_stream_socket" ->
-      """SELECT epoch_ns(date_trunc('hour', ts)) // 1000000000 AS bucket_start,
-        |  event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2
-        |ORDER BY bucket_start, event_type""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, l.value,
-        |  epoch_us(r.ts) AS purchase_ts_us, r.value AS purchase_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    // the streaming as-of reaches the same result as the batch operator
-    // through the real readStream path — identical oracle
-    "q_stream_asof" ->
-      """SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, l.value,
-        |  epoch_us(r.ts) AS purchase_ts_us, r.value AS purchase_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    "q_asof_tolerance" ->
-      """WITH a AS (
-        |  SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
-        |    epoch_us(r.ts) AS pts, r.value AS pval
-        |  FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |  ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-        |    ON l.user_id = r.user_id AND l.ts >= r.ts)
-        |SELECT event_id, user_id, ts_us,
-        |  CASE WHEN pts >= ts_us - 3600000000 THEN pts END AS purchase_ts_us,
-        |  CASE WHEN pts >= ts_us - 3600000000 THEN pval END AS purchase_value
-        |FROM a ORDER BY event_id""".stripMargin,
-
-    "q_range_join" ->
-      """WITH p AS (SELECT event_id, epoch_us(ts) AS t_us, event_type FROM events),
-        |     a AS (SELECT event_id AS anchor_id, epoch_us(ts) AS a_us FROM events
-        |           WHERE event_type = 'error' AND value > 250)
-        |SELECT p.event_id AS event_id, anchor_id, event_type, t_us AS ts_us
-        |FROM p JOIN a ON t_us >= a_us - 300000000 AND t_us <= a_us + 300000000
-        |ORDER BY event_id, anchor_id""".stripMargin,
-
-    "q_range_overlap" ->
-      """WITH e AS (SELECT event_id AS err_id, epoch_us(ts) AS s,
-        |             epoch_us(ts) + 600000000 AS t
-        |           FROM events WHERE event_type = 'error' AND value > 100),
-        |     g AS (SELECT event_id AS sig_id, epoch_us(ts) AS s,
-        |             epoch_us(ts) + 600000000 AS t
-        |           FROM events WHERE event_type = 'signup' AND value > 100)
-        |SELECT err_id, sig_id FROM e JOIN g ON e.s <= g.t AND g.s <= e.t
-        |ORDER BY err_id, sig_id""".stripMargin,
-
-    "q_stream_interval_join" ->
-      """WITH c AS (SELECT user_id, event_id AS click_id, epoch_us(ts) AS c_us
-        |           FROM events WHERE event_type = 'click'),
-        |     b AS (SELECT user_id, event_id AS buy_id, epoch_us(ts) AS b_us, value
-        |           FROM events WHERE event_type = 'purchase')
-        |SELECT c.user_id AS user_id, click_id, buy_id, value
-        |FROM c JOIN b ON c.user_id = b.user_id
-        |  AND b_us >= c_us AND b_us <= c_us + 900000000
-        |ORDER BY c.user_id, click_id, buy_id""".stripMargin,
-
-    "q_scd2" ->
-      """WITH ch AS (
-        |  SELECT n_nationkey, n_name, CAST(1 AS BIGINT) AS ord, '+I' AS k FROM nation
-        |  UNION ALL
-        |  SELECT n_nationkey, n_name || '_v2', 2, '+U' FROM nation WHERE n_nationkey % 2 = 0
-        |  UNION ALL
-        |  SELECT n_nationkey, NULL, 3, '-D' FROM nation WHERE n_nationkey % 5 = 0
-        |  UNION ALL
-        |  SELECT n_nationkey, n_name || '_v3', 4, '+I' FROM nation WHERE n_nationkey % 10 = 0),
-        |led AS (
-        |  SELECT *, lead(ord) OVER (PARTITION BY n_nationkey ORDER BY ord) AS valid_to
-        |  FROM ch)
-        |SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  ord AS valid_from, valid_to, valid_to IS NULL AS is_current
-        |FROM led WHERE k <> '-D'
-        |ORDER BY n_nationkey, valid_from""".stripMargin,
-
-    // closed-form SCD2 history of the captureStream mutation script:
-    // every seeded key opens v1 (+I snapshot); region-0 keys get a v2
-    // ('_x' update); keys >= 20 end with no current version (delete);
-    // three inserted keys open a current v1. Version index replaces the
-    // runtime CL_SEQ ord (normalized in the Spark query the same way).
-    "q_stream_scd2" ->
-      """WITH v1 AS (
-        |  SELECT n_nationkey, n_name, n_regionkey, 1 AS version,
-        |    (n_regionkey <> 0 AND n_nationkey < 20) AS is_current
-        |  FROM nation),
-        |v2 AS (
-        |  SELECT n_nationkey, n_name || '_x' AS n_name, n_regionkey, 2 AS version,
-        |    (n_nationkey < 20) AS is_current
-        |  FROM nation WHERE n_regionkey = 0),
-        |ins AS (
-        |  SELECT k AS n_nationkey, 'new_' || k AS n_name, r AS n_regionkey,
-        |    1 AS version, TRUE AS is_current
-        |  FROM (VALUES (100, 0), (101, 1), (102, 2)) AS t(k, r))
-        |SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey,
-        |  CAST(version AS BIGINT) AS version, is_current
-        |FROM (SELECT * FROM v1 UNION ALL SELECT * FROM v2 UNION ALL SELECT * FROM ins)
-        |ORDER BY n_nationkey, version""".stripMargin,
-
-    "q_ts_prune" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
-        |  AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_stream_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) AS tsn FROM events),
-        |x AS (SELECT user_id, tsn,
-        |  CASE WHEN lag(tsn) OVER w IS NULL THEN 1
-        |       WHEN tsn - lag(tsn) OVER w > 1800000000000 THEN 1 ELSE 0 END AS nw
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn)),
-        |y AS (SELECT user_id, tsn,
-        |  SUM(nw) OVER (PARTITION BY user_id ORDER BY tsn ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM x)
-        |SELECT user_id, count(*) AS n_events,
-        |       min(tsn) // 1000 AS start_us, max(tsn) // 1000 AS end_us
-        |FROM y GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) AS tsn FROM events),
-        |x AS (SELECT user_id, tsn,
-        |  CASE WHEN lag(tsn) OVER w IS NULL THEN 1
-        |       WHEN tsn - lag(tsn) OVER w > 1800000000000 THEN 1 ELSE 0 END AS nw
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn)),
-        |y AS (SELECT user_id, tsn,
-        |  CAST(SUM(nw) OVER (PARTITION BY user_id ORDER BY tsn ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM x)
-        |SELECT user_id, session_idx, count(*) AS n_events,
-        |       min(tsn) // 1000 AS start_us, max(tsn) // 1000 AS end_us
-        |FROM y GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin,
-
-    "q_src_csv" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q_src_json" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-
-    "q_src_text_delim" ->
-      "SELECT s_suppkey, s_name, s_acctbal FROM supplier ORDER BY s_suppkey",
-
-    "q_src_xml" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q_src_binary" ->
-      """SELECT 'doc_' || doc_id || '.txt' AS relativePath,
-        |       octet_length(encode(text)) AS n_bytes,
-        |       md5(text) AS digest
-        |FROM documents WHERE doc_id % 50 = 0 ORDER BY relativePath""".stripMargin,
-
-    "q_src_avro" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_fmt_protobuf" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_src_orc" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_src_excel" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-
-    "q_src_jdbc" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q_cdc_debezium" ->
-      """SELECT o_orderkey, o_totalprice, '+I' AS __row_kind FROM orders WHERE o_orderstatus = 'F'
-        |UNION ALL SELECT o_orderkey, o_totalprice - 1.0, '-U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '+U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '-D' FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_orderkey, __row_kind""".stripMargin,
-
-    "q_cdc_maxwell" ->
-      """SELECT o_orderkey, o_totalprice, '+I' AS __row_kind FROM orders WHERE o_orderstatus = 'F'
-        |UNION ALL SELECT o_orderkey, o_totalprice - 1.0, '-U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '+U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '-D' FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_orderkey, __row_kind""".stripMargin,
-
-    "q_cdc_ogg" ->
-      """SELECT o_orderkey, o_totalprice, '+I' AS __row_kind FROM orders WHERE o_orderstatus = 'F'
-        |UNION ALL SELECT o_orderkey, o_totalprice - 1.0, '-U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '+U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '-D' FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_orderkey, __row_kind""".stripMargin,
-
-    "q_snapshot_diff" ->
-      """WITH o AS (SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |             CAST(n_regionkey AS BIGINT) AS n_regionkey FROM nation),
-        |n AS (
-        |  SELECT n_nationkey,
-        |    CASE WHEN n_nationkey % 2 = 0 THEN n_name || '_v2' ELSE n_name END AS n_name,
-        |    n_regionkey
-        |  FROM o WHERE n_nationkey % 5 <> 0
-        |  UNION ALL
-        |  SELECT * FROM (VALUES (CAST(100 AS BIGINT), 'new_100', CAST(0 AS BIGINT)),
-        |    (CAST(101 AS BIGINT), 'new_101', CAST(1 AS BIGINT)),
-        |    (CAST(102 AS BIGINT), 'new_102', CAST(2 AS BIGINT)))
-        |    AS t(n_nationkey, n_name, n_regionkey))
-        |SELECT coalesce(o.n_nationkey, n.n_nationkey) AS n_nationkey,
-        |  coalesce(o.n_nationkey IS NOT NULL AND n.n_nationkey IS NOT NULL
-        |    AND o.n_name IS DISTINCT FROM n.n_name, false) AS n_name_changed,
-        |  coalesce(o.n_nationkey IS NOT NULL AND n.n_nationkey IS NOT NULL
-        |    AND o.n_regionkey IS DISTINCT FROM n.n_regionkey, false) AS n_regionkey_changed,
-        |  CASE WHEN o.n_nationkey IS NULL THEN 'added'
-        |       WHEN n.n_nationkey IS NULL THEN 'removed'
-        |       WHEN o.n_name IS DISTINCT FROM n.n_name
-        |         OR o.n_regionkey IS DISTINCT FROM n.n_regionkey THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM o FULL OUTER JOIN n ON o.n_nationkey = n.n_nationkey
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q_cdc_write" ->
-      """WITH ch AS (
-        |  SELECT n_nationkey, n_name, '+I' AS k FROM nation
-        |  UNION ALL SELECT n_nationkey, n_name, '-U' FROM nation WHERE n_nationkey % 2 = 0
-        |  UNION ALL SELECT n_nationkey, n_name || '_v2', '+U' FROM nation WHERE n_nationkey % 2 = 0
-        |  UNION ALL SELECT n_nationkey, n_name, '-D' FROM nation WHERE n_nationkey % 5 = 0),
-        |r AS (SELECT k IN ('+I', '+U') AS ins,
-        |        '{"n_nationkey":' || n_nationkey || ',"n_name":"' || n_name || '"}' AS rj
-        |      FROM ch),
-        |u AS (
-        |  SELECT 'debezium' AS fmt, CASE WHEN ins
-        |      THEN '{"after":' || rj || ',"op":"c"}'
-        |      ELSE '{"before":' || rj || ',"op":"d"}' END AS json FROM r
-        |  UNION ALL
-        |  SELECT 'canal', '{"data":[' || rj || '],"type":' ||
-        |    CASE WHEN ins THEN '"INSERT"' ELSE '"DELETE"' END || '}' FROM r
-        |  UNION ALL
-        |  SELECT 'maxwell', '{"data":' || rj || ',"type":' ||
-        |    CASE WHEN ins THEN '"insert"' ELSE '"delete"' END || '}' FROM r
-        |  UNION ALL
-        |  SELECT 'ogg', CASE WHEN ins
-        |      THEN '{"after":' || rj || ',"op_type":"I"}'
-        |      ELSE '{"before":' || rj || ',"op_type":"D"}' END FROM r)
-        |SELECT fmt, json FROM u ORDER BY fmt, json""".stripMargin,
-
-    // q_cdc_v2 reaches the same end state through the DSv2 stream
-    "q_cdc_v2" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
-        |  CASE WHEN n_regionkey = 0 THEN n_name || '_x' ELSE n_name END AS n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |FROM nation WHERE n_nationkey < 20
-        |UNION ALL
-        |SELECT * FROM (VALUES (CAST(100 AS BIGINT), 'new_100', CAST(0 AS BIGINT)),
-        |  (CAST(101 AS BIGINT), 'new_101', CAST(1 AS BIGINT)),
-        |  (CAST(102 AS BIGINT), 'new_102', CAST(2 AS BIGINT)))
-        |  AS t(n_nationkey, n_name, n_regionkey)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q_cdc_capture" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
-        |  CASE WHEN n_regionkey = 0 THEN n_name || '_x' ELSE n_name END AS n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |FROM nation WHERE n_nationkey < 20
-        |UNION ALL
-        |SELECT * FROM (VALUES (CAST(100 AS BIGINT), 'new_100', CAST(0 AS BIGINT)),
-        |  (CAST(101 AS BIGINT), 'new_101', CAST(1 AS BIGINT)),
-        |  (CAST(102 AS BIGINT), 'new_102', CAST(2 AS BIGINT)))
-        |  AS t(n_nationkey, n_name, n_regionkey)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q_deadletter" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus
-        |FROM orders WHERE o_orderkey % 13 <> 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_compact" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(l_orderkey) AS BIGINT) AS sum_okey,
-        |  CAST(64 AS BIGINT) AS files_before, CAST(1 AS BIGINT) AS files_after
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_src_archive" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q_src_http" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q_src_socket" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q_jdbc_upsert" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
-        |  CASE WHEN n_regionkey = 1 THEN n_name || '_v2' ELSE n_name END AS n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |FROM nation
-        |UNION ALL
-        |SELECT * FROM (VALUES (CAST(200 AS BIGINT), 'new_200', CAST(1 AS BIGINT)),
-        |  (CAST(201 AS BIGINT), 'new_201', CAST(2 AS BIGINT)),
-        |  (CAST(202 AS BIGINT), 'new_202', CAST(3 AS BIGINT)))
-        |  AS t(n_nationkey, n_name, n_regionkey)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q_file_sink" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q_save_modes" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey,
-        |  CAST(2 AS BIGINT) AS copies
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q_assert_sink" ->
-      """WITH m AS (SELECT count(*) AS n,
-        |  sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS nulls,
-        |  min(l_quantity) AS minq, max(l_quantity) AS maxq,
-        |  min(length(l_returnflag)) AS minl, max(length(l_returnflag)) AS maxl,
-        |  sum(CASE WHEN NOT regexp_matches(l_returnflag, '^[ANR]$')
-        |      THEN 1 ELSE 0 END) AS badre
-        |  FROM lineitem)
-        |SELECT * FROM (
-        |  SELECT CAST(0 AS INTEGER) AS rule_no, 'row_count_between' AS rule,
-        |    '' AS field, CAST(n AS DOUBLE) AS measured,
-        |    n BETWEEN 1 AND 10000000000 AS passed FROM m
-        |  UNION ALL SELECT 1, 'not_null', 'l_orderkey', CAST(nulls AS DOUBLE),
-        |    nulls = 0 FROM m
-        |  UNION ALL SELECT 2, 'min_value', 'l_quantity', CAST(minq AS DOUBLE),
-        |    minq >= 0.0 FROM m
-        |  UNION ALL SELECT 3, 'max_value', 'l_quantity', CAST(maxq AS DOUBLE),
-        |    maxq <= 60.0 FROM m
-        |  UNION ALL SELECT 4, 'min_length', 'l_returnflag', CAST(minl AS DOUBLE),
-        |    minl >= 1 FROM m
-        |  UNION ALL SELECT 5, 'max_length', 'l_returnflag', CAST(maxl AS DOUBLE),
-        |    maxl <= 1 FROM m
-        |  UNION ALL SELECT 6, 'matches_regex', 'l_returnflag', CAST(badre AS DOUBLE),
-        |    badre = 0 FROM m
-        |  UNION ALL SELECT 7, 'field_type', 'l_quantity', CAST(NULL AS DOUBLE),
-        |    TRUE FROM m
-        |) ORDER BY rule_no""".stripMargin,
-
-    "q_cdc_apply" ->
-      """SELECT * FROM (
-        |  SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
-        |    CASE WHEN n_nationkey % 3 = 0 THEN upper(n_name) ELSE n_name END AS n_name,
-        |    CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |  FROM nation WHERE n_nationkey % 5 <> 0
-        |  UNION ALL
-        |  SELECT CAST(n_nationkey + 1000 AS BIGINT), n_name || '_new',
-        |    CAST(n_regionkey AS BIGINT)
-        |  FROM nation WHERE n_regionkey = 0
-        |) ORDER BY n_nationkey""".stripMargin,
-
-    "q_cdc_evolve" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey,
-        |  CASE WHEN n_nationkey % 2 = 0 THEN CAST(n_nationkey * 100 AS BIGINT)
-        |       ELSE NULL END AS n_population
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q_zeta_udf" ->
-      """SELECT c_custkey,
-        |  reverse(c_name) || '_' || CAST(length(c_name) AS VARCHAR) AS rev_name
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q_stream_dedup" ->
-      """SELECT event_id, user_id, event_type, value, epoch_ns(ts) // 1000 AS ts_us
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_stream_static_join" ->
-      """SELECT event_id, user_id, n_name
-        |FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
-        |ORDER BY event_id""".stripMargin,
-
-    "q_stream_window" ->
-      """SELECT epoch_ns(date_trunc('hour', ts)) // 1000000000 AS bucket_start,
-        |  event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2
-        |ORDER BY bucket_start, event_type""".stripMargin,
-
-    "q_pipeline_streaming" ->
-      """SELECT event_id, user_id, upper(event_type) AS etype, value
-        |FROM events WHERE event_type = 'click'
-        |ORDER BY event_id""".stripMargin,
-
-    // the STATEFUL config-runner leg reproduces the q_window_agg batch
-    // aggregation exactly (append-mode windows flushed by the sentinel)
-    "q_pipeline_streaming_windowed" ->
-      """SELECT epoch_ns(date_trunc('hour', ts)) // 1000000000 AS bucket_start,
-        |  event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2
-        |ORDER BY bucket_start, event_type""".stripMargin,
-
-    "q_pipeline" ->
-      """SELECT c_custkey, REPLACE(UPPER(c_mktsegment), 'MACHINERY', 'MACH') AS seg, c_acctbal
-        |FROM customer WHERE c_acctbal > 5000
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_pipeline_hocon" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // the config-path sessionization reproduces q_sessionize's closed-form
-    // sessions exactly (same 30-minute gap, same ns->us projection)
-    "q_pipeline_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) AS tsn FROM events),
-        |x AS (SELECT user_id, tsn,
-        |  CASE WHEN lag(tsn) OVER w IS NULL THEN 1
-        |       WHEN tsn - lag(tsn) OVER w > 1800000000000 THEN 1 ELSE 0 END AS nw
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsn)),
-        |y AS (SELECT user_id, tsn,
-        |  CAST(SUM(nw) OVER (PARTITION BY user_id ORDER BY tsn ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM x)
-        |SELECT user_id, session_idx, count(*) AS n_events,
-        |       min(tsn) // 1000 AS start_us, max(tsn) // 1000 AS end_us
-        |FROM y GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin,
-
-    "q_table_rename" ->
-      "SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey",
-
-    "q_interval_join" ->
-      """WITH c AS (SELECT user_id, event_id AS click_id, epoch_ns(ts) // 1000 AS c_us
-        |           FROM events WHERE event_type = 'click'),
-        |     b AS (SELECT user_id, event_id AS buy_id, epoch_ns(ts) // 1000 AS b_us, value
-        |           FROM events WHERE event_type = 'purchase')
-        |SELECT c.user_id AS user_id, click_id, buy_id, value
-        |FROM c JOIN b ON c.user_id = b.user_id
-        |  AND b_us >= c_us AND b_us <= c_us + 3600000000
-        |ORDER BY c.user_id, click_id, buy_id""".stripMargin,
-
-    "q_gopher_filter" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_words,
-        |    CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE) AS n_nonspace,
-        |    len(regexp_extract_all(text, '#|\.\.\.|…')) AS n_sym,
-        |    len(list_filter(string_split_regex(trim(text), '\s+'),
-        |        w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha,
-        |    len(string_split(text, chr(10))) AS n_lines,
-        |    len(list_distinct(string_split(text, chr(10)))) AS n_dlines
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(n_words AS INTEGER) AS g_n_words,
-        |  n_nonspace / n_words AS g_mean_word_len,
-        |  CAST(n_sym AS DOUBLE) / n_words AS g_symbol_ratio,
-        |  CAST(n_alpha AS DOUBLE) / n_words AS g_alpha_word_ratio,
-        |  1.0 - CAST(n_dlines AS DOUBLE) / n_lines AS g_dupline_ratio,
-        |  (n_words BETWEEN 50 AND 100000)
-        |    AND (n_nonspace / n_words BETWEEN 3.0 AND 10.0)
-        |    AND (CAST(n_sym AS DOUBLE) / n_words <= 0.1)
-        |    AND (CAST(n_alpha AS DOUBLE) / n_words >= 0.8)
-        |    AND (1.0 - CAST(n_dlines AS DOUBLE) / n_lines <= 0.3) AS gopher_pass
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    "q_profile" ->
-      """SELECT * FROM (
-        |  SELECT 'o_custkey' AS "column", count(*) AS n_rows,
-        |    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-        |    min(o_custkey::VARCHAR) AS min_str, max(o_custkey::VARCHAR) AS max_str
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderkey', count(*),
-        |    CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |    min(o_orderkey::VARCHAR), max(o_orderkey::VARCHAR)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*),
-        |    CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |    min(o_orderstatus), max(o_orderstatus)
-        |  FROM orders
-        |) ORDER BY "column"""".stripMargin,
-
-    "q_hll_sketch" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_cms_heavyhitters" -> cmsOracleSql,
-
-    "q_gopher_repetition" ->
-      """WITH p AS (
-        |  SELECT doc_id, replace(text, ' a ', chr(10) || chr(10)) AS page
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(page, '\n\s*\n'),
-        |      q -> length(trim(q)) > 0) AS paras,
-        |    string_split_regex(trim(page), '\s+') AS words,
-        |    CAST(length(regexp_replace(page, '\s+', '', 'g')) AS DOUBLE) AS chars
-        |  FROM p),
-        |para AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(paras) > 0 THEN
-        |      CAST(len(paras) - len(list_distinct(paras)) AS DOUBLE) / len(paras)
-        |      ELSE 0.0 END AS r_dup_para_frac,
-        |    CASE WHEN list_sum(list_transform(paras, q -> length(q))) > 0 THEN
-        |      CAST(coalesce(list_sum(list_transform(
-        |          list_filter(paras, q -> len(list_filter(paras, x -> x = q)) > 1),
-        |          q -> length(q))), 0) AS DOUBLE)
-        |        / list_sum(list_transform(paras, q -> length(q)))
-        |      ELSE 0.0 END AS r_dup_para_char_frac
-        |  FROM w),
-        |g2 AS (
-        |  SELECT doc_id, any_value(chars) AS chars, g, count(*) AS c
-        |  FROM (SELECT doc_id, chars,
-        |          unnest(list_transform(range(1, len(words)),
-        |            i -> words[i] || ' ' || words[i + 1])) AS g
-        |        FROM w WHERE len(words) >= 2)
-        |  GROUP BY doc_id, g),
-        |top2 AS (
-        |  SELECT doc_id,
-        |    CAST(max(c * length(replace(g, ' ', ''))) AS DOUBLE) / any_value(chars)
-        |      AS r_top_2gram_char_frac
-        |  FROM g2 GROUP BY doc_id),
-        |g5 AS (
-        |  SELECT doc_id, any_value(chars) AS chars, g, count(*) AS c
-        |  FROM (SELECT doc_id, chars,
-        |          unnest(list_transform(range(1, len(words) - 3),
-        |            i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2] || ' ' ||
-        |                 words[i+3] || ' ' || words[i+4])) AS g
-        |        FROM w WHERE len(words) >= 5)
-        |  GROUP BY doc_id, g),
-        |dup5 AS (
-        |  SELECT doc_id,
-        |    LEAST(CAST(sum(CASE WHEN c > 1 THEN c * length(replace(g, ' ', ''))
-        |                        ELSE 0 END) AS DOUBLE) / any_value(chars), 1.0)
-        |      AS r_dup_5gram_char_frac
-        |  FROM g5 GROUP BY doc_id)
-        |SELECT w.doc_id, para.r_dup_para_frac, para.r_dup_para_char_frac,
-        |  coalesce(top2.r_top_2gram_char_frac, 0.0) AS r_top_2gram_char_frac,
-        |  coalesce(dup5.r_dup_5gram_char_frac, 0.0) AS r_dup_5gram_char_frac,
-        |  (para.r_dup_para_frac <= 0.30 AND para.r_dup_para_char_frac <= 0.20
-        |   AND coalesce(top2.r_top_2gram_char_frac, 0.0) <= 0.20
-        |   AND coalesce(dup5.r_dup_5gram_char_frac, 0.0) <= 0.15) AS repetition_pass
-        |FROM w
-        |LEFT JOIN para ON w.doc_id = para.doc_id
-        |LEFT JOIN top2 ON w.doc_id = top2.doc_id
-        |LEFT JOIN dup5 ON w.doc_id = dup5.doc_id
-        |ORDER BY w.doc_id""".stripMargin,
-
-    "q_sample_hash" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE substr(md5(doc_id::VARCHAR || 'graft'), 1, 8) < '40000000'
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_vocab_topk" ->
-      """SELECT word, count(*) AS n
-        |FROM (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS word
-        |      FROM documents)
-        |GROUP BY word ORDER BY n DESC, word LIMIT 1000""".stripMargin,
-
-    "q_ngram_counts" ->
-      """WITH t AS (
-        |  SELECT string_split_regex(trim(lower(text)), '\s+') AS toks FROM documents
-        |), e AS (
-        |  SELECT toks, unnest(range(1, len(toks))) AS i FROM t WHERE len(toks) >= 2
-        |)
-        |SELECT toks[i] || ' ' || toks[i + 1] AS gram, count(*) AS n
-        |FROM e GROUP BY gram ORDER BY n DESC, gram LIMIT 500""".stripMargin,
-
-    "q_bpe_encode" -> bpeOracleSql,
-    "q_bpe_bytes" -> bpeBytesOracleSql,
-    "q_bpe_roundtrip" ->
-      "SELECT doc_id, ' ' || text AS restored FROM documents ORDER BY doc_id",
-    "q_token_budget" -> tokenBudgetOracleSql,
-
-    "q_line_dedup" ->
-      """WITH p AS (
-        |  SELECT doc_id, string_split(replace(text, ' a ', chr(10)), chr(10)) AS ls
-        |  FROM documents)
-        |SELECT doc_id, array_to_string(
-        |    list_filter(ls, (x, i) -> list_position(ls, x) = i), chr(10)) AS cleaned
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    "q_anomaly" ->
-      """WITH s AS (
-        |  SELECT event_type, count(value) AS n,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sm,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sq
-        |  FROM events GROUP BY event_type)
-        |SELECT event_id, e.event_type AS event_type, value,
-        |  CASE WHEN sq / n - (sm / n) * (sm / n) > 0
-        |       THEN (value - sm / n) / sqrt(sq / n - (sm / n) * (sm / n)) END AS z,
-        |  abs(CASE WHEN sq / n - (sm / n) * (sm / n) > 0
-        |       THEN (value - sm / n) / sqrt(sq / n - (sm / n) * (sm / n)) END) > 3.0
-        |    AS is_anomaly
-        |FROM events e JOIN s USING (event_type)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_rolling_features" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t, value FROM events)
-        |SELECT event_id, user_id,
-        |  count(*) OVER win AS roll_n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER win AS DOUBLE) AS roll_sum,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER win AS DOUBLE)
-        |    / count(value) OVER win AS roll_mean,
-        |  lag(value) OVER ord AS prev_value,
-        |  t - lag(t) OVER ord AS gap_us
-        |FROM e
-        |WINDOW win AS (PARTITION BY user_id ORDER BY t, event_id
-        |               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-        |       ord AS (PARTITION BY user_id ORDER BY t, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_ccnet_buckets" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-        |  FROM documents
-        |), b AS (
-        |  SELECT doc_id, w[i] || ' ' || w[i + 1] AS bg
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        |        FROM t WHERE len(w) >= 2)
-        |), c12 AS (
-        |  SELECT bg, count(*) AS c12 FROM b GROUP BY bg
-        |), c1 AS (
-        |  SELECT split_part(bg, ' ', 1) AS w1, count(*) AS c1 FROM b GROUP BY 1
-        |), p AS (
-        |  SELECT bg, (c12.c12 * 1000000) // c1.c1 AS pp
-        |  FROM c12 JOIN c1 ON split_part(bg, ' ', 1) = w1
-        |), s AS (
-        |  SELECT doc_id, count(*) AS n_bigrams,
-        |    CAST(sum(pp) AS BIGINT) AS score_sum,
-        |    CAST(sum(pp) AS DOUBLE) / count(*) AS score_avg
-        |  FROM b JOIN p USING (bg) GROUP BY doc_id)
-        |SELECT doc_id, n_bigrams, score_sum, score_avg,
-        |  CAST(ntile(3) OVER (ORDER BY score_avg DESC, doc_id) AS INTEGER) AS bucket
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "q_lm_likelihood" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-        |  FROM documents
-        |), b AS (
-        |  SELECT doc_id, w[i] || ' ' || w[i + 1] AS bg
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        |        FROM t WHERE len(w) >= 2)
-        |), c12 AS (
-        |  SELECT bg, count(*) AS c12 FROM b GROUP BY bg
-        |), c1 AS (
-        |  SELECT split_part(bg, ' ', 1) AS w1, count(*) AS c1 FROM b GROUP BY 1
-        |), p AS (
-        |  SELECT bg, (c12.c12 * 1000000) // c1.c1 AS pp
-        |  FROM c12 JOIN c1 ON split_part(bg, ' ', 1) = w1
-        |)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |  CAST(sum(pp) AS BIGINT) AS score_sum,
-        |  CAST(sum(pp) AS DOUBLE) / count(*) AS score_avg
-        |FROM b JOIN p USING (bg)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_inverted_index" ->
-      raw"""WITH t AS (
-        |  SELECT DISTINCT doc_id, term FROM (
-        |    SELECT doc_id, unnest(list_filter(
-        |      string_split_regex(trim(lower(text)), '\s+'), w -> w <> '')) AS term
-        |    FROM documents))
-        |SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |  array_to_string(list_sort(list(doc_id)), ',') AS postings
-        |FROM t GROUP BY term HAVING count(*) <= 400
-        |ORDER BY term""".stripMargin,
-
-    // Relative cap: ceil(4N/5) in exact integer arithmetic from the same
-    // corpus the index is built over — replays the in-plan threshold at
-    // any scale.
-    "q_inverted_index_rel" ->
-      raw"""WITH t AS (
-        |  SELECT DISTINCT doc_id, term FROM (
-        |    SELECT doc_id, unnest(list_filter(
-        |      string_split_regex(trim(lower(text)), '\s+'), w -> w <> '')) AS term
-        |    FROM documents))
-        |SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |  array_to_string(list_sort(list(doc_id)), ',') AS postings
-        |FROM t GROUP BY term
-        |HAVING count(*) <= (SELECT (count(*) * 4 + 4) // 5 FROM documents)
-        |ORDER BY term""".stripMargin,
-
-    // BM25 recomputed in exact integer arithmetic: reciprocal-df idf
-    // scaled 1e6, tf saturation as cleared rationals over avgdl scaled
-    // 1000 — every term of the formula is integer division on BIGINTs,
-    // so both engines produce identical longs (the bigramLikelihood
-    // contract).
-    "q_bm25" ->
-      raw"""WITH d AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(trim(lower(text)), '\s+'), w -> w <> '') AS t
-        |  FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM d),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |        CAST((sum(dl) * 1000) // count(*) AS BIGINT) AS avgdl
-        |      FROM dl),
-        |tf AS (
-        |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS term FROM d)
-        |  WHERE term IN ('spark', 'join', 'window')
-        |  GROUP BY doc_id, term),
-        |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS dft FROM tf GROUP BY term),
-        |sc AS (
-        |  SELECT tf.doc_id,
-        |    CAST(((s.n * 1000000) // dfq.dft) *
-        |      ((22 * s.avgdl * tf.tf * 1000) //
-        |       (10 * s.avgdl * tf.tf + 3 * s.avgdl + 9000 * dl.dl)) AS BIGINT) AS sco
-        |  FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN s)
-        |SELECT d.doc_id, CAST(coalesce(sum(sco), 0) AS BIGINT) AS bm25_scaled,
-        |  CAST(count(sco) AS BIGINT) AS n_terms_matched
-        |FROM d LEFT JOIN sc ON d.doc_id = sc.doc_id
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    "q_length_percentiles" ->
-      raw"""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  quantile_cont(n, 0.25) AS p25, quantile_cont(n, 0.5) AS p50,
-        |  quantile_cont(n, 0.75) AS p75, max(n) AS mx
-        |FROM (SELECT source,
-        |        CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS n
-        |      FROM documents)
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q_source_stats" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |       CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS sum_tokens
-        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin,
-
-    // n-gram Jaccard dedup recomputed over gram STRINGS in DuckDB (graft
-    // hashes the same grams — equal modulo collisions), with the same
-    // recall contract: candidate pairs share >= 1 gram with doc-frequency
-    // <= indexDocFreq(100), verification is exact Jaccard over the FULL
-    // distinct gram sets, survivors drop every id_b of a qualifying pair
-    "q_dedup_ngram" ->
-      raw"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
-        |  FROM documents
-        |),
-        |gramt AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) = 0 THEN []
-        |         WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |         ELSE list_distinct([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)])
-        |    END AS grams
-        |  FROM toks
-        |),
-        |doc_grams AS (SELECT doc_id, unnest(grams) AS g FROM gramt),
-        |sizes AS (SELECT doc_id, len(grams) AS n FROM gramt),
-        |df AS (SELECT g, count(*) AS d FROM doc_grams GROUP BY g),
-        |indexable AS (SELECT g FROM df WHERE d <= 100),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM doc_grams a JOIN indexable USING (g) JOIN doc_grams b USING (g)
-        |  WHERE a.doc_id < b.doc_id
-        |),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-        |  FROM doc_grams a JOIN doc_grams b USING (g)
-        |  WHERE a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |),
-        |pairs AS (
-        |  SELECT cand.id_a, cand.id_b
-        |  FROM cand
-        |  JOIN common ON common.id_a = cand.id_a AND common.id_b = cand.id_b
-        |  JOIN sizes sa ON sa.doc_id = cand.id_a
-        |  JOIN sizes sb ON sb.doc_id = cand.id_b
-        |  WHERE CAST(common.c AS DOUBLE) / (sa.n + sb.n - common.c) >= 0.5
-        |)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT id_b FROM pairs)
-        |ORDER BY doc_id""".stripMargin,
-
-    // C4 three-sentence-span dedup recomputed over span STRINGS in
-    // DuckDB (graft groups the same spans by xxhash64 — equal modulo
-    // collisions). RE2 has no lookbehind, so the sentence split
-    // `(?<=[.!?])\s+` is emulated by marking boundaries with \x01; Java
-    // split drops trailing empties, hence the empty-string filter.
-    "q_c4_span_dedup" ->
-      raw"""WITH sents AS (
-        |  SELECT doc_id,
-        |    list_filter(
-        |      string_split(regexp_replace(replace(text, ' a ', '. '), '([.!?])\s+', '\1' || chr(1), 'g'), chr(1)),
-        |      x -> x <> '') AS s
-        |  FROM documents
-        |),
-        |spans AS (
-        |  SELECT doc_id, i - 1 AS span_idx, s[i] || s[i+1] || s[i+2] AS span
-        |  FROM sents, unnest(range(1, len(s) - 1)) AS t(i)
-        |  WHERE len(s) >= 3
-        |),
-        |marked AS (
-        |  SELECT doc_id, span_idx,
-        |         row_number() OVER (PARTITION BY span ORDER BY doc_id, span_idx) AS rn,
-        |         count(*) OVER (PARTITION BY span) AS n
-        |  FROM spans
-        |),
-        |removed AS (
-        |  SELECT DISTINCT doc_id, span_idx + k AS sent_idx
-        |  FROM marked, unnest([0,1,2]) AS u(k)
-        |  WHERE n > 1 AND rn > 1
-        |),
-        |rem_lists AS (
-        |  SELECT doc_id, list_sort(list(DISTINCT sent_idx)) AS removed
-        |  FROM removed GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CAST(len(d.s) AS INTEGER) AS n_sentences,
-        |  CAST(len(CASE WHEN r.removed IS NULL THEN d.s
-        |       ELSE list_filter(d.s, (x, i) -> NOT list_contains(r.removed, i - 1)) END) AS INTEGER) AS n_kept_sentences,
-        |  CAST(coalesce(len(r.removed), 0) AS INTEGER) AS n_removed,
-        |  md5(coalesce(array_to_string(CASE WHEN r.removed IS NULL THEN d.s
-        |       ELSE list_filter(d.s, (x, i) -> NOT list_contains(r.removed, i - 1)) END, ' '), '')) AS clean_digest
-        |FROM sents d LEFT JOIN rem_lists r USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // 13-token shingle overlap recomputed as STRINGS in DuckDB (graft
-    // compares murmur hashes of the same grams — equal modulo hash
-    // collisions); same tokenizer semantics (lower, split \W+, drop
-    // empties), same short-doc whole-text gram rule
-    "q_decontaminate_fuzzy" ->
-      raw"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
-        |  FROM documents
-        |),
-        |gramt AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) = 0 THEN []
-        |         WHEN len(t) < 13 THEN [array_to_string(t, ' ')]
-        |         ELSE [array_to_string(t[i:i+12], ' ') FOR i IN range(1, len(t) - 11)]
-        |    END AS grams
-        |  FROM toks
-        |),
-        |dg AS (SELECT DISTINCT doc_id, unnest(grams) AS g FROM gramt),
-        |bench AS (SELECT DISTINCT g FROM dg WHERE doc_id % 50 = 0),
-        |tot AS (SELECT doc_id, count(*) AS n_grams FROM dg GROUP BY doc_id),
-        |m AS (SELECT doc_id, count(*) AS n_matched
-        |      FROM dg JOIN bench USING (g) GROUP BY doc_id)
-        |SELECT t.doc_id AS doc_id, n_grams,
-        |  coalesce(n_matched, 0) AS n_matched,
-        |  CAST(coalesce(n_matched, 0) AS DOUBLE) / n_grams AS overlap
-        |FROM tot t LEFT JOIN m USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS qe, label AS ql
-        |           FROM embeddings WHERE vec_id < 5),
-        |s AS (
-        |  SELECT q.q_id, c.vec_id AS n_id,
-        |    list_sum(list_transform(list_zip(q.qe, c.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cosine
-        |  FROM q, embeddings c WHERE c.label <> q.ql),
-        |r AS (SELECT q_id, n_id, cosine,
-        |        CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS INTEGER) AS rnk
-        |      FROM s)
-        |SELECT q_id, n_id, rnk, cosine FROM r WHERE rnk <= 10
-        |ORDER BY q_id, rnk""".stripMargin,
-
-    "q_group_split" ->
-      """SELECT doc_id, source, CASE
-        |    WHEN substr(md5(source || 'graft'), 1, 8) < 'cccccccc' THEN 'train'
-        |    WHEN substr(md5(source || 'graft'), 1, 8) < 'e6666666' THEN 'valid'
-        |    ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_decontaminate" ->
-      raw"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
-        |  FROM documents
-        |),
-        |gramt AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) = 0 THEN []
-        |         WHEN len(t) < 13 THEN [array_to_string(t, ' ')]
-        |         ELSE [array_to_string(t[i:i+12], ' ') FOR i IN range(1, len(t) - 11)]
-        |    END AS grams
-        |  FROM toks
-        |),
-        |bench_grams AS (
-        |  SELECT DISTINCT unnest(grams) AS g FROM gramt WHERE doc_id % 50 = 0
-        |),
-        |contaminated AS (
-        |  SELECT DISTINCT d.doc_id
-        |  FROM (SELECT doc_id, unnest(grams) AS g FROM gramt) d
-        |  JOIN bench_grams b USING (g)
-        |)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Bloom decontamination rebuilt BIT-FOR-BIT (r7): 13-gram strings →
-    // poly-257+fmix64 longs (the g-chain), then Spark's
-    // Murmur3_x86_32.hashLong replayed in unsigned mod-2^32 arithmetic
-    // (mixK1 is seed-independent — computed once per word; the h1/h2
-    // chains differ only in seed), then the BloomFilterImplV2 probe
-    // schedule c_i = h1·(2^31-1) + i·h2 in signed 64-bit with bit-flip
-    // on negative, mod the word-padded bit size. A doc is dropped iff
-    // ≥1 of its grams probes all-bits-set against the union of benchmark
-    // gram bits — including any false positives, which is what makes
-    // this exact rather than "equals the exact pass at this scale".
-    // Probe-level equivalence proven by BloomProbeReplicaSpec.
-    "q_decontaminate_bloom" ->
-      raw"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
-        |  FROM documents
-        |), gramt AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) = 0 THEN []
-        |         WHEN len(t) < 13 THEN [array_to_string(t, ' ')]
-        |         ELSE list_distinct([array_to_string(t[i:i+12], ' ') FOR i IN range(1, len(t) - 11)])
-        |    END AS grams
-        |  FROM toks
-        |), dg AS ( SELECT doc_id, unnest(grams) AS g FROM gramt
-        |), g0 AS (
-        |  SELECT doc_id, g,
-        |    list_reduce(list_prepend(0::HUGEINT,
-        |      [ord(substring(g, i, 1))::HUGEINT FOR i IN range(1, length(g)+1)]),
-        |      (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS x
-        |  FROM dg
-        |), g1 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g0
-        |), g2 AS ( SELECT doc_id, g, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g1
-        |), g3 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g2
-        |), g4 AS ( SELECT doc_id, g, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g3
-        |), gh AS ( SELECT doc_id, xor(x::UBIGINT, x::UBIGINT >> 33) AS h FROM g4
-        |), hset AS ( SELECT DISTINCT h FROM gh
-        |), ma AS ( SELECT h, h % 4294967296::UBIGINT AS lo, h // 4294967296::UBIGINT AS hi FROM hset
-        |), mb AS ( SELECT h, (lo * 3432918353::UBIGINT) % 4294967296::UBIGINT AS klo, (hi * 3432918353::UBIGINT) % 4294967296::UBIGINT AS khi FROM ma
-        |), mc AS ( SELECT h, ((klo * 32768::UBIGINT) % 4294967296::UBIGINT) + (klo // 131072::UBIGINT) AS klo, ((khi * 32768::UBIGINT) % 4294967296::UBIGINT) + (khi // 131072::UBIGINT) AS khi FROM mb
-        |), md AS ( SELECT h, (klo * 461845907::UBIGINT) % 4294967296::UBIGINT AS klo, (khi * 461845907::UBIGINT) % 4294967296::UBIGINT AS khi FROM mc
-        |), h1a AS ( SELECT h, klo, khi, klo AS x FROM md
-        |), h1b AS ( SELECT h, klo, khi, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h1a
-        |), h1c AS ( SELECT h, klo, khi, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h1b
-        |), h1d AS ( SELECT h, klo, khi, xor(x, khi) AS x FROM h1c
-        |), h1e AS ( SELECT h, klo, khi, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h1d
-        |), h1f AS ( SELECT h, klo, khi, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h1e
-        |), h1g AS ( SELECT h, klo, khi, xor(x, 8::UBIGINT) AS x FROM h1f
-        |), h1h AS ( SELECT h, klo, khi, xor(x, x // 65536::UBIGINT) AS x FROM h1g
-        |), h1i AS ( SELECT h, klo, khi, (x * 2246822507::UBIGINT) % 4294967296::UBIGINT AS x FROM h1h
-        |), h1j AS ( SELECT h, klo, khi, xor(x, x // 8192::UBIGINT) AS x FROM h1i
-        |), h1k AS ( SELECT h, klo, khi, (x * 3266489909::UBIGINT) % 4294967296::UBIGINT AS x FROM h1j
-        |), h1z AS ( SELECT h, klo, khi, xor(x, x // 65536::UBIGINT) AS h1 FROM h1k
-        |), h2a AS ( SELECT h, khi, h1, xor(h1, klo) AS x FROM h1z
-        |), h2b AS ( SELECT h, khi, h1, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h2a
-        |), h2c AS ( SELECT h, khi, h1, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h2b
-        |), h2d AS ( SELECT h, khi, h1, xor(x, khi) AS x FROM h2c
-        |), h2e AS ( SELECT h, khi, h1, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h2d
-        |), h2f AS ( SELECT h, khi, h1, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h2e
-        |), h2g AS ( SELECT h, khi, h1, xor(x, 8::UBIGINT) AS x FROM h2f
-        |), h2h AS ( SELECT h, khi, h1, xor(x, x // 65536::UBIGINT) AS x FROM h2g
-        |), h2i AS ( SELECT h, khi, h1, (x * 2246822507::UBIGINT) % 4294967296::UBIGINT AS x FROM h2h
-        |), h2j AS ( SELECT h, khi, h1, xor(x, x // 8192::UBIGINT) AS x FROM h2i
-        |), h2k AS ( SELECT h, khi, h1, (x * 3266489909::UBIGINT) % 4294967296::UBIGINT AS x FROM h2j
-        |), hh AS ( SELECT h,
-        |    CASE WHEN h1 >= 2147483648::UBIGINT THEN h1::BIGINT - 4294967296 ELSE h1::BIGINT END AS h1s,
-        |    CASE WHEN xor(x, x // 65536::UBIGINT) >= 2147483648::UBIGINT
-        |         THEN xor(x, x // 65536::UBIGINT)::BIGINT - 4294967296
-        |         ELSE xor(x, x // 65536::UBIGINT)::BIGINT END AS h2s
-        |  FROM h2k
-        |), pos AS (
-        |  SELECT h, CASE WHEN h1s * 2147483647 + i.i * h2s < 0
-        |                 THEN -(h1s * 2147483647 + i.i * h2s) - 1
-        |                 ELSE h1s * 2147483647 + i.i * h2s END % $bloomOracleBitSize AS pos
-        |  FROM hh, (SELECT unnest(range(1, $bloomOracleK + 1)) AS i) i
-        |), bset AS (
-        |  SELECT DISTINCT pos FROM pos
-        |  WHERE h IN (SELECT DISTINCT h FROM gh WHERE doc_id % 50 = 0)
-        |), cmiss AS (
-        |  SELECT DISTINCT p.h FROM pos p LEFT JOIN bset b USING (pos) WHERE b.pos IS NULL
-        |), contaminated AS (
-        |  SELECT DISTINCT doc_id FROM gh WHERE h NOT IN (SELECT h FROM cmiss)
-        |)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Substring dedup replayed end-to-end (r7): per-token poly-257+fmix64
-    // hashes (th-chain), k=10-gram FNV-1a-style folds over token hashes
-    // (64-bit wrapping multiply via 32-bit split), robust winnowing
-    // (Schleimer et al. 2003) as a sliding-window unsigned min with
-    // rightmost tie-break (w=21; short docs take one window), global
-    // first-winner anchors (min (doc,pos) per hash, bucket cap 1000),
-    // greedy left/right extension on token hashes, the same-doc
-    // keep-one-period adjustment, distinct cut ranges, and the in-place
-    // token rebuild with an md5 digest. Matches the Spark output
-    // bit-for-bit at sf0.01 including fully-emptied docs.
-    "q_substring_dedup" ->
-      raw"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
-        |  FROM documents
-        |), th0 AS (
-        |  SELECT doc_id, t,
-        |    [list_reduce(list_prepend(0::HUGEINT,
-        |       [ord(substring(tok, i, 1))::HUGEINT FOR i IN range(1, length(tok)+1)]),
-        |       (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) FOR tok IN t] AS h
-        |  FROM toks
-        |), th1 AS ( SELECT doc_id, t, [xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT FOR x IN h] AS h FROM th0
-        |), th2 AS ( SELECT doc_id, t, [(((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT FOR x IN h] AS h FROM th1
-        |), th3 AS ( SELECT doc_id, t, [xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT FOR x IN h] AS h FROM th2
-        |), th4 AS ( SELECT doc_id, t, [(((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT FOR x IN h] AS h FROM th3
-        |), tokh AS ( SELECT doc_id, t, [xor(x::UBIGINT, x::UBIGINT >> 33) FOR x IN h] AS th FROM th4
-        |), graml AS (
-        |  SELECT doc_id, th,
-        |    CASE WHEN len(th) - 10 + 1 <= 0 THEN []
-        |    ELSE [list_reduce(list_prepend(14695981039346656037::HUGEINT, th[i+1:i+10]),
-        |            (acc, hh) -> (((xor(acc::UBIGINT, hh)::HUGEINT // 4294967296) * 1099511628211::HUGEINT) % 4294967296 * 4294967296
-        |                          + (xor(acc::UBIGINT, hh)::HUGEINT % 4294967296) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)::UBIGINT
-        |          FOR i IN range(0, len(th) - 10 + 1)] END AS g
-        |  FROM tokh
-        |), grams AS (
-        |  SELECT doc_id, i.i AS p, g[i.i + 1] AS gh
-        |  FROM graml, (SELECT unnest(range(0, 100000)) AS i) i
-        |  WHERE i.i < len(g)
-        |), ndoc AS ( SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id
-        |), wmin AS (
-        |  SELECT doc_id, p, min(gh) OVER (PARTITION BY doc_id ORDER BY p ROWS BETWEEN 20 PRECEDING AND CURRENT ROW) AS m
-        |  FROM grams
-        |), sel_long AS (
-        |  SELECT w.doc_id, max(q.p) AS pos
-        |  FROM wmin w JOIN grams q ON q.doc_id = w.doc_id AND q.p BETWEEN w.p - 20 AND w.p AND q.gh = w.m
-        |  WHERE w.p >= 20
-        |  GROUP BY w.doc_id, w.p
-        |), sel_short AS (
-        |  SELECT g.doc_id, max(g.p) AS pos
-        |  FROM grams g JOIN ndoc nd USING (doc_id)
-        |  WHERE nd.n < 21 AND g.gh = (SELECT min(gh) FROM grams x WHERE x.doc_id = g.doc_id)
-        |  GROUP BY g.doc_id
-        |), anchors AS (
-        |  SELECT DISTINCT s.doc_id AS doc, s.pos, g.gh AS hash
-        |  FROM (SELECT * FROM sel_long UNION SELECT * FROM sel_short) s
-        |  JOIN grams g ON g.doc_id = s.doc_id AND g.p = s.pos
-        |), winners AS (
-        |  SELECT hash, doc AS w_doc, pos AS w_pos FROM (
-        |    SELECT hash, doc, pos,
-        |      row_number() OVER (PARTITION BY hash ORDER BY doc, pos) AS rk,
-        |      count(*) OVER (PARTITION BY hash) AS cnt
-        |    FROM anchors)
-        |  WHERE rk = 1 AND cnt > 1 AND cnt <= 1000
-        |), cand AS (
-        |  SELECT a.doc, a.pos, w.w_doc, w.w_pos
-        |  FROM anchors a JOIN winners w USING (hash)
-        |  WHERE NOT (a.doc = w.w_doc AND a.pos = w.w_pos)
-        |), ext AS (
-        |  SELECT c.doc, c.pos, c.w_doc, c.w_pos,
-        |    coalesce(( SELECT min(j.j) FROM (SELECT unnest(range(1, least(c.pos, c.w_pos) + 1)) AS j) j
-        |               WHERE tl.th[c.pos - j.j + 1] <> tw.th[c.w_pos - j.j + 1] ) - 1,
-        |             least(c.pos, c.w_pos)) AS ml,
-        |    coalesce(( SELECT min(j.j) FROM (SELECT unnest(range(0, least(len(tl.th) - c.pos - 10, len(tw.th) - c.w_pos - 10))) AS j) j
-        |               WHERE tl.th[c.pos + 10 + j.j + 1] <> tw.th[c.w_pos + 10 + j.j + 1] ),
-        |             least(len(tl.th) - c.pos - 10, len(tw.th) - c.w_pos - 10)) AS mr
-        |  FROM cand c
-        |  JOIN tokh tl ON tl.doc_id = c.doc
-        |  JOIN tokh tw ON tw.doc_id = c.w_doc
-        |), spans AS (
-        |  SELECT doc, pos, w_doc, w_pos, pos - ml AS s0, (pos + 10 + mr) - (pos - ml) AS len
-        |  FROM ext
-        |), ranges1 AS (
-        |  SELECT DISTINCT doc,
-        |    CASE WHEN doc = w_doc THEN greatest(s0, (s0 + len) - (pos - w_pos)) ELSE s0 END AS s,
-        |    s0 + len AS e
-        |  FROM spans
-        |  WHERE len >= 30
-        |), cut AS (
-        |  SELECT doc, list([s, e]) AS cuts
-        |  FROM ranges1 WHERE e > s GROUP BY doc
-        |), rebuilt AS (
-        |  SELECT t.doc_id, len(t.t) AS n_tokens,
-        |    CASE WHEN c.cuts IS NULL THEN t.t
-        |         ELSE list_filter(t.t, (x, i) ->
-        |           len(list_filter(c.cuts, r -> i - 1 >= r[1] AND i - 1 < r[2])) = 0) END AS kept
-        |  FROM tokh t LEFT JOIN cut c ON c.doc = t.doc_id
-        |)
-        |SELECT doc_id, CAST(n_tokens AS INTEGER) AS n_tokens,
-        |  CAST(len(kept) AS INTEGER) AS n_kept_tokens,
-        |  CAST(n_tokens - len(kept) AS INTEGER) AS n_removed_tokens,
-        |  md5(coalesce(array_to_string(kept, ' '), '')) AS clean_digest
-        |FROM rebuilt
-        |ORDER BY doc_id""".stripMargin,
-
-    // a full default fraction compares against 'g' (above any hex
-    // bucket), mirroring fractionToHex's keeps-everything contract
-    "q_mixture_sample" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE substr(md5(doc_id::VARCHAR || 'mix'), 1, 8) <
-        |  CASE source WHEN 'src0' THEN '1999999a'
-        |              WHEN 'src1' THEN '80000000'
-        |              WHEN 'src2' THEN '40000000'
-        |              ELSE 'g' END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_sample_k_per_group" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY substr(md5(doc_id::VARCHAR || 'quota'), 1, 8), doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 10 ORDER BY doc_id""".stripMargin,
-
-    "q_split_assign" ->
-      """SELECT CASE
-        |    WHEN substr(md5(doc_id::VARCHAR || 'graft'), 1, 8) < 'cccccccc' THEN 'train'
-        |    WHEN substr(md5(doc_id::VARCHAR || 'graft'), 1, 8) < 'e6666666' THEN 'valid'
-        |    ELSE 'test' END AS split,
-        |  count(*) AS n
-        |FROM documents GROUP BY 1 ORDER BY split""".stripMargin,
-
-    "q_salted_join" ->
-      """SELECT p_brand,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-
-    "q_zorder" ->
-      """SELECT event_id,
-        |  CAST(list_sum(list_transform(range(0, 21), i ->
-        |    (((user_id >> i) & 1) << (2 * i)) |
-        |    (((CAST(floor(value) AS BIGINT) >> i) & 1) << (2 * i + 1))
-        |  )) AS BIGINT) AS z_val
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_zorder3" ->
-      """SELECT event_id,
-        |  CAST(list_sum(list_transform(range(0, 15), i ->
-        |    (((user_id >> i) & 1) << (3 * i)) |
-        |    (((CAST(floor(value) AS BIGINT) >> i) & 1) << (3 * i + 1)) |
-        |    ((((epoch_us(ts) // 86400000000) >> i) & 1) << (3 * i + 2))
-        |  )) AS BIGINT) AS z_val
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_merge_into" ->
-      """WITH m AS (
-        |  SELECT n_nationkey,
-        |    CASE WHEN n_nationkey % 2 = 0 THEN n_name || '_u' ELSE n_name END AS n_name,
-        |    n_regionkey
-        |  FROM nation WHERE n_nationkey % 5 <> 0
-        |  UNION ALL
-        |  SELECT n_nationkey + 1000, 'ins_' || n_name, n_regionkey
-        |  FROM nation WHERE n_nationkey % 7 = 0)
-        |SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |FROM m ORDER BY n_nationkey""".stripMargin,
-
-    "q_colocated_join" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_c4_filter" ->
-      """WITH p AS (
-        |  SELECT doc_id, replace(text, ' a ', '.' || chr(10)) AS page
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    string_split(page, chr(10)) AS lines,
-        |    list_filter(string_split(page, chr(10)),
-        |      l -> regexp_matches(l, '[.!?"'']\s*$')
-        |       AND len(string_split_regex(trim(l), '\s+')) >= 5
-        |       AND NOT regexp_matches(lower(l), '\bjavascript\b')) AS kept,
-        |    contains(lower(page), 'lorem ipsum') AS has_lorem,
-        |    contains(page, '{') AS has_brace
-        |  FROM p),
-        |g AS (
-        |  SELECT doc_id, len(lines) AS n_lines, len(kept) AS n_kept,
-        |    coalesce(array_to_string(kept, chr(10)), '') AS ktext,
-        |    has_lorem, has_brace
-        |  FROM f)
-        |SELECT doc_id,
-        |  CAST(n_lines AS INTEGER) AS c4_n_lines,
-        |  CAST(n_kept AS INTEGER) AS c4_n_kept_lines,
-        |  CAST(len(regexp_extract_all(ktext, '[.!?]')) AS INTEGER) AS c4_n_sentences,
-        |  has_lorem AS c4_has_lorem,
-        |  has_brace AS c4_has_brace,
-        |  md5(ktext) AS c4_clean_digest,
-        |  (len(regexp_extract_all(ktext, '[.!?]')) >= 3
-        |    AND NOT has_lorem AND NOT has_brace) AS c4_keep
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "q_multimodal" ->
-      """SELECT doc_id,
-        |  CAST(unnest(range(0, doc_id % 4 + 1, 2)) AS INTEGER) AS frame_idx,
-        |  CAST(doc_id % 16 + 1 AS INTEGER) AS width,
-        |  CAST(doc_id % 8 + 1 AS INTEGER) AS height
-        |FROM documents ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // Golden-vector oracle: decoded-media digests depend only on
-    // doc_id % 16 (the synthesis parameters); values were computed once
-    // from the real decode paths and pinned (JDK codecs are deterministic).
-    "q_media_decode" ->
-      """WITH g(m, png_digest, jpg_digest, wav_digest, avi_digest) AS (VALUES
-        |(0, '693e9af84d3dfcc71e640e005bdc5e2e', '693e9af84d3dfcc71e640e005bdc5e2e', '7807427774d5b35604f5ae4c65b35282', '11b461f55c17e4c67be9d2917bfd08d8'),
-        |(1, 'e17158222aec6d466e5121e14e23ce83', '9a131a557b238e3cacbfb9f087219556', '3bf1b7aafd8f643584e3f8de7c0af80a', '341df35866add2820a89a0bea50c4731'),
-        |(2, '612d0b2f6e8252229cce58dc1516e483', '36602677cebc5ac661fcf525c3e82988', '5774314ac21bd3d4e2ce597ef36a33bf', '462ebd78b254244d48a74a4d43ef9f47'),
-        |(3, '98daf3ea7c45a824dc6e44e23821eca8', '27a0c7852819c5d4c497ec6030cb0458', '9a79d547e39273c7cb733870ec325467', '5bf46d72b516199f0c6ea9ba2ef67fd6'),
-        |(4, 'b1a531aaec0f4c404a07f6f34ae9d1be', 'aa66e23c41f25d71b1555a1ac56c4c53', 'b46c5afa6798acb2c0b67e9a4a163932', 'a910ea2b4f7d42c1ca53de69aff21039'),
-        |(5, 'c44b7f54a868eb0e91c4f9665af6e87f', '456c91d421b0807af73043f747fc4488', 'ba7e60b9cae9612c4c0be0f2ef598f05', 'b56e7b1ea97df29f700a56193bcaf7b7'),
-        |(6, 'acc7104aac5cff6b2d7156b9f5cce0cf', '4a6b0f5af859c0f9c4e503303f2829a9', 'ef88f63c505d55ad37962ad1eb0b0bc9', 'e68161ead0246dd6617680a986752ed6'),
-        |(7, 'a7f9a666f6dd4ca64e0aeba1a548ffcf', '7fad4f81788a4935a3aae082af17f7ac', 'ffd50b0746a48bf92f57b82466bdab9f', '34e6420e8f48ee14f7ce1283f2841387'),
-        |(8, '612d0b2f6e8252229cce58dc1516e483', 'bd70d170931174b57871abb381359ed0', '5774314ac21bd3d4e2ce597ef36a33bf', '2fd5076441bb4c3a68f3d22416b393e2'),
-        |(9, '3902df23397646bcf5388d56bcf8cb52', '37d20efbae4308882f77ee133f0493b9', 'b7d3face5899332fa7dce18890567c52', '7422b33617c51305a64e9bc7430e6440'),
-        |(10, '3685de7ce759dde8eb3d62973bf9e573', '6ab9f8bd6a651c7f93e8b97157cf1187', '91027d0f77d6ddf4727822ba3cf62257', '287d30e38104ea40723d762fa7ea338f'),
-        |(11, '2a249bf3874d7a911f80153884de96d4', '8561759fb315a1db02c6ef72ecd475a5', '4de920044bbbb85e84ecd9429ca5cede', '12fd6da7806473c32070efd9b800cd29'),
-        |(12, '3a6c747bb7bfad6dffd8e6dc33e72735', 'caefd885ad23441d2bdf02908649a497', '4c1ceb63c15571cd0475c14eeafc85f6', '32f082c50f31f34ef3fd36b3b44bc4c9'),
-        |(13, '5d371212bded5c731dc9b0e9afe4c5bf', '2b86541ca9a8f1c160704c8588915b59', '0b156c94be64de76358a3c5a6dae8567', 'e8f8025f0584adbafe086494be7969be'),
-        |(14, 'a9310e413fe17b896e499e2613c86d21', '0b8a65fc1e2ff89bda0fd3c6df89edf5', '682cb6c0edd157fbf80b67e4534d179e', 'aa3b4cc7e06fd76d9b5509bb48e3f4b8'),
-        |(15, '64d29ef5647de0558890fb0ae8fa8cdc', 'b179911ddfb52f155969cddb6a581567', '04b7373a7261d0a5fb6c4d23e6035529', '3d15184fa2426434ab8f5d61284c6ecd'))
-        |SELECT d.doc_id, g.png_digest, g.jpg_digest, g.wav_digest,
-        |  CAST((d.doc_id % 16 + 1) * (d.doc_id % 8 + 1) * 10 AS INTEGER) AS wav_frames,
-        |  g.avi_digest, CAST(3 AS INTEGER) AS avi_frames
-        |FROM documents d JOIN g ON d.doc_id % 16 = g.m
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Full independent dHash near-dup recompute: the closed-form 9x8 gray
-    // pixels, 64 right-neighbor comparisons, maxHamming+1=11 pigeonhole
-    // bands (same i*64/11 offset arithmetic as Dedup.imageNearDupPairs),
-    // 1000-cap buckets, hamming<=10 verify, greedy id_b drop.
-    "q_image_neardup" -> {
-      val bandRows = (0 until 11).map { i =>
-        val off = i * 64 / 11
-        val width = (i + 1) * 64 / 11 - off
-        s"($i, $off, ${(1L << width) - 1})"
-      }.mkString(", ")
-      raw"""WITH px AS (
-        |  SELECT d.doc_id, i.i,
-        |    ((i.i*i.i*3 + i.i*((d.doc_id//2) % 97) + (d.doc_id//2)*11) % 256
-        |      + CASE WHEN d.doc_id % 2 = 1 AND (i.i*7 + d.doc_id//2) % 13 = 0 THEN 5 ELSE 0 END) % 256 AS v
-        |  FROM documents d, (SELECT unnest(range(0, 72)) AS i) i
-        |), grid AS (
-        |  SELECT r.r, c.c FROM (SELECT unnest(range(0, 8)) AS r) r, (SELECT unnest(range(0, 8)) AS c) c
-        |), sigs AS (
-        |  SELECT p0.doc_id,
-        |    sum(CASE WHEN p1.v > p0.v THEN (1::UBIGINT << (g.r*8 + g.c))::HUGEINT ELSE 0::HUGEINT END)::UBIGINT AS sig
-        |  FROM grid g
-        |  JOIN px p0 ON p0.i = g.r*9 + g.c
-        |  JOIN px p1 ON p1.doc_id = p0.doc_id AND p1.i = g.r*9 + g.c + 1
-        |  GROUP BY p0.doc_id
-        |), bands AS (
-        |  SELECT doc_id, sig, b.band_idx, (sig >> b.off) & b.mask::UBIGINT AS band_val
-        |  FROM sigs, (VALUES $bandRows) b(band_idx, off, mask)
-        |), capped AS (
-        |  SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY band_idx, band_val) <= 1000
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig_a, b.sig AS sig_b
-        |  FROM capped a JOIN capped b USING (band_idx, band_val)
-        |  WHERE a.doc_id < b.doc_id
-        |), close_pairs AS (
-        |  SELECT id_a, id_b FROM pairs WHERE bit_count(xor(sig_a, sig_b)) <= 10
-        |)
-        |SELECT d.doc_id FROM documents d
-        |WHERE NOT EXISTS (SELECT 1 FROM close_pairs c WHERE c.id_b = d.doc_id)
-        |ORDER BY doc_id""".stripMargin
-    },
-
-    "q_pii_redact" ->
-      """SELECT doc_id, right(
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com or 555-123-4567 ip 10.0.0.1',
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b(?:\d[ -]?){13,18}\d\b', '<CARD>', 'g'),
-        |    '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g'),
-        |    '\b(?:\+?\d{1,3}[-. ])?(?:\(\d{2,4}\)[-. ]?)?\d{3,4}[-. ]\d{3,4}(?:[-. ]\d{2,4})?\b', '<PHONE>', 'g'),
-        |    '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-        |    '\b[A-Z]{2}\d{2}[A-Z0-9]{11,30}\b', '<IBAN>', 'g'),
-        |  60) AS tail
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_cdc_canal" ->
-      """SELECT o_orderkey, o_totalprice, '+I' AS __row_kind FROM orders WHERE o_orderstatus = 'F'
-        |UNION ALL SELECT o_orderkey, o_totalprice - 1.0, '-U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '+U' FROM orders WHERE o_orderstatus = 'O'
-        |UNION ALL SELECT o_orderkey, o_totalprice, '-D' FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_orderkey, __row_kind""".stripMargin,
-
-    "q_llm" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    (length(lower(text)) - length(replace(lower(text), 'data', ''))) / 4 AS c_data,
-        |    (length(lower(text)) - length(replace(lower(text), 'join', ''))) / 4 AS c_join,
-        |    (length(lower(text)) - length(replace(lower(text), 'spark', ''))) / 5 AS c_spark
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN greatest(c_data, c_join, c_spark) = 0 THEN 'data'
-        |       WHEN c_spark = greatest(c_data, c_join, c_spark) THEN 'spark'
-        |       WHEN c_join = greatest(c_data, c_join, c_spark) THEN 'join'
-        |       ELSE 'data' END AS label
-        |FROM c ORDER BY doc_id""".stripMargin
-  )
+  def oracleSql: Map[String, String] = Case.all.map(c => c.name -> c.oracle).toMap
 }

@@ -117,10 +117,6 @@ object Tables {
     else this.fanOut(spark, normalized, treeBytes(file))
   }
 
-  /** Epoch-nanos long → timestamp (microsecond precision). */
-  def nsToTimestamp(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.timestamp_micros((c / 1000L).cast("long"))
-
   /** r22 note: memoizing registerAll was A/B'd twice and REJECTED. A
     * skip-if-same-fingerprint memo won ~0.1 s/query on the SQL family but
     * is a correctness trap: q_pipeline_hocon's SQL transform registers its

@@ -1,0 +1,713 @@
+package graft
+package driver
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+import graft.dedup.Dedup
+import graft.text.TextAnalysis
+import graft.driver.Fixtures._
+
+/** Exact, MinHash, SimHash, n-gram and substring dedup, incremental
+  * near-dup pairing and benchmark decontamination (§2.6).
+  */
+object DedupCases {
+
+  /** Corpus (doc_id%10!=0) minhash signature store, built once per sfDir —
+    * q_dedup_incr_store measures the FROM-STORE path (delta-only signature
+    * cost), the operator's production shape; re-building the store every
+    * rep would measure writeSignatures instead.
+    */
+  private def signatureStore(s: SparkSession, dir: String): String = {
+    val path = s"/tmp/graft_fixtures/sigstore_${sfTag(dir)}"
+    // The token pins the MinHash config, which incrementalFromStore checks
+    // against the store's `_minhash_config`: a change rebuilds the store.
+    val cfg = graft.dedup.Dedup.MinHashConfig()
+    ensureFixture(path, sourceToken(dir, "documents") + s"|$cfg") {
+      graft.dedup.Dedup.writeSignatures(
+        Tables.load(s, dir, "documents")
+          .where(pmod(col("doc_id"), lit(10)) =!= 0),
+        "doc_id", "text", path, cfg)
+    }
+    path
+  }
+
+  /** Bloom sizing for the `q_decontaminate_bloom` oracle, computed with
+    * the same published formulas Spark's `BloomFilter.create(items, bits)`
+    * uses (k = round(m/n·ln2), bit array padded to 64-bit words) —
+    * `BloomProbeReplicaSpec` pins both against the real filter.
+    */
+  private val (bloomOracleK: Int, bloomOracleBitSize: Long) = {
+    val expectedGrams = 100000L
+    val fpp = 1e-9
+    val bits = math.ceil(-expectedGrams * math.log(fpp) / (math.log(2) * math.log(2))).toLong
+    (math.max(1, math.round(bits.toDouble / expectedGrams * math.log(2)).toInt),
+      ((bits + 63) / 64) * 64)
+  }
+
+  /** Oracle of q_dedup_minhash; the incremental pairs oracle derives from
+    * it. Full independent MinHash+LSH recompute (r7): gram strings ->
+    * poly-257+fmix64 hashes, 64 permutation values fmix64(h ^ k_p)
+    * with k_p = fmix64((42<<32)+p), per-doc UNSIGNED min, 16 bands of 4
+    * grouped by value tuple (graft groups by an FNV fold of the same
+    * tuple — equal modulo FNV collisions), 1000-cap buckets, candidate
+    * pairs verified by gram-string Jaccard >= 0.7, survivors = docs
+    * never on the id_b side. The fmix64 wrapping multiplies run as
+    * 32-bit-split HUGEINT stages (the g, k and v CTE chains), like simhash.
+    */
+  private val minhashOracle: String =
+    raw"""WITH toks AS (
+      |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+      |  FROM documents
+      |), gramt AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(t) = 0 THEN []
+      |         WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+      |         ELSE list_distinct([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)])
+      |    END AS grams
+      |  FROM toks
+      |), dg AS ( SELECT doc_id, unnest(grams) AS g FROM gramt
+      |), g0 AS (
+      |  SELECT doc_id, g,
+      |    list_reduce(list_prepend(0::HUGEINT,
+      |      [ord(substring(g, i, 1))::HUGEINT FOR i IN range(1, length(g)+1)]),
+      |      (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS x
+      |  FROM dg
+      |), g1 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g0
+      |), g2 AS ( SELECT doc_id, g, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g1
+      |), g3 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g2
+      |), g4 AS ( SELECT doc_id, g, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g3
+      |), gh AS ( SELECT doc_id, xor(x::UBIGINT, x::UBIGINT >> 33) AS h FROM g4
+      |), k0 AS ( SELECT p, (180388626432 + p)::HUGEINT AS x FROM (SELECT unnest(range(0, 64)) AS p)
+      |), k1 AS ( SELECT p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM k0
+      |), k2 AS ( SELECT p, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM k1
+      |), k3 AS ( SELECT p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM k2
+      |), k4 AS ( SELECT p, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM k3
+      |), keys AS ( SELECT p, xor(x::UBIGINT, x::UBIGINT >> 33) AS key FROM k4
+      |), v0 AS ( SELECT gh.doc_id, keys.p, xor(gh.h, keys.key)::HUGEINT AS x FROM gh, keys
+      |), v1 AS ( SELECT doc_id, p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM v0
+      |), v2 AS ( SELECT doc_id, p, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM v1
+      |), v3 AS ( SELECT doc_id, p, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM v2
+      |), v4 AS ( SELECT doc_id, p, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM v3
+      |), vh AS ( SELECT doc_id, p, xor(x::UBIGINT, x::UBIGINT >> 33) AS v FROM v4
+      |), sigv0 AS ( SELECT doc_id, p, min(v) AS v FROM vh GROUP BY doc_id, p
+      |), sigv AS (
+      |  SELECT d.doc_id, pr.p, coalesce(s.v, 18446744073709551615::UBIGINT) AS v
+      |  FROM documents d
+      |  CROSS JOIN (SELECT unnest(range(0, 64)) AS p) pr
+      |  LEFT JOIN sigv0 s ON s.doc_id = d.doc_id AND s.p = pr.p
+      |), bands AS (
+      |  SELECT doc_id, p // 4 AS band_idx,
+      |         string_agg(v::VARCHAR, ',' ORDER BY p) AS band_val
+      |  FROM sigv GROUP BY doc_id, p // 4
+      |), capped AS (
+      |  SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY band_idx, band_val) <= 1000
+      |), cand AS (
+      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM capped a JOIN capped b USING (band_idx, band_val)
+      |  WHERE a.doc_id < b.doc_id
+      |), pairs AS (
+      |  SELECT c.id_a, c.id_b
+      |  FROM cand c
+      |  JOIN gramt ga ON ga.doc_id = c.id_a
+      |  JOIN gramt gb ON gb.doc_id = c.id_b
+      |  WHERE CASE
+      |    WHEN len(ga.grams) = 0 AND len(gb.grams) = 0 THEN 1.0
+      |    WHEN len(ga.grams) = 0 OR len(gb.grams) = 0 THEN 0.0
+      |    ELSE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
+      |         / (len(ga.grams) + len(gb.grams) - len(list_intersect(ga.grams, gb.grams)))
+      |    END >= 0.7
+      |)
+      |SELECT doc_id FROM documents
+      |WHERE doc_id NOT IN (SELECT id_b FROM pairs)
+      |ORDER BY doc_id""".stripMargin
+
+  /** Shared oracle of q_dedup_incremental and q_dedup_incr_store: the full
+    * minhash pipeline over the union, restricted to delta-touching candidates
+    * (delta = doc_id%10=0) — derived from the proven q_dedup_minhash oracle
+    * by swapping the candidate clause and the final projection, so the two
+    * can never drift apart. The store path has the same result contract
+    * (store signatures are the same deterministic expressions a recompute
+    * produces).
+    */
+  private val incrementalPairsOracle: String = {
+    val fullCand =
+      """  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM capped a JOIN capped b USING (band_idx, band_val)
+        |  WHERE a.doc_id < b.doc_id""".stripMargin
+    val incCand =
+      """  SELECT DISTINCT least(a.doc_id, b.doc_id) AS id_a,
+        |    greatest(a.doc_id, b.doc_id) AS id_b
+        |  FROM capped a JOIN capped b USING (band_idx, band_val)
+        |  WHERE a.doc_id % 10 = 0 AND a.doc_id <> b.doc_id""".stripMargin
+    val fullTail =
+      """SELECT doc_id FROM documents
+        |WHERE doc_id NOT IN (SELECT id_b FROM pairs)
+        |ORDER BY doc_id""".stripMargin
+    val incTail = "SELECT id_a, id_b FROM pairs ORDER BY id_a, id_b"
+    require(minhashOracle.contains(fullCand) && minhashOracle.contains(fullTail),
+      "q_dedup_incremental oracle derivation: q_dedup_minhash shape changed")
+    minhashOracle.replace(fullCand, incCand).replace(fullTail, incTail)
+  }
+
+  val cases: Seq[Case] = Seq(
+    // §2.6 exact dedup: digest groupBy with map-side partial agg
+    Case("q_dedup_exact", (s, dir) => {
+      Dedup.exact(Tables.load(s, dir, "documents"), "doc_id", "text")
+        .orderBy("digest")
+    }, oracle =
+      """SELECT md5(lower(trim(text))) AS digest, min(doc_id) AS keep_id,
+        |       count(*) AS dup_count
+        |FROM documents GROUP BY 1 ORDER BY digest""".stripMargin),
+
+    // §2.6 MinHash+LSH near-dup — HASH-EXACT since r7: shingle hashes are
+    // poly-257+fmix64 and the 64 permutations are fmix64(h ^ k_p) with
+    // closed-form keys, so the DuckDB oracle recomputes the whole
+    // pipeline independently — shingle hashes, unsigned-min signatures,
+    // 16x4 band grouping, bucket cap, gram-string Jaccard verify at 0.7,
+    // greedy id_b drop.
+    Case("q_dedup_minhash", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val pairs = Dedup.minHashPairs(docs, "doc_id", "text")
+      Dedup.dropNearDups(docs, "doc_id", pairs).select("doc_id").orderBy("doc_id")
+    }, oracle = minhashOracle),
+
+    // §2.6 SimHash near-dup — HASH-EXACT since r7: the per-token hash is
+    // poly-257 + murmur fmix64 (plain 64-bit modular arithmetic), so the
+    // DuckDB oracle recomputes the full pipeline independently — token
+    // hashes, 64-bit vote signature, 4x16 pigeonhole bands, bucket cap,
+    // hamming<=3 pairs, greedy id_b drop.
+    Case("q_dedup_simhash", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val pairs = Dedup.simHashPairs(docs, "doc_id", "text")
+      Dedup.dropNearDups(docs, "doc_id", pairs).select("doc_id").orderBy("doc_id")
+    }, oracle =
+      // Full independent simhash recompute: poly-257 token hash + fmix64
+      // (64-bit wrapping multiply via 32-bit split in HUGEINT), per-bit
+      // votes, 4x16 bands, bucket cap, hamming<=3, drop-id_b survivors —
+      // the same trick that made ngram hash-exact in r6, extended to the
+      // signature arithmetic. Validated equal to the Spark output at sf0.01.
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS tok
+        |  FROM documents
+        |), ph AS (
+        |  SELECT doc_id, tok,
+        |    list_reduce(list_prepend(0::HUGEINT,
+        |      [ord(substring(tok, i, 1))::HUGEINT FOR i IN range(1, length(tok)+1)]),
+        |      (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS h0
+        |  FROM toks
+        |), s1 AS ( SELECT doc_id, xor((h0)::UBIGINT, (h0)::UBIGINT >> 33)::HUGEINT AS h0 FROM ph
+        |), s2 AS ( SELECT doc_id, ((((h0) // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + ((h0) % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS h0 FROM s1
+        |), s3 AS ( SELECT doc_id, xor((h0)::UBIGINT, (h0)::UBIGINT >> 33)::HUGEINT AS h0 FROM s2
+        |), s4 AS ( SELECT doc_id, ((((h0) // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + ((h0) % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS h0 FROM s3
+        |), th AS ( SELECT doc_id, xor((h0)::UBIGINT, (h0)::UBIGINT >> 33) AS h FROM s4
+        |), votes AS (
+        |  SELECT doc_id, b.bit, sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
+        |  FROM th, (SELECT unnest(range(0, 64)) AS bit) b
+        |  GROUP BY doc_id, b.bit
+        |), sigs0 AS (
+        |  SELECT doc_id, sum(CASE WHEN v > 0 THEN (1::UBIGINT << bit)::HUGEINT ELSE 0::HUGEINT END) AS sig
+        |  FROM votes GROUP BY doc_id
+        |), sigs AS (
+        |  SELECT d.doc_id, coalesce(s.sig, 0::HUGEINT)::UBIGINT AS sig
+        |  FROM documents d LEFT JOIN sigs0 s USING (doc_id)
+        |), banded AS (
+        |  SELECT doc_id, sig, b.band_idx, (sig >> (b.band_idx*16)) & 65535 AS band_val
+        |  FROM sigs, (SELECT unnest(range(0,4)) AS band_idx) b
+        |), capped AS (
+        |  SELECT * FROM banded QUALIFY count(*) OVER (PARTITION BY band_idx, band_val) <= 1000
+        |), pairs AS (
+        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sig_a, b.sig AS sig_b
+        |  FROM capped a JOIN capped b USING (band_idx, band_val)
+        |  WHERE a.doc_id < b.doc_id
+        |), close_pairs AS (
+        |  SELECT id_a, id_b FROM pairs WHERE bit_count(xor(sig_a, sig_b)) <= 3
+        |)
+        |SELECT d.doc_id FROM documents d
+        |WHERE NOT EXISTS (SELECT 1 FROM close_pairs c WHERE c.id_b = d.doc_id)
+        |ORDER BY doc_id""".stripMargin),
+
+    // §2.6 n-gram Jaccard near-dup (rows-only; spec-tested)
+    Case("q_dedup_ngram", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text")
+      Dedup.dropNearDups(docs, "doc_id", pairs).select("doc_id").orderBy("doc_id")
+    }, oracle =
+      // n-gram Jaccard dedup recomputed over gram STRINGS in DuckDB (graft
+      // hashes the same grams — equal modulo collisions), with the same
+      // recall contract: candidate pairs share >= 1 gram with doc-frequency
+      // <= indexDocFreq(100), verification is exact Jaccard over the FULL
+      // distinct gram sets, survivors drop every id_b of a qualifying pair
+      raw"""WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+        |  FROM documents
+        |),
+        |gramt AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(t) = 0 THEN []
+        |         WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+        |         ELSE list_distinct([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)])
+        |    END AS grams
+        |  FROM toks
+        |),
+        |doc_grams AS (SELECT doc_id, unnest(grams) AS g FROM gramt),
+        |sizes AS (SELECT doc_id, len(grams) AS n FROM gramt),
+        |df AS (SELECT g, count(*) AS d FROM doc_grams GROUP BY g),
+        |indexable AS (SELECT g FROM df WHERE d <= 100),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM doc_grams a JOIN indexable USING (g) JOIN doc_grams b USING (g)
+        |  WHERE a.doc_id < b.doc_id
+        |),
+        |common AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+        |  FROM doc_grams a JOIN doc_grams b USING (g)
+        |  WHERE a.doc_id < b.doc_id
+        |  GROUP BY 1, 2
+        |),
+        |pairs AS (
+        |  SELECT cand.id_a, cand.id_b
+        |  FROM cand
+        |  JOIN common ON common.id_a = cand.id_a AND common.id_b = cand.id_b
+        |  JOIN sizes sa ON sa.doc_id = cand.id_a
+        |  JOIN sizes sb ON sb.doc_id = cand.id_b
+        |  WHERE CAST(common.c AS DOUBLE) / (sa.n + sb.n - common.c) >= 0.5
+        |)
+        |SELECT doc_id FROM documents
+        |WHERE doc_id NOT IN (SELECT id_b FROM pairs)
+        |ORDER BY doc_id""".stripMargin),
+
+    // §2.6 cluster-resolved dedup: minhash pairs -> connected components
+    // -> one survivor (min id) per duplicate group (rows-only; planted
+    // component semantics spec-verified)
+    Case("q_dedup_clusters", (s, dir) => {
+      // duplicate-cluster resolution, driven through its WORST case: a
+      // per-source consecutive-doc chain graph has maximal diameter, so
+      // the min-label + pointer-jumping iteration does real multi-round
+      // work, and the component labels are exactly checkable (each
+      // source chain's label = its min doc_id — the closed form the
+      // DuckDB oracle computes)
+      val docs = Tables.load(s, dir, "documents")
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("source").orderBy("doc_id")
+      val pairs = docs
+        .withColumn("next_id", lead("doc_id", 1).over(w))
+        .where(col("next_id").isNotNull)
+        .select(col("doc_id").as("id_a"), col("next_id").as("id_b"))
+      Dedup.connectedComponents(pairs)
+        .select(col("node").cast("bigint").as("doc_id"),
+          col("label").cast("bigint").as("component"))
+        .orderBy("doc_id")
+    }, oracle =
+      // the chain pair graph links consecutive doc_ids per source, so each
+      // source with >= 2 docs is one component labeled by its min doc_id —
+      // the closed form of what the distributed min-label/pointer-jumping
+      // iteration computes
+      """SELECT CAST(doc_id AS BIGINT) AS doc_id,
+        |       CAST(MIN(doc_id) OVER (PARTITION BY source) AS BIGINT) AS component
+        |FROM documents
+        |WHERE source IN (SELECT source FROM documents
+        |                 GROUP BY source HAVING COUNT(*) >= 2)
+        |ORDER BY doc_id""".stripMargin),
+
+    // §2.6 within-doc repeated-line removal (r9): pages synthesized the
+    // same way as q_c4_filter (' a ' -> newline), then every repeated
+    // line inside a page is dropped keeping the first occurrence — pure
+    // higher-order functions, no shuffle.
+    Case("q_line_dedup", (s, dir) => {
+      val pages = Tables.load(s, dir, "documents")
+        .select(col("doc_id"), expr("replace(text, ' a ', '\n')").as("page"))
+      TextAnalysis.dedupLinesWithinDoc(pages, "doc_id", "page")
+        .select("doc_id", "cleaned")
+        .orderBy("doc_id")
+    }, oracle =
+      """WITH p AS (
+        |  SELECT doc_id, string_split(replace(text, ' a ', chr(10)), chr(10)) AS ls
+        |  FROM documents)
+        |SELECT doc_id, array_to_string(
+        |    list_filter(ls, (x, i) -> list_position(ls, x) = i), chr(10)) AS cleaned
+        |FROM p ORDER BY doc_id""".stripMargin),
+
+    // §2.6 document fingerprint (normalized md5-16)
+    Case("q_text_fingerprint", (s, dir) => {
+      Tables.load(s, dir, "documents")
+        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
+        .orderBy("doc_id")
+    }, oracle =
+      """SELECT doc_id,
+        |  substr(md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')), 1, 16) AS fp
+        |FROM documents ORDER BY doc_id""".stripMargin),
+
+    // §2.6 INCREMENTAL near-dup pairing (r9): the daily-ingest shape —
+    // delta (doc_id%10=0) pairs against the standing corpus and itself,
+    // never corpus×corpus; cap semantics identical to a full run over the
+    // union (oracle is the minhash oracle restricted to delta-touching
+    // pairs — derived, not duplicated).
+    Case("q_dedup_incremental", (s, dir) => {
+      val all = Tables.load(s, dir, "documents")
+      graft.dedup.Dedup.incrementalMinHashPairs(
+          all.where(pmod(col("doc_id"), lit(10)) =!= 0),
+          all.where(pmod(col("doc_id"), lit(10)) === 0),
+          "doc_id", "text")
+        .select("id_a", "id_b")
+        .orderBy("id_a", "id_b")
+    }, oracle = incrementalPairsOracle),
+
+    // §2.6 incremental near-dup against the persisted SIGNATURE STORE
+    // (r10; VERDICT r9 #5): same delta/corpus split and same result
+    // contract as q_dedup_incremental, but the corpus signatures come
+    // from the parquet store built once per sfDir — the query pays
+    // delta-only signature cost plus a narrow band-table scan; the
+    // corpus TEXT is never read.
+    Case("q_dedup_incr_store", (s, dir) => {
+      val all = Tables.load(s, dir, "documents")
+      graft.dedup.Dedup.incrementalFromStore(
+          all.where(pmod(col("doc_id"), lit(10)) === 0),
+          signatureStore(s, dir), "doc_id", "text")
+        .select("id_a", "id_b")
+        .orderBy("id_a", "id_b")
+    }, oracle = incrementalPairsOracle),
+
+    // §2.6 C4 three-sentence-span corpus dedup (rows-only: the
+    // lookbehind sentence split isn't RE2-expressible for DuckDB; exact
+    // semantics are spec-tested with planted spans). Pages derived the
+    // same way as q_c4_filter so spans exist.
+    Case("q_c4_span_dedup", (s, dir) => {
+      val pages = Tables.load(s, dir, "documents")
+        .select(col("doc_id"), expr("replace(text, ' a ', '. ')").as("page"))
+      Dedup.c4SpanDedup(pages, "doc_id", "page")
+        .select(col("doc").as("doc_id"), col("n_sentences"),
+          col("n_kept_sentences"), col("n_removed"),
+          md5(col("clean_text")).as("clean_digest"))
+        .orderBy("doc_id")
+    }, oracle =
+      // C4 three-sentence-span dedup recomputed over span STRINGS in
+      // DuckDB (graft groups the same spans by xxhash64 — equal modulo
+      // collisions). RE2 has no lookbehind, so the sentence split
+      // `(?<=[.!?])\s+` is emulated by marking boundaries with \x01; Java
+      // split drops trailing empties, hence the empty-string filter.
+      raw"""WITH sents AS (
+        |  SELECT doc_id,
+        |    list_filter(
+        |      string_split(regexp_replace(replace(text, ' a ', '. '), '([.!?])\s+', '\1' || chr(1), 'g'), chr(1)),
+        |      x -> x <> '') AS s
+        |  FROM documents
+        |),
+        |spans AS (
+        |  SELECT doc_id, i - 1 AS span_idx, s[i] || s[i+1] || s[i+2] AS span
+        |  FROM sents, unnest(range(1, len(s) - 1)) AS t(i)
+        |  WHERE len(s) >= 3
+        |),
+        |marked AS (
+        |  SELECT doc_id, span_idx,
+        |         row_number() OVER (PARTITION BY span ORDER BY doc_id, span_idx) AS rn,
+        |         count(*) OVER (PARTITION BY span) AS n
+        |  FROM spans
+        |),
+        |removed AS (
+        |  SELECT DISTINCT doc_id, span_idx + k AS sent_idx
+        |  FROM marked, unnest([0,1,2]) AS u(k)
+        |  WHERE n > 1 AND rn > 1
+        |),
+        |rem_lists AS (
+        |  SELECT doc_id, list_sort(list(DISTINCT sent_idx)) AS removed
+        |  FROM removed GROUP BY doc_id
+        |)
+        |SELECT d.doc_id,
+        |  CAST(len(d.s) AS INTEGER) AS n_sentences,
+        |  CAST(len(CASE WHEN r.removed IS NULL THEN d.s
+        |       ELSE list_filter(d.s, (x, i) -> NOT list_contains(r.removed, i - 1)) END) AS INTEGER) AS n_kept_sentences,
+        |  CAST(coalesce(len(r.removed), 0) AS INTEGER) AS n_removed,
+        |  md5(coalesce(array_to_string(CASE WHEN r.removed IS NULL THEN d.s
+        |       ELSE list_filter(d.s, (x, i) -> NOT list_contains(r.removed, i - 1)) END, ' '), '')) AS clean_digest
+        |FROM sents d LEFT JOIN rem_lists r USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
+
+    // §2.6 substring dedup (Lee et al. 2021 semantics via winnowing
+    // anchors + extension verify). HASH-EXACT since r7: token hashes are
+    // poly-257+fmix64 and the gram fold / robust-winnowing window min /
+    // greedy extension are all plain arithmetic, so the DuckDB oracle
+    // replays the whole pipeline. minLen=30 so the synthetic corpus
+    // (shortish docs sharing sampled sentences) actually exhibits
+    // duplicated runs.
+    Case("q_substring_dedup", (s, dir) => {
+      Dedup.substringDedup(Tables.load(s, dir, "documents"),
+        "doc_id", "text", minLen = 30, k = 10)
+        .select(col("doc").as("doc_id"), col("n_tokens"), col("n_kept_tokens"),
+          col("n_removed_tokens"), md5(col("clean_text")).as("clean_digest"))
+        .orderBy("doc_id")
+    }, oracle =
+      // Substring dedup replayed end-to-end (r7): per-token poly-257+fmix64
+      // hashes (th-chain), k=10-gram FNV-1a-style folds over token hashes
+      // (64-bit wrapping multiply via 32-bit split), robust winnowing
+      // (Schleimer et al. 2003) as a sliding-window unsigned min with
+      // rightmost tie-break (w=21; short docs take one window), global
+      // first-winner anchors (min (doc,pos) per hash, bucket cap 1000),
+      // greedy left/right extension on token hashes, the same-doc
+      // keep-one-period adjustment, distinct cut ranges, and the in-place
+      // token rebuild with an md5 digest. Matches the Spark output
+      // bit-for-bit at sf0.01 including fully-emptied docs.
+      raw"""WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+        |  FROM documents
+        |), th0 AS (
+        |  SELECT doc_id, t,
+        |    [list_reduce(list_prepend(0::HUGEINT,
+        |       [ord(substring(tok, i, 1))::HUGEINT FOR i IN range(1, length(tok)+1)]),
+        |       (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) FOR tok IN t] AS h
+        |  FROM toks
+        |), th1 AS ( SELECT doc_id, t, [xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT FOR x IN h] AS h FROM th0
+        |), th2 AS ( SELECT doc_id, t, [(((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT FOR x IN h] AS h FROM th1
+        |), th3 AS ( SELECT doc_id, t, [xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT FOR x IN h] AS h FROM th2
+        |), th4 AS ( SELECT doc_id, t, [(((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT FOR x IN h] AS h FROM th3
+        |), tokh AS ( SELECT doc_id, t, [xor(x::UBIGINT, x::UBIGINT >> 33) FOR x IN h] AS th FROM th4
+        |), graml AS (
+        |  SELECT doc_id, th,
+        |    CASE WHEN len(th) - 10 + 1 <= 0 THEN []
+        |    ELSE [list_reduce(list_prepend(14695981039346656037::HUGEINT, th[i+1:i+10]),
+        |            (acc, hh) -> (((xor(acc::UBIGINT, hh)::HUGEINT // 4294967296) * 1099511628211::HUGEINT) % 4294967296 * 4294967296
+        |                          + (xor(acc::UBIGINT, hh)::HUGEINT % 4294967296) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)::UBIGINT
+        |          FOR i IN range(0, len(th) - 10 + 1)] END AS g
+        |  FROM tokh
+        |), grams AS (
+        |  SELECT doc_id, i.i AS p, g[i.i + 1] AS gh
+        |  FROM graml, (SELECT unnest(range(0, 100000)) AS i) i
+        |  WHERE i.i < len(g)
+        |), ndoc AS ( SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id
+        |), wmin AS (
+        |  SELECT doc_id, p, min(gh) OVER (PARTITION BY doc_id ORDER BY p ROWS BETWEEN 20 PRECEDING AND CURRENT ROW) AS m
+        |  FROM grams
+        |), sel_long AS (
+        |  SELECT w.doc_id, max(q.p) AS pos
+        |  FROM wmin w JOIN grams q ON q.doc_id = w.doc_id AND q.p BETWEEN w.p - 20 AND w.p AND q.gh = w.m
+        |  WHERE w.p >= 20
+        |  GROUP BY w.doc_id, w.p
+        |), sel_short AS (
+        |  SELECT g.doc_id, max(g.p) AS pos
+        |  FROM grams g JOIN ndoc nd USING (doc_id)
+        |  WHERE nd.n < 21 AND g.gh = (SELECT min(gh) FROM grams x WHERE x.doc_id = g.doc_id)
+        |  GROUP BY g.doc_id
+        |), anchors AS (
+        |  SELECT DISTINCT s.doc_id AS doc, s.pos, g.gh AS hash
+        |  FROM (SELECT * FROM sel_long UNION SELECT * FROM sel_short) s
+        |  JOIN grams g ON g.doc_id = s.doc_id AND g.p = s.pos
+        |), winners AS (
+        |  SELECT hash, doc AS w_doc, pos AS w_pos FROM (
+        |    SELECT hash, doc, pos,
+        |      row_number() OVER (PARTITION BY hash ORDER BY doc, pos) AS rk,
+        |      count(*) OVER (PARTITION BY hash) AS cnt
+        |    FROM anchors)
+        |  WHERE rk = 1 AND cnt > 1 AND cnt <= 1000
+        |), cand AS (
+        |  SELECT a.doc, a.pos, w.w_doc, w.w_pos
+        |  FROM anchors a JOIN winners w USING (hash)
+        |  WHERE NOT (a.doc = w.w_doc AND a.pos = w.w_pos)
+        |), ext AS (
+        |  SELECT c.doc, c.pos, c.w_doc, c.w_pos,
+        |    coalesce(( SELECT min(j.j) FROM (SELECT unnest(range(1, least(c.pos, c.w_pos) + 1)) AS j) j
+        |               WHERE tl.th[c.pos - j.j + 1] <> tw.th[c.w_pos - j.j + 1] ) - 1,
+        |             least(c.pos, c.w_pos)) AS ml,
+        |    coalesce(( SELECT min(j.j) FROM (SELECT unnest(range(0, least(len(tl.th) - c.pos - 10, len(tw.th) - c.w_pos - 10))) AS j) j
+        |               WHERE tl.th[c.pos + 10 + j.j + 1] <> tw.th[c.w_pos + 10 + j.j + 1] ),
+        |             least(len(tl.th) - c.pos - 10, len(tw.th) - c.w_pos - 10)) AS mr
+        |  FROM cand c
+        |  JOIN tokh tl ON tl.doc_id = c.doc
+        |  JOIN tokh tw ON tw.doc_id = c.w_doc
+        |), spans AS (
+        |  SELECT doc, pos, w_doc, w_pos, pos - ml AS s0, (pos + 10 + mr) - (pos - ml) AS len
+        |  FROM ext
+        |), ranges1 AS (
+        |  SELECT DISTINCT doc,
+        |    CASE WHEN doc = w_doc THEN greatest(s0, (s0 + len) - (pos - w_pos)) ELSE s0 END AS s,
+        |    s0 + len AS e
+        |  FROM spans
+        |  WHERE len >= 30
+        |), cut AS (
+        |  SELECT doc, list([s, e]) AS cuts
+        |  FROM ranges1 WHERE e > s GROUP BY doc
+        |), rebuilt AS (
+        |  SELECT t.doc_id, len(t.t) AS n_tokens,
+        |    CASE WHEN c.cuts IS NULL THEN t.t
+        |         ELSE list_filter(t.t, (x, i) ->
+        |           len(list_filter(c.cuts, r -> i - 1 >= r[1] AND i - 1 < r[2])) = 0) END AS kept
+        |  FROM tokh t LEFT JOIN cut c ON c.doc = t.doc_id
+        |)
+        |SELECT doc_id, CAST(n_tokens AS INTEGER) AS n_tokens,
+        |  CAST(len(kept) AS INTEGER) AS n_kept_tokens,
+        |  CAST(n_tokens - len(kept) AS INTEGER) AS n_removed_tokens,
+        |  md5(coalesce(array_to_string(kept, ' '), '')) AS clean_digest
+        |FROM rebuilt
+        |ORDER BY doc_id""".stripMargin),
+
+    // §2.6 FUZZY decontamination metric (r9): per-doc fraction of
+    // distinct 13-grams shared with the benchmark — the GPT-4/PaLM-style
+    // contamination measure (exact matching over-fires on one shared
+    // idiom; a fraction threshold catches paraphrased eval items).
+    Case("q_decontaminate_fuzzy", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val bench = docs.where(col("doc_id") % 50 === 0).select(col("text").as("question"))
+      graft.text.Decontamination.overlapFractions(docs, bench, "doc_id", "text", "question")
+        .select("doc_id", "n_grams", "n_matched", "overlap")
+        .orderBy("doc_id")
+    }, oracle =
+      // 13-token shingle overlap recomputed as STRINGS in DuckDB (graft
+      // compares murmur hashes of the same grams — equal modulo hash
+      // collisions); same tokenizer semantics (lower, split \W+, drop
+      // empties), same short-doc whole-text gram rule
+      raw"""WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+        |  FROM documents
+        |),
+        |gramt AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(t) = 0 THEN []
+        |         WHEN len(t) < 13 THEN [array_to_string(t, ' ')]
+        |         ELSE [array_to_string(t[i:i+12], ' ') FOR i IN range(1, len(t) - 11)]
+        |    END AS grams
+        |  FROM toks
+        |),
+        |dg AS (SELECT DISTINCT doc_id, unnest(grams) AS g FROM gramt),
+        |bench AS (SELECT DISTINCT g FROM dg WHERE doc_id % 50 = 0),
+        |tot AS (SELECT doc_id, count(*) AS n_grams FROM dg GROUP BY doc_id),
+        |m AS (SELECT doc_id, count(*) AS n_matched
+        |      FROM dg JOIN bench USING (g) GROUP BY doc_id)
+        |SELECT t.doc_id AS doc_id, n_grams,
+        |  coalesce(n_matched, 0) AS n_matched,
+        |  CAST(coalesce(n_matched, 0) AS DOUBLE) / n_grams AS overlap
+        |FROM tot t LEFT JOIN m USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
+
+    // §2.6 benchmark decontamination: drop corpus docs sharing a 13-gram
+    // with a benchmark set (here: every 50th doc poses as a benchmark
+    // question). Hash-exact: the oracle recomputes the overlap on gram
+    // STRINGS (equal modulo hash collisions).
+    Case("q_decontaminate", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val bench = docs.where(col("doc_id") % 50 === 0).select(col("text").as("question"))
+      graft.text.Decontamination.decontaminate(docs, bench, "doc_id", "text", "question")
+        .select("doc_id").orderBy("doc_id")
+    }, oracle =
+      raw"""WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+        |  FROM documents
+        |),
+        |gramt AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(t) = 0 THEN []
+        |         WHEN len(t) < 13 THEN [array_to_string(t, ' ')]
+        |         ELSE [array_to_string(t[i:i+12], ' ') FOR i IN range(1, len(t) - 11)]
+        |    END AS grams
+        |  FROM toks
+        |),
+        |bench_grams AS (
+        |  SELECT DISTINCT unnest(grams) AS g FROM gramt WHERE doc_id % 50 = 0
+        |),
+        |contaminated AS (
+        |  SELECT DISTINCT d.doc_id
+        |  FROM (SELECT doc_id, unnest(grams) AS g FROM gramt) d
+        |  JOIN bench_grams b USING (g)
+        |)
+        |SELECT doc_id FROM documents
+        |WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
+        |ORDER BY doc_id""".stripMargin),
+
+    // §2.6 Bloom-filter decontamination (broadcast filter bytes instead of
+    // the exact gram set — the very-large-benchmark scale path).
+    // HASH-EXACT since r7: the oracle rebuilds the filter BIT-FOR-BIT —
+    // poly-257+fmix64 gram hashes, Murmur3_x86_32 h1/h2, and the
+    // BloomFilterImplV2 probe schedule all replayed in DuckDB SQL, so
+    // even false-positive drops would reproduce (probe-level equivalence
+    // proven by BloomProbeReplicaSpec against a collision-saturated
+    // filter).
+    Case("q_decontaminate_bloom", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      val bench = docs.where(col("doc_id") % 50 === 0).select(col("text").as("question"))
+      graft.text.Decontamination.decontaminateBloom(docs, bench, "doc_id", "text", "question",
+        expectedGrams = 100000L)
+        .select("doc_id").orderBy("doc_id")
+    }, oracle =
+      // Bloom decontamination rebuilt BIT-FOR-BIT (r7): 13-gram strings →
+      // poly-257+fmix64 longs (the g-chain), then Spark's
+      // Murmur3_x86_32.hashLong replayed in unsigned mod-2^32 arithmetic
+      // (mixK1 is seed-independent — computed once per word; the h1/h2
+      // chains differ only in seed), then the BloomFilterImplV2 probe
+      // schedule c_i = h1·(2^31-1) + i·h2 in signed 64-bit with bit-flip
+      // on negative, mod the word-padded bit size. A doc is dropped iff
+      // ≥1 of its grams probes all-bits-set against the union of benchmark
+      // gram bits — including any false positives, which is what makes
+      // this exact rather than "equals the exact pass at this scale".
+      // Probe-level equivalence proven by BloomProbeReplicaSpec.
+      raw"""WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+        |  FROM documents
+        |), gramt AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(t) = 0 THEN []
+        |         WHEN len(t) < 13 THEN [array_to_string(t, ' ')]
+        |         ELSE list_distinct([array_to_string(t[i:i+12], ' ') FOR i IN range(1, len(t) - 11)])
+        |    END AS grams
+        |  FROM toks
+        |), dg AS ( SELECT doc_id, unnest(grams) AS g FROM gramt
+        |), g0 AS (
+        |  SELECT doc_id, g,
+        |    list_reduce(list_prepend(0::HUGEINT,
+        |      [ord(substring(g, i, 1))::HUGEINT FOR i IN range(1, length(g)+1)]),
+        |      (acc, cp) -> (acc*257 + cp) % 18446744073709551616::HUGEINT) AS x
+        |  FROM dg
+        |), g1 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g0
+        |), g2 AS ( SELECT doc_id, g, (((x // 4294967296) * 18397679294719823053::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 18397679294719823053::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g1
+        |), g3 AS ( SELECT doc_id, g, xor(x::UBIGINT, x::UBIGINT >> 33)::HUGEINT AS x FROM g2
+        |), g4 AS ( SELECT doc_id, g, (((x // 4294967296) * 14181476777654086739::HUGEINT) % 4294967296 * 4294967296 + (x % 4294967296) * 14181476777654086739::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM g3
+        |), gh AS ( SELECT doc_id, xor(x::UBIGINT, x::UBIGINT >> 33) AS h FROM g4
+        |), hset AS ( SELECT DISTINCT h FROM gh
+        |), ma AS ( SELECT h, h % 4294967296::UBIGINT AS lo, h // 4294967296::UBIGINT AS hi FROM hset
+        |), mb AS ( SELECT h, (lo * 3432918353::UBIGINT) % 4294967296::UBIGINT AS klo, (hi * 3432918353::UBIGINT) % 4294967296::UBIGINT AS khi FROM ma
+        |), mc AS ( SELECT h, ((klo * 32768::UBIGINT) % 4294967296::UBIGINT) + (klo // 131072::UBIGINT) AS klo, ((khi * 32768::UBIGINT) % 4294967296::UBIGINT) + (khi // 131072::UBIGINT) AS khi FROM mb
+        |), md AS ( SELECT h, (klo * 461845907::UBIGINT) % 4294967296::UBIGINT AS klo, (khi * 461845907::UBIGINT) % 4294967296::UBIGINT AS khi FROM mc
+        |), h1a AS ( SELECT h, klo, khi, klo AS x FROM md
+        |), h1b AS ( SELECT h, klo, khi, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h1a
+        |), h1c AS ( SELECT h, klo, khi, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h1b
+        |), h1d AS ( SELECT h, klo, khi, xor(x, khi) AS x FROM h1c
+        |), h1e AS ( SELECT h, klo, khi, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h1d
+        |), h1f AS ( SELECT h, klo, khi, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h1e
+        |), h1g AS ( SELECT h, klo, khi, xor(x, 8::UBIGINT) AS x FROM h1f
+        |), h1h AS ( SELECT h, klo, khi, xor(x, x // 65536::UBIGINT) AS x FROM h1g
+        |), h1i AS ( SELECT h, klo, khi, (x * 2246822507::UBIGINT) % 4294967296::UBIGINT AS x FROM h1h
+        |), h1j AS ( SELECT h, klo, khi, xor(x, x // 8192::UBIGINT) AS x FROM h1i
+        |), h1k AS ( SELECT h, klo, khi, (x * 3266489909::UBIGINT) % 4294967296::UBIGINT AS x FROM h1j
+        |), h1z AS ( SELECT h, klo, khi, xor(x, x // 65536::UBIGINT) AS h1 FROM h1k
+        |), h2a AS ( SELECT h, khi, h1, xor(h1, klo) AS x FROM h1z
+        |), h2b AS ( SELECT h, khi, h1, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h2a
+        |), h2c AS ( SELECT h, khi, h1, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h2b
+        |), h2d AS ( SELECT h, khi, h1, xor(x, khi) AS x FROM h2c
+        |), h2e AS ( SELECT h, khi, h1, ((x * 8192::UBIGINT) % 4294967296::UBIGINT) + (x // 524288::UBIGINT) AS x FROM h2d
+        |), h2f AS ( SELECT h, khi, h1, (x * 5::UBIGINT + 3864292196::UBIGINT) % 4294967296::UBIGINT AS x FROM h2e
+        |), h2g AS ( SELECT h, khi, h1, xor(x, 8::UBIGINT) AS x FROM h2f
+        |), h2h AS ( SELECT h, khi, h1, xor(x, x // 65536::UBIGINT) AS x FROM h2g
+        |), h2i AS ( SELECT h, khi, h1, (x * 2246822507::UBIGINT) % 4294967296::UBIGINT AS x FROM h2h
+        |), h2j AS ( SELECT h, khi, h1, xor(x, x // 8192::UBIGINT) AS x FROM h2i
+        |), h2k AS ( SELECT h, khi, h1, (x * 3266489909::UBIGINT) % 4294967296::UBIGINT AS x FROM h2j
+        |), hh AS ( SELECT h,
+        |    CASE WHEN h1 >= 2147483648::UBIGINT THEN h1::BIGINT - 4294967296 ELSE h1::BIGINT END AS h1s,
+        |    CASE WHEN xor(x, x // 65536::UBIGINT) >= 2147483648::UBIGINT
+        |         THEN xor(x, x // 65536::UBIGINT)::BIGINT - 4294967296
+        |         ELSE xor(x, x // 65536::UBIGINT)::BIGINT END AS h2s
+        |  FROM h2k
+        |), pos AS (
+        |  SELECT h, CASE WHEN h1s * 2147483647 + i.i * h2s < 0
+        |                 THEN -(h1s * 2147483647 + i.i * h2s) - 1
+        |                 ELSE h1s * 2147483647 + i.i * h2s END % $bloomOracleBitSize AS pos
+        |  FROM hh, (SELECT unnest(range(1, $bloomOracleK + 1)) AS i) i
+        |), bset AS (
+        |  SELECT DISTINCT pos FROM pos
+        |  WHERE h IN (SELECT DISTINCT h FROM gh WHERE doc_id % 50 = 0)
+        |), cmiss AS (
+        |  SELECT DISTINCT p.h FROM pos p LEFT JOIN bset b USING (pos) WHERE b.pos IS NULL
+        |), contaminated AS (
+        |  SELECT DISTINCT doc_id FROM gh WHERE h NOT IN (SELECT h FROM cmiss)
+        |)
+        |SELECT doc_id FROM documents
+        |WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
+        |ORDER BY doc_id""".stripMargin)
+  )
+}

@@ -195,8 +195,7 @@ object ZetaFunctions {
     else new String(desCipher(javax.crypto.Cipher.DECRYPT_MODE, password)
       .doFinal(java.util.Base64.getDecoder.decode(data)), "utf-8")
 
-  /** StringFunction.java:654 — TO_CHAR for numbers and datetimes. */
-  def toCharTs(ts: Timestamp, fmt: String): String = formatdatetime(ts, fmt)
+  /** StringFunction.java:654 — TO_CHAR for numbers. */
   def toCharNum(x: Double): String =
     if (x == math.rint(x) && !x.isInfinite) x.toLong.toString else x.toString
 

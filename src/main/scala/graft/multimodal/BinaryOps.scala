@@ -451,100 +451,6 @@ object BinaryOps {
     df.withColumn(outCol, f(col(binCol)))
   }
 
-  /** Audio feature struct (encoder-derived, like [[WavSamples]]).
-    * Integer/exact fields (`peak`, `zero_crossings`, `energy_sumsq`, the
-    * per-window arrays) are recomputable by any engine from the raw
-    * samples; `rms` is sqrt(exact/exact) so it is bit-reproducible too;
-    * `spectral_centroid` involves libm cosines and is spec-verified
-    * rather than oracle-hashed.
-    */
-  case class AudioFeatures(sample_rate: Int, channels: Int, n_samples: Int,
-      peak: Int, zero_crossings: Int, energy_sumsq: Long, rms: Double,
-      spectral_centroid: Double, win_sumsq: Array[Long], win_zc: Array[Int])
-
-  /** Compute [[AudioFeatures]] from a decodable WAV payload. Channels mix
-    * to mono by floor-divided frame sum (matches SQL `//` semantics on
-    * negatives); a zero crossing is a sign-bit change between consecutive
-    * mono samples; windows are FULL `window`-frame spans (a trailing
-    * partial window is excluded, so window stats are length-invariant);
-    * the spectral centroid is a direct 32-bin DFT over the first
-    * min(n, 1024) mono samples (magnitude-weighted mean bin frequency).
-    */
-  private[graft] def audioFeaturesOf(b: Array[Byte], window: Int): Option[AudioFeatures] =
-    decodeWav(b).map { case (rate, ch, pcm) =>
-      val nFrames = pcm.length / (2 * ch)
-      val mono = new Array[Int](nFrames)
-      var f = 0
-      while (f < nFrames) {
-        var s = 0; var c = 0
-        while (c < ch) {
-          val o = (f * ch + c) * 2
-          s += ((pcm(o) & 0xff) | (pcm(o + 1) << 8)).toShort.toInt
-          c += 1
-        }
-        mono(f) = Math.floorDiv(s, ch)
-        f += 1
-      }
-      var peak = 0; var zc = 0; var sumsq = 0L
-      f = 0
-      while (f < nFrames) {
-        val m = mono(f)
-        if (math.abs(m) > peak) peak = math.abs(m)
-        if (f > 0 && (m < 0) != (mono(f - 1) < 0)) zc += 1
-        sumsq += m.toLong * m
-        f += 1
-      }
-      val rms = if (nFrames == 0) 0.0 else math.sqrt(sumsq.toDouble / nFrames)
-      val nWin = if (window > 0) nFrames / window else 0
-      val winSumsq = new Array[Long](nWin)
-      val winZc = new Array[Int](nWin)
-      var w = 0
-      while (w < nWin) {
-        var ss = 0L; var z = 0
-        var i = w * window
-        val end = (w + 1) * window
-        while (i < end) {
-          val m = mono(i)
-          ss += m.toLong * m
-          if (i > w * window && (m < 0) != (mono(i - 1) < 0)) z += 1
-          i += 1
-        }
-        winSumsq(w) = ss; winZc(w) = z
-        w += 1
-      }
-      // direct DFT at bins 1..32 over the first min(n, 1024) samples;
-      // centroid = sum(f_k * |X_k|) / sum(|X_k|), 0 for silence
-      val n = math.min(nFrames, 1024)
-      var num = 0.0; var den = 0.0
-      var k = 1
-      while (k <= 32 && n > 0) {
-        var re = 0.0; var im = 0.0
-        var i = 0
-        while (i < n) {
-          val a = -2.0 * math.Pi * k * i / n
-          re += mono(i) * math.cos(a); im += mono(i) * math.sin(a)
-          i += 1
-        }
-        val mag = math.sqrt(re * re + im * im)
-        num += (k.toDouble * rate / n) * mag
-        den += mag
-        k += 1
-      }
-      AudioFeatures(rate, ch, nFrames, peak, zc, sumsq, rms,
-        if (den == 0.0) 0.0 else num / den, winSumsq, winZc)
-    }
-
-  /** Feature-extract a WAV binary column in one row pass: decode + fold
-    * to the fixed-size [[AudioFeatures]] struct (the multimodal analog of
-    * [[imageDHash]] — bounded bytes per clip enter the plan, never raw
-    * samples). Null for undecodable payloads.
-    */
-  def audioFeatures(df: DataFrame, binCol: String, outCol: String,
-      window: Int = 512): DataFrame = {
-    val f = udf { (bytes: Array[Byte]) => audioFeaturesOf(bytes, window) }
-    df.withColumn(outCol, f(col(binCol)))
-  }
-
   /** Deterministic 16-bit PCM WAV synthesis (RIFF writer) for tests and
     * pipeline fixtures: interleaved samples straight from the given
     * generator. The inverse of [[decodeWav]] for PCM16-LE content.

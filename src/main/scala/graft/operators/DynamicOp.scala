@@ -28,14 +28,6 @@ object DynamicOp {
     df.map(fn)
   }
 
-  /** Per-partition variant for logic with expensive setup (the reference's
-    * compiled-instance-per-task pattern); setup runs once per partition.
-    */
-  def applyPartitions(df: DataFrame, outSchema: StructType, fn: Iterator[Row] => Iterator[Row]): DataFrame = {
-    implicit val enc: Encoder[Row] = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions(fn)
-  }
-
   /** True hot-compile analog of the reference's DynamicCompileTransform:
     * `source` is Scala source for a `Row => Row` function, compiled ON THE
     * EXECUTOR the first time each JVM sees it (per-JVM cache) — the same

@@ -10,6 +10,11 @@ the plan itself, and compares the sections query by query:
   - exchange/subquery ids     `[id=#12]`, `[id=12]` -> `[id=N]`
   - RDD ids                   `MapPartitionsRDD[42]` -> `MapPartitionsRDD[N]`
   - source positions          `Dedup.scala:217`    -> `Dedup.scala:N`
+  - JVM lambda classes        `Foo$$$Lambda$3254/0x00007f3e14f0fb70` -> `Foo$$$Lambda`
+  - JVM identity hashes       `[[D@5c1dc4e9`, `Foo$$$Lambda@5c1dc4e9` -> `[[D@H`, `Foo$$$Lambda@H`
+
+The owner class before `$$Lambda` and before `@` is kept: a lambda or array
+that moved to another class still shows up as a difference.
 
 Usage: python3 tools/plan_equiv.py A.txt B.txt
 
@@ -31,6 +36,8 @@ NORMALIZE = [
     (re.compile(r"\[id=#?\d+\]"), "[id=N]"),
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
+    (re.compile(r"\$\$Lambda\$\d+/0x[0-9a-f]+"), "$$Lambda"),
+    (re.compile(r"([\w$\[;])@[0-9a-f]{1,8}\b"), r"\1@H"),
 ]
 
 
