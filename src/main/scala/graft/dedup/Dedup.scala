@@ -3,6 +3,9 @@ package graft.dedup
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import scala.util.Using
 import graft.GraftCaches.PersistOps
 
@@ -323,19 +326,93 @@ object Dedup {
     df.join(pairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
 
   /** Connected components over a near-dup pair graph: (node, label) with
-    * label = min node id in the component. Pairwise output alone
-    * over-deletes under greedy rules (a~b, b~c but a!~c still forms one
-    * duplicate GROUP that must keep exactly one survivor) — production
+    * label = min node id in the component, one row per node of an edge
+    * (self-loops included); both columns non-null bigint. Pairwise output
+    * alone over-deletes under greedy rules (a~b, b~c but a!~c still forms
+    * one duplicate GROUP that must keep exactly one survivor) — production
     * dedup resolves pairs into components first.
     *
-    * Distributed min-label propagation: per iteration one edge⋈label join
+    * Two paths, the same rows and schema:
+    *  - **Driver** (the common case: a few duplicates among many docs).
+    *    One bounded eager action, `limit(N + 1).collect()` of the edges
+    *    (SURVEY §4), with N = [[driverEdgeLimit]]. At most N edges are
+    *    resolved by union-find on the driver and returned as a local
+    *    relation: no per-round jobs, and consumers see a relation whose
+    *    size Catalyst knows.
+    *  - **Distributed** (more than N edges): min-label propagation on pair
+    *    RDDs, see [[distributedComponents]]; the bounded pull is then a
+    *    wasted partial scan of `pairs`, small next to the loop.
+    */
+  def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
+      bCol: String = "id_b", maxIter: Int = 20): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter, driverEdgeLimit)
+
+  /** [[connectedComponents]] with an explicit driver-path edge limit. */
+  private[dedup] def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int, edgeLimit: Int): DataFrame =
+    componentsOnDriver(pairs, aCol, bCol, edgeLimit) match {
+      case Some((nodes, labels)) =>
+        import pairs.sparkSession.implicits._
+        nodes.zip(labels).toSeq.toDF("node", "label")
+      case None => distributedComponents(pairs, aCol, bCol, maxIter)
+    }
+
+  /** Edge budget of the driver components path: 16 B per (long, long)
+    * edge within 1/256 of the driver heap, at most 2^20 edges (16 MB).
+    * The pulled rows cost about ten times the payload until union-find
+    * has read them, so the pull peaks near 4% of the heap.
+    */
+  private[dedup] def driverEdgeLimit: Int =
+    math.min(Runtime.getRuntime.maxMemory / 256 / 16, 1L << 20).toInt
+
+  /** (node ids ascending, label of each) when `pairs` has at most
+    * `edgeLimit` edges, None otherwise. Union-find with path compression;
+    * a union always hangs the larger root under the smaller, and node
+    * indices follow id order, so every root is its component's min id.
+    * Iterative throughout: a million-node chain cannot overflow the stack.
+    */
+  private def componentsOnDriver(pairs: DataFrame, aCol: String, bCol: String,
+      edgeLimit: Int): Option[(Array[Long], Array[Long])] = {
+    val edges = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .limit(edgeLimit + 1).collect()
+    if (edges.length > edgeLimit) return None
+    val ends = new Array[Long](2 * edges.length)
+    edges.indices.foreach { i =>
+      ends(2 * i) = edges(i).getLong(0)
+      ends(2 * i + 1) = edges(i).getLong(1)
+    }
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    sorted.indices.foreach { i =>
+      if (n == 0 || sorted(i) != sorted(n - 1)) { sorted(n) = sorted(i); n += 1 }
+    }
+    val nodes = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var cur = x
+      while (parent(cur) != root) { val next = parent(cur); parent(cur) = root; cur = next }
+      root
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(nodes, id)
+    edges.indices.foreach { i =>
+      val ra = find(index(ends(2 * i)))
+      val rb = find(index(ends(2 * i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Some((nodes, Array.tabulate(n)(i => nodes(find(i)))))
+  }
+
+  /** Distributed min-label propagation: per iteration one edge⋈label join
     * + one min-aggregate (labels only ever decrease; convergence when no
     * label changed). Near-dup components are star-like (tiny diameter),
     * so 3-5 iterations typically converge; `maxIter` bounds adversarial
     * chains. Shuffles carry only (long, long) rows — no text, no arrays.
     */
-  def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIter: Int = 20): DataFrame = {
+  private def distributedComponents(pairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int): DataFrame = {
     // The LOOP runs on pair RDDs, not DataFrames — the one place in this
     // engine where RDDs win. Every iteration of the DataFrame formulation
     // paid Catalyst analysis + optimization + AQE stage re-planning on a
@@ -408,15 +485,57 @@ object Dedup {
   }
 
   /** Cluster-resolved dedup: keep exactly one document (the min id) per
-    * connected duplicate component; singletons pass through untouched.
+    * connected duplicate component; singletons and null ids pass through
+    * untouched. Output is a left-anti join's: `df`'s rows, `idCol` first.
+    *
+    * When the graph was resolved on the driver ([[connectedComponents]])
+    * and its losers are at most [[inSetDropLimit]] ids of an integral
+    * `idCol`, they go as a null-safe `NOT IN` filter (one `InSet` over the
+    * id set): no exchange on `df` and no job before the sink's. Otherwise
+    * `df` is left-anti joined to the losers, a local relation Catalyst can
+    * size (and broadcast) when the graph was resolved on the driver.
     */
   def dropByComponents(df: DataFrame, idCol: String, pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    val doomed = connectedComponents(pairs, aCol, bCol)
-      .where(col("node") =!= col("label"))
-      .select(col("node").cast("long").as(idCol))
-    df.join(doomed, Seq(idCol), "left_anti")
+      aCol: String = "id_a", bCol: String = "id_b"): DataFrame =
+    dropByComponents(df, idCol, pairs, aCol, bCol, driverEdgeLimit)
+
+  /** [[dropByComponents]] with an explicit driver-path edge limit. */
+  private[dedup] def dropByComponents(df: DataFrame, idCol: String, pairs: DataFrame,
+      aCol: String, bCol: String, edgeLimit: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val resolver = spark.sessionState.conf.resolver
+    val (key, rest) = df.schema.fields.partition(f => resolver(f.name, idCol))
+    val integralKey = key.map(_.dataType).toSeq match {
+      case Seq(ByteType | ShortType | IntegerType | LongType) => true
+      case _ => false
+    }
+    val losers = componentsOnDriver(pairs, aCol, bCol, edgeLimit).map { case (nodes, labels) =>
+      nodes.indices.collect { case i if labels(i) != nodes(i) => nodes(i) }
+    }
+    losers match {
+      case Some(ids) if integralKey && ids.length <= inSetDropLimit =>
+        val id = col(quoted(idCol))
+        val isLoser = ColumnBridge.column(
+          InSet(Cast(ColumnBridge.expression(id), LongType), ids.toSet[Any]))
+        // the column order the USING left-anti join gives: the key first
+        df.where(id.isNull || !isLoser).select((key ++ rest).map(f => col(quoted(f.name))): _*)
+      case _ =>
+        val doomed = losers.fold(
+          distributedComponents(pairs, aCol, bCol, maxIter = 20)
+            .where(col("node") =!= col("label"))
+            .select(col("node").cast("long").as(idCol)))(_.toDF(idCol))
+        df.join(doomed, Seq(idCol), "left_anti")
+    }
   }
+
+  /** Most loser ids [[dropByComponents]] folds into its filter. The set is
+    * part of the plan: 4k ids plan in tens of ms, while 100k took ~0.6 s
+    * to plan and each action then printed a 0.8 MB plan string.
+    */
+  private val inSetDropLimit = 4096
+
+  private def quoted(name: String): String = s"`${name.replace("`", "``")}`"
 
   // ---------- simhash ----------
 

@@ -134,8 +134,14 @@ object CdcCases {
       } finally { q.stop(); st.close(); conn.close() }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("N_NATIONKEY").orderBy("valid_from")
-      graft.operators.Scd2.fromChangelog(
-          s.read.parquet(acc), Seq("N_NATIONKEY"), "CL_SEQ")
+      // the snapshot's parts and the changelog's order their columns
+      // differently; a fixed schema keeps the plan from depending on which
+      // part file schema inference reads first
+      val changelog = s.read.schema(StructType(Seq(
+        StructField("N_NATIONKEY", LongType), StructField("N_NAME", StringType),
+        StructField("N_REGIONKEY", LongType), StructField("CL_SEQ", LongType),
+        StructField(RowKindOps.RowKindCol, StringType)))).parquet(acc)
+      graft.operators.Scd2.fromChangelog(changelog, Seq("N_NATIONKEY"), "CL_SEQ")
         .select(col("N_NATIONKEY").as("n_nationkey"), col("N_NAME").as("n_name"),
           col("N_REGIONKEY").as("n_regionkey"),
           row_number().over(w).cast("long").as("version"), col("is_current"))

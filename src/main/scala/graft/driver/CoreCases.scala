@@ -368,7 +368,6 @@ object CoreCases {
 
     // §2.3 zeta string function coverage (builtins + registered compat fns)
     Case("q_fn_string", (s, dir) => {
-      graft.functions.ZetaFunctions.register(s)
       SqlOp.sql(s, Tables.load(s, dir, "customer"),
         """SELECT c_custkey,
           |  UPPER(c_name) AS up, LOWER(c_name) AS lo, LENGTH(c_name) AS len,
@@ -401,7 +400,6 @@ object CoreCases {
     // §2.3 zeta numeric functions (IEEE-deterministic subset for the oracle;
     // transcendental parity is spec-tested instead)
     Case("q_fn_numeric", (s, dir) => {
-      graft.functions.ZetaFunctions.register(s)
       SqlOp.sql(s, Tables.load(s, dir, "lineitem"),
         """SELECT l_orderkey, l_linenumber,
           |  ABS(l_discount - 0.05) AS ab,
@@ -430,7 +428,6 @@ object CoreCases {
 
     // §2.3 zeta date/time functions
     Case("q_fn_datetime", (s, dir) => {
-      graft.functions.ZetaFunctions.register(s)
       SqlOp.sql(s, Tables.load(s, dir, "orders"),
         """SELECT o_orderkey,
           |  YEAR(o_orderdate) AS y, MONTH(o_orderdate) AS m,

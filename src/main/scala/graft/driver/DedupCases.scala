@@ -282,9 +282,11 @@ object DedupCases {
     // component semantics spec-verified)
     Case("q_dedup_clusters", (s, dir) => {
       // duplicate-cluster resolution, driven through its WORST case: a
-      // per-source consecutive-doc chain graph has maximal diameter, so
-      // the min-label + pointer-jumping iteration does real multi-round
-      // work, and the component labels are exactly checkable (each
+      // per-source consecutive-doc chain graph has maximal diameter. A
+      // graph within the driver edge budget (~500k edges at sf10 fit it)
+      // resolves by union-find on the driver; a larger one runs the
+      // min-label + pointer-jumping iteration for real multi-round work.
+      // The component labels are exactly checkable either way (each
       // source chain's label = its min doc_id — the closed form the
       // DuckDB oracle computes)
       val docs = Tables.load(s, dir, "documents")
@@ -301,8 +303,8 @@ object DedupCases {
     }, oracle =
       // the chain pair graph links consecutive doc_ids per source, so each
       // source with >= 2 docs is one component labeled by its min doc_id —
-      // the closed form of what the distributed min-label/pointer-jumping
-      // iteration computes
+      // the closed form of what both paths compute: the driver's
+      // union-find and the distributed min-label/pointer-jumping iteration
       """SELECT CAST(doc_id AS BIGINT) AS doc_id,
         |       CAST(MIN(doc_id) OVER (PARTITION BY source) AS BIGINT) AS component
         |FROM documents

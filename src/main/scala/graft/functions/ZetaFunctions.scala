@@ -490,17 +490,23 @@ object ZetaFunctions {
     */
   def withDialect[T](spark: SparkSession)(body: => T): T = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    register(spark)
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
     val reg = spark.sessionState.functionRegistry
+    // a GraftSession.create session has the zeta names already; registering
+    // them again would replace every one on every call
+    if (!reg.functionExists(FunctionIdentifier("zeta_week"))) register(spark)
     val overrides = dialectOverrides
     val saved = overrides.map { case (n, _) =>
       n -> reg.lookupFunctionBuilder(FunctionIdentifier(n)) }
-    overrides.foreach { case (n, b) => reg.createOrReplaceTempFunction(n, b, "built-in") }
-    try body
-    finally saved.foreach {
-      case (n, Some(b)) => reg.createOrReplaceTempFunction(n, b, "built-in")
-      case (n, None) => reg.dropFunction(FunctionIdentifier(n)); ()
+    // drop, then register: the registry logs a warning for every name it
+    // replaces, and these swaps are deliberate
+    def install(n: String, b: Option[FunctionBuilder]): Unit = {
+      reg.dropFunction(FunctionIdentifier(n))
+      b.foreach(reg.createOrReplaceTempFunction(n, _, "built-in"))
     }
+    overrides.foreach { case (n, b) => install(n, Some(b)) }
+    try body
+    finally saved.foreach { case (n, b) => install(n, b) }
   }
 
   /** Register every zeta name Spark lacks on `spark`. Idempotent.

@@ -727,11 +727,18 @@ object NativeExpressions {
       CmsEstimateExpr(args(0), args(1))
     })
 
-  /** Register the native functions in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
+  /** Register the native functions in the session registry (idempotent):
+    * a name whose registered builder is already this object's is skipped,
+    * so operators may call this on every use without replacing (and
+    * logging a replacement of) the functions the session already has.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }
 
 /** SparkSessionExtensions entry point: add

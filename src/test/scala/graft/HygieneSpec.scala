@@ -162,9 +162,10 @@ class HygieneSpec extends AnyFunSuite {
     val allowed = Map(
       // ngramJaccardPairs: vstats .head() + nDocs path-pick .count();
       // embeddingNearDupPairs: stats .head(); incrementalFromStore:
-      // touched .count() broadcast decision; connectedComponents:
-      // symRaw RDD .count() partitioner sizing
-      "Dedup.scala" -> 5,
+      // touched .count() broadcast decision; connectedComponents: the
+      // bounded limit(N + 1) edge .collect() of the driver path, and the
+      // distributed path's symRaw RDD .count() partitioner sizing
+      "Dedup.scala" -> 6,
       "Profile.scala" -> 2,     // summary aggregates (profiling IS an action)
       "AnnStore.scala" -> 4,    // bounded centroid/codebook/probed-cell loads
       "IvfIndex.scala" -> 3,    // k-means sample + corpus-count for frac (cap-bounded)

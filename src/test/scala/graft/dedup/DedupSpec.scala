@@ -389,20 +389,119 @@ class DedupSpec extends SparkSpec {
     assert(out3(0).getAs[Int]("n_kept_tokens") == 70)
   }
 
+  // edge limits forcing each connectedComponents path: every test graph
+  // fits the first; the second (limit(0) pulls nothing) always overflows
+  private val driverPath = 1 << 20
+  private val distributedPath = -1
+  private val paths = Seq("driver" -> driverPath, "distributed" -> distributedPath)
+
+  private def components(pairs: org.apache.spark.sql.DataFrame, edgeLimit: Int) = {
+    val cc = Dedup.connectedComponents(pairs, "id_a", "id_b", 20, edgeLimit)
+    val local = cc.queryExecution.analyzed.collectFirst {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+    }.isDefined
+    assert(local == (edgeLimit == driverPath), s"edge limit $edgeLimit took the other path")
+    cc
+  }
+
   test("connectedComponents resolves transitive groups; dropByComponents keeps min per group") {
     import spark.implicits._
     // a 3-chain, a 2-pair, and a 4-chain (diameter exercises iteration)
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 10L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
-      8L -> 8L, 9L -> 8L, 10L -> 8L, 11L -> 8L))
     val docs = (1L to 12L).map(i => (i, s"d$i")).toDF("doc_id", "text")
-    val kept = Dedup.dropByComponents(docs, "doc_id", pairs)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // exactly one survivor (the min id) per component; singletons untouched
-    assert(kept == Set(1L, 4L, 5L, 7L, 8L, 12L))
+    for ((path, limit) <- paths) {
+      val cc = components(pairs, limit).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
+        8L -> 8L, 9L -> 8L, 10L -> 8L, 11L -> 8L), path)
+      val kept = Dedup.dropByComponents(docs, "doc_id", pairs, "id_a", "id_b", limit)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      // exactly one survivor (the min id) per component; singletons untouched
+      assert(kept == Set(1L, 4L, 5L, 7L, 8L, 12L), path)
+    }
+    graft.GraftCaches.releaseAll(spark)
+  }
+
+  test("connectedComponents: driver and distributed paths agree on every graph shape") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    // min-id labels by repeated relaxation: a reference independent of both paths
+    def expected(edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
+      val label = scala.collection.mutable.Map.empty[Long, Long]
+      edges.foreach { case (a, b) => label(a) = a; label(b) = b }
+      var changed = true
+      while (changed) {
+        changed = false
+        edges.foreach { case (a, b) =>
+          val m = math.min(label(a), label(b))
+          if (label(a) != m || label(b) != m) { label(a) = m; label(b) = m; changed = true }
+        }
+      }
+      label.toSet
+    }
+    val graphs = Seq(
+      "random sparse" -> Seq.fill(400)((rnd.nextInt(600).toLong, rnd.nextInt(600).toLong)),
+      "chain" -> rnd.shuffle((0L until 1200L).map(i => (i, i + 1))),
+      "reversed chain" -> (0L until 1000L).map(i => (1000L - i, 999L - i)),
+      "star" -> ((1L to 150L) ++ (600L to 700L)).map(leaf => (500L, leaf)),
+      "duplicate and reversed edges" -> Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L)),
+      "self-loops" -> Seq((7L, 7L), (3L, 3L), (3L, 4L), (9L, 9L), (9L, 9L)),
+      "empty" -> Seq.empty[(Long, Long)],
+      "extreme ids" -> Seq((-5L, Long.MaxValue), (Long.MaxValue - 1, Long.MaxValue),
+        (Long.MinValue + 1, -5L), (-1L, 0L), (Long.MaxValue - 2, Long.MaxValue - 2)))
+    for ((shape, edges) <- graphs) {
+      val pairs = edges.toDF("id_a", "id_b")
+      val out = paths.map { case (_, limit) => components(pairs, limit) }
+      val rows = out.map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      assert(out.map(_.schema).distinct.size == 1, s"$shape: ${out.map(_.schema)}")
+      assert(out.head.schema.fields.forall(f => f.dataType ==
+        org.apache.spark.sql.types.LongType && !f.nullable), shape)
+      assert(rows.head == expected(edges), s"$shape: driver path")
+      assert(rows(1) == rows.head, s"$shape: distributed path")
+    }
+    // a chain whose ids are permuted along it (id = 7919·i mod 1200): the
+    // distributed loop's labels are still unsettled after maxIter rounds
+    // (6 labels left at 20, 4 at 160), so only the driver path is held to
+    // the reference here
+    val permuted = (0L until 1199L).map(i => (i * 7919L % 1200L, (i + 1) * 7919L % 1200L))
+    val driverRows = components(permuted.toDF("id_a", "id_b"), driverPath).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(driverRows == expected(permuted))
+    graft.GraftCaches.releaseAll(spark)
+  }
+
+  test("dropByComponents keeps the same rows and schema on both paths, null ids included") {
+    import spark.implicits._
+    val pairs = Seq((2L, 1L), (3L, 2L), (5L, 6L), (6L, 6L)).toDF("id_a", "id_b")
+    // the id column is not first: the output puts it first on both paths.
+    // An RDD, not a local Seq, so the optimizer cannot fold the drop away.
+    val docs = spark.sparkContext.parallelize(Seq(("a", Some(1L)), ("b", Some(2L)),
+      ("c", Some(3L)), ("d", Some(4L)), ("e", Some(5L)), ("f", Some(6L)), ("n", None),
+      ("n2", None)), 2).toDF("text", "doc_id")
+    val out = paths.map { case (_, limit) =>
+      Dedup.dropByComponents(docs, "doc_id", pairs, "id_a", "id_b", limit) }
+    assert(out.head.schema == out(1).schema, out.map(_.schema))
+    assert(out.head.columns.toSeq == Seq("doc_id", "text"))
+    val rows = out.map(_.collect().map(r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSet)
+    assert(rows.head == Set((Some(1L), "a"), (Some(4L), "d"), (Some(5L), "e"),
+      (None, "n"), (None, "n2")))
+    assert(rows(1) == rows.head)
+    // the driver path drops without an exchange on the documents
+    val plan = out.head.queryExecution.executedPlan.toString
+    assert(plan.contains("INSET") && !plan.contains("Exchange") && !plan.contains("Join"), plan)
+    // an int key folds the same way; a double key joins the local losers
+    for ((keyType, filtered) <- Seq("int" -> true, "double" -> false)) {
+      val typed = docs.withColumn("doc_id", col("doc_id").cast(keyType))
+      val both = paths.map { case (_, limit) =>
+        Dedup.dropByComponents(typed, "doc_id", pairs, "id_a", "id_b", limit) }
+      assert(both.head.schema == both(1).schema, keyType)
+      assert(both.map(_.collect().map(r => (Option(r.get(0)).map(_.toString), r.getString(1))).toSet)
+        .distinct.size == 1, keyType)
+      val p = both.head.queryExecution.executedPlan.toString
+      assert(p.contains("INSET") == filtered && p.contains("Join") != filtered, s"$keyType\n$p")
+    }
     graft.GraftCaches.releaseAll(spark)
   }
 

@@ -11,6 +11,18 @@ class ZetaFunctionsSpec extends SparkSpec {
   private def one(sql: String): Any =
     registered.sql(s"SELECT $sql AS v").collect()(0).get(0)
 
+  test("sqlZeta keeps the session's zeta registrations (no replacement per call)") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    registered
+    val reg = spark.sessionState.functionRegistry
+    // names register() installs and the dialect swap leaves alone
+    def infos = Seq("zeta_week", "insert_str", "regexp_replace")
+      .map(n => reg.lookupFunction(FunctionIdentifier(n)).get)
+    val before = infos
+    graft.operators.SqlOp.sqlZeta(spark, spark.range(1).toDF("x"), "SELECT x FROM input").collect()
+    assert(infos.zip(before).forall { case (a, b) => a eq b })
+  }
+
   test("hextoraw / rawtohex round-trip (4 hex digits per char)") {
     assert(ZetaFunctions.rawtohex("Az") == "0041007a")
     assert(ZetaFunctions.hextoraw("0041007a") == "Az")

@@ -17,6 +17,16 @@ class NativeExpressionsSpec extends SparkSpec {
     assert(got.toSeq == texts.map(TextHashing.simHash64))
   }
 
+  test("register keeps a session's existing registrations (no replacement per call)") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    registered
+    val reg = spark.sessionState.functionRegistry
+    def infos = NativeExpressions.all.map { case (n, _) => reg.lookupFunction(FunctionIdentifier(n)).get }
+    val before = infos
+    NativeExpressions.register(spark)
+    assert(infos.zip(before).forall { case (a, b) => a eq b })
+  }
+
   test("minhash_bands expression matches the Scala primitives") {
     registered
     val t = "a b c d e f g h i j"
