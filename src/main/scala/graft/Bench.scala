@@ -1,10 +1,21 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+
 import graft.api.GraftSession
 
 /** Driver benchmark: every SparkEntry query, median of n reps, one compact
   * JSON line on stdout.
+  *
+  * One rep rule: every query runs SPARK_GRAFT_BENCH_REPS timed reps
+  * (default 3), streaming queries at least 5, and every row reports the
+  * median of its successful reps. Adaptive and deep rep extensions,
+  * min-of-reps grading and a start-up load gate were removed: replayed
+  * over A/A pairs (two runs of one commit, `tools/bench_aa.py`), none of
+  * them lowered the run-to-run gap in most pairs once the lower level of
+  * a min or late-reps median is allowed for. The 5-rep streaming floor
+  * did.
   *
   * Two hard-won rules shape the output format:
   *   - A query that crashes is NOT a measurement. Each rep records
@@ -38,28 +49,8 @@ import graft.api.GraftSession
   * validated against).
   */
 object Bench {
-  /** (query name, timed reps as (sec, err), gc seconds during timed reps,
-    * deep-extended?) — the Boolean is the EXPLICIT deep-extension event
-    * marker (ADVICE r19 ×2): the steady-state-window switch in
-    * reportedMedian/unstableAfterExtension used to infer the extension
-    * from `8+ successes`, which (a) also fires when the caller simply
-    * requested SPARK_GRAFT_BENCH_REPS >= 8 (silently dropping their first
-    * reps from the median) and (b) silently UN-fires when one of the 8
-    * extended reps errors (falling back to the all-reps median that
-    * includes the JIT descent the extension was run to escape). The event
-    * itself is now recorded at the point it happens and carried through
-    * the slice protocol. */
-  type Raw = Seq[(String, Seq[(Double, Option[String])], Double, Boolean)]
-
-  /** Service-variance rows graded by their min-of-reps floor instead of
-    * the median (VERDICT r19 #4): q_cdc_capture's spread is a real Derby +
-    * capture-stream service-variance floor, not JIT — at 8 reps its median
-    * still wanders ±0.2 s round-over-round while its min is stable. These
-    * rows get a dedicated 8-rep budget, report min (the comparable
-    * number), and are listed under "floor_graded" in the detail artifact
-    * instead of the instability flag (their variance is acknowledged, not
-    * unexplained). */
-  private[graft] val FloorGraded: Set[String] = Set("q_cdc_capture")
+  /** (query name, timed reps as (sec, err), gc seconds during timed reps) */
+  type Raw = Seq[(String, Seq[(Double, Option[String])], Double)]
 
   /** 1-minute system load average (-1.0 where the platform lacks it).
     * Captured BEFORE the first SparkSession exists, the start value is a
@@ -73,50 +64,7 @@ object Bench {
   private def systemLoad1(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  /** Bounded wait for an idle box before the first SparkSession (VERDICT
-    * r17 #1): the graded artifact should be BORN with a clean load1
-    * sentinel, not adjudicated after the fact (r17's graded run started
-    * on a warm box and its one >0.3 s mover needed a dedicated solo
-    * re-run to call as noise). Polls load1 every 5 s until it drops
-    * below the threshold (SPARK_GRAFT_BENCH_LOADGATE, default 0.5; <= 0
-    * disables) or the 10-minute bound expires, then proceeds either way
-    * — a timeout is proceed-and-flag, because load1Start is captured
-    * AFTER the gate, so a still-contended start remains visible in the
-    * artifact. Returns seconds waited (recorded in the detail file).
-    */
-  private def loadGate(): Double = {
-    // malformed values fall back to the default with a warning instead of
-    // killing the bench before any measurement (ADVICE r18)
-    val thr = sys.env.get("SPARK_GRAFT_BENCH_LOADGATE") match {
-      case None => 0.5
-      case Some(v) => scala.util.Try(v.trim.toDouble).getOrElse {
-        System.err.println(s"[bench] WARN: SPARK_GRAFT_BENCH_LOADGATE='$v' " +
-          "is not a number — using default 0.5")
-        0.5
-      }
-    }
-    if (thr <= 0 || systemLoad1() < 0) return 0.0 // disabled / unsupported
-    val t0 = System.nanoTime()
-    val deadline = t0 + 10L * 60 * 1000000000L
-    var l = systemLoad1()
-    while (l >= thr && System.nanoTime() < deadline) {
-      System.err.println(f"[bench] load gate: load1=$l%.2f >= $thr%.2f, waiting...")
-      Thread.sleep(5000)
-      l = systemLoad1()
-    }
-    val waited = (System.nanoTime() - t0) / 1e9
-    if (l >= thr)
-      System.err.println(f"[bench] load gate TIMED OUT after $waited%.0f s " +
-        f"(load1=$l%.2f) — proceeding; the artifact's load1 start flags it")
-    waited
-  }
-
   def main(args: Array[String]): Unit = {
-    // slice children skip the gate: the parent gated once at run start,
-    // and mid-run load is the run's OWN local[32] footprint decaying
-    // between slices — waiting on it would stall every slice for minutes
-    // without measuring anything external.
-    val gateWaitSec = if (sys.env.contains("SPARK_GRAFT_BENCH_SLICE_OUT")) 0.0 else loadGate()
     val load1Start = systemLoad1()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
@@ -137,18 +85,17 @@ object Bench {
         // wasted. Probe that graft.Bench is actually loadable from the
         // property before committing to the fork path (ADVICE r13).
         if (benchLoadableFrom(sys.props("java.class.path"))) {
-          val raw = runForked(sfDir, reps)
-          report(raw, reps, sfDir, detailPath, load1Start, gateWaitSec)
+          report(runForked(sfDir, reps), reps, sfDir, detailPath, load1Start)
         } else {
           System.err.println("[bench] WARN: graft.Bench not loadable from " +
             "java.class.path (classloader-based launcher?) — forked slices " +
             "would all die; falling back to the single-JVM in-process path")
           report(measure(SparkEntry.queries.keys.toSeq, sfDir, reps),
-            reps, sfDir, detailPath, load1Start, gateWaitSec)
+            reps, sfDir, detailPath, load1Start)
         }
       case None =>
         val names = SparkEntry.queries.keys.toSeq.filter(n => only.forall(_.contains(n)))
-        report(measure(names, sfDir, reps), reps, sfDir, detailPath, load1Start, gateWaitSec)
+        report(measure(names, sfDir, reps), reps, sfDir, detailPath, load1Start)
     }
   }
 
@@ -226,7 +173,7 @@ object Bench {
       // a dead/incomplete fork is an ERROR row per missing query, never a
       // silent omission — the centisec array alignment needs every name
       val missing = names.filterNot(got).map { n =>
-        (n, Seq((0.0, Some(s"fork slice died (exit=$exit)"): Option[String])), 0.0, false)
+        (n, Seq((0.0, Some(s"fork slice died (exit=$exit)"): Option[String])), 0.0)
       }
       parsed ++ missing
     }
@@ -243,13 +190,13 @@ object Bench {
 
   private def writeSlice(path: String, raw: Raw): Unit = {
     val b64 = java.util.Base64.getEncoder
-    val lines = raw.map { case (name, runs, gcSec, deep) =>
+    val lines = raw.map { case (name, runs, gcSec) =>
       val reps = runs.map {
         case (t, None) => num(t, 6)
         case (t, Some(m)) =>
           num(t, 6) + "," + b64.encodeToString(m.getBytes("UTF-8"))
       }.mkString(" ")
-      s"$name\t${num(gcSec, 6)}\t${if (deep) 1 else 0}\t$reps"
+      s"$name\t${num(gcSec, 6)}\t$reps"
     }
     Files.write(Paths.get(path), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
   }
@@ -258,7 +205,7 @@ object Bench {
     val b64 = java.util.Base64.getDecoder
     new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
       .split("\n").toSeq.filter(_.nonEmpty).map { line =>
-        val Array(name, gc, deep, reps) = line.split("\t", 4)
+        val Array(name, gc, reps) = line.split("\t", 3)
         val runs = reps.split(" ").toSeq.filter(_.nonEmpty).map { r =>
           r.split(",", 2) match {
             case Array(t) => (t.toDouble, None: Option[String])
@@ -266,14 +213,30 @@ object Bench {
               (t.toDouble, Some(new String(b64.decode(m), "UTF-8")): Option[String])
           }
         }
-        (name, runs, gc.toDouble, deep == "1")
+        (name, runs, gc.toDouble)
       }
   }
+
+  /** The action every warm-up and timed rep runs: Spark's `noop` writer,
+    * which computes every row and column of the query as `graft.Verify`
+    * dumps it. A `count()` would let Catalyst prune the projections, sorts
+    * and filters the count does not need (q_text_langid kept 9 of its 1894
+    * expressions), timing a bare scan instead of the query.
+    */
+  private[graft] def action(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Timed reps of one query: `reps`, at least 5 for streaming queries
+    * (their micro-batch floor dominates, and median-of-5 was the tighter
+    * A/A rule for them).
+    */
+  private[graft] def repsFor(name: String, reps: Int): Int =
+    if (name.contains("stream")) math.max(reps, 5) else reps
 
   /** Measure `names` in THIS process: one warmed SparkSession, per-query
     * untimed warm-up rep (pays whole-stage-codegen compile + JIT outside
     * the timed region — codegen is per-plan, so the session warm-up can't),
-    * then n timed reps with the data cache cleared between reps so every
+    * then the timed reps with the data cache cleared between reps so every
     * rep recomputes from parquet; median measures the plan, min shows the
     * uncontended floor.
     *
@@ -285,9 +248,7 @@ object Bench {
     * the ContextCleaner reclaim broadcast/accumulator state at a known
     * point; (c) per-query GC time during timed reps is recorded ("gc_sec"
     * in the detail artifact) so residual inflation is ATTRIBUTABLE to
-    * collector pressure vs the plan. Streaming queries run >= 5 reps
-    * (micro-batch floor dominates them; the extra reps tighten the
-    * round-over-round signal).
+    * collector pressure vs the plan.
     */
   private def measure(names: Seq[String], sfDir: String, reps: Int): Raw = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -332,161 +293,31 @@ object Bench {
     val raw = names.map { name =>
       val fn = SparkEntry.queries(name)
       stabilize()
-      try fn(spark, sfDir).count() catch { case _: Throwable => () } // warm-up
+      try action(fn(spark, sfDir)) catch { case _: Throwable => () } // warm-up
       stabilize()
       val gc0 = gcMillis()
-      // Dedicated rep budgets: streaming rows >= 5 (micro-batch floor
-      // dominates); floor-graded service-variance rows >= 8 (VERDICT r19
-      // #4 — their graded number is the min, and 8 reps make that floor a
-      // real observation rather than a lucky draw).
-      val qReps =
-        if (FloorGraded(name)) math.max(reps, 8)
-        else if (name.contains("stream")) math.max(reps, 5)
-        else reps
-      def rep(): (Double, Option[String]) = {
+      val runs = (1 to repsFor(name, reps)).map { _ =>
         GraftCaches.releaseAll(spark, blocking = true)
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         val err =
-          try { fn(spark, sfDir).count(); None }
+          try { action(fn(spark, sfDir)); None }
           catch { case e: Throwable =>
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
           }
         ((System.nanoTime() - t0) / 1e9, err)
       }
-      val base = (1 to qReps).map(_ => rep())
-      // Adaptive stabilization (VERDICT r15 #5): on sub-2s queries a
-      // median-of-3 can pick JIT noise (r15's q_cdc_debezium reps
-      // [1.80, 1.21, 1.56]). When the successful-rep spread exceeds 25%
-      // of the median, extend to 5 reps so the median sits on the stable
-      // side; the per-rep arrays in the detail artifact expose the spread.
-      // 5 is the hard ceiling BY DESIGN (the extension dodges a JIT-cold
-      // rep; it does not chase convergence on a contended box) — a query
-      // still noisy after extension is flagged in the detail artifact's
-      // "unstable_after_extension" list instead of extending further.
-      val okT = base.collect { case (t, None) => t }.sorted
-      val runs =
-        if (okT.nonEmpty && base.length < 5 &&
-            (okT.last - okT.head) > 0.25 * okT(okT.length / 2))
-          base ++ (base.length until 5).map(_ => rep())
-        else base
-      // Deep extension (VERDICT r18 #6): a row still unstable at 5 reps is
-      // typically mid-JIT descent (sub-2s rows: monotone [0.78 … 0.46]
-      // arrays), so its 5-rep median overstates the steady state and the
-      // flag never shrinks. Exactly those rows get 3 more reps (8 total);
-      // the reported median then comes from the steady-state window
-      // (reportedMedian) and the final instability test runs over the same
-      // window, so a row whose tail HAS settled drops off the flag list.
-      // Eligibility is instability OR a shallow monotone descent (VERDICT
-      // r19 #3): r19's q_pipeline_streaming_windowed reps [2.587, 2.319,
-      // 2.344, 2.063, 1.941] descended to their floor with a post-cold
-      // spread (0.403) under the 0.25·median instability threshold (0.580)
-      // — the row graded a mid-descent median and "regressed" +0.38 s
-      // while its floor was flat. The extension event itself is recorded
-      // (the Raw marker) so the window switch never has to be inferred
-      // from rep counts. Stable rows are untouched, full arrays stay in
-      // reps_detail.
-      val extendDeep = runs.length == 5 &&
-        (unstableAfterExtension(runs, deepExtended = false) || monotoneDescent(runs))
-      val deep = if (extendDeep) runs ++ (1 to 3).map(_ => rep()) else runs
-      (name, deep, (gcMillis() - gc0) / 1e3, extendDeep)
+      (name, runs, (gcMillis() - gc0) / 1e3)
     }
     spark.stop()
     raw
   }
 
-  /** Final-spread instability test for one query's timed reps (the
-    * "unstable_after_extension" detail field). The spread is computed
-    * over the successful reps EXCLUDING the chronologically-first one
-    * when three or more succeeded (VERDICT r17 #2): the 5-rep extension
-    * exists precisely to dodge a JIT-cold first rep, so one cold rep +
-    * four stable reps has a stable median and must NOT be flagged — the
-    * old all-reps spread over-fired on exactly that shape and trained
-    * readers to ignore the flag. With fewer than three successes there
-    * is no post-cold population to test, so all reps count. The raw
-    * arrays stay in reps_detail either way.
+  /** The value a row reports: the median (upper middle) of its successful
+    * reps. The caller guarantees at least one success.
     */
-  /** Absolute noise floor shared by unstableAfterExtension and
-    * monotoneDescent (r20; extracted r22 per ADVICE r21 — the two copies
-    * must stay in sync by construction, not by comment): the relative
-    * tests alone flag sub-0.25s rows whose spread is pure scheduler/timer
-    * jitter (measured: q_field_rename 56 ms spread on a 159 ms median =
-    * 35% relative, yet the graded 2-decimal value is identical either
-    * way). A spread under 60 ms cannot make a median untrustworthy on
-    * this protocol, so it never flags (and never deep-extends).
-    */
-  private val noiseFloorSec = 0.06
-
-  private[graft] def unstableAfterExtension(runs: Seq[(Double, Option[String])],
-      deepExtended: Boolean): Boolean = {
-    val t = steadyWindow(runs, deepExtended).sorted
-    t.nonEmpty && {
-      val spread = t.last - t.head
-      spread > 0.25 * t(t.length / 2) && spread > noiseFloorSec
-    }
-  }
-
-  /** Shallow-monotone-descent trigger for deep-extension eligibility
-    * (VERDICT r19 #3): after excluding the JIT-cold first success, the
-    * remaining reps ended on their minimum with a downward drift of more
-    * than 10% of their median — the row is still descending toward its
-    * floor when the reps run out, but the drift is too shallow for the
-    * 25% instability threshold. Needs four successes so there are three
-    * post-cold reps to read a direction from.
-    */
-  private[graft] def monotoneDescent(runs: Seq[(Double, Option[String])]): Boolean = {
-    val okChrono = runs.collect { case (t, None) => t }
-    if (okChrono.length < 4) return false
-    val tail = okChrono.tail
-    tail.last == tail.min && {
-      val s = tail.sorted
-      // shares noiseFloorSec with unstableAfterExtension (ADVICE r20/r21):
-      // without it a sub-0.2 s row whose scheduler jitter happens to end
-      // on its min deep-extends and silently switches its grading window
-      // on pure timer noise
-      val spread = s.last - s.head
-      spread > 0.10 * s(s.length / 2) && spread > noiseFloorSec
-    }
-  }
-
-  /** The reps a deep-extended row's verdict and median are computed over:
-    * the successful reps AFTER the first three (ADVICE r19 — keyed on the
-    * recorded extension EVENT, not on raw success counts, so a requested
-    * 8-rep run keeps its all-reps median and an extension with one errored
-    * rep keeps its steady-state window). The extension only fires after 5
-    * reps, so dropping the first 3 always leaves the freshly-run reps plus
-    * the settled end of the original set. Non-extended rows use every
-    * successful rep, minus the JIT-cold first one for the instability
-    * verdict only (handled by the caller passing through here).
-    */
-  private def steadyWindow(runs: Seq[(Double, Option[String])],
-      deepExtended: Boolean): Seq[Double] = {
-    val okChrono = runs.collect { case (t, None) => t }
-    if (deepExtended) {
-      val w = runs.drop(3).collect { case (t, None) => t }
-      if (w.nonEmpty) w else okChrono
-    } else if (okChrono.length >= 3) okChrono.tail
-    else okChrono
-  }
-
-  /** The median a row reports in the artifacts. Deep-extended rows report
-    * the median of their steady-state window (successes after the first 3
-    * reps) — an all-reps median there would average the JIT descent the
-    * extra reps were run to get past (VERDICT r18 #6). Rows that never
-    * deep-extended keep the all-successful-reps median, byte-compatible
-    * with every prior round's artifact.
-    */
-  private[graft] def reportedMedian(runs: Seq[(Double, Option[String])],
-      deepExtended: Boolean): Double = {
-    // deep-extended rows share steadyWindow with the instability verdict
-    // (ADVICE r20: an inline re-implementation here could silently diverge
-    // from the verdict's window if one copy were edited later); the
-    // non-deep branch intentionally differs (all successful reps, no
-    // first-rep exclusion) and stays explicit.
-    val window =
-      if (deepExtended) steadyWindow(runs, deepExtended = true)
-      else runs.collect { case (t, None) => t }
-    val s = window.sorted
+  private[graft] def reportedMedian(runs: Seq[(Double, Option[String])]): Double = {
+    val s = runs.collect { case (t, None) => t }.sorted
     s(s.length / 2)
   }
 
@@ -501,20 +332,13 @@ object Bench {
     * Byte-compatible with the pre-fork format.
     */
   private def report(raw: Raw, reps: Int, sfDir: String, detailPath: String,
-                     load1Start: Double, gateWaitSec: Double): Unit = {
+                     load1Start: Double): Unit = {
     // run start/end load sentinel (VERDICT r16 #3): ~0 start = the bench
     // owned the box; anything else flags the artifact as contended
     val load1 = s""""load1":[${num(load1Start, 2)},${num(systemLoad1(), 2)}]"""
-    val (ok, bad) = raw.partition { case (_, runs, _, _) => runs.exists(_._2.isEmpty) }
-    // Floor-graded rows report their min-of-reps (the stable, comparable
-    // number for a service-variance floor — VERDICT r19 #4); everything
-    // else reports the (steady-window) median. The detail artifact's
-    // "floor_graded" list records which rows use which rule.
-    val results = ok.map { case (name, runs, _, deep) =>
-      name -> (if (FloorGraded(name)) runs.collect { case (t, None) => t }.min
-               else reportedMedian(runs, deep))
-    }.sortBy(_._1)
-    val mins = ok.map { case (name, runs, _, _) =>
+    val (ok, bad) = raw.partition { case (_, runs, _) => runs.exists(_._2.isEmpty) }
+    val results = ok.map { case (name, runs, _) => name -> reportedMedian(runs) }.sortBy(_._1)
+    val mins = ok.map { case (name, runs, _) =>
       name -> runs.collect { case (t, None) => t }.min
     }.toMap
     val qs = namedSeconds(results)
@@ -528,7 +352,7 @@ object Bench {
     // Full per-rep detail + error messages + per-query GC attribution
     // (seconds of collector time during the timed reps), execution order,
     // to a side file.
-    val repsDetail = raw.map { case (k, runs, _, _) =>
+    val repsDetail = raw.map { case (k, runs, _) =>
       "\"" + k + "\":[" + runs.map {
         case (t, None)    => num(t, 3)
         case (t, Some(m)) => "{\"t\":" + num(t, 3) + ",\"err\":\"" +
@@ -536,50 +360,10 @@ object Bench {
                       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString } + "\"}"
       }.mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val gcDetail = raw.map { case (k, _, gcSec, _) => "\"" + k + "\":" + num(gcSec, 3) }
+    val gcDetail = raw.map { case (k, _, gcSec) => "\"" + k + "\":" + num(gcSec, 3) }
       .mkString("{", ",", "}")
-    // actual timed-rep count per query: the top-level "reps" field is the
-    // REQUESTED base; streaming queries always run >=5 and the adaptive
-    // spread extension can raise any query to 5 — record the truth so a
-    // reader never has to infer it from array lengths
-    val nReps = raw.map { case (k, runs, _, _) => "\"" + k + "\":" + runs.length }
-      .mkString("{", ",", "}")
-    // Queries whose FINAL successful-rep spread still exceeds the 25%
-    // threshold the adaptive extension stabilizes toward (ADVICE r16): 8
-    // reps is the hard ceiling by design (the extensions exist to dodge a
-    // JIT-cold first rep / run past a descent, not to chase convergence on
-    // a contended box), so a still-noisy median is flagged here rather
-    // than silently kept. Floor-graded rows are excluded: their variance
-    // is acknowledged service noise and their graded number is the min,
-    // so the flag would report a problem the grading rule already solves.
-    val unstableRows = raw.filter { case (k, runs, _, deep) =>
-      !FloorGraded(k) && unstableAfterExtension(runs, deep)
-    }.sortBy(_._1)
-    val unstable = unstableRows.map { case (k, _, _, _) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    // For each still-flagged row, the reported median AND the min-of-reps
-    // side by side (VERDICT r18 #6): a reader diffing a flagged sub-2s row
-    // round-over-round sees the uncontended floor next to the median
-    // without decoding the centisec arrays.
-    val unstableDetail = unstableRows.map { case (k, runs, _, deep) =>
-      val okT = runs.collect { case (t, None) => t }
-      "\"" + k + "\":{\"median\":" + num(reportedMedian(runs, deep), 3) +
-        ",\"min\":" + num(okT.min, 3) + "}"
-    }.mkString("{", ",", "}")
-    // provenance lists: which rows deep-extended this run (their reported
-    // value is a steady-window median) and which are floor-graded (their
-    // reported value is the min-of-reps)
-    val deepList = raw.collect { case (k, _, _, true) => "\"" + k + "\"" }
-      .sorted.mkString("[", ",", "]")
-    val floorList = raw.collect { case (k, _, _, _) if FloorGraded(k) => "\"" + k + "\"" }
-      .sorted.mkString("[", ",", "]")
     try Files.write(Paths.get(detailPath),
-      (line.dropRight(1) +
-        s""","reps_detail":$repsDetail,"gc_sec":$gcDetail,"n_reps":$nReps,""" +
-        s""""unstable_after_extension":$unstable,""" +
-        s""""unstable_detail":$unstableDetail,""" +
-        s""""deep_extended":$deepList,"floor_graded":$floorList,""" +
-        s""""load_gate_wait_sec":${num(gateWaitSec, 1)}}""" + "\n")
+      (line.dropRight(1) + s""","reps_detail":$repsDetail,"gc_sec":$gcDetail}""" + "\n")
         .getBytes("UTF-8"))
     catch { case _: java.io.IOException => () }
     println(line)

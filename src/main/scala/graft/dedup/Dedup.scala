@@ -408,8 +408,12 @@ object Dedup {
   /** Distributed min-label propagation: per iteration one edge⋈label join
     * + one min-aggregate (labels only ever decrease; convergence when no
     * label changed). Near-dup components are star-like (tiny diameter),
-    * so 3-5 iterations typically converge; `maxIter` bounds adversarial
-    * chains. Shuffles carry only (long, long) rows — no text, no arrays.
+    * so 3-5 iterations typically converge. A long chain whose ids are not
+    * monotone along it can need more than `maxIter` rounds (a 1,200-node
+    * chain with ids 7919·i mod 1200 still has 4 labels after 160); the
+    * loop then throws `IllegalStateException` rather than return labels
+    * that split a component. Shuffles carry only (long, long) rows — no
+    * text, no arrays.
     */
   private def distributedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int): DataFrame = {
@@ -462,9 +466,9 @@ object Dedup {
     var converged = false
     while (!converged && iter < maxIter) {
       // min over (self, neighbors' labels, label-of-label): the neighbor
-      // term walks the graph, the pointer-jump term halves the remaining
-      // propagation depth each round — O(log diameter) rounds for chains
-      // instead of O(diameter)
+      // term walks the graph, the pointer-jump term shortcuts it — on a
+      // chain whose ids rise along it, O(log diameter) rounds instead of
+      // O(diameter); other id orders gain less
       val nbr = sym.join(labels, part) // narrow: both sides hash(key)-partitioned
         .map { case (_, (u, l)) => (u, l) }
       val jump = labels.map { case (n, l) => (l, n) }
@@ -480,6 +484,11 @@ object Dedup {
       iter += 1
     }
     sym.unpersist(blocking = false)
+    if (!converged) {
+      labels.unpersist(blocking = false)
+      throw new IllegalStateException(
+        s"connected components did not converge in $maxIter rounds: labels still changing")
+    }
     import spark.implicits._
     labels.toDF("node", "label")
   }

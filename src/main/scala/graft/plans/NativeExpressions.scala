@@ -491,6 +491,26 @@ case class PlaneSigExpr(child: Expression, dim: Int, bits: Int, seed: Int)
     copy(child = newChild)
 }
 
+/** The constant centroid matrix (one row per centroid) of the
+  * nearest-centroid expressions, compared and hashed by content: two
+  * expressions over equal centroids are equal, and the plan prints the
+  * matrix's shape and a content hash rather than a JVM identity.
+  */
+final class Centroids(val rows: Array[Array[Double]]) extends Serializable {
+  override def equals(o: Any): Boolean = o match {
+    case c: Centroids => java.util.Arrays.deepEquals(
+      rows.asInstanceOf[Array[AnyRef]], c.rows.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  override def hashCode: Int = java.util.Arrays.deepHashCode(rows.asInstanceOf[Array[AnyRef]])
+  override def toString: String =
+    f"centroids[${rows.length}x${rows.headOption.fold(0)(_.length)}:$hashCode%08x]"
+}
+
+object Centroids {
+  def apply(rows: Array[Array[Double]]): Centroids = new Centroids(rows)
+}
+
 /** IVF coarse-quantizer assignment: array<float> -> array<int> of the
   * `take` nearest centroid indexes by L2. Centroids are a CONSTANT
   * (nLists x dim — trained driver-side on a bounded sample) embedded as
@@ -499,13 +519,13 @@ case class PlaneSigExpr(child: Expression, dim: Int, bits: Int, seed: Int)
   * closure UDF.
   */
 case class NearestCentroidsExpr(child: Expression,
-    centroids: Array[Array[Double]], take: Int) extends UnaryExpression {
+    centroids: Centroids, take: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
   override protected def nullSafeEval(input: Any): Any =
-    ExprHelpers.nearestCentroids(input.asInstanceOf[ArrayData], centroids, take)
+    ExprHelpers.nearestCentroids(input.asInstanceOf[ArrayData], centroids.rows, take)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
+    val ref = ctx.addReferenceObj("centroids", centroids.rows, "double[][]")
     defineCodeGen(ctx, ev, c =>
       s"graft.plans.ExprHelpers.nearestCentroids($c, $ref, $take)")
   }
@@ -515,13 +535,13 @@ case class NearestCentroidsExpr(child: Expression,
 
 /** [[NearestCentroidsExpr]] over array<double> input (residual-PQ encode). */
 case class NearestCentroidsDExpr(child: Expression,
-    centroids: Array[Array[Double]], take: Int) extends UnaryExpression {
+    centroids: Centroids, take: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids_d"
   override protected def nullSafeEval(input: Any): Any =
-    ExprHelpers.nearestCentroidsDouble(input.asInstanceOf[ArrayData], centroids, take)
+    ExprHelpers.nearestCentroidsDouble(input.asInstanceOf[ArrayData], centroids.rows, take)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
+    val ref = ctx.addReferenceObj("centroids", centroids.rows, "double[][]")
     defineCodeGen(ctx, ev, c =>
       s"graft.plans.ExprHelpers.nearestCentroidsDouble($c, $ref, $take)")
   }

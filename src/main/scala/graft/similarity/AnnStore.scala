@@ -199,7 +199,7 @@ object AnnStore {
         graft.plans.NearestCentroidsExpr(
           org.apache.spark.sql.graft.ColumnBridge.expression(
             slice(vf, m * cb.subDim + 1, cb.subDim)),
-          cb.centroids(m), 1)), 1)
+          graft.plans.Centroids(cb.centroids(m)), 1)), 1)
     }
     df.select(col(idCol).as("id"), array(codeCols: _*).as("code"),
       nearestCells(col(vecCol), idx, 1)(0).as("cell"))
@@ -249,5 +249,5 @@ object AnnStore {
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.plans.NearestCentroidsExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(vec.cast("array<float>")),
-        idx.centroids, take))
+        graft.plans.Centroids(idx.centroids), take))
 }

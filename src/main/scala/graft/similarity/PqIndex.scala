@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.dedup.TextHashing
-import graft.plans.{NearestCentroidsDExpr, NearestCentroidsExpr}
+import graft.plans.{Centroids, NearestCentroidsDExpr, NearestCentroidsExpr}
 
 /** Product quantization (Jégou et al. 2011 — the faiss IVF-PQ building
   * block): split each dim-D vector into M subspaces, quantize every
@@ -97,7 +97,7 @@ object PqIndex {
     val codeCols = (0 until cb.subspaces).map { m =>
       element_at(ColumnBridge.column(NearestCentroidsExpr(
         ColumnBridge.expression(slice(vf, m * cb.subDim + 1, cb.subDim)),
-        cb.centroids(m), 1)), 1)
+        Centroids(cb.centroids(m)), 1)), 1)
     }
     df.select(col(idCol), array(codeCols: _*).as("code"))
   }
@@ -165,7 +165,7 @@ object PqIndex {
     // own table — the residual geometry differs per cell)
     val vd = col(vecCol).cast("array<double>")
     val probeCells = ColumnBridge.column(NearestCentroidsDExpr(
-      ColumnBridge.expression(vd), ivf.centroids, math.min(nProbe, ivf.nLists)))
+      ColumnBridge.expression(vd), Centroids(ivf.centroids), math.min(nProbe, ivf.nLists)))
     val q0 = queries.select(col(idCol).as("q_id"), vd.as("__qv"),
       explode(probeCells).as("__cell"))
     val rq = residualCol(col("__qv"), col("__cell"), ivf)
@@ -193,13 +193,13 @@ object PqIndex {
       cb: PqCodebooks, ivf: IvfIndex): DataFrame = {
     val vd = col(vecCol).cast("array<double>")
     val cell = element_at(ColumnBridge.column(NearestCentroidsDExpr(
-      ColumnBridge.expression(vd), ivf.centroids, 1)), 1)
+      ColumnBridge.expression(vd), Centroids(ivf.centroids), 1)), 1)
     val withCell = df.select(col(idCol), vd.as("__v"), cell.as("__cell"))
     val r = residualCol(col("__v"), col("__cell"), ivf)
     val codeCols = (0 until cb.subspaces).map { m =>
       element_at(ColumnBridge.column(NearestCentroidsDExpr(
         ColumnBridge.expression(slice(r, m * cb.subDim + 1, cb.subDim)),
-        cb.centroids(m), 1)), 1)
+        Centroids(cb.centroids(m)), 1)), 1)
     }
     withCell.select(col(idCol), col("__cell"), array(codeCols: _*).as("code"))
   }
@@ -228,7 +228,7 @@ object PqIndex {
       k: Int = 10): DataFrame = {
     val vf = col(vecCol).cast("array<float>")
     def cells(take: Int): Column = ColumnBridge.column(NearestCentroidsExpr(
-      ColumnBridge.expression(vf), ivf.centroids, take))
+      ColumnBridge.expression(vf), Centroids(ivf.centroids), take))
     val codes = encode(corpus, idCol, vecCol, cb)
       .join(corpus.select(col(idCol), element_at(cells(1), 1).as("__cell")), Seq(idCol))
       .select(col(idCol).as("n_id"), col("code"), col("__cell"))

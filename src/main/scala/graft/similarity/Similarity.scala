@@ -89,7 +89,7 @@ object Similarity {
         graft.plans.NearestCentroidsExpr(
           org.apache.spark.sql.graft.ColumnBridge.expression(
             vec.cast("array<float>")),
-          centroids, take))
+          graft.plans.Centroids(centroids), take))
     val assigned = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .withColumn("cell", nearest(col("n_vec"), 1)(0))
     val probes = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))

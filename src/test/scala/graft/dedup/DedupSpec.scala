@@ -471,6 +471,20 @@ class DedupSpec extends SparkSpec {
     graft.GraftCaches.releaseAll(spark)
   }
 
+  test("distributed components throw, not return labels, when maxIter rounds do not converge") {
+    import spark.implicits._
+    // the permuted chain above: 6 labels would be left after 20 rounds
+    val permuted = (0L until 1199L).map(i => (i * 7919L % 1200L, (i + 1) * 7919L % 1200L))
+      .toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(permuted, "id_a", "id_b", 20, distributedPath))
+    assert(e.getMessage.contains("20 rounds"), e.getMessage)
+    val docs = (0L until 1200L).map(i => (i, s"d$i")).toDF("doc_id", "text")
+    intercept[IllegalStateException](
+      Dedup.dropByComponents(docs, "doc_id", permuted, "id_a", "id_b", distributedPath))
+    graft.GraftCaches.releaseAll(spark)
+  }
+
   test("dropByComponents keeps the same rows and schema on both paths, null ids included") {
     import spark.implicits._
     val pairs = Seq((2L, 1L), (3L, 2L), (5L, 6L), (6L, 6L)).toDF("id_a", "id_b")

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.dedup.TextHashing
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.expr
 
 class NativeExpressionsSpec extends SparkSpec {
@@ -156,5 +157,25 @@ class NativeExpressionsSpec extends SparkSpec {
     val nul = graft.operators.EmbeddingOp.embed(
       Seq[(java.lang.Long, String)]((1L, null)).toDF("id", "t"), "t", "vec", dim = 4)
     assert(nul.collect()(0).getSeq[Float](2).toSeq == Seq(0.0f, 0.0f, 0.0f, 0.0f))
+  }
+
+  test("nearest-centroid expressions over equal centroids are equal and print no identity") {
+    val child = org.apache.spark.sql.catalyst.expressions.BoundReference(
+      0, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType), true)
+    // equal content in distinct arrays
+    def rows = Array(Array(0.5, 1.0), Array(-2.0, 3.25), Array(0.0, 0.0))
+    val exprs = Seq[(Expression, Expression)](
+      NearestCentroidsExpr(child, Centroids(rows), 2) -> NearestCentroidsExpr(child, Centroids(rows), 2),
+      NearestCentroidsDExpr(child, Centroids(rows), 1) -> NearestCentroidsDExpr(child, Centroids(rows), 1))
+    for ((a, b) <- exprs) {
+      assert(a == b)
+      assert(a.semanticEquals(b))
+      assert(a.hashCode == b.hashCode)
+      assert(a.toString == b.toString)
+      assert(!a.toString.contains("@"), a.toString)
+    }
+    // different content is a different expression
+    val other = NearestCentroidsExpr(child, Centroids(Array(Array(0.5, 1.0))), 2)
+    assert(other != exprs.head._1 && !other.toString.contains("@"))
   }
 }
