@@ -83,11 +83,11 @@ object Tables {
     // events.parquet has carried TIMESTAMP(NANOS) (rejected by Spark's
     // reader unless nanosAsLong) and timestamp[us] across testdata
     // regenerations. Contract for all downstream operators: `ts` is
-    // epoch-nanos LongType, whatever the file stores. nanosAsLong covers
-    // the NANOS encoding; the match below converts timestamp readings
-    // (micros * 1000 — exact; session timezone is UTC everywhere, so the
-    // NTZ->TZ cast is the identity on the stored value).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // epoch-nanos LongType, whatever the file stores. nanosAsLong (pinned
+    // by GraftSession.create) covers the NANOS encoding; the match below
+    // converts timestamp readings (micros * 1000 — exact; session timezone
+    // is UTC everywhere, so the NTZ->TZ cast is the identity on the stored
+    // value).
     // predicates on the normalized ts column rewrite back onto the raw
     // timestamp attribute so parquet row-group pruning still applies
     graft.plans.TsPushdown.install(spark)

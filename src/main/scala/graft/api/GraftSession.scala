@@ -6,8 +6,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Centralizes the settings every Graft deployment needs (SURVEY §5):
   * AQE with skew-join handling, sized shuffle partitions, UTC session
-  * time, the nanos-parquet compatibility flag, and Graft's function
-  * surface (zeta compat layer + native expressions) pre-registered.
+  * time, the nanos-parquet compatibility flag, Spark 4's TIME type, and
+  * Graft's SQL function surface (zeta compat layer + native expressions)
+  * pre-registered. Library operators write none of these: the session
+  * policy lives here alone.
   */
 object GraftSession {
 
@@ -30,6 +32,9 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.datetime.java8API.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // TIME ships behind a flag in Spark 4; zeta SQL, FakeSource and
+      // LocalFile schemas may declare it
+      .config("spark.sql.timeType.enabled", "true")
       .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b = b.config(k, v) }
     val spark = b.getOrCreate()

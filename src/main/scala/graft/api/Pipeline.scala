@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators._
+import graft.plans.NativeColumns.exactCol
 import graft.sources.{FakeSource, FileSources}
 import graft.sinks.Sinks
 
@@ -252,10 +253,6 @@ object Pipeline {
             case (k, v: Seq[_]) if k.endsWith(".template") =>
               k.stripSuffix(".template").toLowerCase -> (v: Seq[Any])
           }
-          if (templates.nonEmpty)
-            // templated keys may collide (that's how the reference gets
-            // single-entry maps from one-element templates)
-            spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           // reference ROW_NUM (default 5) counts rows PER degree of
           // parallelism ("total number of data generated per degree of
           // parallelism"); a source-level `parallelism` option overrides
@@ -275,10 +272,6 @@ object Pipeline {
           "tables_configs").contains(k) && !v.isInstanceOf[Map[_, _]] &&
           !v.isInstanceOf[Seq[_]] => k -> v.toString
       }
-      // Spark 4's TIME type ships behind a flag; a schema declaring one
-      // is the opt-in (same contract as FakeSource)
-      if (p.options.get("schema").exists(_.toString.toLowerCase.contains("time")))
-        spark.conf.set("spark.sql.timeType.enabled", "true")
       val schema = p.options.get("schema").map(ZetaSchema.fromSchemaOption)
         .filter(_.nonEmpty) // multi-table entries may declare only a table name
       val df = FileSources.read(spark, FileSources.FileSourceConfig(
@@ -605,8 +598,8 @@ object Pipeline {
         val idleMs = p.strOpt("idle_timeout")
           .map(parseDurationNs(_) / 1000000L).getOrElse(0L)
         graft.streaming.StreamingOps.sessionizeStream(
-            df.selectExpr(s"cast($sessUser as long) as user",
-                s"cast($sessTs as long) as tsNs")
+            df.select(exactCol(sessUser).cast("long").as("user"),
+                exactCol(sessTs).cast("long").as("tsNs"))
               .as[graft.streaming.SessionEvent], gapNs, idleMs)
           .toDF()
           .select(col("user").as(sessUser),
@@ -1148,7 +1141,7 @@ object Pipeline {
       val bound = p.int("row.num", 5).toLong * p.int("parallelism", parallelism)
       val rate = spark.readStream.format("rate")
         .option("rowsPerSecond", math.min(bound, 1000L)).load()
-      graft.sources.FakeSource.generateFromIndex(spark,
+      graft.sources.FakeSource.generateFromIndex(
         rate.select(org.apache.spark.sql.functions.col("value").as("id"))
           .where(org.apache.spark.sql.functions.col("id") < bound),
         fakeSchemaFields(p))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import scala.util.Using
 import graft.GraftCaches.PersistOps
+import graft.plans.NativeColumns._
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY §2.6).
   *
@@ -92,9 +93,6 @@ object Dedup {
     */
   def minHashPairs(df: DataFrame, idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
-    // signature+banding runs as a native codegen'd expression (no UDF
-    // encoder round-trip on the per-document hot path)
-    graft.plans.NativeExpressions.register(df.sparkSession)
     // src feeds BOTH derived caches (banded + shingles); persisting it
     // means the corpus parquet is scanned once per query, not once per
     // derived table. MEMORY_AND_DISK: text-sized, spills, LRU-evictable
@@ -134,13 +132,12 @@ object Dedup {
     * store is written with this same column, so store and recompute agree.
     */
   private def minHashBands(cfg: MinHashConfig): Column =
-    posexplode(expr(
-      s"minhash_bands(txt, ${cfg.shingleSize}, ${cfg.numPerms}, ${cfg.numBands}, ${cfg.seed})"))
+    posexplode(minhashBands(col("txt"), cfg.shingleSize, cfg.numPerms, cfg.numBands, cfg.seed))
       .as(Seq("band_idx", "band_hash"))
 
   /** (doc, hashes): each doc's distinct n-gram hashes of `textCol`. */
   private def shingleTable(df: DataFrame, doc: Column, textCol: String, n: Int): DataFrame =
-    df.select(doc, expr(s"shingle_hashes(`$textCol`, $n)").as("hashes"))
+    df.select(doc, shingleHashes(exactCol(textCol), n).as("hashes"))
 
   /** (id_a, id_b, jaccard) of the candidates whose (doc, hashes) arrays
     * h_a/h_b pass `sideFilter` and score >= `threshold`; `broadcastSide`
@@ -155,7 +152,7 @@ object Dedup {
     val joined = candidates.join(side("id_a", "h_a"), Seq("id_a"))
       .join(side("id_b", "h_b"), Seq("id_b"))
     sideFilter.fold(joined)(joined.where)
-      .withColumn("jaccard", expr("jaccard_long(h_a, h_b)"))
+      .withColumn("jaccard", jaccardLong(col("h_a"), col("h_b")))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -192,7 +189,6 @@ object Dedup {
   def incrementalMinHashPairs(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
-    graft.plans.NativeExpressions.register(corpus.sparkSession)
     val srcAll = docText(corpus, idCol, textCol, lit(false).as("is_delta"))
       .unionByName(docText(delta, idCol, textCol, lit(true).as("is_delta")))
       .graftPersist
@@ -222,7 +218,6 @@ object Dedup {
       path: String, cfg: MinHashConfig = MinHashConfig(),
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     val spark = corpus.sparkSession
-    graft.plans.NativeExpressions.register(spark)
     val (fs, conf) = configFile(spark, path)
     if (mode != SaveMode.Overwrite && fs.exists(new Path(path, "bands")))
       requireStoreConfig(spark, path, cfg)
@@ -285,7 +280,6 @@ object Dedup {
       broadcastTouchedBytes: Long = 512L << 20): DataFrame = {
     val spark = delta.sparkSession
     requireStoreConfig(spark, storePath, cfg)
-    graft.plans.NativeExpressions.register(spark)
     val dsrc = docText(delta, idCol, textCol).graftPersist
     val deltaBands = dsrc.select(col("doc"), lit(true).as("is_delta"), minHashBands(cfg))
       .graftPersist // delta-sized; feeds touched-keys, cap count + probe
@@ -524,11 +518,11 @@ object Dedup {
     }
     losers match {
       case Some(ids) if integralKey && ids.length <= inSetDropLimit =>
-        val id = col(quoted(idCol))
+        val id = exactCol(idCol)
         val isLoser = ColumnBridge.column(
           InSet(Cast(ColumnBridge.expression(id), LongType), ids.toSet[Any]))
         // the column order the USING left-anti join gives: the key first
-        df.where(id.isNull || !isLoser).select((key ++ rest).map(f => col(quoted(f.name))): _*)
+        df.where(id.isNull || !isLoser).select((key ++ rest).map(f => exactCol(f.name)): _*)
       case _ =>
         val doomed = losers.fold(
           distributedComponents(pairs, aCol, bCol, maxIter = 20)
@@ -544,8 +538,6 @@ object Dedup {
     */
   private val inSetDropLimit = 4096
 
-  private def quoted(name: String): String = s"`${name.replace("`", "``")}`"
-
   // ---------- simhash ----------
 
   /** Near-duplicate pairs via 64-bit SimHash with pigeonhole band
@@ -557,9 +549,8 @@ object Dedup {
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 1000): DataFrame = {
-    graft.plans.NativeExpressions.register(df.sparkSession)
     hammingBandPairs(df.select(col(idCol).as("doc"),
-      expr(s"simhash64(`$textCol`)").as("sig")), maxHamming, maxBucketSize)
+      simhash64(exactCol(textCol)).as("sig")), maxHamming, maxBucketSize)
   }
 
   /** Image near-dup pairs via perceptual hashing: each image folds to a
@@ -682,7 +673,6 @@ object Dedup {
       n: Int = 3, threshold: Double = 0.5, maxDocFreq: Int = 1000,
       indexDocFreq: Int = 100, prefixMinDocs: Int = 10000,
       broadcastVerifyBytes: Long = 1L << 30): DataFrame = {
-    graft.plans.NativeExpressions.register(df.sparkSession)
     import org.apache.spark.sql.expressions.Window
     // the shingle table feeds candidate generation AND both verification
     // joins; without persisting it, Spark re-scans and re-shingles the
@@ -953,21 +943,20 @@ object Dedup {
   def substringDedup(df: DataFrame, idCol: String, textCol: String,
       minLen: Int = 50, k: Int = 10, maxBucketSize: Int = 1000): DataFrame = {
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
-    graft.plans.NativeExpressions.register(df.sparkSession)
     val w = minLen - k + 1
 
     // one tokenization pass; toks (strings, for rebuild) stay co-located
     // with tokh (hashes, for verify) in the persisted scan partitions
-    val toks = filter(split(lower(col(textCol)), "\\W+"), t => length(t) > lit(0))
+    val toks = filter(split(lower(exactCol(textCol)), "\\W+"), t => length(t) > lit(0))
     val src = df.select(col(idCol).as("doc"), toks.as("toks"),
-      expr(s"token_hashes(`$textCol`)").as("tokh"))
+      tokenHashes(exactCol(textCol)).as("tokh"))
       .graftPersist
 
     // anchors scan the source once more (narrow: text in, 12 B rows out);
     // positions index the same token sequence as toks/tokh — both sides
     // tokenize as lowercase-split-on-\W+
     val anchors = df.select(col(idCol).as("doc"),
-      explode(expr(s"winnow_anchors(`$textCol`, $k, $w)")).as("a"))
+      explode(winnowAnchors(exactCol(textCol), k, w)).as("a"))
       .select(col("doc"), col("a.pos").as("pos"), col("a.hash").as("hash"))
       .graftPersist
 
@@ -983,7 +972,7 @@ object Dedup {
     val paired = cand
       .join(src.select(col("doc"), col("tokh").as("tok_l")), Seq("doc"))
       .join(src.select(col("doc").as("w_doc"), col("tokh").as("tok_w")), Seq("w_doc"))
-      .withColumn("m", expr(s"extend_match(tok_l, pos, tok_w, w_pos, $k)"))
+      .withColumn("m", extendMatch(col("tok_l"), col("pos"), col("tok_w"), col("w_pos"), k))
       .select(col("doc"), col("pos"), col("w_doc"), col("w_pos"),
         element_at(col("m"), 1).as("s0"), element_at(col("m"), 2).as("len"))
       .where(col("len") >= minLen)
@@ -1013,27 +1002,6 @@ object Dedup {
 
   // ---------- embedding cosine near-dup ----------
 
-  /** Random-hyperplane LSH signature column (sign-bit of dot with seeded
-    * planes) — the native codegen'd `plane_sig` expression
-    * ([[graft.plans.PlaneSigExpr]]); the caller's session must have
-    * [[graft.plans.NativeExpressions.register]] applied.
-    */
-  private[graft] def planeSig(vecCol: String, dim: Int, bits: Int, seed: Int): Column =
-    expr(s"plane_sig(`$vecCol`, $dim, $bits, $seed)")
-
-  /** Exact cosine over vector columns, computed in double with a native
-    * codegen'd expression (deterministic ascending-index fold order —
-    * bit-identical to the zip_with/aggregate formulation it replaces,
-    * whose per-element interpreted lambda eval dominated the 10^8-pair
-    * verification joins at 100x scale; see
-    * [[graft.plans.NativeExpressions]] CosineSimExpr).
-    */
-  def cosineExact(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.plans.CosineSimExpr(
-        org.apache.spark.sql.graft.ColumnBridge.expression(a),
-        org.apache.spark.sql.graft.ColumnBridge.expression(b)))
-
   /** Embedding near-dup pairs: hyperplane-LSH blocking (bandBits-bit bands)
     * then exact cosine verification within buckets.
     *
@@ -1062,9 +1030,8 @@ object Dedup {
       s"sliceFactor must be >= 1 (got $sliceFactor): the a-side explodes " +
         "over (0 until slices), so 0 would silently drop every candidate pair")
     require(sliceRows >= 1, s"sliceRows must be >= 1 (got $sliceRows)")
-    graft.plans.NativeExpressions.register(df.sparkSession)
     val vecs = df.select(col(idCol).as("doc"), col(vecCol).as("vec"))
-    val banded = vecs.withColumn("sig", planeSig("vec", dim, sigBits, seed))
+    val banded = vecs.withColumn("sig", planeSig(col("vec"), dim, sigBits, seed))
       .select(col("doc"), bitBands(col("sig"), (0 to sigBits / bandBits).map(_ * bandBits),
         w => lit((1 << w) - 1)))
       .select(col("doc"), col("b.band_idx"), col("b.band_val"))
@@ -1140,7 +1107,7 @@ object Dedup {
     candidates
       .join(vecs.select(col("doc").as("id_a"), col("vec").as("vec_a")), Seq("id_a"))
       .join(vecs.select(col("doc").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))
-      .withColumn("cosine", cosineExact(col("vec_a"), col("vec_b")))
+      .withColumn("cosine", cosineSim(col("vec_a"), col("vec_b")))
       .where(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }

@@ -213,7 +213,6 @@ object CorpusCases {
     // cell + the min-estimate bit-for-bit (recomputable poly-257+fmix64
     // row hashes — the bloom-replica treatment for frequencies).
     Case("q_cms_heavyhitters", (s, dir) => {
-      graft.plans.NativeExpressions.register(s)
       val words = Tables.load(s, dir, "documents")
         .select(explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
         .where(length(col("w")) > 0)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.NativeColumns
+
 /** Text → embedding-vector transform.
   *
   * Reference: seatunnel-transforms-v2
@@ -36,10 +38,10 @@ object EmbeddingOp {
     * driver query; VERDICT r6 #7).
     */
   def embed(df: DataFrame, srcField: String, outputField: String, dim: Int = 64): DataFrame = {
-    graft.plans.NativeExpressions.register(df.sparkSession)
     // coalesce keeps the UDF-era contract: null text embeds to the zero
     // vector, not null
-    df.withColumn(outputField, expr(s"hash_embed(coalesce(`$srcField`, ''), $dim)"))
+    df.withColumn(outputField,
+      NativeColumns.hashEmbed(coalesce(NativeColumns.exactCol(srcField), lit("")), dim))
   }
 
   /** Provider-batched variant — the reference EmbeddingTransform shape:

@@ -26,8 +26,10 @@ object ScaleOps {
       s"saltedJoin supports inner/left joins, got $joinType")
     val salted = large.withColumn("__salt",
       floor(rand(42) * saltFactor).cast("int"))
+    // an array of literals folds to a constant the plan prints by value
+    // (a folded sequence() prints as an UnsafeArrayData identity)
     val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
+      explode(array((0 until saltFactor).map(lit): _*)))
     salted.join(replicated, keys :+ "__salt", joinType).drop("__salt")
   }
 

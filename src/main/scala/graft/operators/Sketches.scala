@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
-import graft.plans.{CmsEstimateExpr, GraftCmsAggregate, GraftCmsMergeAggregate, Hash64Expr}
+import graft.plans.NativeColumns.{cmsEstimate => cmsEstimateOf, graftCmsAgg, graftCmsMergeAgg, graftHash64}
 
 /** Mergeable cardinality sketches (SURVEY §2.6 profiling scale path).
   *
@@ -62,12 +61,11 @@ object Sketches {
     */
   def countMinAgg(df: DataFrame, itemCol: String, width: Int = 2048,
       depth: Int = 4, seed: Int = 42, byCols: Seq[String] = Nil): DataFrame = {
-    // Expressions built directly (not via the name registry) so the op
-    // works on any session and on any column name, backticks or not
-    // (ADVICE r10 — call_function/expr interpolation broke both).
-    val hash = Hash64Expr(ColumnBridge.expression(col(itemCol)))
-    val agg = ColumnBridge.column(
-      GraftCmsAggregate(hash, width, depth, seed).toAggregateExpression()).as("cms")
+    // Expressions built as typed Columns (NativeColumns, not the name
+    // registry) so the op works on any session and on any column name,
+    // backticks or not (ADVICE r10 — call_function/expr interpolation
+    // broke both).
+    val agg = graftCmsAgg(graftHash64(col(itemCol)), width, depth, seed).as("cms")
     if (byCols.isEmpty) df.agg(agg) else df.groupBy(byCols.map(col): _*).agg(agg)
   }
 
@@ -75,9 +73,7 @@ object Sketches {
     * cross-stage merge (daily sketches -> monthly frequencies).
     */
   def cmsMerge(df: DataFrame, sketchCol: String, byCols: Seq[String] = Nil): DataFrame = {
-    val agg = ColumnBridge.column(
-      GraftCmsMergeAggregate(ColumnBridge.expression(col(sketchCol)))
-        .toAggregateExpression()).as("cms")
+    val agg = graftCmsMergeAgg(col(sketchCol)).as("cms")
     if (byCols.isEmpty) df.agg(agg) else df.groupBy(byCols.map(col): _*).agg(agg)
   }
 
@@ -87,6 +83,5 @@ object Sketches {
     * persisted sketch probes fine with no `NativeExpressions.register`.
     */
   def cmsEstimate(sketch: Column, item: Column): Column =
-    ColumnBridge.column(CmsEstimateExpr(ColumnBridge.expression(sketch),
-      Hash64Expr(ColumnBridge.expression(item))))
+    cmsEstimateOf(sketch, graftHash64(item))
 }

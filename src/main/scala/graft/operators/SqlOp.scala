@@ -47,9 +47,6 @@ object SqlOp {
   def sqlZeta(spark: SparkSession, df: DataFrame, query: String,
       inputName: String = "input"): DataFrame = {
     import org.apache.spark.sql.functions.{explode, explode_outer, expr}
-    // zeta CAST(x AS TIME) may appear in config SQL; Spark 4 gates the
-    // TIME type behind this flag
-    spark.conf.set("spark.sql.timeType.enabled", "true")
     df.createOrReplaceTempView(inputName)
     if (inputName != "dual") df.createOrReplaceTempView("dual")
     val key = "spark.sql.parser.escapedStringLiterals"

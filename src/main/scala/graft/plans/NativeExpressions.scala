@@ -1,10 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, QuaternaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, QuaternaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -653,6 +655,74 @@ case class GraftBloomAggregate(
   override def prettyName: String = "graft_bloom_agg"
 }
 
+/** The native expressions as typed Columns — how library operators put
+  * them into plans. Each function builds the same case class as its
+  * registry builder in [[NativeExpressions.all]], so the plan is the one
+  * the SQL spelling gives, but it needs no function registry on the
+  * session and no SQL text: a column name reaches the expression through
+  * [[exactCol]], whatever characters it holds.
+  */
+object NativeColumns {
+  private def e(c: Column): Expression = ColumnBridge.expression(c)
+  private def c(e: Expression): Column = ColumnBridge.column(e)
+
+  /** Reference to the column named exactly `name`: dots, spaces and
+    * backticks are part of the name, never a path or SQL.
+    */
+  def exactCol(name: String): Column = col(s"`${name.replace("`", "``")}`")
+
+  def simhash64(text: Column): Column = c(SimHash64Expr(e(text)))
+
+  def minhashBands(text: Column, shingleSize: Int, numPerms: Int, numBands: Int,
+      seed: Int): Column =
+    c(MinHashBandsExpr(e(text), shingleSize, numPerms, numBands, seed))
+
+  def shingleHashes(text: Column, shingleSize: Int): Column =
+    c(ShingleHashesExpr(e(text), shingleSize))
+
+  def jaccardLong(a: Column, b: Column): Column = c(JaccardLongExpr(e(a), e(b)))
+
+  /** Exact cosine in double, one codegen'd loop per pair (see
+    * [[ExprHelpers.cosineSim]]: bit-identical to the zip_with/aggregate
+    * formulation).
+    */
+  def cosineSim(a: Column, b: Column): Column = c(CosineSimExpr(e(a), e(b)))
+
+  def tokenHashes(text: Column): Column = c(TokenHashesExpr(e(text)))
+
+  def winnowAnchors(text: Column, k: Int, w: Int): Column = c(WinnowAnchorsExpr(e(text), k, w))
+
+  def extendMatch(tokA: Column, posA: Column, tokB: Column, posB: Column, k: Int): Column =
+    c(ExtendMatchExpr(e(tokA), e(posA), e(tokB), e(posB), k))
+
+  def planeSig(vec: Column, dim: Int, bits: Int, seed: Int): Column =
+    c(PlaneSigExpr(e(vec), dim, bits, seed))
+
+  def hashEmbed(text: Column, dim: Int): Column = c(HashEmbedExpr(e(text), dim))
+
+  def graftBloomAgg(value: Column, numItems: Long, numBits: Long): Column =
+    c(GraftBloomAggregate(e(value), numItems, numBits).toAggregateExpression())
+
+  def mightContain(bloom: Column, value: Column): Column =
+    c(new BloomFilterMightContain(e(bloom), e(value)))
+
+  def nearestCentroids(vec: Column, centroids: Array[Array[Double]], take: Int): Column =
+    c(NearestCentroidsExpr(e(vec), Centroids(centroids), take))
+
+  def nearestCentroidsD(vec: Column, centroids: Array[Array[Double]], take: Int): Column =
+    c(NearestCentroidsDExpr(e(vec), Centroids(centroids), take))
+
+  def graftHash64(str: Column): Column = c(Hash64Expr(e(str)))
+
+  def graftCmsAgg(hash: Column, width: Int, depth: Int, seed: Int): Column =
+    c(GraftCmsAggregate(e(hash), width, depth, seed).toAggregateExpression())
+
+  def graftCmsMergeAgg(sketch: Column): Column =
+    c(GraftCmsMergeAggregate(e(sketch)).toAggregateExpression())
+
+  def cmsEstimate(sketch: Column, hash: Column): Column = c(CmsEstimateExpr(e(sketch), e(hash)))
+}
+
 object NativeExpressions {
 
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -747,10 +817,12 @@ object NativeExpressions {
       CmsEstimateExpr(args(0), args(1))
     })
 
-  /** Register the native functions in the session registry (idempotent):
-    * a name whose registered builder is already this object's is skipped,
-    * so operators may call this on every use without replacing (and
-    * logging a replacement of) the functions the session already has.
+  /** Register the native functions in the session registry — the SQL
+    * surface for users and driver SQL; `GraftSession.create` calls it
+    * once. Library operators never need it: they build the expressions
+    * through [[NativeColumns]]. Idempotent: a name whose registered
+    * builder is already this object's is skipped, so a repeat call
+    * replaces (and logs) nothing.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

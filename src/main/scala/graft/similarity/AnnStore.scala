@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.dedup.Dedup
+import graft.plans.NativeColumns
 
 /** PERSISTED IVF ANN index (VERDICT r12 #6) — the production daily-ingest
   * shape for similarity search, the [[graft.dedup.Dedup.writeSignatures]]
@@ -98,7 +98,7 @@ object AnnStore {
       .where(col("cell").isin(cells: _*))
       .select(col("cell"), col("id").as("n_id"), col("vec").as("n_vec"))
     stored.join(broadcast(probes), Seq("cell"))
-      .withColumn("cosine", Dedup.cosineExact(col("q_vec"), col("n_vec")))
+      .withColumn("cosine", NativeColumns.cosineSim(col("q_vec"), col("n_vec")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))))
       .where(col("rnk") <= k)
@@ -195,11 +195,8 @@ object AnnStore {
       idx: IvfIndex, cb: PqCodebooks): DataFrame = {
     val vf = col(vecCol).cast("array<float>")
     val codeCols = (0 until cb.subspaces).map { m =>
-      element_at(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.NearestCentroidsExpr(
-          org.apache.spark.sql.graft.ColumnBridge.expression(
-            slice(vf, m * cb.subDim + 1, cb.subDim)),
-          graft.plans.Centroids(cb.centroids(m)), 1)), 1)
+      element_at(NativeColumns.nearestCentroids(
+        slice(vf, m * cb.subDim + 1, cb.subDim), cb.centroids(m), 1), 1)
     }
     df.select(col(idCol).as("id"), array(codeCols: _*).as("code"),
       nearestCells(col(vecCol), idx, 1)(0).as("cell"))
@@ -246,8 +243,5 @@ object AnnStore {
 
   private def nearestCells(vec: org.apache.spark.sql.Column, idx: IvfIndex,
       take: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.plans.NearestCentroidsExpr(
-        org.apache.spark.sql.graft.ColumnBridge.expression(vec.cast("array<float>")),
-        graft.plans.Centroids(idx.centroids), take))
+    NativeColumns.nearestCentroids(vec.cast("array<float>"), idx.centroids, take)
 }

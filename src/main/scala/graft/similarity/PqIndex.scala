@@ -3,10 +3,9 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.dedup.TextHashing
-import graft.plans.{Centroids, NearestCentroidsDExpr, NearestCentroidsExpr}
+import graft.plans.NativeColumns.{nearestCentroids, nearestCentroidsD}
 
 /** Product quantization (Jégou et al. 2011 — the faiss IVF-PQ building
   * block): split each dim-D vector into M subspaces, quantize every
@@ -95,9 +94,7 @@ object PqIndex {
       cb: PqCodebooks): DataFrame = {
     val vf = col(vecCol).cast("array<float>")
     val codeCols = (0 until cb.subspaces).map { m =>
-      element_at(ColumnBridge.column(NearestCentroidsExpr(
-        ColumnBridge.expression(slice(vf, m * cb.subDim + 1, cb.subDim)),
-        Centroids(cb.centroids(m)), 1)), 1)
+      element_at(nearestCentroids(slice(vf, m * cb.subDim + 1, cb.subDim), cb.centroids(m), 1), 1)
     }
     df.select(col(idCol), array(codeCols: _*).as("code"))
   }
@@ -164,8 +161,7 @@ object PqIndex {
     // the query's residual AGAINST THAT CELL (each probed cell has its
     // own table — the residual geometry differs per cell)
     val vd = col(vecCol).cast("array<double>")
-    val probeCells = ColumnBridge.column(NearestCentroidsDExpr(
-      ColumnBridge.expression(vd), Centroids(ivf.centroids), math.min(nProbe, ivf.nLists)))
+    val probeCells = nearestCentroidsD(vd, ivf.centroids, math.min(nProbe, ivf.nLists))
     val q0 = queries.select(col(idCol).as("q_id"), vd.as("__qv"),
       explode(probeCells).as("__cell"))
     val rq = residualCol(col("__qv"), col("__cell"), ivf)
@@ -192,14 +188,11 @@ object PqIndex {
   def encodeResidual(df: DataFrame, idCol: String, vecCol: String,
       cb: PqCodebooks, ivf: IvfIndex): DataFrame = {
     val vd = col(vecCol).cast("array<double>")
-    val cell = element_at(ColumnBridge.column(NearestCentroidsDExpr(
-      ColumnBridge.expression(vd), Centroids(ivf.centroids), 1)), 1)
+    val cell = element_at(nearestCentroidsD(vd, ivf.centroids, 1), 1)
     val withCell = df.select(col(idCol), vd.as("__v"), cell.as("__cell"))
     val r = residualCol(col("__v"), col("__cell"), ivf)
     val codeCols = (0 until cb.subspaces).map { m =>
-      element_at(ColumnBridge.column(NearestCentroidsDExpr(
-        ColumnBridge.expression(slice(r, m * cb.subDim + 1, cb.subDim)),
-        Centroids(cb.centroids(m)), 1)), 1)
+      element_at(nearestCentroidsD(slice(r, m * cb.subDim + 1, cb.subDim), cb.centroids(m), 1), 1)
     }
     withCell.select(col(idCol), col("__cell"), array(codeCols: _*).as("code"))
   }
@@ -227,8 +220,7 @@ object PqIndex {
       vecCol: String, cb: PqCodebooks, ivf: IvfIndex, nProbe: Int = 4,
       k: Int = 10): DataFrame = {
     val vf = col(vecCol).cast("array<float>")
-    def cells(take: Int): Column = ColumnBridge.column(NearestCentroidsExpr(
-      ColumnBridge.expression(vf), Centroids(ivf.centroids), take))
+    def cells(take: Int): Column = nearestCentroids(vf, ivf.centroids, take)
     val codes = encode(corpus, idCol, vecCol, cb)
       .join(corpus.select(col(idCol), element_at(cells(1), 1).as("__cell")), Seq(idCol))
       .select(col(idCol).as("n_id"), col("code"), col("__cell"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.plans.NativeColumns.{cosineSim, exactCol, nearestCentroids, planeSig}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY §2.6).
@@ -29,7 +30,7 @@ object Similarity {
     val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")))
     val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
     val scored = c.crossJoin(q)
-      .withColumn("cosine", Dedup.cosineExact(col("q_vec"), col("n_vec")))
+      .withColumn("cosine", cosineSim(col("q_vec"), col("n_vec")))
     scored
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))))
@@ -54,7 +55,7 @@ object Similarity {
       col(labelCol).as("n_label"))
     c.crossJoin(q)
       .where(col("n_label") =!= col("q_label"))
-      .withColumn("cosine", Dedup.cosineExact(col("q_vec"), col("n_vec")))
+      .withColumn("cosine", cosineSim(col("q_vec"), col("n_vec")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))))
       .where(col("rnk") <= k)
@@ -85,18 +86,14 @@ object Similarity {
     // UDF), so the full-corpus assign scan stays inside WholeStageCodegen
     // — same rationale as plane_sig. Float arrays cast in for exactness.
     def nearest(vec: org.apache.spark.sql.Column, take: Int): org.apache.spark.sql.Column =
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.NearestCentroidsExpr(
-          org.apache.spark.sql.graft.ColumnBridge.expression(
-            vec.cast("array<float>")),
-          graft.plans.Centroids(centroids), take))
+      nearestCentroids(vec.cast("array<float>"), centroids, take)
     val assigned = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .withColumn("cell", nearest(col("n_vec"), 1)(0))
     val probes = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
       .withColumn("cell", explode(nearest(col("q_vec"), nProbe))))
 
     assigned.join(probes, Seq("cell"))
-      .withColumn("cosine", Dedup.cosineExact(col("q_vec"), col("n_vec")))
+      .withColumn("cosine", cosineSim(col("q_vec"), col("n_vec")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))))
       .where(col("rnk") <= k)
@@ -162,9 +159,8 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, dim: Int, k: Int = 10,
       sigBits: Int = 16, bandBits: Int = 4, seed: Int = 42): DataFrame = {
-    graft.plans.NativeExpressions.register(corpus.sparkSession)
     def banded(df: DataFrame, id: String): DataFrame =
-      df.select(col(idCol).as(id), Dedup.planeSig(vecCol, dim, sigBits, seed).as("sig"))
+      df.select(col(idCol).as(id), planeSig(exactCol(vecCol), dim, sigBits, seed).as("sig"))
         .select(col(id), Dedup.bitBands(col("sig"), (0 to sigBits / bandBits).map(_ * bandBits),
           w => lit((1 << w) - 1)))
         .select(col(id), col("b.band_idx"), col("b.band_val"))
@@ -177,7 +173,7 @@ object Similarity {
     candidates
       .join(corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec")), Seq("n_id"))
       .join(broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))), Seq("q_id"))
-      .withColumn("cosine", Dedup.cosineExact(col("q_vec"), col("n_vec")))
+      .withColumn("cosine", cosineSim(col("q_vec"), col("n_vec")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))))
       .where(col("rnk") <= k)

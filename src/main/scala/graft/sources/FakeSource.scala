@@ -84,14 +84,15 @@ object FakeSource {
         val vt: Any =
           if (vt0.trim.startsWith("{")) graft.api.ZetaSchema.parseInlineRow(vt0)
           else vt0
-        map(
-          // keys are generated strings so `string.template` shapes them the
-          // way the reference does (duplicate templated keys collapse —
-          // callers set mapKeyDedupPolicy=LAST_WIN when templates are on)
-          genFor(name, "string", seed, variant + 3, templates, ranges),
-          genAny(name, vt, seed, variant + 1, templates, ranges),
-          genFor(name, "string", seed, variant + 4, templates, ranges),
+        // keys are generated strings so `string.template` shapes them the
+        // way the reference does: templated keys may collide (a
+        // one-element template gives single-entry maps), and the last
+        // value wins, in this map only
+        val (k1, k2) = (genFor(name, "string", seed, variant + 3, templates, ranges),
+          genFor(name, "string", seed, variant + 4, templates, ranges))
+        val (v1, v2) = (genAny(name, vt, seed, variant + 1, templates, ranges),
           genAny(name, vt, seed, variant + 2, templates, ranges))
+        when(k1 === k2, map(k2, v2)).otherwise(map(k1, v1, k2, v2))
       case other => throw new IllegalArgumentException(s"FakeSource: unsupported type $other")
     }
   }
@@ -115,18 +116,12 @@ object FakeSource {
       slices: Int = 4, seed: Long = 42): DataFrame =
     generateAny(spark, fields, rows, slices, seed)
 
-  private def declaresTime(tpe: Any): Boolean = tpe match {
-    case s: String => s.trim.equalsIgnoreCase("time")
-    case m: scala.collection.Map[_, _] => m.values.exists(declaresTime)
-    case _ => false
-  }
-
   /** Like [[generate]] but field specs may be nested row maps. */
   def generateAny(spark: SparkSession, fields: Seq[(String, Any)], rows: Long,
       slices: Int = 4, seed: Long = 42,
       templates: Map[String, Seq[Any]] = Map.empty,
       ranges: Map[String, (Double, Double)] = Map.empty): DataFrame =
-    generateFromIndex(spark, spark.range(0, rows, 1, slices).toDF("id"),
+    generateFromIndex(spark.range(0, rows, 1, slices).toDF("id"),
       fields, seed, templates, ranges)
 
   /** Project the declared fields over any frame carrying a monotonic
@@ -134,16 +129,11 @@ object FakeSource {
     * STREAMING FakeSource (rate source), so both generate identical
     * deterministic values for a given index.
     */
-  def generateFromIndex(spark: SparkSession, base: DataFrame,
+  def generateFromIndex(base: DataFrame,
       fields: Seq[(String, Any)], seed: Long = 42,
       templates: Map[String, Seq[Any]] = Map.empty,
-      ranges: Map[String, (Double, Double)] = Map.empty): DataFrame = {
-    // Spark 4's TIME type ships behind a flag; a schema that declares a
-    // time field is an explicit opt-in
-    if (fields.exists { case (_, t) => declaresTime(t) })
-      spark.conf.set("spark.sql.timeType.enabled", "true")
+      ranges: Map[String, (Double, Double)] = Map.empty): DataFrame =
     base.select(fields.map { case (name, tpe) =>
       genAny(name, tpe, seed, 0, templates, ranges).as(name)
     }: _*)
-  }
 }

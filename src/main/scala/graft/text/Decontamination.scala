@@ -1,7 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.plans.NativeColumns.{exactCol, graftBloomAgg, mightContain, shingleHashes}
 
 /** Benchmark decontamination and PII redaction for training corpora
   * (SURVEY §2.6 — training-data pipeline operators beyond the reference).
@@ -19,18 +21,20 @@ import org.apache.spark.sql.functions._
   */
 object Decontamination {
 
+  /** Distinct `ngram`-token shingle hashes of the text column named `textCol`. */
+  private def grams(textCol: String, ngram: Int): Column = shingleHashes(exactCol(textCol), ngram)
+
   /** Ids of corpus docs sharing >= `minMatches` k-gram(s) with the
     * benchmark (k = `ngram`, default 13 tokens per the common recipe).
     */
   def contaminatedIds(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, benchTextCol: String,
       ngram: Int = 13, minMatches: Int = 1): DataFrame = {
-    graft.plans.NativeExpressions.register(corpus.sparkSession)
     val benchGrams = benchmark
-      .select(explode(expr(s"shingle_hashes(`$benchTextCol`, $ngram)")).as("gram"))
+      .select(explode(grams(benchTextCol, ngram)).as("gram"))
       .distinct()
     val corpusGrams = corpus.select(col(idCol),
-      explode(expr(s"shingle_hashes(`$textCol`, $ngram)")).as("gram"))
+      explode(grams(textCol, ngram)).as("gram"))
     val matched = corpusGrams.join(broadcast(benchGrams), Seq("gram"))
     if (minMatches <= 1) matched.select(idCol).distinct()
     else matched.groupBy(idCol).agg(count(lit(1)).as("__m"))
@@ -49,12 +53,11 @@ object Decontamination {
   def overlapFractions(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, benchTextCol: String,
       ngram: Int = 13): DataFrame = {
-    graft.plans.NativeExpressions.register(corpus.sparkSession)
     val benchGrams = benchmark
-      .select(explode(expr(s"shingle_hashes(`$benchTextCol`, $ngram)")).as("gram"))
+      .select(explode(grams(benchTextCol, ngram)).as("gram"))
       .distinct()
     val corpusGrams = corpus
-      .select(col(idCol), explode(expr(s"shingle_hashes(`$textCol`, $ngram)")).as("gram"))
+      .select(col(idCol), explode(grams(textCol, ngram)).as("gram"))
       .distinct()
     val totals = corpusGrams.groupBy(idCol).agg(count(lit(1)).as("n_grams"))
     val matched = corpusGrams.join(broadcast(benchGrams), Seq("gram"))
@@ -84,8 +87,6 @@ object Decontamination {
         ngram, minMatches)),
       Seq(idCol), "left_anti")
 
-  private val bloomViewCounter = new java.util.concurrent.atomic.AtomicLong()
-
   /** Bloom-filter decontamination: when the benchmark gram set itself is
     * too large to broadcast as an exact set (many benchmark suites ×
     * paraphrase expansions), aggregate it into ONE Bloom filter binary
@@ -103,38 +104,28 @@ object Decontamination {
     * / `maxNumBits` confs, and those are re-read lazily on the EXECUTORS,
     * so raising-then-restoring them around the build is a silent-shrink
     * race affecting Spark's own runtime filters besides (ADVICE r6). No
-    * session conf is touched here. Mind the per-document false-positive
-    * rate: a doc is flagged if ANY of its ~n grams probes positive, so
-    * doc-level FP ≈ 1-(1-fpp)^n. Size `fpp` for the corpus's total gram
+    * session conf or catalog entry is touched here. Mind the
+    * per-document false-positive rate: a doc is flagged if ANY of its ~n
+    * grams probes positive, so doc-level FP ≈ 1-(1-fpp)^n. Size `fpp` for the corpus's total gram
     * probes (e.g. 1e-9) or set `minMatches` >= 2 — both exposed here.
     */
   def contaminatedIdsBloom(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, benchTextCol: String,
       ngram: Int = 13, expectedGrams: Long = 10000000L,
       fpp: Double = 1e-9, minMatches: Int = 1): DataFrame = {
-    graft.plans.NativeExpressions.register(corpus.sparkSession)
-    val spark = corpus.sparkSession
     val bits = math.ceil(-expectedGrams * math.log(fpp) / (math.log(2) * math.log(2))).toLong
     // the filter builds distributed (mergeable binary aggregate) and is
     // injected as a one-row scalar subquery, never a literal
     val bloomDf = benchmark
-      .select(explode(expr(s"shingle_hashes(`$benchTextCol`, $ngram)")).as("gram"))
-      .agg(expr(s"graft_bloom_agg(gram, ${expectedGrams}L, ${bits}L)").as("bloom"))
-    val view = s"graft_bloom_${bloomViewCounter.incrementAndGet()}"
-    bloomDf.createOrReplaceTempView(view)
+      .select(explode(grams(benchTextCol, ngram)).as("gram"))
+      .agg(graftBloomAgg(col("gram"), expectedGrams, bits).as("bloom"))
     val corpusGrams = corpus.select(col(idCol),
-      explode(expr(s"shingle_hashes(`$textCol`, $ngram)")).as("gram"))
+      explode(grams(textCol, ngram)).as("gram"))
     val matched = corpusGrams
-      .where(expr(s"might_contain((SELECT bloom FROM $view), gram)"))
-    val result =
-      if (minMatches <= 1) matched.select(idCol).distinct()
-      else matched.groupBy(idCol).agg(count(lit(1)).as("__m"))
-        .where(col("__m") >= minMatches).select(idCol)
-    // DataFrames analyze eagerly, so the subquery is already resolved —
-    // the view served its one purpose and must not leak into the session
-    // catalog (ADVICE r6)
-    spark.catalog.dropTempView(view)
-    result
+      .where(mightContain(bloomDf.scalar(), col("gram")))
+    if (minMatches <= 1) matched.select(idCol).distinct()
+    else matched.groupBy(idCol).agg(count(lit(1)).as("__m"))
+      .where(col("__m") >= minMatches).select(idCol)
   }
 
   /** Drop corpus docs flagged by the Bloom decontamination pass. */

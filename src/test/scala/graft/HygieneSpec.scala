@@ -70,6 +70,61 @@ class HygieneSpec extends AnyFunSuite {
       s"hand-built SparkSession outside api/GraftSession.scala: ${offenders.mkString(", ")}")
   }
 
+  test("library code leaves the session's registry, catalog and confs alone") {
+    // GraftSession.create owns session policy and plans/ owns the function
+    // registry. An operator that writes either makes its result depend on
+    // what ran before it in the session, and breaks on a session that
+    // never ran it; native expressions enter plans as typed Columns
+    // (graft.plans.NativeColumns), never as SQL text that needs the
+    // registry. Each allowed site is counted, with the reason the write is
+    // the contract there.
+    val root = "src/main/scala/graft/"
+    val writes = Seq("NativeExpressions.register(", "createOrReplaceTempView", ".conf.set(",
+      "TsPushdown.install(")
+    val allowed: Map[(String, String), (Int, String)] = Map(
+      ("operators/SqlOp.scala", "createOrReplaceTempView") ->
+        (5, "a SQL transform reads its inputs, and `dual`, as views"),
+      ("Tables.scala", "createOrReplaceTempView") ->
+        (1, "registerAll publishes the tables to driver SQL"),
+      ("operators/SqlOp.scala", ".conf.set(") ->
+        (2, "escapedStringLiterals around a zeta parse, restored after it"),
+      ("api/Pipeline.scala", ".conf.set(") ->
+        (1, "a job's env.parallelism is its shuffle-partition count"),
+      ("Tables.scala", "TsPushdown.install(") ->
+        (1, "loads normalize ts, and the rule maps ts predicates back onto the parquet column"))
+    val nativeNames = graft.plans.NativeExpressions.all.map(_._1)
+    val sqlCall = """(?:\bexpr|selectExpr|call_function)\(""".r
+    /** Native function names called inside the argument text of each SQL-string call. */
+    def nativeInSql(src: String): Seq[String] = sqlCall.findAllMatchIn(src).toSeq.flatMap { m =>
+      var depth = 1
+      var i = m.end
+      while (i < src.length && depth > 0) {
+        if (src.charAt(i) == '(') depth += 1 else if (src.charAt(i) == ')') depth -= 1
+        i += 1
+      }
+      val arg = src.substring(m.end, i)
+      nativeNames.filter(n => s"\\b$n\\s*\\(".r.findFirstIn(arg).nonEmpty)
+    }
+    val sources = scalaFiles(root).map(f => f.toString.stripPrefix(root) -> f)
+      .filterNot { case (rel, _) =>
+        rel.startsWith("driver/") || rel.startsWith("plans/") || rel == "api/GraftSession.scala"
+      }
+      .map { case (rel, f) => rel -> stripComments(new String(Files.readAllBytes(f), "UTF-8")) }
+    val found = sources.flatMap { case (rel, src) =>
+      writes.map(w => (rel, w) -> src.sliding(w.length).count(_ == w)).filter(_._2 > 0)
+    }.toMap
+    val drift = (found.keySet ++ allowed.keySet).toSeq.sorted
+      .filter(k => found.getOrElse(k, 0) != allowed.get(k).fold(0)(_._1))
+      .map(k => s"$k: found ${found.getOrElse(k, 0)}, allowed " +
+        allowed.get(k).fold("0")(a => s"${a._1} (${a._2})"))
+    val sqlNative = sources.flatMap { case (rel, src) =>
+      nativeInSql(src).map(n => s"$rel: $n called through SQL text; build it with graft.plans.NativeColumns")
+    }
+    val problems = drift ++ sqlNative
+    assert(problems.isEmpty, "session writes outside GraftSession.create and plans/:\n  " +
+      problems.mkString("\n  "))
+  }
+
   /** Strip `//` line comments and (nested) `/* */` block comments from
     * Scala source, string-aware: comment markers inside `"…"`, `"""…"""`
     * and char literals don't open comments, and string CONTENT is kept

@@ -367,4 +367,82 @@ class PipelineSpec extends SparkSpec {
     assert(events.columns.toSeq == Seq("id", "tag"))
     assert(events.count() == 6L) // row.num per degree of parallelism
   }
+
+  test("Sessionize runs both legs on a user_field that is not an SQL identifier") {
+    val tmp = Files.createTempDirectory("graft-sess-name").toString
+    val ns = 1700000000000000000L
+    val h = 3600000000000L
+    // user 1 has two sessions, user 2 one; a far-future sentinel per user
+    // closes them on the streaming leg
+    val rows = Seq((1L, ns), (1L, ns + 10000000000L), (1L, ns + 2 * h), (2L, ns + 5000000000L),
+      (1L, ns + 1000 * h), (2L, ns + 1000 * h))
+    Files.write(java.nio.file.Paths.get(tmp, "feed.json"),
+      rows.map { case (u, t) => s"""{"user id":$u,"ts":$t}""" }
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    def conf(mode: String, sink: String) =
+      s"""env { job.mode = "$mode" }
+         |source {
+         |  LocalFile {
+         |    plugin_output = "ev"
+         |    path = "$tmp"
+         |    file_format_type = "json"
+         |    schema = "`user id` BIGINT, ts BIGINT"
+         |  }
+         |}
+         |transform {
+         |  Sessionize {
+         |    plugin_input = "ev"
+         |    plugin_output = "sess"
+         |    user_field = "user id"
+         |    event_time_ns_field = "ts"
+         |    session_gap = "30 minutes"
+         |  }
+         |}
+         |sink { $sink }
+         |""".stripMargin
+    def sessions(df: org.apache.spark.sql.DataFrame) =
+      df.select("`user id`", "n_events", "start_ns", "end_ns").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val want = Set((1L, 2L, ns, ns + 10000000000L), (1L, 1L, ns + 2 * h, ns + 2 * h),
+      (2L, 1L, ns + 5000000000L, ns + 5000000000L))
+    val batch = sessions(Pipeline.run(spark, Pipeline.parseHocon(conf("BATCH", "Console { }")))("sess"))
+    assert(batch == want ++ Set((1L, 1L, ns + 1000 * h, ns + 1000 * h),
+      (2L, 1L, ns + 1000 * h, ns + 1000 * h)))
+    val queries = Pipeline.runStreaming(spark,
+      Pipeline.parseHocon(conf("STREAMING", "Memory { query_name = \"sess_user_id\" }")))
+    try {
+      queries.foreach(_.processAllAvailable())
+      assert(sessions(spark.table("sess_user_id")) == want)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("FakeSource string.template collapses map keys in that map only") {
+    val job = Pipeline.parseHocon(
+      """env { job.mode = "BATCH" }
+        |source {
+        |  FakeSource {
+        |    plugin_output = "fake"
+        |    row.num = 3
+        |    string.template = ["k"]
+        |    schema = { fields { m = "map<string, int>" } }
+        |  }
+        |}
+        |sink { Console { } }
+        |""".stripMargin)
+    val got = Pipeline.run(spark, job)("fake").collect()
+      .map(_.getMap[String, Int](0).toMap).toSeq
+    assert(got == Seq(Map("k" -> 840116), Map("k" -> 752482), Map("k" -> 918126)))
+    // the session's duplicate-key policy is untouched: still an error
+    val e = intercept[Exception](spark.sql("SELECT map(1, 'a', 1, 'b')").collect())
+    assert(e.getMessage.contains("DUPLICATED_MAP_KEY"), e.getMessage)
+  }
+
+  test("a fresh Graft session accepts TIME in SQL and in FakeSource schemas") {
+    val fresh = spark.newSession() // session options only, nothing an operator set
+    val t = fresh.sql("SELECT CAST('12:34:56' AS TIME) AS t")
+    assert(t.schema("t").dataType.typeName.startsWith("time"))
+    assert(t.collect()(0).get(0).toString == "12:34:56")
+    val fake = graft.sources.FakeSource.generate(fresh, Seq("c" -> "time"), rows = 3)
+    assert(fake.schema("c").dataType.typeName.startsWith("time") && fake.count() == 3)
+  }
 }

@@ -306,8 +306,8 @@ class DedupSpec extends SparkSpec {
       v.zipWithIndex.map { case (x, i) => (x + 1e-4 * ((k + i) % 3)).toFloat }.toSeq
     val df = ((1 to 5).map(k => (k.toLong, near(c, k))) ++
       (11 to 12).map(k => (k.toLong, near(c.map(-_), k)))).toDF("vec_id", "embedding")
-    graft.plans.NativeExpressions.register(spark)
-    val sigs = df.select(col("vec_id"), Dedup.planeSig("embedding", 8, 8, 42).as("sig"))
+    val sigs = df.select(col("vec_id"),
+        graft.plans.NativeColumns.planeSig(col("embedding"), 8, 8, 42).as("sig"))
       .collect().map(r => r.getLong(0) -> r.get(1)).toMap
     assert((1L to 5L).map(sigs).distinct.size == 1 && sigs(11L) == sigs(12L), "fixture drifted")
     def run(maxBucketSize: Int = 10000, sliceRows: Int = 2048) =

@@ -15,6 +15,15 @@ class ScaleOpsSpec extends SparkSpec {
     assert(got.size == 1000)
   }
 
+  test("saltedJoin's plan prints its salt values, not an array identity") {
+    val large = Seq((1, "a")).toDF("k", "v")
+    val dim = Seq((1, "one")).toDF("k", "name")
+    val plan = ScaleOps.saltedJoin(large, dim, Seq("k"), saltFactor = 4)
+      .queryExecution.optimizedPlan.toString
+    assert(!plan.contains("@"), plan)
+    assert(plan.contains("[0,1,2,3]"), plan)
+  }
+
   test("saltedJoin left join keeps unmatched rows exactly once") {
     val large = Seq((1, "a"), (9, "nomatch")).toDF("k", "v")
     val dim = Seq((1, "one")).toDF("k", "name")
