@@ -737,13 +737,11 @@ object Pipeline {
       s"$name is a test-only sink (failure injection / driver-side collect); " +
         "set -Dgraft.test.sinks=true to enable it in a test harness")
 
-  private def runSink(df: DataFrame, p: Plugin): Unit = p.plugin match {
+  private[api] def runSink(df: DataFrame, p: Plugin): Unit = p.plugin match {
     case "Console" => Sinks.console(df, p.int("limit", 20))
     case "InMemory" => // batch form of the reference's e2e test sink
       requireTestSink("InMemory")
-      graft.sinks.InMemorySink.append(
-        p.strOpt("store_key").getOrElse(p.input.getOrElse(p.plugin)),
-        df.collect().toIndexedSeq)
+      graft.sinks.InMemorySink.append(inMemoryKey(p), df.collect().toIndexedSeq)
     case "LocalFile" | "File" =>
       val cfg = Sinks.FileSinkConfig(
         p.str("path"), p.strOpt("file_format_type").getOrElse("parquet"),
@@ -1025,7 +1023,7 @@ object Pipeline {
   /** One write a sink performs: the catalog tables it reads, their frame
     * (a union when there are several) and the sink options to write with.
     */
-  private final case class SinkInput(tables: Seq[String], df: DataFrame, sink: Plugin)
+  private[api] final case class SinkInput(tables: Seq[String], df: DataFrame, sink: Plugin)
 
   /** Resolve one sink block into the writes it performs — the batch,
     * metered and streaming runners all read their sink inputs here:
@@ -1078,49 +1076,156 @@ object Pipeline {
     }
   }
 
-  /** The batch sink loop `run` and `runWithMetrics` share: build the
-    * catalog, hand every sink write to `write`, and return the catalog.
+  /** Where a write lands, as far as deciding which writes may overlap. */
+  private sealed trait SinkTarget
+  /** A file sink's directory, scheme and authority dropped: two paths on
+    * different filesystems that look alike are kept apart needlessly, never
+    * run together wrongly. */
+  private final case class PathTarget(path: java.nio.file.Path) extends SinkTarget
+  /** A target two sinks share outright: stdout, an InMemory store key, a
+    * database url. */
+  private final case class NamedTarget(kind: String, name: String) extends SinkTarget
+  /** Assert, Http and Socket writes (and unknown plugins) share nothing. */
+  private case object OwnTarget extends SinkTarget
+
+  private def inMemoryKey(p: Plugin): String =
+    p.strOpt("store_key").getOrElse(p.input.getOrElse(p.plugin))
+
+  private def sinkTarget(p: Plugin): SinkTarget = p.plugin match {
+    case "LocalFile" | "File" =>
+      p.strOpt("path").filter(_.nonEmpty).fold[SinkTarget](OwnTarget) { s =>
+        PathTarget(java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(s).toUri.getPath)
+          .toAbsolutePath.normalize)
+      }
+    case "Console" => NamedTarget("Console", "stdout")
+    case "InMemory" => NamedTarget("InMemory", inMemoryKey(p))
+    case "Jdbc" | "JDBC" => p.strOpt("url").fold[SinkTarget](OwnTarget)(NamedTarget("Jdbc", _))
+    case _ => OwnTarget
+  }
+
+  private def conflict(a: SinkTarget, b: SinkTarget): Boolean = (a, b) match {
+    case (PathTarget(p), PathTarget(q)) => p.startsWith(q) || q.startsWith(p)
+    case (_: NamedTarget, _) => a == b
+    case _ => false
+  }
+
+  /** Group sink writes into lanes: two writes whose targets conflict (equal
+    * or nested file paths, the same InMemory store key, the same Jdbc url,
+    * any two Console sinks) share a lane, transitively. Returns each lane's
+    * write indices in declared order, lanes ordered by their first write.
     */
-  private def runBatch(spark: SparkSession, job: Job)(
-      write: SinkInput => Unit): Map[String, DataFrame] = {
+  private[api] def lanes(sinks: Seq[Plugin]): Seq[Seq[Int]] = {
+    val targets = sinks.map(sinkTarget).toIndexedSeq
+    // lane(i) = the smallest index of the lane write i is in
+    val lane = Array.tabulate(targets.size)(identity)
+    for (j <- targets.indices; i <- 0 until j
+         if lane(i) != lane(j) && conflict(targets(i), targets(j))) {
+      val (keep, drop) = (math.min(lane(i), lane(j)), math.max(lane(i), lane(j)))
+      lane.indices.filter(lane(_) == drop).foreach(lane(_) = keep)
+    }
+    targets.indices.groupBy(lane(_)).toSeq.sortBy(_._1).map(_._2.sorted)
+  }
+
+  /** Run `writes` lane by lane, the lanes concurrently on `spark`: at most
+    * `min(lanes, defaultParallelism)` daemon threads of this run's own, each
+    * with `spark` as its active session and `scope` as its cache scope.
+    * Returns each write's result in declared order.
+    *
+    * Failure rule: every lane runs to its end, and a lane skips its
+    * remaining writes after its own first failure; once every lane has
+    * stopped, the earliest-declared failure is rethrown with the others
+    * attached as suppressed. So a write declared after a failing one is
+    * still made when it sits in another lane.
+    */
+  private def runLanes[R](spark: SparkSession, scope: graft.GraftCaches.Scope,
+      writes: IndexedSeq[SinkInput], write: SinkInput => R): Seq[R] = {
+    val laneIdx = lanes(writes.map(_.sink))
+    val results = Array.fill[Option[R]](writes.size)(None)
+    val threadIds = new java.util.concurrent.atomic.AtomicInteger()
+    // threads start on submit, so a job without sinks starts none
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(laneIdx.size, spark.sparkContext.defaultParallelism)), { (r: Runnable) =>
+        val t = new Thread(r, s"graft-sink-lane-${threadIds.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    val failures = try {
+      laneIdx.map { lane =>
+        pool.submit { () =>
+          SparkSession.setActiveSession(spark)
+          graft.GraftCaches.inScope(scope) {
+            lane.iterator.map { i =>
+              try { results(i) = Some(write(writes(i))); None }
+              catch { case e: Throwable => Some(i -> e) }
+            }.collectFirst { case Some(failure) => failure }
+          }
+        }
+      }.flatMap(_.get())
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
+    failures.sortBy(_._1).map(_._2) match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => results.toSeq.flatten
+    }
+  }
+
+  /** The batch runner `run` and `runWithMetrics` share: build the catalog,
+    * resolve every sink's writes (so an unknown table fails the job before
+    * anything is written), run them through [[runLanes]], and return the
+    * catalog with each write's result in declared order. The run's cache
+    * scope is released once every lane has stopped.
+    */
+  private[api] def runBatch[R](spark: SparkSession, job: Job)(
+      write: SinkInput => R): (Map[String, DataFrame], Seq[R]) = {
     // per-run cache scope: concurrent pipelines in one session each
     // release only their own persisted intermediates
     val scope = graft.GraftCaches.newScope()
-    graft.GraftCaches.inScope(scope) {
-      try {
+    try {
+      val (catalog, writes) = graft.GraftCaches.inScope(scope) {
         val (catalog, last) = buildCatalog(spark, job, resolveSource)
-        job.sinks.foreach(sinkInputs(job, catalog, last, _).foreach(write))
-        catalog
-        // sinks have materialized: drop the job's tracked persisted
-        // intermediates (catalog frames recompute if inspected afterwards)
-      } finally scope.release()
+        (catalog, job.sinks.flatMap(sinkInputs(job, catalog, last, _)).toIndexedSeq)
+      }
+      (catalog, runLanes(spark, scope, writes, write))
+    } finally {
+      // every lane has stopped: drop the job's tracked persisted
+      // intermediates (catalog frames recompute if inspected afterwards)
+      scope.release()
     }
   }
 
   /** Execute a parsed job. Returns the final catalog (table name → plan)
     * so callers/tests can inspect intermediate tables.
+    *
+    * Sink writes run as lanes, like one DAG: writes to conflicting targets
+    * (equal or nested paths, one InMemory key, one Jdbc url, stdout) run
+    * in declared order in one lane, and the lanes run concurrently. When
+    * writes fail, every lane still runs to its end (skipping the rest of a
+    * lane after its first failure), then the earliest-declared failure is
+    * thrown with the others suppressed — see [[runLanes]].
     */
   def run(spark: SparkSession, job: Job): Map[String, DataFrame] =
-    runBatch(spark, job)(w => runSink(w.df, w.sink))
+    runBatch(spark, job)(w => runSink(w.df, w.sink))._1
 
   /** Execute a parsed job and report per-sink row metrics (the reference's
     * job metrics surface: rows written per sink), collected via
     * `Dataset.observe` — zero extra passes over the data. Keys are
     * `plugin[table]`: one per table for a fan-out sink, the input names
-    * joined by `,` for a union sink.
+    * joined by `,` for a union sink. Sinks run as in [[run]].
     * Note: Console truncates at its limit, so its observed count covers
     * only the rows actually fetched.
     */
   def runWithMetrics(spark: SparkSession, job: Job): (Map[String, DataFrame], Map[String, Long]) = {
-    val metrics = Map.newBuilder[String, Long]
-    val ids = Iterator.from(0)
-    val catalog = runBatch(spark, job) { w =>
-      val obs = new org.apache.spark.sql.Observation(s"graft_sink_${ids.next()}")
+    val (catalog, rows) = runBatch(spark, job) { w =>
+      val obs = new org.apache.spark.sql.Observation()
       runSink(w.df.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows")), w.sink)
-      metrics += s"${w.sink.plugin}[${w.tables.mkString(",")}]" -> obs.get("rows").asInstanceOf[Long]
+      s"${w.sink.plugin}[${w.tables.mkString(",")}]" -> obs.get("rows").asInstanceOf[Long]
     }
-    (catalog, metrics.result())
+    (catalog, rows.toMap)
   }
 
   def runJson(spark: SparkSession, json: String): Map[String, DataFrame] =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Top-level rows for the stateful sessionization path (top-level so the
   * Tungsten state encoder codegen resolves their accessors).
@@ -303,9 +304,22 @@ object StreamingOps {
     * at-least-once foreachBatch contract, and a restarted driver resumes
     * from the pointer — no state is lost with the process.
     * `onBatch` receives the freshly-persisted snapshot after each batch.
+    *
+    * Neither read of a version this query wrote infers its schema (one
+    * footer-reading Spark job each): `onBatch`'s frame and the next batch's
+    * `v{N}` are read with the schema of the frame written there, which the
+    * closure keeps with its version number. A version written before a
+    * restart is read with inference. The written schema is the merged one,
+    * not `initial`'s: a change column of a wider type widens the snapshot.
     */
   def applyCdcStream(changes: DataFrame, initial: DataFrame, keys: Seq[String],
       ordCol: String, checkpointDir: String, stateDir: String)(onBatch: DataFrame => Unit) = {
+    var written: Option[(Long, StructType)] = None
+    def readVersion(spark: org.apache.spark.sql.SparkSession, v: Long): DataFrame =
+      written match {
+        case Some((`v`, schema)) => spark.read.schema(schema).parquet(s"$stateDir/v$v")
+        case _ => spark.read.parquet(s"$stateDir/v$v")
+      }
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -314,16 +328,14 @@ object StreamingOps {
           case Some(v) if v >= batchId =>
             // already merged + committed before a crash/stop: the durable
             // snapshot holds this batch; just re-deliver it
-            onBatch(spark.read.parquet(s"$stateDir/v$v"))
+            onBatch(readVersion(spark, v))
           case committed =>
-            val current = committed
-              .map(v => spark.read.parquet(s"$stateDir/v$v"))
-              .getOrElse(initial)
+            val current = committed.map(readVersion(spark, _)).getOrElse(initial)
             val merged = applyCdcBatch(current, batch, keys, ordCol)
-            val versionDir = s"$stateDir/v$batchId"
-            merged.write.mode("overwrite").parquet(versionDir)
+            merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
             commitSnapshotVersion(spark, stateDir, batchId)
-            onBatch(spark.read.parquet(versionDir))
+            written = Some(batchId -> merged.schema)
+            onBatch(readVersion(spark, batchId))
         }
       }
   }

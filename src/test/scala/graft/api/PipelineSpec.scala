@@ -445,4 +445,184 @@ class PipelineSpec extends SparkSpec {
     val fake = graft.sources.FakeSource.generate(fresh, Seq("c" -> "time"), rows = 3)
     assert(fake.schema("c").dataType.typeName.startsWith("time") && fake.count() == 3)
   }
+
+  // ---------- sink lanes ----------
+
+  private def sinkAt(plugin: String, opts: (String, Any)*) =
+    Pipeline.Plugin(plugin, opts.toMap, Some("t"), None)
+  private def fileAt(path: String) = sinkAt("LocalFile", "path" -> path)
+
+  /** Poll `cond` for up to 10 s: Spark's status store and a pool's exiting
+    * threads settle a moment after the call that ended their work returns. */
+  private def eventually(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + 10000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
+    cond
+  }
+
+  test("sink lanes: writes to distinct targets get one lane each") {
+    assert(Pipeline.lanes(Seq(fileAt("/o/a"), fileAt("/o/ab"), fileAt("/p/a"), fileAt("out/x"))) ==
+      Seq(Seq(0), Seq(1), Seq(2), Seq(3)))
+    // Assert, Http and Socket writes share nothing, not even with their twins
+    val own = Seq(sinkAt("Assert"), sinkAt("Assert"),
+      sinkAt("Http", "url" -> "http://h/x"), sinkAt("Http", "url" -> "http://h/x"),
+      sinkAt("Socket", "host" -> "h", "port" -> 9), sinkAt("Socket", "host" -> "h", "port" -> 9))
+    assert(Pipeline.lanes(own) == own.indices.map(Seq(_)))
+    assert(Pipeline.lanes(Nil).isEmpty)
+  }
+
+  test("sink lanes: writes to one target share a lane in declared order") {
+    // equal paths, however spelled
+    assert(Pipeline.lanes(Seq(fileAt("/o/a"), fileAt("/q"), fileAt("file:/o/x/../a/"))) ==
+      Seq(Seq(0, 2), Seq(1)))
+    // nested paths, either one declared first, relative or absolute
+    assert(Pipeline.lanes(Seq(fileAt("out/agg"), fileAt("other"), fileAt("out"))) ==
+      Seq(Seq(0, 2), Seq(1)))
+    assert(Pipeline.lanes(Seq(fileAt(new java.io.File("out").getAbsolutePath), fileAt("out/agg"))) ==
+      Seq(Seq(0, 1)))
+    // lanes close over shared targets: /o/a and /o/b meet through /o
+    assert(Pipeline.lanes(Seq(fileAt("/o/a"), fileAt("/o/b"), fileAt("/p"), fileAt("/o"))) ==
+      Seq(Seq(0, 1, 3), Seq(2)))
+    // stdout is one target
+    assert(Pipeline.lanes(Seq(sinkAt("Console"), fileAt("/o"), sinkAt("Console", "limit" -> 5))) ==
+      Seq(Seq(0, 2), Seq(1)))
+    // an InMemory store key, explicit or the input table's name (here t)
+    assert(Pipeline.lanes(Seq(sinkAt("InMemory", "store_key" -> "k"),
+      sinkAt("InMemory", "store_key" -> "j"), sinkAt("InMemory"),
+      sinkAt("InMemory", "store_key" -> "k"), sinkAt("InMemory", "store_key" -> "t"))) ==
+      Seq(Seq(0, 3), Seq(1), Seq(2, 4)))
+    // a Jdbc url, whatever the table
+    assert(Pipeline.lanes(Seq(sinkAt("Jdbc", "url" -> "jdbc:h2:a", "table" -> "x"),
+      sinkAt("Jdbc", "url" -> "jdbc:h2:b", "table" -> "x"),
+      sinkAt("Jdbc", "url" -> "jdbc:h2:a", "table" -> "y"))) == Seq(Seq(0, 2), Seq(1)))
+  }
+
+  test("concurrent sink lanes write each table's rows and keep runWithMetrics' keys") {
+    val out = Files.createTempDirectory("graft-lanes").toString
+    val job = Pipeline.parse(
+      s"""{
+         |  "source": [
+         |    {"plugin": "FakeSource", "plugin_output": "f", "row.num": 40,
+         |     "schema": {"fields": {"name": "string", "num": "int"}}},
+         |    {"plugin": "FakeSource", "tables_configs": [
+         |      {"row.num": 2, "schema": {"table": "fan_a", "fields": {"x": "int"}}},
+         |      {"row.num": 3, "schema": {"table": "fan_b", "fields": {"x": "int"}}}]}
+         |  ],
+         |  "transform": [{"plugin": "Sql", "plugin_input": "f", "plugin_output": "g",
+         |    "query": "SELECT num % 7 AS k, count(*) AS n FROM f GROUP BY num % 7"}],
+         |  "sink": [
+         |    {"plugin": "File", "plugin_input": "f", "path": "$out/clean", "file_format_type": "parquet"},
+         |    {"plugin": "File", "plugin_input": "g", "path": "$out/agg", "file_format_type": "parquet"},
+         |    {"plugin": "File", "path": "$out/fan/$${table_name}", "file_format_type": "parquet"}
+         |  ]
+         |}""".stripMargin)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val written = Seq("clean" -> "f", "agg" -> "g", "fan/fan_a" -> "fan_a", "fan/fan_b" -> "fan_b")
+    val (catalog, metrics) = Pipeline.runWithMetrics(spark, job)
+    // what the sequential runner wrote: each sink's table, whole
+    written.foreach { case (dir, table) =>
+      assert(rows(spark.read.parquet(s"$out/$dir")) == rows(catalog(table)), dir)
+    }
+    assert(metrics == Map("File[f]" -> 40L, "File[g]" -> catalog("g").count(),
+      "File[fan_a]" -> 2L, "File[fan_b]" -> 3L))
+    val again = Pipeline.run(spark, job)
+    written.foreach { case (dir, table) =>
+      assert(rows(spark.read.parquet(s"$out/$dir")) == rows(again(table)), dir)
+    }
+    // a job without sinks still returns its catalog
+    assert(Pipeline.run(spark, job.copy(sinks = Nil)).keySet == Set("f", "g", "fan_a", "fan_b"))
+  }
+
+  test("sinks on one path, or nested paths, still end with the last-declared data") {
+    val out = Files.createTempDirectory("graft-lanes-same").toString
+    val job = Pipeline.parse(
+      s"""{
+         |  "source": [
+         |    {"plugin": "FakeSource", "plugin_output": "a", "row.num": 2, "schema": {"fields": {"x": "int"}}},
+         |    {"plugin": "FakeSource", "plugin_output": "b", "row.num": 5, "schema": {"fields": {"y": "string"}}}
+         |  ],
+         |  "sink": [
+         |    {"plugin": "File", "plugin_input": "a", "path": "$out/same", "file_format_type": "parquet"},
+         |    {"plugin": "File", "plugin_input": "a", "path": "$out/nest/agg", "file_format_type": "parquet"},
+         |    {"plugin": "File", "plugin_input": "b", "path": "$out/other", "file_format_type": "parquet"},
+         |    {"plugin": "File", "plugin_input": "b", "path": "$out/same", "file_format_type": "parquet"},
+         |    {"plugin": "File", "plugin_input": "b", "path": "$out/nest", "file_format_type": "parquet"}
+         |  ]
+         |}""".stripMargin)
+    (1 to 3).foreach { _ =>
+      Pipeline.run(spark, job)
+      Seq("same", "nest", "other").foreach { dir =>
+        val df = spark.read.parquet(s"$out/$dir")
+        assert(df.columns.toSeq == Seq("y") && df.count() == 5L, dir)
+      }
+      // the later overwrite of nest removed nest/agg, as in declared order
+      assert(!new java.io.File(s"$out/nest/agg").exists)
+    }
+  }
+
+  test("failing sinks: every lane runs to its end, the earliest failure propagates, the run cleans up") {
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graft-lanes-fail").toString
+    val job = Pipeline.parse(
+      s"""{
+         |  "source": [{"plugin": "FakeSource", "plugin_output": "f", "row.num": 5,
+         |              "schema": {"fields": {"num": "int"}}}],
+         |  "sink": [
+         |    {"plugin": "Assert", "plugin_input": "f",
+         |     "rules": [{"rule": "row_count_between", "min": 100, "max": 200}]},
+         |    {"plugin": "File", "plugin_input": "f", "path": "$out/written", "file_format_type": "parquet"},
+         |    {"plugin": "File", "plugin_input": "f", "path": "$out/bad", "file_format_type": "nosuch"},
+         |    {"plugin": "File", "plugin_input": "f", "path": "$out/bad", "file_format_type": "parquet"}
+         |  ]
+         |}""".stripMargin)
+    val sc = spark.sparkContext
+    // lane threads inherit the caller's job group, which keeps this run's
+    // Spark jobs apart from any other suite's
+    val group = s"lane-fail-${System.nanoTime()}"
+    val jobEnds = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobStarts = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobStarts.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        jobEnds.put(e.jobId, e.time); ()
+      }
+    }
+    def laneThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-sink-lane"))
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "sink lane failure spec")
+      val e = try intercept[graft.sinks.Sinks.AssertionFailed](Pipeline.run(spark, job))
+        finally sc.clearJobGroup()
+      val returnedAt = System.currentTimeMillis()
+      assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("unsupported sink format: nosuch"))
+      // the file sink declared after the failing Assert has a lane of its own
+      assert(spark.read.parquet(s"$out/written").count() == 5L)
+      // a lane makes no write after its first failure
+      assert(!new java.io.File(s"$out/bad").exists)
+      // every Spark job of the run had ended when run returned
+      assert(!jobStarts.isEmpty)
+      assert(eventually(jobStarts.asScala.forall(jobEnds.containsKey)))
+      assert(jobStarts.asScala.forall(id => jobEnds.get(id) <= returnedAt))
+      assert(eventually(!sc.statusTracker.getActiveJobIds.exists(jobStarts.contains)))
+      assert(eventually(laneThreads.isEmpty), laneThreads)
+
+      // the writes run in the run's cache scope, which is released once
+      // every lane has stopped (failures included)
+      val persisted = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+      val globalBefore = graft.GraftCaches.trackedCount
+      intercept[graft.sinks.Sinks.AssertionFailed] {
+        Pipeline.runBatch(spark, job) { w =>
+          val cached = graft.GraftCaches.persist(w.df.where("num IS NOT NULL"))
+          persisted.add(cached)
+          Pipeline.runSink(cached, w.sink)
+        }
+      }
+      assert(persisted.size == 3) // the lane's write after its failure never started
+      assert(persisted.asScala.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+      assert(graft.GraftCaches.trackedCount == globalBefore)
+    } finally sc.removeSparkListener(listener)
+  }
 }

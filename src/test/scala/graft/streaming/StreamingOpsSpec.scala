@@ -242,6 +242,65 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("applyCdcStream over a widening stream gives the snapshot the batch merges give") {
+    implicit val sq = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-cdc-widen").toString
+    val stateDir = s"$base/state"
+    // an int snapshot column meeting long changes: the merged snapshot is
+    // long from the first version on, so reading a version back with the
+    // initial schema would fail
+    val initial = Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "v", "amount")
+      .withColumn("__row_kind", lit("+I")).withColumn("ord", lit(0L))
+    val batches = Seq(
+      Seq((1L, "a2", 3000000000L, "+U", 1L), (3L, "c", 30L, "+I", 2L)),
+      Seq((2L, "b", 0L, "-D", 3L), (4L, "d", 40L, "+I", 4L), (1L, "a3", 11L, "+U", 5L)),
+      Seq((3L, "c2", 5000000000L, "+U", 6L), (5L, "e", 50L, "+I", 7L)),
+      Seq((4L, "d", 0L, "-D", 8L)))
+    def changesOf(b: Seq[(Long, String, Long, String, Long)]) =
+      b.toDF("id", "v", "amount", "__row_kind", "ord")
+    val expected = batches.foldLeft(initial) { (snap, b) =>
+      StreamingOps.applyCdcBatch(snap, changesOf(b), Seq("id"), "ord")
+    }
+    val input = MemoryStream[(Long, String, Long, String, Long)]
+    val q = StreamingOps.applyCdcStream(input.toDF().toDF("id", "v", "amount", "__row_kind", "ord"),
+      initial, Seq("id"), "ord", s"$base/ckpt", stateDir)(_ => ()).start()
+    try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    val snap = StreamingOps.currentSnapshot(spark, stateDir).get
+    assert(StreamingOps.currentVersion(spark, stateDir).contains(batches.size - 1L))
+    assert(snap.schema("amount").dataType == org.apache.spark.sql.types.LongType)
+    assert(snap.columns.toSeq == expected.columns.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(snap) == rows(expected))
+    assert(rows(snap.select("id", "amount")) ==
+      Seq("[1,11]", "[3,5000000000]", "[5,50]"))
+  }
+
+  test("applyCdcStream hands onBatch the schema and rows of the version it wrote") {
+    implicit val sq = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-cdc-onbatch").toString
+    val stateDir = s"$base/state"
+    val input = MemoryStream[(Long, String, String, Long)]
+    val initial = Seq((1L, "a")).toDF("id", "v")
+      .withColumn("__row_kind", lit("+I")).withColumn("ord", lit(0L))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Boolean, Boolean)]
+    val q = StreamingOps.applyCdcStream(input.toDF().toDF("id", "v", "__row_kind", "ord"),
+      initial, Seq("id"), "ord", s"$base/ckpt", stateDir) { delivered =>
+        val v = StreamingOps.currentVersion(spark, stateDir).get
+        val inferred = spark.read.parquet(s"$stateDir/v$v")
+        seen += ((delivered.schema == inferred.schema,
+          delivered.collect().map(_.toString).sorted.sameElements(
+            inferred.collect().map(_.toString).sorted)))
+      }.start()
+    try {
+      input.addData((1L, "a2", "+U", 1L), (2L, "b", "+I", 2L))
+      q.processAllAvailable()
+      input.addData((1L, "a2", "-D", 3L))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(seen.toSeq == Seq((true, true), (true, true)))
+  }
+
   test("stream-static join: streaming events enrich against a broadcast dimension") {
     implicit val sq = spark.sqlContext
     val dim = Seq((0, "AFRICA"), (1, "AMERICA"), (2, "ASIA")).toDF("key", "name")

@@ -4,8 +4,9 @@
 Reads the `result.json` that `perfbench/run.py --trace 1` leaves in
 `.bench_build/work/<workload>/` and prints, for one benchmark job (batch job
 index, 0 = cold): its spans, the Spark jobs that started inside it, the
-Catalyst phases, and the idle gaps between Spark jobs. Offsets are in ms
-from the job's start. Each Spark job is attributed to the innermost span it
+Catalyst phases, the idle gaps between Spark jobs, and how long two or more
+Spark jobs ran at once (concurrent sink writes). Offsets are in ms from the
+job's start. Each Spark job is attributed to the innermost span it
 starts in, and each span line says how long it ran before its first Spark
 job (driver-only time, e.g. plan building).
 
@@ -81,17 +82,34 @@ def timeline(res, idx):
               if t0 - SLACK_US <= p["start_ms"] * 1000 <= t1]
 
     # idle gaps: stretches of the job with no Spark job running
+    # (a job with no end runs to the end of the benchmark job)
+    total = off(t1)
     gaps, cursor = [], 0.0
     for j in sorted(jobs, key=lambda j: j["start_ms"]):
         if j["start_ms"] > cursor:
             gaps.append({"start_ms": cursor, "ms": j["start_ms"] - cursor, "span": host(t0 + cursor * 1e3)})
-        if j["end_ms"] is not None:
-            cursor = max(cursor, j["end_ms"])
-    total = off(t1)
+        cursor = max(cursor, total if j["end_ms"] is None else j["end_ms"])
     if total > cursor:
         gaps.append({"start_ms": cursor, "ms": total - cursor, "span": host(t0 + cursor * 1e3)})
+    overlap_ms, max_jobs = overlap(jobs, total)
     return {"idx": idx, "wall_ms": total, "spans": span_rows, "spark_jobs": jobs,
-            "phases": phases, "gaps": gaps}
+            "phases": phases, "gaps": gaps, "overlap_ms": overlap_ms, "max_concurrent_jobs": max_jobs}
+
+
+def overlap(jobs, total):
+    """(ms during which two or more Spark jobs ran, most jobs running at
+    once); a job with no end runs to the end of the benchmark job."""
+    # at equal times an end sorts before a start: back-to-back jobs do not overlap
+    events = sorted([(j["start_ms"], 1) for j in jobs] +
+                    [(total if j["end_ms"] is None else j["end_ms"], -1) for j in jobs])
+    running, most, ms, prev = 0, 0, 0.0, None
+    for at, step in events:
+        if running >= 2:
+            ms += at - prev
+        running += step
+        most = max(most, running)
+        prev = at
+    return ms, most
 
 
 def fmt_ms(v):
@@ -122,6 +140,8 @@ def report(tl, out=sys.stdout):
     for g in tl["gaps"]:
         w(f"  at {fmt_ms(g['start_ms'])}  {g['ms']:8.1f} ms  {g['span']}\n")
     w(f"  total {sum(g['ms'] for g in tl['gaps']):.1f} ms\n")
+    w(f"\noverlap: {tl['overlap_ms']:.1f} ms with 2+ Spark jobs running, "
+      f"at most {tl['max_concurrent_jobs']} at once\n")
 
 
 def self_test():
@@ -159,9 +179,28 @@ def self_test():
     assert [(g["start_ms"], g["ms"]) for g in tl["gaps"]] == [(0.0, 20.0), (30.0, 10.0), (55.0, 15.0), (95.0, 5.0)]
     assert tl["gaps"][2]["span"] == "dedup.build" and tl["gaps"][3]["span"] == "sinks.write"
     assert tl["phases"] == [{"phase": "planning", "start_ms": 62.0, "ms": 4, "span": "sinks.write"}]
+    assert (tl["overlap_ms"], tl["max_concurrent_jobs"]) == (0.0, 1)
     buf = io.StringIO()
     report(tl, out=buf)
     assert "3 Spark jobs" in buf.getvalue()
+    assert "overlap: 0.0 ms with 2+ Spark jobs running, at most 1 at once" in buf.getvalue()
+
+    # overlapping jobs (two sinks writing at once): 2 running over 20-30
+    # and 40-50, 3 over 30-40; the job that starts as another ends and the
+    # one that never ends (runs to 100) add nothing
+    res["spark_jobs"] = [
+        {"id": 7, "start_ms": ms + 10, "end_ms": ms + 50},
+        {"id": 8, "start_ms": ms + 20, "end_ms": ms + 40},
+        {"id": 9, "start_ms": ms + 30, "end_ms": ms + 60},
+        {"id": 10, "start_ms": ms + 60, "end_ms": ms + 70},
+        {"id": 11, "start_ms": ms + 80, "end_ms": 0},
+    ]
+    tl = timeline(res, 2)
+    assert (tl["overlap_ms"], tl["max_concurrent_jobs"]) == (30.0, 3), tl
+    assert [(g["start_ms"], g["ms"]) for g in tl["gaps"]] == [(0.0, 10.0), (70.0, 10.0)], tl["gaps"]
+    buf = io.StringIO()
+    report(tl, out=buf)
+    assert "overlap: 30.0 ms with 2+ Spark jobs running, at most 3 at once" in buf.getvalue()
     print("perf_timeline self-test ok")
 
 
