@@ -1,13 +1,20 @@
 package graft.dedup
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType,
+  StructField, StructType}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.util.Using
 import graft.GraftCaches.PersistOps
+import graft.plans.ExprHelpers
 import graft.plans.NativeColumns._
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY §2.6).
@@ -78,7 +85,176 @@ object Dedup {
 
   /** Near-duplicate pairs via MinHash + LSH banding.
     *
-    * Stages (each a narrow map or one keyed shuffle — the scale path):
+    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold:
+    * one row per pair of `df` rows whose ids differ, that share a band
+    * bucket of at most `maxBucketSize` rows (every row with a text counts,
+    * null ids included) and whose shingle sets score >= threshold. Two
+    * paths, the same rows and schema:
+    *  - **Driver** (the common case: a corpus of at most
+    *    [[driverBandRowLimit]] rows with an integral `idCol`). Two bounded
+    *    pulls ([[collectAtMost]], SURVEY §4): each row's band hashes, then
+    *    the shingle hashes of the candidate docs only, selected by one
+    *    `InSet` filter. Buckets, candidate pairs and the Jaccard check
+    *    (the `jaccard_long` kernel) run on the driver, and the pairs come
+    *    back as a local relation. Past any bound — more rows, more than
+    *    [[driverEdgeLimit]] candidate pairs counted from the bucket sizes
+    *    before they are listed, more than [[inSetDropLimit]] candidate
+    *    docs — the distributed path runs instead.
+    *  - **Distributed**: [[distributedMinHashPairs]].
+    *
+    * EAGER AT BUILD TIME (SURVEY §4 exception): the driver path runs its
+    * Spark jobs when called, so this operator cannot compose onto an
+    * unstarted streaming DataFrame and executes its upstream at call time.
+    */
+  def minHashPairs(df: DataFrame, idCol: String, textCol: String,
+      cfg: MinHashConfig = MinHashConfig()): DataFrame =
+    minHashPairs(df, idCol, textCol, cfg, driverBandRowLimit(cfg))
+
+  /** [[minHashPairs]] with an explicit driver-path row limit. */
+  private[dedup] def minHashPairs(df: DataFrame, idCol: String, textCol: String,
+      cfg: MinHashConfig, rowLimit: Int): DataFrame = {
+    val src = docText(df, idCol, textCol)
+    pairsOnDriver(src, cfg, rowLimit).getOrElse(distributedMinHashPairs(src, cfg))
+  }
+
+  /** Rows the driver MinHash path pulls: (numBands + 1) × 8 B of payload
+    * per (doc, band hashes) row within 1/256 of the driver heap, as
+    * [[driverEdgeLimit]] sizes edges, at most 2^20 rows.
+    */
+  private def driverBandRowLimit(cfg: MinHashConfig): Int =
+    math.min(Runtime.getRuntime.maxMemory / 256 / ((cfg.numBands + 1) * 8L), 1L << 20).toInt
+
+  /** (id_a, id_b, jaccard) of `src` (doc, txt) found on the driver, or
+    * None when `doc` is not integral or the corpus passes a bound.
+    */
+  private def pairsOnDriver(src: DataFrame, cfg: MinHashConfig, rowLimit: Int): Option[DataFrame] = {
+    val docField = src.schema("doc")
+    if (!isIntegral(docField.dataType)) return None
+    val doc = col("doc").cast(LongType)
+    for {
+      bandRows <- collectAtMost(src.select(doc, bandHashes(cfg)), rowLimit)
+      (aIds, bIds) <- bandPairs(bandRows, cfg.numBands, cfg.maxBucketSize)
+      docs = sortedDistinct(aIds ++ bIds)
+      if docs.length <= inSetDropLimit
+      isCandidate = ColumnBridge.column(InSet(ColumnBridge.expression(doc), docs.toSet[Any]))
+      hashRows <- collectAtMost(
+        shingleTable(src.where(isCandidate), doc, "txt", cfg.shingleSize), rowLimit)
+    } yield {
+      // every (doc, hashes) row of an id: a duplicated id is checked once per row
+      val hashes = hashRows.filterNot(_.isNullAt(1)).groupBy(_.getLong(0)).map {
+        case (id, rows) => id -> rows.map(_.getArray(1)).toSeq
+      }
+      val toId: Long => Any = docField.dataType match {
+        case ByteType => _.toByte
+        case ShortType => _.toShort
+        case IntegerType => _.toInt
+        case _ => identity
+      }
+      val verified = for {
+        (a, b) <- aIds.iterator.zip(bIds.iterator)
+        ha <- hashes.getOrElse(a, Nil)
+        hb <- hashes.getOrElse(b, Nil)
+        jaccard = ExprHelpers.jaccardLong(ha, hb)
+        if jaccard >= cfg.threshold
+      } yield Row(toId(a), toId(b), jaccard)
+      def id(name: String) = StructField(name, docField.dataType, docField.nullable)
+      src.sparkSession.createDataFrame(verified.toSeq.asJava, StructType(Seq(id("id_a"), id("id_b"),
+        StructField("jaccard", DoubleType, src.schema("txt").nullable))))
+    }
+  }
+
+  /** Distinct candidate pairs (id_a < id_b, ascending) of pulled (doc:
+    * long, band hashes) rows sharing a (band_idx, band_hash) bucket of at
+    * most `cap` rows, or None when the kept buckets' Σ C(m, 2) exceeds
+    * [[driverEdgeLimit]]. A row with null band hashes (null text) is in no
+    * bucket; a null-id row counts toward its buckets' sizes but pairs with
+    * nothing, as on the distributed path.
+    */
+  private def bandPairs(rows: Array[InternalRow], numBands: Int,
+      cap: Int): Option[(Array[Long], Array[Long])] = {
+    val banded = rows.filterNot(_.isNullAt(1))
+    val ids = sortedDistinct(banded.collect { case r if !r.isNullAt(0) => r.getLong(0) })
+    // each row's id as an index into `ids` (-1 for null), so a pair packs into one long
+    val idx = banded.map(r => if (r.isNullAt(0)) -1 else java.util.Arrays.binarySearch(ids, r.getLong(0)))
+    var bound = 0L
+    // per band: each row's hash, and the hashes of the kept buckets (2 to `cap` rows), ascending
+    val bands = Array.tabulate(numBands) { b =>
+      val h = banded.map(_.getArray(1).getLong(b))
+      val sorted = h.clone()
+      java.util.Arrays.sort(sorted)
+      val kept = ArrayBuffer.empty[Long]
+      var i = 0
+      while (i < sorted.length) {
+        var j = i + 1
+        while (j < sorted.length && sorted(j) == sorted(i)) j += 1
+        val m = (j - i).toLong
+        if (m >= 2 && m <= cap) { kept += sorted(i); bound += m * (m - 1) / 2 }
+        i = j
+      }
+      (h, kept.toArray)
+    }
+    if (bound > driverEdgeLimit) return None
+    val packed = new Array[Long](bound.toInt)
+    var n = 0
+    for ((h, kept) <- bands) {
+      val members = Array.fill(kept.length)(ArrayBuffer.empty[Int])
+      h.indices.foreach { r =>
+        val k = java.util.Arrays.binarySearch(kept, h(r))
+        if (k >= 0 && idx(r) >= 0) members(k) += idx(r)
+      }
+      for (m <- members; x <- m.indices; y <- x + 1 until m.length if m(x) != m(y)) {
+        packed(n) = (math.min(m(x), m(y)).toLong << 32) | math.max(m(x), m(y))
+        n += 1
+      }
+    }
+    val pairs = sortedDistinct(java.util.Arrays.copyOf(packed, n))
+    Some((pairs.map(p => ids((p >>> 32).toInt)), pairs.map(p => ids(p.toInt))))
+  }
+
+  /** `a`'s distinct values, ascending. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    val s = a.clone()
+    java.util.Arrays.sort(s)
+    var n = 0
+    s.indices.foreach { i =>
+      if (n == 0 || s(i) != s(n - 1)) { s(n) = s(i); n += 1 }
+    }
+    java.util.Arrays.copyOf(s, n)
+  }
+
+  /** `df`'s rows when it has at most `limit` of them, else None. The same
+    * bound as `limit(limit + 1).collect()`, but the first Spark job scans
+    * one wave of partitions (as many as the cluster runs at once) where
+    * Spark's limit scans one, so a corpus of a few file splits comes back
+    * in one job; each later job scans 4× the partitions scanned so far.
+    * Every task ships at most the rows still missing, and the scan stops
+    * at the first job that passes the limit. The rows are copies,
+    * readable after the call. ([[componentsOnDriver]] keeps Spark's limit:
+    * its edges are usually this path's local relation, which that reads
+    * without a job.)
+    */
+  private def collectAtMost(df: DataFrame, limit: Int): Option[Array[InternalRow]] = {
+    if (limit < 0) return None
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collectAtMost")) {
+      val rows = qe.toRdd
+      val buf = ArrayBuffer.empty[InternalRow]
+      var scanned = 0
+      var wave = df.sparkSession.sparkContext.defaultParallelism
+      while (buf.length <= limit && scanned < rows.getNumPartitions) {
+        val (from, until) = (scanned, math.min(rows.getNumPartitions, scanned + wave))
+        val room = limit + 1 - buf.length
+        buf ++= PartitionPruningRDD.create(rows, i => i >= from && i < until)
+          .mapPartitions(_.take(room).map(_.copy())).collect().take(room)
+        scanned = until
+        wave = 4 * scanned
+      }
+      if (buf.length > limit) None else Some(buf.toArray)
+    }
+  }
+
+  /** The unbounded MinHash plan over `docs` (doc, txt). Stages (each a
+    * narrow map or one keyed shuffle — the scale path):
     *  1. signature: one codegen'd pass/doc -> 64 minhashes -> 16 band hashes;
     *  2. posexplode (doc, band_idx, band_hash) ONLY — document text never
     *     enters the band shuffle (at 100 TB, carrying text would push ~16×
@@ -88,16 +264,13 @@ object Dedup {
     *     shingle-hash array) side table for exact Jaccard verification —
     *     shingles cross the wire once per doc, not once per candidate pair,
     *     and no re-shingling happens on the pair path.
-    *
-    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     */
-  def minHashPairs(df: DataFrame, idCol: String, textCol: String,
-      cfg: MinHashConfig = MinHashConfig()): DataFrame = {
+  private def distributedMinHashPairs(docs: DataFrame, cfg: MinHashConfig): DataFrame = {
     // src feeds BOTH derived caches (banded + shingles); persisting it
     // means the corpus parquet is scanned once per query, not once per
     // derived table. MEMORY_AND_DISK: text-sized, spills, LRU-evictable
     // (eviction degrades to a rescan, never an error).
-    val src = docText(df, idCol, textCol).graftPersist
+    val src = docs.graftPersist
     // banded feeds the oversized-bucket subquery AND both sides of the
     // candidate self-join; Spark reuses no subplans across self-joins, so
     // without the persist the corpus is re-scanned and re-signatured 4x
@@ -128,12 +301,15 @@ object Dedup {
   private def docText(df: DataFrame, idCol: String, textCol: String, extra: Column*): DataFrame =
     df.select(Seq(col(idCol).as("doc"), col(textCol).as("txt")) ++ extra: _*)
 
+  /** `txt`'s MinHash band hashes, one array per doc. */
+  private def bandHashes(cfg: MinHashConfig): Column =
+    minhashBands(col("txt"), cfg.shingleSize, cfg.numPerms, cfg.numBands, cfg.seed)
+
   /** (band_idx, band_hash) rows of `txt`'s MinHash bands; the signature
     * store is written with this same column, so store and recompute agree.
     */
   private def minHashBands(cfg: MinHashConfig): Column =
-    posexplode(minhashBands(col("txt"), cfg.shingleSize, cfg.numPerms, cfg.numBands, cfg.seed))
-      .as(Seq("band_idx", "band_hash"))
+    posexplode(bandHashes(cfg)).as(Seq("band_idx", "band_hash"))
 
   /** (doc, hashes): each doc's distinct n-gram hashes of `textCol`. */
   private def shingleTable(df: DataFrame, doc: Column, textCol: String, n: Int): DataFrame =
@@ -375,13 +551,8 @@ object Dedup {
       ends(2 * i) = edges(i).getLong(0)
       ends(2 * i + 1) = edges(i).getLong(1)
     }
-    val sorted = ends.clone()
-    java.util.Arrays.sort(sorted)
-    var n = 0
-    sorted.indices.foreach { i =>
-      if (n == 0 || sorted(i) != sorted(n - 1)) { sorted(n) = sorted(i); n += 1 }
-    }
-    val nodes = java.util.Arrays.copyOf(sorted, n)
+    val nodes = sortedDistinct(ends)
+    val n = nodes.length
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
       var root = x
@@ -509,10 +680,7 @@ object Dedup {
     import spark.implicits._
     val resolver = spark.sessionState.conf.resolver
     val (key, rest) = df.schema.fields.partition(f => resolver(f.name, idCol))
-    val integralKey = key.map(_.dataType).toSeq match {
-      case Seq(ByteType | ShortType | IntegerType | LongType) => true
-      case _ => false
-    }
+    val integralKey = key.length == 1 && isIntegral(key.head.dataType)
     val losers = componentsOnDriver(pairs, aCol, bCol, edgeLimit).map { case (nodes, labels) =>
       nodes.indices.collect { case i if labels(i) != nodes(i) => nodes(i) }
     }
@@ -537,6 +705,12 @@ object Dedup {
     * to plan and each action then printed a 0.8 MB plan string.
     */
   private val inSetDropLimit = 4096
+
+  /** Ids the driver paths hold as longs: the integral types. */
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
 
   // ---------- simhash ----------
 

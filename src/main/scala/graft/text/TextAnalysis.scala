@@ -44,18 +44,32 @@ object TextAnalysis {
   def qualityFeatures(df: DataFrame, textCol: String,
       stopwords: Seq[String] = Seq("the", "a", "and", "of", "to")): DataFrame = {
     val t = col(textCol)
-    val words = split(trim(lower(t)), "\\s+")
+    val wordsCol = freshColumn(df, "__words")
+    val words = col(wordsCol)
     val nWords = size(words)
     val nChars = length(t)
     val punct = nChars - length(regexp_replace(t, "[\\p{Punct}]", ""))
     val stopHits = size(filter(words, w => w.isin(stopwords.map(s => lit(s)): _*)))
-    df.withColumns(Map(
-      "n_chars_q" -> nChars.cast("int"),
-      "n_words" -> nWords.cast("int"),
-      "punct_ratio" -> (punct.cast("double") / nChars),
-      "mean_word_len" -> ((nChars - nWords + 1).cast("double") / nWords),
-      "distinct_ratio" -> (size(array_distinct(words)).cast("double") / nWords),
-      "stopword_ratio" -> (stopHits.cast("double") / nWords)))
+    df.withColumn(wordsCol, split(trim(lower(t)), "\\s+"))
+      .withColumns(Map(
+        "n_chars_q" -> nChars.cast("int"),
+        "n_words" -> nWords.cast("int"),
+        "punct_ratio" -> (punct.cast("double") / nChars),
+        "mean_word_len" -> ((nChars - nWords + 1).cast("double") / nWords),
+        "distinct_ratio" -> (size(array_distinct(words)).cast("double") / nWords),
+        "stopword_ratio" -> (stopHits.cast("double") / nWords)))
+      .drop(wordsCol)
+  }
+
+  /** A name no column of `df` resolves to, for a helper column: `base`,
+    * else `base` with the first free numeric suffix. A split held in such
+    * a column is computed once per row: the optimizer does not inline an
+    * expensive projection into a consumer that reads it more than once.
+    */
+  private def freshColumn(df: DataFrame, base: String): String = {
+    val taken = df.columns.map(_.toLowerCase).toSet
+    (Iterator.single(base) ++ Iterator.from(1).map(i => s"$base$i"))
+      .find(n => !taken(n.toLowerCase)).get
   }
 
   /** Gopher-style corpus-quality rules (the published recipe from
@@ -67,24 +81,27 @@ object TextAnalysis {
     *  - symbol-to-word ratio (#, ellipsis) <= 0.1
     *  - fraction of words containing an alphabetic char >= 0.8
     *  - duplicate-line fraction <= 0.3 (repetition guard)
-    * All narrow, shuffle-free; the word split happens once.
+    * All narrow, shuffle-free; the word and line splits happen once per row.
     */
   def gopherFlags(df: DataFrame, textCol: String,
       minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
     val t = col(textCol)
-    val words = split(trim(t), "\\s+")
+    val (wordsCol, linesCol) = (freshColumn(df, "__gwords"), freshColumn(df, "__glines"))
+    val words = col(wordsCol)
     val nWords = size(words)
     val meanLen = (length(regexp_replace(t, "\\s+", "")).cast("double") / nWords)
     val symbols = size(regexp_extract_all(t, lit("#|\\.\\.\\.|…"), lit(0)))
     val alphaWords = size(filter(words, w => w.rlike("[A-Za-z]")))
-    val lines = split(t, "\n")
+    val lines = col(linesCol)
     val dupLines = lit(1.0) - size(array_distinct(lines)).cast("double") / size(lines)
-    df.withColumns(Map(
+    df.withColumns(Map(wordsCol -> split(trim(t), "\\s+"), linesCol -> split(t, "\n")))
+      .withColumns(Map(
         "g_n_words" -> nWords.cast("int"),
         "g_mean_word_len" -> meanLen,
         "g_symbol_ratio" -> (symbols.cast("double") / nWords),
         "g_alpha_word_ratio" -> (alphaWords.cast("double") / nWords),
         "g_dupline_ratio" -> dupLines))
+      .drop(wordsCol, linesCol)
       .withColumn("gopher_pass",
         col("g_n_words").between(minWords, maxWords) &&
         col("g_mean_word_len").between(3.0, 10.0) &&

@@ -219,8 +219,10 @@ class HygieneSpec extends AnyFunSuite {
       // embeddingNearDupPairs: stats .head(); incrementalFromStore:
       // touched .count() broadcast decision; connectedComponents: the
       // bounded limit(N + 1) edge .collect() of the driver path, and the
-      // distributed path's symRaw RDD .count() partitioner sizing
-      "Dedup.scala" -> 6,
+      // distributed path's symRaw RDD .count() partitioner sizing;
+      // minHashPairs' driver path: its two bounded pulls (band hashes, then
+      // the candidates' shingle hashes) share collectAtMost's one .collect()
+      "Dedup.scala" -> 7,
       "Profile.scala" -> 2,     // summary aggregates (profiling IS an action)
       "AnnStore.scala" -> 4,    // bounded centroid/codebook/probed-cell loads
       "IvfIndex.scala" -> 3,    // k-means sample + corpus-count for frac (cap-bounded)

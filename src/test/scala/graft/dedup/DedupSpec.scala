@@ -38,6 +38,90 @@ class DedupSpec extends SparkSpec {
     assert(jac == 1.0)
   }
 
+  // row limits forcing each minHashPairs path: every test corpus fits the
+  // first; the second pulls nothing
+  private val minHashPaths = Seq("driver" -> (1 << 20), "distributed" -> -1)
+
+  /** Whether the pairs are the driver path's local relation. */
+  private def onDriver(pairs: org.apache.spark.sql.DataFrame): Boolean =
+    pairs.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** minHashPairs on both paths: the same schema and the same rows (as a
+    * multiset, jaccard included); returns the rows.
+    */
+  private def minHashBothPaths(df: org.apache.spark.sql.DataFrame,
+      cfg: Dedup.MinHashConfig = Dedup.MinHashConfig()): Seq[org.apache.spark.sql.Row] = {
+    val out = minHashPaths.map { case (path, limit) =>
+      val pairs = Dedup.minHashPairs(df, "doc_id", "text", cfg, limit)
+      assert(onDriver(pairs) == (path == "driver"), s"row limit $limit took the other path")
+      pairs
+    }
+    assert(out.head.schema == out(1).schema, out.map(_.schema))
+    val rows = out.map(_.collect().toSeq.sortBy(_.toString))
+    graft.GraftCaches.releaseAll(spark)
+    assert(rows.head == rows(1), s"driver ${rows.head}\ndistributed ${rows(1)}")
+    rows.head
+  }
+
+  test("minHashPairs: driver and distributed paths agree on planted clusters") {
+    val rnd = new scala.util.Random(20261019L)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(3000)}")
+    val roots = Seq.fill(40)(words(40))
+    // each root, two one-word variants of it, and unrelated docs
+    val texts = roots.flatMap(r => Seq(r, r.updated(7, "x"), r.updated(30, "y"))) ++
+      Seq.fill(120)(words(40))
+    val df = texts.zipWithIndex.map { case (t, i) => (i * 3L + 1, t.mkString(" ")) }
+      .toDF("doc_id", "text")
+    val rows = minHashBothPaths(df)
+    assert(rows.length >= 100, s"${rows.length} pairs")
+    assert(df.schema("doc_id").nullable == rows.head.schema("id_a").nullable)
+  }
+
+  test("minHashPairs: both paths agree on null and duplicate ids") {
+    val a = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val a2 = "the quick brown fox jumps over the lazy dog near the river bank tonight"
+    val b = "spark shuffles data between executors during wide transformations always"
+    val df = Seq((Some(1L), a), (None, a), (Some(2L), a2), (Some(2L), a), (Some(3L), b),
+      (Some(3L), b), (None, b), (Some(4L), b), (Some(5L), a2)).toDF("doc_id", "text")
+    val rows = minHashBothPaths(df, Dedup.MinHashConfig(threshold = 0.5))
+    // id 2's two rows are each checked against id 1 and id 5; (3, 4) twice
+    assert(rows.count(r => r.get(0) == 1L && r.get(1) == 2L) == 2, rows)
+    assert(rows.count(r => r.get(0) == 3L && r.get(1) == 4L) == 2, rows)
+    assert(rows.forall(r => r.get(0) != null && r.get(1) != null), rows)
+  }
+
+  test("minHashPairs: both paths agree on null, empty and shorter-than-shingle texts") {
+    val df = Seq((1L, null), (2L, ""), (3L, ""), (4L, "a b"), (5L, "a b"), (6L, "x"),
+      (7L, null), (8L, "A  b!"), (9L, "one two three four"))
+      .toDF("doc_id", "text")
+    val rows = minHashBothPaths(df)
+    // empty texts score 1.0, as do the shorter-than-shingle "a b" spellings
+    assert(rows.map(r => (r.get(0), r.get(1))).toSet ==
+      Set((2L, 3L), (4L, 5L), (4L, 8L), (5L, 8L)), rows)
+  }
+
+  test("minHashPairs: both paths keep a bucket of exactly maxBucketSize and drop one of cap + 1") {
+    val kept = "alpha beta gamma delta epsilon zeta eta theta"
+    val dropped = "iota kappa lambda mu nu xi omicron pi"
+    // the cap + 1 bucket's fourth row has a null id: it still counts
+    val df = (Seq.fill(3)(kept) ++ Seq.fill(4)(dropped)).zipWithIndex
+      .map { case (t, i) => (if (i == 6) None else Some(i.toLong), t) }.toDF("doc_id", "text")
+    val rows = minHashBothPaths(df, Dedup.MinHashConfig(maxBucketSize = 3))
+    assert(rows.map(r => (r.get(0), r.get(1))).toSet == Set((0L, 1L), (0L, 2L), (1L, 2L)), rows)
+  }
+
+  test("minHashPairs: int ids keep their type on both paths; string ids take the distributed path") {
+    val cfg = Dedup.MinHashConfig(threshold = 0.5)
+    val ints = minHashBothPaths(docs.withColumn("doc_id", col("doc_id").cast("int")), cfg)
+    assert(ints.map(r => (r.get(0), r.get(1))).toSet == Set((10, 11), (20, 21)), ints)
+    val strings = Dedup.minHashPairs(docs.withColumn("doc_id", col("doc_id").cast("string")),
+      "doc_id", "text", cfg, minHashPaths.head._2)
+    assert(!onDriver(strings))
+    assert(strings.select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSet == Set(("10", "11"), ("20", "21")))
+    graft.GraftCaches.releaseAll(spark)
+  }
+
   test("incrementalMinHashPairs: delta-touching pairs only, full-run equivalent") {
     // corpus holds a planted corpus-corpus pair (10/11) that must NOT be
     // re-reported; the delta brings a cross pair (12~10/11) and a

@@ -7,7 +7,8 @@ import graft.{SparkSpec, Tables}
   * doc_id set is recomputed here with a NAIVE driver-side pipeline — an
   * all-pairs loop over the collected sf0.01 corpus using the TextHashing
   * primitives directly (no DataFrames, no banded join, no bucket-cap
-  * machinery) — and the distributed query must reproduce it row for row.
+  * machinery) — and the query, and each of minHashPairs' two paths, must
+  * reproduce it row for row.
   * This upgrades q_dedup_minhash from a rows-only check to exact-content
   * checked, deterministic because every hash is seeded.
   */
@@ -51,6 +52,19 @@ class MinHashOracleSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(got == expected,
       s"minhash survivors diverge: got ${got.length}, expected ${expected.length}")
+    // both minHashPairs paths, forced by their row limit: the corpus size
+    // fits it, one row less does not (the query takes the driver path)
+    val corpus = Tables.load(spark, sfDir, "documents")
+    for ((path, rowLimit) <- Seq("driver" -> docs.length, "distributed" -> (docs.length - 1))) {
+      val pairs = Dedup.minHashPairs(corpus, "doc_id", "text", cfg, rowLimit)
+      assert(pairs.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] == (path == "driver"),
+        s"row limit $rowLimit took the other path")
+      val survivors = Dedup.dropNearDups(corpus, "doc_id", pairs).select("doc_id")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(survivors == expected, s"$path path: ${survivors.length} survivors")
+    }
+    graft.GraftCaches.releaseAll(spark)
     // the driver-recorded row count stays pinned too (CORRECTNESS history)
     assert(expected.length == 476)
   }

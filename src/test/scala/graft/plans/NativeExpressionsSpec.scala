@@ -114,7 +114,13 @@ class NativeExpressionsSpec extends SparkSpec {
     val docs = Seq((1L, "a b c d e f g"), (2L, "a b c d e f h"), (3L, "x y z"))
       .toDF("doc_id", "text")
     graft.GraftCaches.releaseAll(spark) // isolate from earlier suites
-    val pairs = graft.dedup.Dedup.minHashPairs(docs, "doc_id", "text")
+    // an integral id: minHashPairs pairs so small a corpus on the driver
+    // and persists nothing
+    graft.dedup.Dedup.minHashPairs(docs, "doc_id", "text").count()
+    assert(graft.GraftCaches.trackedCount == 0)
+    // a string id takes the distributed plan
+    val pairs = graft.dedup.Dedup.minHashPairs(
+      docs.selectExpr("cast(doc_id as string) as doc_id", "text"), "doc_id", "text")
     pairs.count() // materialize (populates the tracked persists)
     assert(graft.GraftCaches.trackedCount == 3) // src, banded, shingles
     assert(!spark.sharedState.cacheManager.isEmpty)
@@ -131,6 +137,9 @@ class NativeExpressionsSpec extends SparkSpec {
       (3L, Seq(-1.0f, 0.3f, -0.2f))).toDF("doc_id", "vec")
     val plans = Seq(
       graft.dedup.Dedup.minHashPairs(docs, "doc_id", "text"),
+      // a string id takes minHashPairs' distributed plan
+      graft.dedup.Dedup.minHashPairs(
+        docs.selectExpr("cast(doc_id as string) as doc_id", "text"), "doc_id", "text"),
       graft.dedup.Dedup.ngramJaccardPairs(docs, "doc_id", "text"),
       graft.dedup.Dedup.embeddingNearDupPairs(vecs, "doc_id", "vec", dim = 3),
       graft.similarity.Similarity.lshTopK(vecs, vecs.limit(1), "doc_id", "vec", dim = 3))

@@ -26,6 +26,25 @@ class TextAnalysisSpec extends SparkSpec {
     assert(r.getAs[Double]("distinct_ratio") == 0.75)
   }
 
+  test("qualityFeatures and gopherFlags split each text once, beside any input column name") {
+    // the input already holds the helper columns' first-choice names. An
+    // RDD, not a local Seq, so the optimizer cannot fold the plan away.
+    val df = spark.sparkContext.parallelize(Seq((1, "the cat sat\non the mat", "a", "b", "c")), 1)
+      .toDF("id", "text", "__words", "__gwords", "__GLINES")
+    val out = TextAnalysis.gopherFlags(TextAnalysis.qualityFeatures(df, "text"), "text")
+    assert(out.columns.take(5).toSeq == df.columns.toSeq, out.columns)
+    assert(out.columns.drop(5).toSet == Set("n_chars_q", "n_words", "punct_ratio",
+      "mean_word_len", "distinct_ratio", "stopword_ratio", "g_n_words", "g_mean_word_len",
+      "g_symbol_ratio", "g_alpha_word_ratio", "g_dupline_ratio", "gopher_pass"), out.columns)
+    val r = out.collect()(0)
+    assert((2 to 4).map(r.getString) == Seq("a", "b", "c"))
+    assert(r.getAs[Int]("n_words") == 6 && r.getAs[Int]("g_n_words") == 6)
+    assert(r.getAs[Double]("distinct_ratio") == 5.0 / 6 && r.getAs[Double]("g_dupline_ratio") == 0.0)
+    // one split per kind: the lower-cased words, the words, the lines
+    val plan = out.queryExecution.optimizedPlan.toString
+    assert("split\\(".r.findAllIn(plan).length == 3, plan)
+  }
+
   test("gopherFlags computes rule features and the combined pass flag") {
     val good = ("w " + (1 to 60).map(i => s"word$i").mkString(" ")).trim
     val tooShort = "only a few words here"
