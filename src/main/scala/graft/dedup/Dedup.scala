@@ -1,20 +1,16 @@
 package graft.dedup
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType,
+  LongType, ShortType, StructField, StructType}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import graft.GraftCaches.PersistOps
-import graft.plans.ExprHelpers
 import graft.plans.NativeColumns._
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY §2.6).
@@ -91,70 +87,102 @@ object Dedup {
     * null ids included) and whose shingle sets score >= threshold. Two
     * paths, the same rows and schema:
     *  - **Driver** (the common case: a corpus of at most
-    *    [[driverBandRowLimit]] rows with an integral `idCol`). Two bounded
-    *    pulls ([[collectAtMost]], SURVEY §4): each row's band hashes, then
-    *    the shingle hashes of the candidate docs only, selected by one
-    *    `InSet` filter. Buckets, candidate pairs and the Jaccard check
-    *    (the `jaccard_long` kernel) run on the driver, and the pairs come
-    *    back as a local relation. Past any bound — more rows, more than
-    *    [[driverEdgeLimit]] candidate pairs counted from the bucket sizes
-    *    before they are listed, more than [[inSetDropLimit]] candidate
-    *    docs — the distributed path runs instead.
-    *  - **Distributed**: [[distributedMinHashPairs]].
+    *    [[driverBandRowLimit]] rows with an integral `idCol`). Pull 1, a
+    *    `limit(N + 1).collect()`, brings each row's band hashes and text
+    *    size; buckets and candidate pairs are found on the driver. Pull 2,
+    *    a `collect()` of the rows one `InSet` filter selects, brings the
+    *    shingle hashes of the candidate docs only. Its rows are pull 1's
+    *    rows of those ids, so its size is bounded before it runs. Each
+    *    candidate is checked with `TextHashing.jaccard`, the kernel
+    *    `jaccard_long` computes, and the pairs come back as a local
+    *    relation.
+    *  - **Distributed**: [[distributedMinHashPairs]], for a non-integral id
+    *    or more than N rows. A corpus that passes pull 1 but not a later
+    *    bound runs the same joins from its pulled band hashes, so no
+    *    signature is computed twice. The later bounds: at most
+    *    [[driverEdgeLimit]] candidate pairs (Σ C(m, 2) over the kept
+    *    buckets, counted before they are listed), at most
+    *    [[inSetDropLimit]] candidate docs, and at most [[driverByteLimit]]
+    *    of shingle hashes by the candidates' text sizes.
     *
-    * EAGER AT BUILD TIME (SURVEY §4 exception): the driver path runs its
-    * Spark jobs when called, so this operator cannot compose onto an
-    * unstarted streaming DataFrame and executes its upstream at call time.
+    * EAGER AT BUILD TIME (SURVEY §4 exception): for an integral id the call
+    * runs Spark jobs, so this operator cannot compose onto an unstarted
+    * streaming DataFrame and executes its upstream at call time.
     */
   def minHashPairs(df: DataFrame, idCol: String, textCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame =
-    minHashPairs(df, idCol, textCol, cfg, driverBandRowLimit(cfg))
+    minHashPairs(df, idCol, textCol, cfg, driverBandRowLimit(cfg), driverByteLimit)
 
-  /** [[minHashPairs]] with an explicit driver-path row limit. */
+  /** [[minHashPairs]] with explicit driver-path bounds: the rows of pull 1
+    * (-1: the distributed plan, nothing pulled) and the bytes of pull 2.
+    */
   private[dedup] def minHashPairs(df: DataFrame, idCol: String, textCol: String,
-      cfg: MinHashConfig, rowLimit: Int): DataFrame = {
+      cfg: MinHashConfig, rowLimit: Int, byteLimit: Long): DataFrame = {
     val src = docText(df, idCol, textCol)
-    pairsOnDriver(src, cfg, rowLimit).getOrElse(distributedMinHashPairs(src, cfg))
+    val docField = src.schema("doc")
+    if (rowLimit < 0 || !isIntegral(docField.dataType)) return distributedMinHashPairs(src, cfg)
+    import src.sparkSession.implicits._
+    // pull 1; past N rows it has read N + 1 and the distributed plan runs
+    val rows = src.select(col("doc").cast(LongType).as("doc"),
+        coalesce(octet_length(col("txt")), lit(0)).as("octets"), bandHashes(cfg).as("bands"))
+      .limit(rowLimit + 1).as[BandRow].collect()
+    if (rows.length > rowLimit) return distributedMinHashPairs(src, cfg)
+    pairsOnDriver(src, rows, cfg, byteLimit).getOrElse {
+      // the pulled band hashes stand in for the distributed signature pass
+      val toId = fromLong(docField.dataType)
+      val banded = src.sparkSession.createDataFrame(
+          rows.toSeq.map(r => Row(r.doc.map(toId).orNull, r.bands)).asJava,
+          StructType(Seq(docField, StructField("bands", ArrayType(LongType)))))
+        .select(col("doc"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+      bandedPairs(banded, shingleTable(src, col("doc"), "txt", cfg.shingleSize).graftPersist, cfg)
+    }
   }
 
-  /** Rows the driver MinHash path pulls: (numBands + 1) × 8 B of payload
-    * per (doc, band hashes) row within 1/256 of the driver heap, as
-    * [[driverEdgeLimit]] sizes edges, at most 2^20 rows.
+  /** A row of pull 1: the id as a long, the text's size in bytes (0 for a
+    * null text) and its band hashes (null for a null text).
+    */
+  private[dedup] final case class BandRow(doc: Option[Long], octets: Int, bands: Array[Long])
+
+  /** Byte budget of each driver MinHash pull: 1/256 of the driver heap, as
+    * [[driverEdgeLimit]] sizes edges.
+    */
+  private def driverByteLimit: Long = Runtime.getRuntime.maxMemory / 256
+
+  /** Rows of pull 1: (numBands + 2) × 8 B of payload per [[BandRow]] within
+    * [[driverByteLimit]], at most 2^20 rows.
     */
   private def driverBandRowLimit(cfg: MinHashConfig): Int =
-    math.min(Runtime.getRuntime.maxMemory / 256 / ((cfg.numBands + 1) * 8L), 1L << 20).toInt
+    math.min(driverByteLimit / ((cfg.numBands + 2) * 8L), 1L << 20).toInt
 
-  /** (id_a, id_b, jaccard) of `src` (doc, txt) found on the driver, or
-    * None when `doc` is not integral or the corpus passes a bound.
+  /** (id_a, id_b, jaccard) of `src` (doc, txt) found on the driver from its
+    * pulled `rows`, or None past the candidate-pair, candidate-doc or byte
+    * bound.
     */
-  private def pairsOnDriver(src: DataFrame, cfg: MinHashConfig, rowLimit: Int): Option[DataFrame] = {
-    val docField = src.schema("doc")
-    if (!isIntegral(docField.dataType)) return None
-    val doc = col("doc").cast(LongType)
+  private def pairsOnDriver(src: DataFrame, rows: Array[BandRow], cfg: MinHashConfig,
+      byteLimit: Long): Option[DataFrame] = {
+    import src.sparkSession.implicits._
     for {
-      bandRows <- collectAtMost(src.select(doc, bandHashes(cfg)), rowLimit)
-      (aIds, bIds) <- bandPairs(bandRows, cfg.numBands, cfg.maxBucketSize)
+      (aIds, bIds) <- bandPairs(rows, cfg.numBands, cfg.maxBucketSize)
       docs = sortedDistinct(aIds ++ bIds)
       if docs.length <= inSetDropLimit
-      isCandidate = ColumnBridge.column(InSet(ColumnBridge.expression(doc), docs.toSet[Any]))
-      hashRows <- collectAtMost(
-        shingleTable(src.where(isCandidate), doc, "txt", cfg.shingleSize), rowLimit)
+      // pull 2 brings these ids' rows back, each with at most one shingle
+      // hash per byte of its text (a shingle needs a token)
+      if rows.iterator.filter(_.doc.exists(java.util.Arrays.binarySearch(docs, _) >= 0))
+        .map(r => 8L * (r.octets + 1)).sum <= byteLimit
     } yield {
+      val doc = col("doc").cast(LongType)
+      val isCandidate = ColumnBridge.column(InSet(ColumnBridge.expression(doc), docs.toSet[Any]))
       // every (doc, hashes) row of an id: a duplicated id is checked once per row
-      val hashes = hashRows.filterNot(_.isNullAt(1)).groupBy(_.getLong(0)).map {
-        case (id, rows) => id -> rows.map(_.getArray(1)).toSeq
-      }
-      val toId: Long => Any = docField.dataType match {
-        case ByteType => _.toByte
-        case ShortType => _.toShort
-        case IntegerType => _.toInt
-        case _ => identity
-      }
+      val hashes = shingleTable(src.where(isCandidate), doc, "txt", cfg.shingleSize)
+        .as[(Long, Array[Long])].collect()
+        .filter(_._2 != null).groupBy(_._1).map { case (id, rs) => id -> rs.map(_._2).toSeq }
+      val docField = src.schema("doc")
+      val toId = fromLong(docField.dataType)
       val verified = for {
         (a, b) <- aIds.iterator.zip(bIds.iterator)
         ha <- hashes.getOrElse(a, Nil)
         hb <- hashes.getOrElse(b, Nil)
-        jaccard = ExprHelpers.jaccardLong(ha, hb)
+        jaccard = TextHashing.jaccard(ha, hb)
         if jaccard >= cfg.threshold
       } yield Row(toId(a), toId(b), jaccard)
       def id(name: String) = StructField(name, docField.dataType, docField.nullable)
@@ -163,23 +191,31 @@ object Dedup {
     }
   }
 
-  /** Distinct candidate pairs (id_a < id_b, ascending) of pulled (doc:
-    * long, band hashes) rows sharing a (band_idx, band_hash) bucket of at
-    * most `cap` rows, or None when the kept buckets' Σ C(m, 2) exceeds
-    * [[driverEdgeLimit]]. A row with null band hashes (null text) is in no
-    * bucket; a null-id row counts toward its buckets' sizes but pairs with
-    * nothing, as on the distributed path.
+  /** An integral id type's value from its long. */
+  private def fromLong(t: DataType): Long => Any = t match {
+    case ByteType => _.toByte
+    case ShortType => _.toShort
+    case IntegerType => _.toInt
+    case _ => identity
+  }
+
+  /** Distinct candidate pairs (id_a < id_b, ascending) of pulled rows
+    * sharing a (band_idx, band_hash) bucket of at most `cap` rows, or None
+    * when the kept buckets' Σ C(m, 2) exceeds [[driverEdgeLimit]]. A row
+    * with null band hashes (null text) is in no bucket; a null-id row
+    * counts toward its buckets' sizes but pairs with nothing, as on the
+    * distributed path.
     */
-  private def bandPairs(rows: Array[InternalRow], numBands: Int,
+  private def bandPairs(rows: Array[BandRow], numBands: Int,
       cap: Int): Option[(Array[Long], Array[Long])] = {
-    val banded = rows.filterNot(_.isNullAt(1))
-    val ids = sortedDistinct(banded.collect { case r if !r.isNullAt(0) => r.getLong(0) })
+    val banded = rows.filter(_.bands != null)
+    val ids = sortedDistinct(banded.flatMap(_.doc))
     // each row's id as an index into `ids` (-1 for null), so a pair packs into one long
-    val idx = banded.map(r => if (r.isNullAt(0)) -1 else java.util.Arrays.binarySearch(ids, r.getLong(0)))
+    val idx = banded.map(_.doc.fold(-1)(java.util.Arrays.binarySearch(ids, _)))
     var bound = 0L
     // per band: each row's hash, and the hashes of the kept buckets (2 to `cap` rows), ascending
     val bands = Array.tabulate(numBands) { b =>
-      val h = banded.map(_.getArray(1).getLong(b))
+      val h = banded.map(_.bands(b))
       val sorted = h.clone()
       java.util.Arrays.sort(sorted)
       val kept = ArrayBuffer.empty[Long]
@@ -222,37 +258,6 @@ object Dedup {
     java.util.Arrays.copyOf(s, n)
   }
 
-  /** `df`'s rows when it has at most `limit` of them, else None. The same
-    * bound as `limit(limit + 1).collect()`, but the first Spark job scans
-    * one wave of partitions (as many as the cluster runs at once) where
-    * Spark's limit scans one, so a corpus of a few file splits comes back
-    * in one job; each later job scans 4× the partitions scanned so far.
-    * Every task ships at most the rows still missing, and the scan stops
-    * at the first job that passes the limit. The rows are copies,
-    * readable after the call. ([[componentsOnDriver]] keeps Spark's limit:
-    * its edges are usually this path's local relation, which that reads
-    * without a job.)
-    */
-  private def collectAtMost(df: DataFrame, limit: Int): Option[Array[InternalRow]] = {
-    if (limit < 0) return None
-    val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("collectAtMost")) {
-      val rows = qe.toRdd
-      val buf = ArrayBuffer.empty[InternalRow]
-      var scanned = 0
-      var wave = df.sparkSession.sparkContext.defaultParallelism
-      while (buf.length <= limit && scanned < rows.getNumPartitions) {
-        val (from, until) = (scanned, math.min(rows.getNumPartitions, scanned + wave))
-        val room = limit + 1 - buf.length
-        buf ++= PartitionPruningRDD.create(rows, i => i >= from && i < until)
-          .mapPartitions(_.take(room).map(_.copy())).collect().take(room)
-        scanned = until
-        wave = 4 * scanned
-      }
-      if (buf.length > limit) None else Some(buf.toArray)
-    }
-  }
-
   /** The unbounded MinHash plan over `docs` (doc, txt). Stages (each a
     * narrow map or one keyed shuffle — the scale path):
     *  1. signature: one codegen'd pass/doc -> 64 minhashes -> 16 band hashes;
@@ -276,16 +281,20 @@ object Dedup {
     // without the persist the corpus is re-scanned and re-signatured 4x
     // (measured: 7 parquet scans per query). Same treatment as ngram.
     val banded = src.select(col("doc"), minHashBands(cfg)).graftPersist
-
-    val bucketed = dropOversizedBuckets(banded, Seq("band_idx", "band_hash"), cfg.maxBucketSize)
-
-    val candidates = sharedKeyPairs(bucketed, bucketed, Seq("band_idx", "band_hash"))
-
     // one pass over the corpus -> (doc, distinct shingle hashes); candidate
     // pairs fetch both sides via two id-keyed joins (persisted: it feeds
     // both verification joins)
-    jaccardVerified(candidates,
-      shingleTable(src, col("doc"), "txt", cfg.shingleSize).graftPersist, cfg.threshold)
+    bandedPairs(banded, shingleTable(src, col("doc"), "txt", cfg.shingleSize).graftPersist, cfg)
+  }
+
+  /** Stages 3-4 of [[distributedMinHashPairs]]: the verified pairs of
+    * `banded` (doc, band_idx, band_hash) rows, checked against the (doc,
+    * hashes) rows of `shingles`.
+    */
+  private def bandedPairs(banded: DataFrame, shingles: DataFrame, cfg: MinHashConfig): DataFrame = {
+    val bucketed = dropOversizedBuckets(banded, Seq("band_idx", "band_hash"), cfg.maxBucketSize)
+    val candidates = sharedKeyPairs(bucketed, bucketed, Seq("band_idx", "band_hash"))
+    jaccardVerified(candidates, shingles, cfg.threshold)
   }
 
   /** Distinct (id_a, id_b), id_a < id_b, of an `a` and a `b` doc agreeing on every `keys` column. */

@@ -220,9 +220,9 @@ class HygieneSpec extends AnyFunSuite {
       // touched .count() broadcast decision; connectedComponents: the
       // bounded limit(N + 1) edge .collect() of the driver path, and the
       // distributed path's symRaw RDD .count() partitioner sizing;
-      // minHashPairs' driver path: its two bounded pulls (band hashes, then
-      // the candidates' shingle hashes) share collectAtMost's one .collect()
-      "Dedup.scala" -> 7,
+      // minHashPairs' driver path: its two bounded pulls, the limit(N + 1)
+      // band-hash .collect() and the candidates' shingle-hash .collect()
+      "Dedup.scala" -> 8,
       "Profile.scala" -> 2,     // summary aggregates (profiling IS an action)
       "AnnStore.scala" -> 4,    // bounded centroid/codebook/probed-cell loads
       "IvfIndex.scala" -> 3,    // k-means sample + corpus-count for frac (cap-bounded)

@@ -52,7 +52,7 @@ class DedupSpec extends SparkSpec {
   private def minHashBothPaths(df: org.apache.spark.sql.DataFrame,
       cfg: Dedup.MinHashConfig = Dedup.MinHashConfig()): Seq[org.apache.spark.sql.Row] = {
     val out = minHashPaths.map { case (path, limit) =>
-      val pairs = Dedup.minHashPairs(df, "doc_id", "text", cfg, limit)
+      val pairs = Dedup.minHashPairs(df, "doc_id", "text", cfg, limit, Long.MaxValue)
       assert(onDriver(pairs) == (path == "driver"), s"row limit $limit took the other path")
       pairs
     }
@@ -115,11 +115,52 @@ class DedupSpec extends SparkSpec {
     val ints = minHashBothPaths(docs.withColumn("doc_id", col("doc_id").cast("int")), cfg)
     assert(ints.map(r => (r.get(0), r.get(1))).toSet == Set((10, 11), (20, 21)), ints)
     val strings = Dedup.minHashPairs(docs.withColumn("doc_id", col("doc_id").cast("string")),
-      "doc_id", "text", cfg, minHashPaths.head._2)
+      "doc_id", "text", cfg, minHashPaths.head._2, Long.MaxValue)
     assert(!onDriver(strings))
     assert(strings.select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1)))
       .toSet == Set(("10", "11"), ("20", "21")))
     graft.GraftCaches.releaseAll(spark)
+  }
+
+  /** Whether `pairs`' plan computes MinHash signatures. */
+  private def signsDocs(pairs: org.apache.spark.sql.DataFrame): Boolean =
+    pairs.queryExecution.analyzed.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.plans.MinHashBandsExpr])))
+
+  test("minHashPairs: past the byte budget, the pulled band hashes feed the distributed joins") {
+    val rnd = new scala.util.Random(7L)
+    // four long near-duplicates (one word apart) and two short unrelated docs
+    val root = Seq.fill(4000)(s"w${rnd.nextInt(50000)}")
+    val texts = (0 until 4).map(i => root.updated(100 * i + 50, s"edit$i").mkString(" ")) ++
+      Seq("a short unrelated note", "another short unrelated note here")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val cfg = Dedup.MinHashConfig()
+    // pull 2 of the four candidates: 8 B per text byte, plus the id
+    val budget = texts.take(4).map(t => 8L * (t.length + 1)).sum
+    val fits = Dedup.minHashPairs(df, "doc_id", "text", cfg, 1 << 20, budget)
+    val over = Dedup.minHashPairs(df, "doc_id", "text", cfg, 1 << 20, budget - 1)
+    val distributed = Dedup.minHashPairs(df, "doc_id", "text", cfg, -1, Long.MaxValue)
+    assert(onDriver(fits) && !onDriver(over) && !onDriver(distributed))
+    assert(!signsDocs(over) && signsDocs(distributed))
+    assert(over.schema == distributed.schema && fits.schema == distributed.schema)
+    val rows = Seq(fits, over, distributed).map(_.collect().toSeq.sortBy(_.toString))
+    graft.GraftCaches.releaseAll(spark)
+    assert(rows.forall(_.length == 6), rows)
+    assert(rows.forall(_ == rows(2)), rows)
+  }
+
+  test("minHashPairs: a many-partition corpus over the row limit takes the distributed plan") {
+    val rnd = new scala.util.Random(11L)
+    val roots = Seq.fill(50)(Seq.fill(30)(s"w${rnd.nextInt(5000)}"))
+    val df = roots.flatMap(r => Seq(r, r.updated(3, "x"))).zipWithIndex
+      .map { case (t, i) => (i.toLong, t.mkString(" ")) }.toDF("doc_id", "text").repartition(16)
+    val cfg = Dedup.MinHashConfig()
+    val atLimit = Dedup.minHashPairs(df, "doc_id", "text", cfg, 100, Long.MaxValue)
+    val over = Dedup.minHashPairs(df, "doc_id", "text", cfg, 99, Long.MaxValue)
+    assert(onDriver(atLimit) && !onDriver(over) && signsDocs(over))
+    val rows = Seq(atLimit, over).map(_.collect().toSeq.sortBy(_.toString))
+    graft.GraftCaches.releaseAll(spark)
+    assert(rows.head.length >= 50 && rows.head == rows(1), rows)
   }
 
   test("incrementalMinHashPairs: delta-touching pairs only, full-run equivalent") {

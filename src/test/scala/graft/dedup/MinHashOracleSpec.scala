@@ -56,7 +56,7 @@ class MinHashOracleSpec extends SparkSpec {
     // fits it, one row less does not (the query takes the driver path)
     val corpus = Tables.load(spark, sfDir, "documents")
     for ((path, rowLimit) <- Seq("driver" -> docs.length, "distributed" -> (docs.length - 1))) {
-      val pairs = Dedup.minHashPairs(corpus, "doc_id", "text", cfg, rowLimit)
+      val pairs = Dedup.minHashPairs(corpus, "doc_id", "text", cfg, rowLimit, Long.MaxValue)
       assert(pairs.queryExecution.analyzed
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] == (path == "driver"),
         s"row limit $rowLimit took the other path")
