@@ -3,7 +3,8 @@ package graft.dedup
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Cast, InSet}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType,
   LongType, ShortType, StructField, StructType}
@@ -549,11 +550,19 @@ object Dedup {
     * a union always hangs the larger root under the smaller, and node
     * indices follow id order, so every root is its component's min id.
     * Iterative throughout: a million-node chain cannot overflow the stack.
+    * Pairs built on the driver (a local relation, as [[minHashPairs]]'
+    * driver path returns) are cast in-process, with no Dataset action.
     */
   private def componentsOnDriver(pairs: DataFrame, aCol: String, bCol: String,
       edgeLimit: Int): Option[(Array[Long], Array[Long])] = {
-    val edges = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
-      .limit(edgeLimit + 1).collect()
+    val cast = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
+    val edges = (pairs.queryExecution.analyzed, cast.queryExecution.analyzed) match {
+      case (_: LocalRelation, Project(casts, local: LocalRelation)) =>
+        if (local.data.length > edgeLimit) return None
+        val bound = BindReferences.bindReferences(casts, AttributeSeq(local.output))
+        local.data.map(r => Row(bound.map(_.eval(r)): _*)).toArray
+      case _ => cast.limit(edgeLimit + 1).collect()
+    }
     if (edges.length > edgeLimit) return None
     val ends = new Array[Long](2 * edges.length)
     edges.indices.foreach { i =>

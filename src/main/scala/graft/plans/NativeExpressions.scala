@@ -1,13 +1,16 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, QuaternaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, QuaternaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.dedup.TextHashing
@@ -309,6 +312,182 @@ object ExprHelpers {
     }
     sig
   }
+
+  // The text-feature kernels below scan UTF-8 bytes. They reproduce Java
+  // regex semantics without a regex or a String: `\s` is the six ASCII
+  // bytes ` \t\n\x0B\f\r` and `\p{Punct}` the 32 ASCII punctuation bytes,
+  // and no byte of a multi-byte UTF-8 sequence is ASCII. On invalid UTF-8,
+  // where a String would hold U+FFFD, the kernels see the raw bytes.
+
+  private def isSpace(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+
+  private def isPunct(b: Byte): Boolean =
+    (b >= '!' && b <= '/') || (b >= ':' && b <= '@') || (b >= '[' && b <= '`') ||
+      (b >= '{' && b <= '~')
+
+  private def isAsciiLetter(b: Byte): Boolean = (b >= 'A' && b <= 'Z') || (b >= 'a' && b <= 'z')
+
+  private val slices = ThreadLocal.withInitial[ByteSlices](() => new ByteSlices)
+
+  /** Adds to `out` the tokens of `split(trim(s), "\\s+")`: `trim` strips
+    * 0x20 only, and the split keeps a leading empty token after a leading
+    * whitespace run and a trailing one before a trailing run (limit -1),
+    * so "" is one token.
+    */
+  private def splitWords(s: UTF8String, out: ByteSlices): Unit = {
+    val base = s.getBaseObject; val off = s.getBaseOffset
+    def at(i: Int): Byte = Platform.getByte(base, off + i)
+    var from = 0; var to = s.numBytes
+    while (from < to && at(from) == ' ') from += 1
+    while (to > from && at(to - 1) == ' ') to -= 1
+    var start = from; var i = from
+    while (i < to) {
+      if (isSpace(at(i))) {
+        out.add(start, i)
+        while (i < to && isSpace(at(i))) i += 1
+        start = i
+      } else i += 1
+    }
+    out.add(start, to)
+  }
+
+  /** `qualityFeatures`' counts of one text, as a row of ints: code points
+    * and `\p{Punct}` chars of `text`, then the tokens of
+    * `split(trim(lower), "\\s+")` (`lower` is `lower(text)`), those equal
+    * to one of `stopwords`, and the distinct ones.
+    */
+  def qualityCounts(text: UTF8String, lower: UTF8String,
+      stopwords: Array[Array[Byte]]): InternalRow = {
+    val base = text.getBaseObject; val off = text.getBaseOffset
+    var punct = 0; var i = 0
+    while (i < text.numBytes) {
+      if (isPunct(Platform.getByte(base, off + i))) punct += 1
+      i += 1
+    }
+    val words = slices.get.reset(lower)
+    splitWords(lower, words)
+    var stop = 0; var w = 0
+    while (w < words.size) {
+      var k = 0
+      while (k < stopwords.length && !words.equalTo(w, stopwords(k))) k += 1
+      if (k < stopwords.length) stop += 1
+      w += 1
+    }
+    val row = new GenericInternalRow(Array[Any](
+      text.numChars, punct, words.size, stop, words.distinct()))
+    words.release()
+    row
+  }
+
+  /** `gopherFlags`' counts of one text, as a row of ints: the tokens of
+    * `split(trim(text), "\\s+")`, the code points outside `\s`, the
+    * left-to-right matches of `#|\.\.\.|…`, the tokens holding an ASCII
+    * letter, and the lines of `split(text, "\n")` and the distinct ones.
+    */
+  def gopherCounts(text: UTF8String): InternalRow = {
+    val base = text.getBaseObject; val off = text.getBaseOffset; val n = text.numBytes
+    def at(i: Int): Byte = Platform.getByte(base, off + i)
+    val parts = slices.get.reset(text)
+    splitWords(text, parts)
+    val words = parts.size
+    var alpha = 0; var w = 0
+    while (w < words) {
+      var i = parts.start(w)
+      while (i < parts.end(w) && !isAsciiLetter(at(i))) i += 1
+      if (i < parts.end(w)) alpha += 1
+      w += 1
+    }
+    parts.reset(text) // from here on, the lines
+    var spaces = 0; var symbols = 0; var lineStart = 0; var i = 0
+    while (i < n) {
+      val b = at(i)
+      if (b == '#') symbols += 1
+      else if (b == '.' && i + 2 < n && at(i + 1) == '.' && at(i + 2) == '.') {
+        symbols += 1; i += 2
+      } else if (b == 0xE2.toByte && i + 2 < n && at(i + 1) == 0x80.toByte &&
+          at(i + 2) == 0xA6.toByte) { // U+2026
+        symbols += 1; i += 2
+      } else if (isSpace(b)) {
+        spaces += 1
+        if (b == '\n') { parts.add(lineStart, i); lineStart = i + 1 }
+      }
+      i += 1
+    }
+    parts.add(lineStart, n)
+    val row = new GenericInternalRow(Array[Any](words, text.numChars - spaces, symbols, alpha,
+      parts.size, parts.distinct()))
+    parts.release()
+    row
+  }
+}
+
+/** Byte slices [start, end) of one string and their distinct count,
+  * without a copy per slice: an open-addressing table of slice indexes,
+  * hashed with Murmur3 and compared byte for byte. One instance per thread
+  * serves row after row; arrays grown past 64k slices are dropped after
+  * the row that needed them.
+  */
+private[plans] final class ByteSlices {
+  private val small = 64
+  private var base: AnyRef = _
+  private var offset = 0L
+  private var starts = new Array[Int](small)
+  private var ends = new Array[Int](small)
+  private var table = new Array[Int](2 * small)
+  private var n = 0
+
+  def size: Int = n
+  def start(i: Int): Int = starts(i)
+  def end(i: Int): Int = ends(i)
+
+  /** Starts over on the bytes of `s`. */
+  def reset(s: UTF8String): ByteSlices = {
+    base = s.getBaseObject; offset = s.getBaseOffset; n = 0
+    this
+  }
+
+  def add(start: Int, end: Int): Unit = {
+    if (n == starts.length) {
+      starts = java.util.Arrays.copyOf(starts, 2 * n)
+      ends = java.util.Arrays.copyOf(ends, 2 * n)
+    }
+    starts(n) = start; ends(n) = end; n += 1
+  }
+
+  def equalTo(i: Int, bytes: Array[Byte]): Boolean =
+    ends(i) - starts(i) == bytes.length && ByteArrayMethods.arrayEquals(
+      base, offset + starts(i), bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length)
+
+  private def equal(i: Int, j: Int): Boolean = {
+    val len = ends(i) - starts(i)
+    len == ends(j) - starts(j) &&
+      ByteArrayMethods.arrayEquals(base, offset + starts(i), base, offset + starts(j), len)
+  }
+
+  /** The number of distinct byte strings among the slices. */
+  def distinct(): Int = {
+    val cap = Integer.highestOneBit(math.max(n, 1)) << 2
+    if (table.length < cap) table = new Array[Int](cap)
+    else java.util.Arrays.fill(table, 0, cap, 0)
+    val mask = cap - 1
+    var count = 0; var i = 0
+    while (i < n) {
+      var h = Murmur3_x86_32.hashUnsafeBytes2(base, offset + starts(i), ends(i) - starts(i), 42) & mask
+      // slots hold slice index + 1; 0 is empty
+      while (table(h) != 0 && !equal(table(h) - 1, i)) h = (h + 1) & mask
+      if (table(h) == 0) { table(h) = i + 1; count += 1 }
+      i += 1
+    }
+    count
+  }
+
+  /** Forgets the row's bytes, and drops arrays grown past 64k slices. */
+  def release(): Unit = {
+    base = null
+    if (starts.length > (1 << 16)) {
+      starts = new Array[Int](small); ends = new Array[Int](small); table = new Array[Int](2 * small)
+    }
+  }
 }
 
 /** 64-bit SimHash as a native Catalyst expression (SURVEY §2.6 scale path:
@@ -373,6 +552,50 @@ case class ShingleHashesExpr(child: Expression, shingleSize: Int = 3)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.plans.ExprHelpers.shingleHashes($c, $shingleSize)")
   override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
+    copy(child = newChild)
+}
+
+/** `qualityFeatures`' counts as one codegen'd pass over (text,
+  * lower(text)): struct<chars, punct, words, stop, distinct> of non-null
+  * ints (see [[ExprHelpers.qualityCounts]]); null for a null text.
+  * Lower-casing stays Catalyst's own `lower`, the second child. A
+  * non-string text is cast to string, as the string builtins cast it.
+  */
+case class QualityCountsExpr(left: Expression, right: Expression, stopwords: Seq[String])
+  extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes = Seq(StringType, StringType)
+  @transient private lazy val stopBytes: Array[Array[Byte]] =
+    stopwords.filter(_ != null).map(_.getBytes("UTF-8")).toArray
+  override def dataType: DataType = StructType(
+    Seq("chars", "punct", "words", "stop", "distinct").map(StructField(_, IntegerType, nullable = false)))
+  override def prettyName: String = "quality_counts"
+  override protected def nullSafeEval(text: Any, lower: Any): Any =
+    ExprHelpers.qualityCounts(text.asInstanceOf[UTF8String], lower.asInstanceOf[UTF8String], stopBytes)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("stopwords", stopBytes, "byte[][]")
+    defineCodeGen(ctx, ev, (t, l) => s"graft.plans.ExprHelpers.qualityCounts($t, $l, $ref)")
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): QualityCountsExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+/** `gopherFlags`' counts as one codegen'd pass over a text: struct<words,
+  * nonspace, symbols, alpha_words, lines, distinct_lines> of non-null ints
+  * (see [[ExprHelpers.gopherCounts]]); null for a null text.
+  */
+case class GopherCountsExpr(child: Expression) extends UnaryExpression
+  with ImplicitCastInputTypes {
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = StructType(
+    Seq("words", "nonspace", "symbols", "alpha_words", "lines", "distinct_lines")
+      .map(StructField(_, IntegerType, nullable = false)))
+  override def prettyName: String = "gopher_counts"
+  override protected def nullSafeEval(input: Any): Any =
+    ExprHelpers.gopherCounts(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.ExprHelpers.gopherCounts($c)")
+  override protected def withNewChildInternal(newChild: Expression): GopherCountsExpr =
     copy(child = newChild)
 }
 
@@ -721,6 +944,13 @@ object NativeColumns {
     c(GraftCmsMergeAggregate(e(sketch)).toAggregateExpression())
 
   def cmsEstimate(sketch: Column, hash: Column): Column = c(CmsEstimateExpr(e(sketch), e(hash)))
+
+  // TextAnalysis' feature kernels: not in the function registry, so no SQL spelling.
+
+  private[graft] def qualityCounts(text: Column, lowerText: Column, stopwords: Seq[String]): Column =
+    c(QualityCountsExpr(e(text), e(lowerText), stopwords))
+
+  private[graft] def gopherCounts(text: Column): Column = c(GopherCountsExpr(e(text)))
 }
 
 object NativeExpressions {

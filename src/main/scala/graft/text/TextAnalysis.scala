@@ -3,10 +3,16 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.NativeColumns
+
 /** Text-analysis operators for training-data pipelines (SURVEY §2.6).
   *
-  * Everything here is pure Column expressions over Spark builtins — no
-  * UDFs, so the whole stage stays in codegen and scales as a narrow map.
+  * Everything here is Column expressions, no UDFs, and scales as a narrow
+  * map. Spark evaluates a higher-order function's lambda (`filter`,
+  * `aggregate`, `transform`) interpreted, inside the codegen'd stage;
+  * [[qualityFeatures]] and [[gopherFlags]] therefore take their integer
+  * counts from one native byte kernel per row (`graft.plans.NativeColumns`),
+  * and only the ratios over those counts are Catalyst arithmetic.
   */
 object TextAnalysis {
 
@@ -40,29 +46,39 @@ object TextAnalysis {
 
   /** Quality-scoring features: char length, word count, punctuation ratio,
     * mean word length, distinct-word (repetition) ratio, stopword ratio.
+    * Words are the tokens of `split(trim(lower(text)), "\\s+")`; an empty
+    * text has a null `punct_ratio`, having no chars to divide by.
     */
   def qualityFeatures(df: DataFrame, textCol: String,
       stopwords: Seq[String] = Seq("the", "a", "and", "of", "to")): DataFrame = {
     val t = col(textCol)
-    val wordsCol = freshColumn(df, "__words")
-    val words = col(wordsCol)
-    val nWords = size(words)
-    val nChars = length(t)
-    val punct = nChars - length(regexp_replace(t, "[\\p{Punct}]", ""))
-    val stopHits = size(filter(words, w => w.isin(stopwords.map(s => lit(s)): _*)))
-    df.withColumn(wordsCol, split(trim(lower(t)), "\\s+"))
+    val countsCol = freshColumn(df, "__qcounts")
+    val counts = sizeCounts(df, col(countsCol), "words", "stop", "distinct")
+    val nChars = counts("chars")
+    val nWords = counts("words")
+    df.withColumn(countsCol, NativeColumns.qualityCounts(t, lower(t), stopwords))
       .withColumns(Map(
         "n_chars_q" -> nChars.cast("int"),
         "n_words" -> nWords.cast("int"),
-        "punct_ratio" -> (punct.cast("double") / nChars),
+        "punct_ratio" -> when(nChars =!= 0, counts("punct").cast("double") / nChars),
         "mean_word_len" -> ((nChars - nWords + 1).cast("double") / nWords),
-        "distinct_ratio" -> (size(array_distinct(words)).cast("double") / nWords),
-        "stopword_ratio" -> (stopHits.cast("double") / nWords)))
-      .drop(wordsCol)
+        "distinct_ratio" -> (counts("distinct").cast("double") / nWords),
+        "stopword_ratio" -> (counts("stop").cast("double") / nWords)))
+      .drop(countsCol)
+  }
+
+  /** The fields of a counts struct by name. Those named in `sizes` stand
+    * for `size(array)` of a split, so where Spark's legacy `size(null)`
+    * applies (ANSI off), a null text's counts are -1 there, as the sizes
+    * were.
+    */
+  private def sizeCounts(df: DataFrame, counts: Column, sizes: String*): String => Column = {
+    val legacy = df.sparkSession.sessionState.conf.legacySizeOfNull
+    name => if (legacy && sizes.contains(name)) coalesce(counts(name), lit(-1)) else counts(name)
   }
 
   /** A name no column of `df` resolves to, for a helper column: `base`,
-    * else `base` with the first free numeric suffix. A split held in such
+    * else `base` with the first free numeric suffix. A kernel held in such
     * a column is computed once per row: the optimizer does not inline an
     * expensive projection into a consumer that reads it more than once.
     */
@@ -75,33 +91,31 @@ object TextAnalysis {
   /** Gopher-style corpus-quality rules (the published recipe from
     * "Scaling Language Models: Methods, Analysis & Insights from Training
     * Gopher", Rae et al. 2021, Appendix A — the de-facto standard corpus
-    * filter), as pure Column expressions plus a combined pass flag:
+    * filter), as Column expressions plus a combined pass flag:
     *  - word count within [minWords, maxWords]
     *  - mean word length within [3, 10]
     *  - symbol-to-word ratio (#, ellipsis) <= 0.1
     *  - fraction of words containing an alphabetic char >= 0.8
     *  - duplicate-line fraction <= 0.3 (repetition guard)
-    * All narrow, shuffle-free; the word and line splits happen once per row.
+    * Words are the tokens of `split(trim(text), "\\s+")` and lines those of
+    * `split(text, "\n")`. All narrow and shuffle-free: one native kernel
+    * counts a row's words, lines and symbols.
     */
   def gopherFlags(df: DataFrame, textCol: String,
       minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
-    val t = col(textCol)
-    val (wordsCol, linesCol) = (freshColumn(df, "__gwords"), freshColumn(df, "__glines"))
-    val words = col(wordsCol)
-    val nWords = size(words)
-    val meanLen = (length(regexp_replace(t, "\\s+", "")).cast("double") / nWords)
-    val symbols = size(regexp_extract_all(t, lit("#|\\.\\.\\.|…"), lit(0)))
-    val alphaWords = size(filter(words, w => w.rlike("[A-Za-z]")))
-    val lines = col(linesCol)
-    val dupLines = lit(1.0) - size(array_distinct(lines)).cast("double") / size(lines)
-    df.withColumns(Map(wordsCol -> split(trim(t), "\\s+"), linesCol -> split(t, "\n")))
+    val countsCol = freshColumn(df, "__gcounts")
+    val counts = sizeCounts(df, col(countsCol), "words", "symbols", "alpha_words", "lines",
+      "distinct_lines")
+    val nWords = counts("words")
+    val dupLines = lit(1.0) - counts("distinct_lines").cast("double") / counts("lines")
+    df.withColumn(countsCol, NativeColumns.gopherCounts(col(textCol)))
       .withColumns(Map(
         "g_n_words" -> nWords.cast("int"),
-        "g_mean_word_len" -> meanLen,
-        "g_symbol_ratio" -> (symbols.cast("double") / nWords),
-        "g_alpha_word_ratio" -> (alphaWords.cast("double") / nWords),
+        "g_mean_word_len" -> (counts("nonspace").cast("double") / nWords),
+        "g_symbol_ratio" -> (counts("symbols").cast("double") / nWords),
+        "g_alpha_word_ratio" -> (counts("alpha_words").cast("double") / nWords),
         "g_dupline_ratio" -> dupLines))
-      .drop(wordsCol, linesCol)
+      .drop(countsCol)
       .withColumn("gopher_pass",
         col("g_n_words").between(minWords, maxWords) &&
         col("g_mean_word_len").between(3.0, 10.0) &&

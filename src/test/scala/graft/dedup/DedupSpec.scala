@@ -644,6 +644,58 @@ class DedupSpec extends SparkSpec {
     graft.GraftCaches.releaseAll(spark)
   }
 
+  /** The query executions `run` finishes, counted by a listener: a marker
+    * action after `run` arrives after all of them, as the listener bus
+    * delivers in order.
+    */
+  private def actions(run: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.analyzed.output.map(_.name))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(Nil)
+    }
+    val marker = "__actions_marker"
+    spark.listenerManager.register(listener)
+    try {
+      run
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(Seq(marker)) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(Seq(marker)), "the marker action was not heard")
+      seen.size - 1
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("dropByComponents reads driver-built pairs without a Dataset action") {
+    val rnd = new scala.util.Random(3L)
+    val roots = Seq.fill(20)(Seq.fill(30)(s"w${rnd.nextInt(5000)}"))
+    // an RDD, so the corpus is not itself a local relation
+    val df = spark.sparkContext.parallelize(roots.flatMap(r => Seq(r, r.updated(3, "x"), r))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) }, 2).toDF("doc_id", "text")
+    val pairs = Dedup.minHashPairs(df, "doc_id", "text")
+    assert(onDriver(pairs))
+    // the same pairs behind a projection: read back through the bounded pull
+    val projected = pairs.select("id_a", "id_b", "jaccard")
+    var local, pulled: org.apache.spark.sql.DataFrame = null
+    val counts = Seq(
+      actions { local = Dedup.dropByComponents(df, "doc_id", pairs) },
+      actions { pulled = Dedup.dropByComponents(df, "doc_id", projected) })
+    assert(counts == Seq(0, 1), counts)
+    assert(local.schema == pulled.schema)
+    val rows = Seq(local, pulled).map(_.collect().map(_.toString).sorted.toSeq)
+    assert(rows.head.length == 20 && rows.head == rows(1), rows)
+    // null ids and ANSI casts behave as on the pull path
+    val nulls = Seq((Some(1L), Some(2L)), (None, Some(3L))).toDF("id_a", "id_b")
+    val errors = Seq(nulls, nulls.select("id_a", "id_b")).map(p =>
+      intercept[Exception](Dedup.dropByComponents(df, "doc_id", p)).getClass)
+    assert(errors.distinct.size == 1, errors)
+    graft.GraftCaches.releaseAll(spark)
+  }
+
   test("TextHashing primitives are deterministic and sane") {
     val s1 = TextHashing.minHashSignature(TextHashing.shingleHashes("a b c d e f", 3), 64)
     val s2 = TextHashing.minHashSignature(TextHashing.shingleHashes("a b c d e f", 3), 64)

@@ -1,7 +1,8 @@
 package graft.text
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
@@ -27,10 +28,11 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("qualityFeatures and gopherFlags split each text once, beside any input column name") {
-    // the input already holds the helper columns' first-choice names. An
-    // RDD, not a local Seq, so the optimizer cannot fold the plan away.
+    // the input already holds the helper columns' first-choice names (one
+    // in another case, one with the first suffix). An RDD, not a local Seq,
+    // so the optimizer cannot fold the plan away.
     val df = spark.sparkContext.parallelize(Seq((1, "the cat sat\non the mat", "a", "b", "c")), 1)
-      .toDF("id", "text", "__words", "__gwords", "__GLINES")
+      .toDF("id", "text", "__qcounts", "__GCOUNTS", "__gcounts1")
     val out = TextAnalysis.gopherFlags(TextAnalysis.qualityFeatures(df, "text"), "text")
     assert(out.columns.take(5).toSeq == df.columns.toSeq, out.columns)
     assert(out.columns.drop(5).toSet == Set("n_chars_q", "n_words", "punct_ratio",
@@ -40,9 +42,135 @@ class TextAnalysisSpec extends SparkSpec {
     assert((2 to 4).map(r.getString) == Seq("a", "b", "c"))
     assert(r.getAs[Int]("n_words") == 6 && r.getAs[Int]("g_n_words") == 6)
     assert(r.getAs[Double]("distinct_ratio") == 5.0 / 6 && r.getAs[Double]("g_dupline_ratio") == 0.0)
-    // one split per kind: the lower-cased words, the words, the lines
+    // one kernel per operator, each evaluated once per row; no split left
     val plan = out.queryExecution.optimizedPlan.toString
-    assert("split\\(".r.findAllIn(plan).length == 3, plan)
+    assert("(quality|gopher)_counts\\(".r.findAllIn(plan).length == 2, plan)
+    assert(!plan.contains("split("), plan)
+  }
+
+  test("qualityFeatures: empty, whitespace-only and null texts do not fail the job") {
+    val df = spark.sparkContext.parallelize(Seq((1, ""), (2, "   "), (3, " \t\n "), (4, null),
+      (5, "a.")), 1).toDF("id", "text")
+    val rows = TextAnalysis.qualityFeatures(df, "text").orderBy("id").collect()
+    def f(i: Int, c: String) = Option(rows(i).getAs[Any](c))
+    // no chars, no punctuation ratio (ANSI division by zero before)
+    assert(f(0, "punct_ratio").isEmpty && f(0, "n_chars_q").contains(0) &&
+      f(0, "n_words").contains(1), rows(0))
+    assert(f(1, "punct_ratio").contains(0.0) && f(1, "n_chars_q").contains(3) &&
+      f(1, "n_words").contains(1), rows(1))
+    // trim strips spaces only: "\t\n" splits into two empty words
+    assert(f(2, "punct_ratio").contains(0.0) && f(2, "n_words").contains(2) &&
+      f(2, "distinct_ratio").contains(0.5), rows(2))
+    assert(rows(3).toSeq.drop(2).forall(_ == null), rows(3))
+    assert(f(4, "punct_ratio").contains(0.5) && f(4, "mean_word_len").contains(2.0), rows(4))
+  }
+
+  // The Column formulas qualityFeatures and gopherFlags had before their
+  // native kernels (regexes, splits and `filter` lambdas), with the one
+  // intended change: no punct_ratio for an empty text.
+  private def refQualityFeatures(df: DataFrame, textCol: String,
+      stopwords: Seq[String] = Seq("the", "a", "and", "of", "to")): DataFrame = {
+    val t = col(textCol)
+    val words = col("__ref_words")
+    val nWords = size(words)
+    val nChars = length(t)
+    val punct = nChars - length(regexp_replace(t, "[\\p{Punct}]", ""))
+    val stopHits = size(filter(words, w => w.isin(stopwords.map(s => lit(s)): _*)))
+    df.withColumn("__ref_words", split(trim(lower(t)), "\\s+"))
+      .withColumns(Map(
+        "n_chars_q" -> nChars.cast("int"),
+        "n_words" -> nWords.cast("int"),
+        "punct_ratio" -> when(nChars =!= 0, punct.cast("double") / nChars),
+        "mean_word_len" -> ((nChars - nWords + 1).cast("double") / nWords),
+        "distinct_ratio" -> (size(array_distinct(words)).cast("double") / nWords),
+        "stopword_ratio" -> (stopHits.cast("double") / nWords)))
+      .drop("__ref_words")
+  }
+
+  private def refGopherFlags(df: DataFrame, textCol: String): DataFrame = {
+    val t = col(textCol)
+    val words = col("__ref_gwords")
+    val nWords = size(words)
+    val meanLen = (length(regexp_replace(t, "\\s+", "")).cast("double") / nWords)
+    val symbols = size(regexp_extract_all(t, lit("#|\\.\\.\\.|\u2026"), lit(0)))
+    val alphaWords = size(filter(words, w => w.rlike("[A-Za-z]")))
+    val lines = col("__ref_glines")
+    val dupLines = lit(1.0) - size(array_distinct(lines)).cast("double") / size(lines)
+    df.withColumns(Map("__ref_gwords" -> split(trim(t), "\\s+"), "__ref_glines" -> split(t, "\n")))
+      .withColumns(Map(
+        "g_n_words" -> nWords.cast("int"),
+        "g_mean_word_len" -> meanLen,
+        "g_symbol_ratio" -> (symbols.cast("double") / nWords),
+        "g_alpha_word_ratio" -> (alphaWords.cast("double") / nWords),
+        "g_dupline_ratio" -> dupLines))
+      .drop("__ref_gwords", "__ref_glines")
+      .withColumn("gopher_pass",
+        col("g_n_words").between(50, 100000) &&
+        col("g_mean_word_len").between(3.0, 10.0) &&
+        col("g_symbol_ratio") <= 0.1 &&
+        col("g_alpha_word_ratio") >= 0.8 &&
+        col("g_dupline_ratio") <= 0.3)
+  }
+
+  /** Seeded texts of words, stopwords in any case, every `\s` byte, other
+    * Unicode spaces, punctuation, ellipses and `#`, letters that lower-case
+    * to other lengths, combining marks, emoji and CJK; plus fixed edge cases.
+    */
+  private def adversarialTexts(n: Int): Seq[String] = {
+    val rnd = new scala.util.Random(20261020L)
+    val pieces = Seq("the", "The", "THE", "a", "A", "and", "of", "to", "cat", "word", "x1", "42",
+      " ", "  ", "\t", "\n", "\n\n", "\r", "\r\n", "\u000B", "\f", "\u00A0", "\u2003", "\u3000",
+      "\u2026", "...", "....", "..", ".", "#", "##", "!", "?", ",", "\"", "'", "-", "_", "~", "`",
+      "\u0130", "\u0130stanbul", "e\u0301", "\u00C9T\u00C9", "\u00DF", "\u03A3\u0391\u03A3",
+      "\uD83D\uDE00", "\u4E2D\u6587", "\u00BF", "\u2014", "\uFF01")
+    val fixed = Seq("", " ", "   ", "\t", "\n", "\n\n", " a ", "\ta\t", "\na\n", "a\n\na",
+      "...", "....", "\u2026\u2026", "#...#", "\u0130", "THE the The", null)
+    fixed ++ Seq.fill(n)(Seq.fill(rnd.nextInt(40))(pieces(rnd.nextInt(pieces.length))).mkString)
+  }
+
+  test("the native kernels equal the former Column formulas, interpreted and codegen'd") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val texts = adversarialTexts(3000)
+    // an RDD, not a local Seq: a local relation would be folded at planning
+    val df = spark.sparkContext.parallelize(texts.zipWithIndex.map { case (t, i) => (i, t) }, 4)
+      .toDF("id", "text")
+    val modes = Seq(
+      "codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "FALLBACK"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      "ANSI off" -> Map("spark.sql.ansi.enabled" -> "false"))
+    for ((mode, confs) <- modes) {
+      val before = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val out = TextAnalysis.gopherFlags(TextAnalysis.qualityFeatures(df, "text"), "text")
+        val ref = refGopherFlags(refQualityFeatures(df, "text"), "text")
+        assert(out.schema == ref.schema, s"$mode\n${out.schema.treeString}\n${ref.schema.treeString}")
+        assert(out.exceptAll(ref).isEmpty && ref.exceptAll(out).isEmpty, mode)
+        assert(out.count() == texts.length, mode)
+        val codegen = out.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
+        assert(codegen == (mode != "interpreted"), mode)
+        // a text column that cannot be null: the same schema, nullability
+        // included; a number column: cast to string, as the builtins cast it
+        val nonNull = df.na.fill("", Seq("text"))
+        assert(TextAnalysis.gopherFlags(TextAnalysis.qualityFeatures(nonNull, "text"), "text").schema ==
+          refGopherFlags(refQualityFeatures(nonNull, "text"), "text").schema, mode)
+        val numbers = df.select(col("id"), (col("id") * 1001L).as("text"))
+        val numOut = TextAnalysis.gopherFlags(TextAnalysis.qualityFeatures(numbers, "text"), "text")
+        val numRef = refGopherFlags(refQualityFeatures(numbers, "text"), "text")
+        assert(numOut.schema == numRef.schema && numOut.exceptAll(numRef).isEmpty &&
+          numRef.exceptAll(numOut).isEmpty, mode)
+        // stopwords with a duplicate, an empty one and a null (which matches nothing)
+        val stop = Seq("cat", "", null, "cat", "the")
+        val stopOut = TextAnalysis.qualityFeatures(df, "text", stop)
+        val stopRef = refQualityFeatures(df, "text", stop)
+        assert(stopOut.exceptAll(stopRef).isEmpty && stopRef.exceptAll(stopOut).isEmpty, mode)
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("gopherFlags computes rule features and the combined pass flag") {

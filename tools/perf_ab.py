@@ -6,8 +6,11 @@ Runs `perfbench/run.py --trace 0` in PARENT_DIR and in CHANGE_DIR for seeds
 which side runs first (odd seeds start with the parent). Then, for each
 end-to-end metric BENCHMARK.json lists, it prints both sides' medians and
 the parent's quartiles, the median and range of the per-pair ratios
-(change / parent), and in how many pairs the change was better. The last
-line of stdout is the same summary as one JSON object.
+(change / parent), and in how many pairs the change was better. Below them
+it prints each side's medians of the run's report line fields `job_n` (warm
+jobs in the timed window; peak RSS and rows_per_s move with it) and
+`calib_ms` (the host's calibration loop; machine speed moves with it). The
+last line of stdout is the same summary as one JSON object.
 
 Usage:
   python3 tools/perf_ab.py PARENT_DIR CHANGE_DIR --workload W --pairs N
@@ -31,9 +34,14 @@ class RunFailed(Exception):
     pass
 
 
+CONTEXT = ("job_n", "calib_ms")
+
+
 def parse_record(stdout, returncode, where):
-    """The {"correct", "attempted", "failed", "metrics"} record a run prints
-    last, or RunFailed when the run failed or checked incorrect."""
+    """The metric values of the {"correct", "attempted", "failed", "metrics"}
+    record a run prints last, plus the CONTEXT fields of the {"report": ...}
+    line before it (None where absent); RunFailed when the run failed or
+    checked incorrect."""
     lines = [ln for ln in stdout.splitlines() if ln.strip()]
     try:
         rec = json.loads(lines[-1])
@@ -42,7 +50,15 @@ def parse_record(stdout, returncode, where):
     if returncode != 0 or not rec.get("correct") or rec.get("failed", 0) > 0:
         raise RunFailed(f"{where}: exit {returncode}, correct={rec.get('correct')}, "
                         f"failed={rec.get('failed')} of {rec.get('attempted')}")
-    return {k: v["value"] for k, v in rec["metrics"].items()}
+    report = {}
+    if len(lines) > 1:
+        try:
+            report = json.loads(lines[-2]).get("report", {})
+        except (ValueError, AttributeError):
+            pass
+    out = {k: v["value"] for k, v in rec["metrics"].items()}
+    out.update({k: report.get(k) for k in CONTEXT})
+    return out
 
 
 def run_one(checkout, workload, seed, seconds):
@@ -85,6 +101,14 @@ def summarize(pairs, spec):
     return out
 
 
+def context(pairs):
+    """Each side's median of every CONTEXT field (None when no run had it)."""
+    def med(side, k):
+        xs = [p[side][k] for p in pairs if p[side].get(k) is not None]
+        return statistics.median(xs) if xs else None
+    return {k: {"parent_median": med(0, k), "change_median": med(1, k)} for k in CONTEXT}
+
+
 def report(summary, out=sys.stdout):
     w = out.write
     w(f"{'metric':<16}{'parent':>12}{'change':>12}{'parent IQR':>22}{'ratio':>8}"
@@ -95,6 +119,16 @@ def report(summary, out=sys.stdout):
         w(f"{name:<16}{s['parent_median']:>12.4g}{s['change_median']:>12.4g}"
           f"{s['parent_q1']:>11.4g}-{s['parent_q3']:<10.4g}{ratio:>8}{rng:>16}"
           f"{s['wins']:>5}/{s['pairs']:<2}\n")
+
+
+def fmt(v):
+    return "-" if v is None else f"{v:.4g}"
+
+
+def report_context(ctx, out=sys.stdout):
+    for k, c in ctx.items():
+        out.write(f"{k:<16}{fmt(c['parent_median']):>12}{fmt(c['change_median']):>12}"
+                  "   (report line, median per side)\n")
 
 
 def self_test():
@@ -115,9 +149,25 @@ def self_test():
     report(s, out=buf)
     assert "latency_p50_ms" in buf.getvalue() and "2/3" in buf.getvalue(), buf.getvalue()
 
+    ctx_pairs = [({"job_n": 10, "calib_ms": 50.0}, {"job_n": 12, "calib_ms": 52.0}),
+                 ({"job_n": 11, "calib_ms": 40.0}, {"job_n": 13, "calib_ms": None}),
+                 ({"job_n": 9, "calib_ms": 60.0}, {"job_n": 14, "calib_ms": 48.0})]
+    ctx = context(ctx_pairs)
+    assert ctx["job_n"] == {"parent_median": 10, "change_median": 13}, ctx
+    assert ctx["calib_ms"] == {"parent_median": 50.0, "change_median": 50.0}, ctx
+    assert context([({"job_n": None, "calib_ms": None}, {"job_n": None, "calib_ms": None})]) == {
+        k: {"parent_median": None, "change_median": None} for k in CONTEXT}
+    buf = io.StringIO()
+    report_context(ctx, out=buf)
+    assert "job_n" in buf.getvalue() and "13" in buf.getvalue(), buf.getvalue()
+
     ok = json.dumps({"correct": True, "attempted": 9, "failed": 0,
                      "metrics": {"latency_p50_ms": {"value": 80.0, "unit": "ms"}}})
-    assert parse_record("noise\n" + ok + "\n", 0, "x") == {"latency_p50_ms": 80.0}
+    line = json.dumps({"workload": "w", "seed": 1, "report": {"job_n": 12, "calib_ms": 51.5}})
+    assert parse_record(line + "\n" + ok + "\n", 0, "x") == {
+        "latency_p50_ms": 80.0, "job_n": 12, "calib_ms": 51.5}
+    assert parse_record("noise\n" + ok + "\n", 0, "x") == {
+        "latency_p50_ms": 80.0, "job_n": None, "calib_ms": None}
     bad = [("noise\n" + json.dumps({"correct": False, "attempted": 9, "failed": 1, "metrics": {}}), 1),
            (ok, 3),  # nonzero exit with a record that reads correct
            (json.dumps({"correct": True, "attempted": 9, "failed": 2, "metrics": {}}), 0),
@@ -153,16 +203,19 @@ def main(argv):
                                  a.workload, seed, seconds) for side in order}
             pairs.append((got["parent"], got["change"]))
             print(f"seed {seed} ({order[0]} first): " + ", ".join(
-                f"{m['name']} {got['parent'][m['name']]:.4g} -> {got['change'][m['name']]:.4g}"
-                for m in spec), flush=True)
+                f"{k} {fmt(got['parent'][k])} -> {fmt(got['change'][k])}"
+                for k in [m["name"] for m in spec] + list(CONTEXT)), flush=True)
     except RunFailed as e:
         print(f"perf_ab: {e}", file=sys.stderr)
         if pairs:
             report(summarize(pairs, spec))
+            report_context(context(pairs))
         return 1
-    summary = summarize(pairs, spec)
+    summary, ctx = summarize(pairs, spec), context(pairs)
     report(summary)
-    print(json.dumps({"workload": a.workload, "pairs": len(pairs), "metrics": summary}, sort_keys=True))
+    report_context(ctx)
+    print(json.dumps({"workload": a.workload, "pairs": len(pairs), "metrics": summary,
+                      "context": ctx}, sort_keys=True))
     return 0
 
 

@@ -12,6 +12,10 @@ the plan itself, and compares the sections query by query:
   - source positions          `Dedup.scala:217`    -> `Dedup.scala:N`
   - JVM lambda classes        `Foo$$$Lambda$3254/0x00007f3e14f0fb70` -> `Foo$$$Lambda`
   - JVM identity hashes       `[[D@5c1dc4e9`, `Foo$$$Lambda@5c1dc4e9` -> `[[D@H`, `Foo$$$Lambda@H`
+  - lambda variables          `lambda x_277`       -> `lambda x_0`, numbered by first
+                              appearance in the query's section (Spark numbers them
+                              from one JVM-wide counter, so every lambda built
+                              earlier in the run shifts them)
 
 The owner class before `$$Lambda` and before `@` is kept: a lambda or array
 that moved to another class still shows up as a difference.
@@ -41,6 +45,19 @@ NORMALIZE = [
 ]
 
 
+LAMBDA_VAR = re.compile(r"\blambda ([a-z]+)_\d+\b")
+
+
+def renumber_lambda_vars(lines):
+    """Each distinct lambda variable of a section as `lambda <name>_<k>`, k
+    its rank of first appearance there: distinct variables stay distinct."""
+    seen = {}
+
+    def sub(m):
+        return seen.setdefault(m.group(0), f"lambda {m.group(1)}_{len(seen)}")
+    return [LAMBDA_VAR.sub(sub, line) for line in lines]
+
+
 def normalize(line):
     for pattern, repl in NORMALIZE:
         line = pattern.sub(repl, line)
@@ -62,7 +79,7 @@ def sections(path):
     for lines in out.values():
         while lines and not lines[-1]:
             lines.pop()
-    return out
+    return {q: renumber_lambda_vars(lines) for q, lines in out.items()}
 
 
 def compare(a, b):
