@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * AQE with skew-join handling, sized shuffle partitions, UTC session
   * time, the nanos-parquet compatibility flag, Spark 4's TIME type, and
   * Graft's SQL function surface (zeta compat layer + native expressions)
-  * pre-registered. Library operators write none of these: the session
+  * pre-registered, and decimal arithmetic on long kernels
+  * (`plans.DecimalKernels`). Library operators write none of these: the session
   * policy lives here alone.
   */
 object GraftSession {
@@ -40,6 +41,7 @@ object GraftSession {
     val spark = b.getOrCreate()
     graft.functions.ZetaFunctions.register(spark)
     graft.plans.NativeExpressions.register(spark)
+    graft.plans.DecimalKernels.install(spark)
     spark
   }
 }

@@ -56,10 +56,13 @@ object RowOps {
       isRegex: Boolean = false,
       replaceFirst: Boolean = false): DataFrame = {
     val out: Column =
-      if (!isRegex) {
-        // literal replace-all; codegen'd StringReplace, no regex engine.
-        regexp_replace(col(field), java.util.regex.Pattern.quote(pattern),
-          java.util.regex.Matcher.quoteReplacement(replacement))
+      if (!isRegex && pattern.nonEmpty) {
+        // literal replace-all: codegen'd StringReplace, no regex engine
+        replace(col(field), lit(pattern), lit(replacement))
+      } else if (!isRegex) {
+        // the reference's String.replace("", r) inserts r around every
+        // char; StringReplace returns an empty search's input unchanged
+        regexp_replace(col(field), "", java.util.regex.Matcher.quoteReplacement(replacement))
       } else if (replaceFirst) {
         // anchor to first occurrence: non-greedy prefix capture.
         regexp_replace(col(field), s"^((?s).*?)(?:$pattern)", "$1" + replacement)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, QuaternaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.ColumnBridge
@@ -1061,11 +1063,19 @@ object NativeExpressions {
         registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
+
+  /** Append `rule` to the session's extra optimizer rules (idempotent). */
+  private[plans] def addOptimizerRule(spark: SparkSession, rule: Rule[LogicalPlan]): Unit = {
+    val cur = spark.experimental.extraOptimizations
+    if (!cur.exists(_ eq rule))
+      spark.experimental.extraOptimizations = cur :+ rule
+  }
 }
 
 /** SparkSessionExtensions entry point: add
   * `spark.sql.extensions=graft.plans.GraftExtensions` and every session
-  * gets the native functions without user code.
+  * gets the native functions, the ts predicate pushdown and the decimal
+  * kernels without user code.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -1074,5 +1084,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         new ExpressionInfo("graft.plans.NativeExpressions", name), builder))
     }
     ext.injectOptimizerRule(_ => TsPushdown)
+    ext.injectOptimizerRule(_ => DecimalKernels)
   }
 }

@@ -103,9 +103,5 @@ object TsPushdown extends Rule[LogicalPlan] {
     * (idempotent; `Tables.load` calls this so every Graft session gets the
     * rewrite without builder configuration).
     */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_ eq TsPushdown))
-      spark.experimental.extraOptimizations = cur :+ TsPushdown
-  }
+  def install(spark: SparkSession): Unit = NativeExpressions.addOptimizerRule(spark, TsPushdown)
 }

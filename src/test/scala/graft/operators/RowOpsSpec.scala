@@ -30,6 +30,33 @@ class RowOpsSpec extends SparkSpec {
     assert(out(0).getString(0) == "a-b-a")
   }
 
+  test("replaceField literal mode equals java.lang.String.replace") {
+    // the reference's literal mode is String.replace(pattern, replacement)
+    val texts = Seq("cust-00042", "a.b*c+d?a.b", "x$1y\\z", "café 中文 café", "\u00e9\u00e9\u00e9",
+      "\ud83d\ude00 ok \ud83d\ude00", "", "aaaa")
+    val cases = Seq(
+      ("cust-", "C"),           // the etl_orders step
+      (".b*", "_"),             // regex metacharacters in the pattern
+      ("a", "$1"),              // a group reference in the replacement stays literal
+      ("b", "\\"),             // so does a backslash
+      ("caf\u00e9", "tea"),      // multi-byte text
+      ("\u00e9", "e\u0301"),
+      ("\ud83d\ude00", ":)"),
+      ("aa", "a"),              // non-overlapping, left to right
+      ("", "|"),                // an empty pattern inserts around every char
+      ("", ""))
+    val rows = texts.map(Option(_)) :+ None
+    val df = rows.toDF("s")
+    for ((pattern, replacement) <- cases) {
+      val got = RowOps.replaceField(df, "s", pattern, replacement).collect().map(r => Option(r.getString(0)))
+      // with an empty pattern Java splits a surrogate pair, which no UTF-8
+      // string can hold: those rows are not compared
+      val compared = rows.indices.filter(i => pattern.nonEmpty || rows(i).forall(t => t.length == t.codePointCount(0, t.length)))
+      for (i <- compared)
+        assert(got(i) == rows(i).map(_.replace(pattern, replacement)), s"pattern '$pattern' -> '$replacement' on ${rows(i)}")
+    }
+  }
+
   test("replaceField regex mode, replace-all vs replace-first") {
     val df = Seq(Tuple1("x11y222z")).toDF("s")
     assert(RowOps.replaceField(df, "s", "[0-9]+", "#", isRegex = true)

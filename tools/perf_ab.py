@@ -2,8 +2,9 @@
 """Interleaved A/B of two checkouts on one perfbench workload.
 
 Runs `perfbench/run.py --trace 0` in PARENT_DIR and in CHANGE_DIR for seeds
-1..N at the run length BENCHMARK.json sets, one pair per seed, alternating
-which side runs first (odd seeds start with the parent). Then, for each
+S..S+N-1 (S = --first-seed, default 1) at the run length BENCHMARK.json
+sets, one pair per seed, alternating which side runs first (odd seeds start
+with the parent). Then, for each
 end-to-end metric BENCHMARK.json lists, it prints both sides' medians and
 the parent's quartiles, the median and range of the per-pair ratios
 (change / parent), and in how many pairs the change was better. Below them
@@ -13,7 +14,7 @@ jobs in the timed window; peak RSS and rows_per_s move with it) and
 last line of stdout is the same summary as one JSON object.
 
 Usage:
-  python3 tools/perf_ab.py PARENT_DIR CHANGE_DIR --workload W --pairs N
+  python3 tools/perf_ab.py PARENT_DIR CHANGE_DIR --workload W --pairs N [--first-seed S]
   python3 tools/perf_ab.py --self-test
 
 It exits 1 as soon as a run fails, or its outputs are not correct, and 2 on
@@ -191,13 +192,14 @@ def main(argv):
     ap.add_argument("change_dir")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--first-seed", type=int, default=1)
     a = ap.parse_args(argv[1:])
     with open(os.path.join(a.change_dir, "BENCHMARK.json")) as f:
         bench = json.load(f)
     spec, seconds = bench["end_to_end"], bench["run_seconds"]
     pairs = []
     try:
-        for seed in range(1, a.pairs + 1):
+        for seed in range(a.first_seed, a.first_seed + a.pairs):
             order = ("parent", "change") if seed % 2 else ("change", "parent")
             got = {side: run_one(a.parent_dir if side == "parent" else a.change_dir,
                                  a.workload, seed, seconds) for side in order}

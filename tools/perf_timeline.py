@@ -8,7 +8,10 @@ Catalyst phases, the idle gaps between Spark jobs, and how long two or more
 Spark jobs ran at once (concurrent sink writes). Offsets are in ms from the
 job's start. Each Spark job is attributed to the innermost span it
 starts in, and each span line says how long it ran before its first Spark
-job (driver-only time, e.g. plan building).
+job (driver-only time, e.g. plan building). Each Spark job's task time is
+given three ways: `run_ms` (executor run time, the tasks' wall time, which
+includes waiting for a core, on locks and on I/O), `cpu_ms` (executor CPU
+time) and `gc_ms` (JVM GC time).
 
 Usage:
   python3 tools/perf_timeline.py RESULT_JSON JOB_INDEX
@@ -60,6 +63,8 @@ def timeline(res, idx):
             "id": sj["id"], "start_ms": off(s_us), "end_ms": off(e_us) if sj["end_ms"] > 0 else None,
             "span": host(s_us), "tasks": len(ts),
             "task_run_ms": sum(t["run_ms"] for t in ts),
+            "task_cpu_ms": sum(t["cpu_ms"] for t in ts),
+            "task_gc_ms": sum(t["gc_ms"] for t in ts),
             "input_rows": sum(t["input_rows"] for t in ts),
             "shuffle_read_bytes": sum(t["shuffle_read_bytes"] for t in ts),
             "shuffle_write_bytes": sum(t["shuffle_write_bytes"] for t in ts),
@@ -126,12 +131,12 @@ def report(tl, out=sys.stdout):
         w(f"  {name:<28}{fmt_ms(s['start_ms'])}{fmt_ms(s['end_ms']):>10}{fmt_ms(s['ms']):>10}"
           f"{s['jobs']:>6}{fmt_ms(s['pre_job_ms']):>10}\n")
     w("\nSpark jobs\n")
-    w(f"  {'id':>5}{'start':>9}{'end':>10}{'ms':>8}{'tasks':>7}{'run_ms':>8}{'in_rows':>10}"
+    w(f"  {'id':>5}{'start':>9}{'end':>10}{'ms':>8}{'tasks':>7}{'run_ms':>8}{'cpu_ms':>8}{'gc_ms':>7}{'in_rows':>10}"
       f"{'sh_read_B':>11}{'sh_write_B':>12}  span\n")
     for j in tl["spark_jobs"]:
         dur = None if j["end_ms"] is None else j["end_ms"] - j["start_ms"]
         w(f"  {j['id']:>5}{fmt_ms(j['start_ms'])}{fmt_ms(j['end_ms']):>10}{fmt_ms(dur):>8}{j['tasks']:>7}"
-          f"{j['task_run_ms']:>8}{j['input_rows']:>10}{j['shuffle_read_bytes']:>11}"
+          f"{j['task_run_ms']:>8}{j['task_cpu_ms']:>8.0f}{j['task_gc_ms']:>7}{j['input_rows']:>10}{j['shuffle_read_bytes']:>11}"
           f"{j['shuffle_write_bytes']:>12}  {j['span']}\n")
     w("\nCatalyst phases\n")
     for p in tl["phases"]:
@@ -162,9 +167,12 @@ def self_test():
             {"id": 3, "start_ms": ms - 40, "end_ms": ms - 30},  # belongs to job 1
         ],
         "tasks": [
-            {"job": 7, "run_ms": 4, "input_rows": 10, "shuffle_read_bytes": 0, "shuffle_write_bytes": 64},
-            {"job": 7, "run_ms": 5, "input_rows": 12, "shuffle_read_bytes": 0, "shuffle_write_bytes": 32},
-            {"job": 9, "run_ms": 20, "input_rows": 0, "shuffle_read_bytes": 96, "shuffle_write_bytes": 0},
+            {"job": 7, "run_ms": 4, "cpu_ms": 3.25, "gc_ms": 1, "input_rows": 10,
+             "shuffle_read_bytes": 0, "shuffle_write_bytes": 64},
+            {"job": 7, "run_ms": 5, "cpu_ms": 2.5, "gc_ms": 0, "input_rows": 12,
+             "shuffle_read_bytes": 0, "shuffle_write_bytes": 32},
+            {"job": 9, "run_ms": 20, "cpu_ms": 18.0, "gc_ms": 2, "input_rows": 0,
+             "shuffle_read_bytes": 96, "shuffle_write_bytes": 0},
         ],
         "phases": [{"phase": "planning", "start_ms": ms + 62, "end_ms": ms + 66}],
     }
@@ -172,6 +180,9 @@ def self_test():
     assert [j["id"] for j in tl["spark_jobs"]] == [7, 8, 9], tl["spark_jobs"]
     j7 = tl["spark_jobs"][0]
     assert (j7["tasks"], j7["task_run_ms"], j7["input_rows"], j7["shuffle_write_bytes"]) == (2, 9, 22, 96)
+    assert (j7["task_cpu_ms"], j7["task_gc_ms"]) == (5.75, 1), j7
+    j8 = tl["spark_jobs"][1]
+    assert (j8["tasks"], j8["task_run_ms"], j8["task_cpu_ms"], j8["task_gc_ms"]) == (0, 0, 0, 0), j8
     assert [j["span"] for j in tl["spark_jobs"]] == ["dedup.build", "dedup.build", "sinks.write"]
     build, sink = tl["spans"]
     assert (build["jobs"], build["pre_job_ms"]) == (2, 20.0), build
@@ -183,6 +194,9 @@ def self_test():
     buf = io.StringIO()
     report(tl, out=buf)
     assert "3 Spark jobs" in buf.getvalue()
+    row7 = next(l for l in buf.getvalue().splitlines() if l.split()[:1] == ["7"])
+    # id start end ms tasks run_ms cpu_ms gc_ms in_rows ...: cpu and gc sit next to run
+    assert row7.split()[5:9] == ["9", "6", "1", "22"], row7
     assert "overlap: 0.0 ms with 2+ Spark jobs running, at most 1 at once" in buf.getvalue()
 
     # overlapping jobs (two sinks writing at once): 2 running over 20-30
